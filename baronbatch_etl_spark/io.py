@@ -13,8 +13,10 @@ infers schemas row-wise, or reads more columns than the query needs
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: Every synthetic table the driver generates (TESTDATA.md).
 TABLES = (
@@ -61,7 +63,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     _pin_timestamp_confs(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = _read_parquet(spark, table_path(sf_dir, name))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # Fixture vintages differ: TIMESTAMP(NANOS) events arrive as
         # LONG under nanosAsLong and need the nanos→micros rebuild;
@@ -71,6 +73,40 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql import functions as F
 
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    return df
+
+
+#: Per-session memo of inferred base-table schemas (see
+#: :func:`_read_parquet`), keyed by (applicationId, absolute path,
+#: size, mtime_ns): a fresh JVM gets a fresh applicationId, and a
+#: rewritten file gets a fresh key.
+_SCHEMAS: dict[tuple[str, str, int, int], StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred once per
+    session: inference is a Spark job (a parallel footer read) that
+    would otherwise run on every registry query that scans a base
+    table. Only local regular files are memoised — their size and
+    mtime say when to infer again; a directory or a remote URI is read
+    exactly as before."""
+    try:
+        st = os.stat(path)
+    except OSError:  # a remote URI, or a missing path Spark reports
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (
+        spark.sparkContext.applicationId,
+        os.path.abspath(path),
+        st.st_size,
+        st.st_mtime_ns,
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
     return df
 
 

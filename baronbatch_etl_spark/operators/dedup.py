@@ -15,6 +15,8 @@ Scale design:
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -111,14 +113,26 @@ def minhash_signature(text: Column, n: int = 3) -> Column:
     return minhash_signature_from_hashes(shingle_hashes(text, n))
 
 
-def lsh_bands(sig: Column) -> Column:
-    """array<string> of band keys: each band is ROWS consecutive
-    signature slots joined into one bucket key."""
-    keys = []
-    for b in range(LSH_BANDS):
-        parts = [F.element_at(sig, b * LSH_ROWS + r + 1) for r in range(LSH_ROWS)]
-        keys.append(F.concat_ws("-", *[p.cast("string") for p in parts]))
-    return F.array(*keys)
+#: The LSH band keys of an ``array<long>`` column ``sig`` as ONE SQL
+#: expression, built once at import: an ``array<string>`` whose band
+#: ``b`` joins signature slots ``b·ROWS+1 … b·ROWS+ROWS`` with ``-``.
+#: Every banding site (``lsh_candidate_pairs``, the streaming
+#: admission keys) reads this string, so band keys are built one way
+#: only — and a plan build parses one expression instead of crossing
+#: the Py4J gateway for each of the ~40 Column calls it replaces.
+LSH_BAND_KEYS_SQL = "array({})".format(
+    ", ".join(
+        "concat_ws('-', {})".format(
+            ", ".join(
+                f"CAST(element_at(sig, {b * LSH_ROWS + r + 1}) AS STRING)"
+                for r in range(LSH_ROWS)
+            )
+        )
+        for b in range(LSH_BANDS)
+    )
+)
+#: ``(band, key)`` rows of the band keys, for ``selectExpr``.
+LSH_BANDS_EXPLODE_SQL = f"posexplode({LSH_BAND_KEYS_SQL}) AS (band, key)"
 
 
 def lsh_candidate_pairs(base: DataFrame) -> DataFrame:
@@ -131,21 +145,19 @@ def lsh_candidate_pairs(base: DataFrame) -> DataFrame:
     pair with every other (O(n²) on that subset); they can never
     verify, so they are excluded up front.
     """
-    banded = base.filter(F.size("sh") > 0).select(
-        "doc_id", F.posexplode(lsh_bands(F.col("sig"))).alias("band", "key")
+    banded = base.where("size(sh) > 0").selectExpr(
+        "doc_id", LSH_BANDS_EXPLODE_SQL
     )
     # probe side repartitioned: single-file inputs otherwise run the
     # whole band join in one task (see simhash_near_pairs)
-    left = banded.repartition(F.col("doc_id")).alias("l")
+    left = banded.repartition("doc_id").alias("l")
     right = banded.alias("r")
     return (
         left.join(
             right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
+            F.expr("l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id"),
         )
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
+        .selectExpr("l.doc_id AS doc_a", "r.doc_id AS doc_b")
         .distinct()
     )
 
@@ -244,19 +256,16 @@ def minhash_lsh_pairs(
         )
         base = base.localCheckpoint(eager=False) if ephemeral else base.cache()
     cand = lsh_candidate_pairs(base)
-    a = base.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = base.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    verified = (
+    a = base.selectExpr("doc_id AS doc_a", "sh AS sh_a")
+    b = base.selectExpr("doc_id AS doc_b", "sh AS sh_b")
+    return (
         cand.join(a, "doc_a")
         .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            jaccard_fast(F.col("sh_a"), F.col("sh_b")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", jaccard_fast("sh_a", "sh_b").alias("jaccard"))
+        # a DOUBLE literal: a bare 0.8 parses as a DECIMAL in SQL,
+        # which would put a cast on the compared column
+        .where(f"jaccard >= {float(threshold)!r}D")
     )
-    return verified
 
 
 def containment_pairs(
@@ -602,7 +611,7 @@ def simhash_near_pairs(
     _require_docs_or_base(docs, base)
     if base is not None:
         _require_sig_base(base, ("doc_id", "simhash"))
-        base = base.select("doc_id", F.col("simhash").alias("sh"))
+        base = base.selectExpr("doc_id", "simhash AS sh")
     else:
         base = spread(docs).select(
             "doc_id", simhash_fast(F.col("text")).alias("sh")
@@ -616,63 +625,67 @@ def simhash_near_pairs(
     # qualifying pair come out exactly once — so no candidate row ever
     # hits an exchange or a distinct: the whole operator is one
     # broadcast/hash join probe in codegen.
-    bb = SIMHASH_BLOCK_BITS
-    bmask = (1 << bb) - 1
-    blocks = base.select(
-        "doc_id",
-        "sh",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright("sh", bb * i).bitwiseAND(F.lit(bmask)).cast("long")
-                    for i in range(4)
-                ]
-            )
-        ).alias("block", "key"),
-    )
+    blocks = base.selectExpr("doc_id", "sh", _SIMHASH_BLOCKS_EXPLODE_SQL)
     # The probe side repartitions by doc_id so the heavy probe work
     # spreads across every core even when the input arrives as one
     # small file (one file → one task, all other cores idle). The
     # build side stays unhinted: under the broadcast threshold Spark
     # broadcasts it; beyond, AQE falls back to a shuffle join with
     # skew splitting — both correct at their scale.
-    l = blocks.repartition(F.col("doc_id")).alias("l")
+    l = blocks.repartition("doc_id").alias("l")
     r = blocks.alias("r")
-
-    def blk(side: str, i) -> Column:
-        return F.shiftright(F.col(f"{side}.sh"), bb * i).bitwiseAND(F.lit(bmask))
-
-    # block is the FIRST index where the two fingerprints agree on the
-    # slice: all earlier blocks must differ (dedup without distinct)
-    diff = [blk("l", i) != blk("r", i) for i in range(4)]
-    earlier_differ = (
-        (F.col("l.block") == 0)
-        | ((F.col("l.block") == 1) & diff[0])
-        | ((F.col("l.block") == 2) & diff[0] & diff[1])
-        | ((F.col("l.block") == 3) & diff[0] & diff[1] & diff[2])
+    verify = _fold_sql(
+        "AND",
+        [
+            "(l.block = r.block)",
+            "(l.key = r.key)",
+            "(l.doc_id < r.doc_id)",
+            f"({_SIMHASH_HAMMING_SQL} <= {int(max_hamming)})",
+            _SIMHASH_FIRST_BLOCK_SQL,
+        ],
     )
-    return (
-        l.join(
-            r,
-            (F.col("l.block") == F.col("r.block"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id"))
-            & (
-                F.bit_count(
-                    (F.col("l.sh").bitwiseXOR(F.col("r.sh"))).cast("long")
-                )
-                <= max_hamming
-            )
-            & earlier_differ,
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-            F.bit_count(
-                (F.col("l.sh").bitwiseXOR(F.col("r.sh"))).cast("long")
-            ).alias("hamming"),
-        )
+    return l.join(r, F.expr(verify)).selectExpr(
+        "l.doc_id AS doc_a",
+        "r.doc_id AS doc_b",
+        f"{_SIMHASH_HAMMING_SQL} AS hamming",
     )
+
+
+def _fold_sql(op: str, terms: list[str]) -> str:
+    """``((t0 op t1) op t2) …`` — left-deep like a chain of Column
+    operators; the SQL parser would balance an unparenthesized chain
+    of four or more terms into a differently shaped plan."""
+    return functools.reduce(lambda acc, t: f"({acc} {op} {t})", terms)
+
+
+def _simhash_block_sql(sh: str, i: int) -> str:
+    """The ``i``-th 15-bit slice of fingerprint column ``sh``."""
+    mask = (1 << SIMHASH_BLOCK_BITS) - 1
+    return f"(shiftright({sh}, {SIMHASH_BLOCK_BITS * i}) & {mask})"
+
+
+#: ``(block, key)`` rows of the four fingerprint slices, for selectExpr.
+_SIMHASH_BLOCKS_EXPLODE_SQL = "posexplode(array({})) AS (block, key)".format(
+    ", ".join(f"CAST({_simhash_block_sql('sh', i)} AS BIGINT)" for i in range(4))
+)
+_SIMHASH_HAMMING_SQL = "bit_count(CAST((l.sh ^ r.sh) AS BIGINT))"
+#: ``l.block`` is the FIRST slice where the two fingerprints agree: all
+#: earlier slices must differ, so each pair comes out exactly once
+#: (dedup without a distinct).
+_SIMHASH_FIRST_BLOCK_SQL = _fold_sql(
+    "OR",
+    [
+        _fold_sql(
+            "AND",
+            [f"(l.block = {k})"]
+            + [
+                f"({_simhash_block_sql('l.sh', i)} != {_simhash_block_sql('r.sh', i)})"
+                for i in range(k)
+            ],
+        )
+        for k in range(4)
+    ],
+)
 
 
 def ngram_jaccard_pairs(

@@ -1392,13 +1392,14 @@ FROM documents
 def t_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Subword-style token counts via a BPE-ish regex (letter runs /
     digit runs / single punctuation) next to whitespace counts."""
-    docs = load_table(spark, sf_dir, "documents")
-    sub = F.regexp_extract_all("text", F.lit(_BPE_RE), 0)
-    return docs.select(
+    sub = f"regexp_extract_all(text, '{_BPE_RE}', 0)"
+    return load_table(spark, sf_dir, "documents").selectExpr(
         "doc_id",
-        F.size(sub).alias("n_subwords"),
-        X.token_count("text").alias("n_whitespace"),
-        F.size(F.filter(sub, lambda t: F.length(t) >= 4)).alias("n_long"),
+        f"size({sub}) AS n_subwords",
+        # X.token_count, spelled in SQL
+        "CASE WHEN length(text) = 0 THEN 0 ELSE size(split(text, ' ')) END"
+        " AS n_whitespace",
+        f"size(filter({sub}, x -> length(x) >= 4)) AS n_long",
     )
 
 

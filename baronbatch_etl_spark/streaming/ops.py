@@ -279,9 +279,8 @@ def _doc_keys(batch: DataFrame) -> DataFrame:
         F.col("x.sig").alias("sig"),
         F.col("x.sh").alias("sh"),
     )
-    banded = sig.filter(F.size("sh") > 0).select(
-        "doc_id",
-        F.posexplode(D.lsh_bands(F.col("sig"))).alias("band", "key"),
+    banded = sig.where("size(sh) > 0").selectExpr(
+        "doc_id", D.LSH_BANDS_EXPLODE_SQL
     )
     digest = batch.select(
         "doc_id", F.lit(-1).alias("band"), F.md5("text").alias("key")

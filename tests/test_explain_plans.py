@@ -609,3 +609,50 @@ def test_rfm_is_a_single_rank_pass(spark, registry, sf_dir):
         f"({sorted(windows)}) — the stacked single-rank design "
         "regressed"
     )
+
+
+def test_minhash_lsh_band_join_shape(spark, registry, sf_dir):
+    # the band self-join is keyed on (band, key) and moves band rows
+    # through exactly one exchange (the build side, hashed on
+    # (band int, key string) — a broadcast at this scale); the probe
+    # side's only exchange is the doc_id repartition, which already
+    # clusters the (doc_a, doc_b) distinct, so nothing else shuffles
+    plan = _plan(spark, registry, "d_minhash_lsh", sf_dir)
+    final = plan.split("== Initial Plan ==")[0]
+    joins = re.findall(
+        r"HashJoin \[band#\d+, key#\d+\], \[band#\d+, key#\d+\], Inner", final
+    )
+    assert len(joins) == 1
+    band_exchanges = re.findall(
+        r"BroadcastExchange HashedRelationBroadcastMode\(List\("
+        r"input\[\d+, int, false\], input\[\d+, string, false\]\)",
+        final,
+    )
+    assert len(band_exchanges) == 1
+    shuffles = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", final)
+    assert len(shuffles) == 1, shuffles
+    assert re.fullmatch(r"doc_id#\d+L?, \d+", shuffles[0])
+    assert "REPARTITION_BY_COL" in final
+
+
+def test_simhash_pairs_verify_runs_in_join_condition(spark, registry, sf_dir):
+    # popcount and the first-colliding-block predicate evaluate inside
+    # the (block, key) join's condition: no aggregate and no exchange
+    # ever sees a candidate row (only the doc_id repartition and the
+    # build side's broadcast sit below the join)
+    plan = _plan(spark, registry, "d_simhash_pairs", sf_dir)
+    final = plan.split("== Initial Plan ==")[0]
+    join = re.search(
+        r"HashJoin \[block#\d+, key#\d+L\], \[block#\d+, key#\d+L\], "
+        r"Inner, Build\w+, (.*), false\n",
+        final,
+    )
+    assert join is not None
+    cond = join.group(1)
+    assert re.search(r"bit_count\(\(sh#\d+L \^ sh#\d+L\)\) <= 3", cond)
+    assert re.search(r"\(block#\d+ = 3\) AND NOT", cond)
+    above_join = final[: join.start()]
+    assert "Exchange" not in above_join
+    assert "Aggregate" not in final
+    shuffles = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", final)
+    assert len(shuffles) == 1 and re.fullmatch(r"doc_id#\d+L?, \d+", shuffles[0])

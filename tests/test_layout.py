@@ -308,3 +308,90 @@ def test_session_fixture_records_build_seconds(spark):
         lambda: spark.range(10).withColumnRenamed("id", "k"),
     )
     assert bio.FIXTURE_BUILD_SECONDS.get("test_fixture_timed", 0) > 0
+
+
+def _jobs_launched(spark, fn):
+    """(fn's result, number of Spark jobs fn launched), counted through
+    the status tracker under a private job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the async
+    # listener bus: drain it before counting
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_infers_schema_once_per_session(spark, tmp_path):
+    """A repeat load of a local parquet file reuses the schema the
+    first load inferred: no inference job, same schema and rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from baronbatch_etl_spark import io as bio
+
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}),
+        tmp_path / "region.parquet",
+    )
+    first, n_first = _jobs_launched(
+        spark, lambda: bio.load_table(spark, str(tmp_path), "region")
+    )
+    again, n_again = _jobs_launched(
+        spark, lambda: bio.load_table(spark, str(tmp_path), "region")
+    )
+    assert n_first >= 1  # the inference job the memo saves
+    assert n_again == 0
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_load_table_reinfers_a_rewritten_file(spark, tmp_path):
+    """Rewriting the file with a different schema changes its size and
+    mtime, so the next load infers the new schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from baronbatch_etl_spark import io as bio
+
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": [0, 1]}), path)
+    assert bio.load_table(spark, str(tmp_path), "region").columns == [
+        "r_regionkey"
+    ]
+    pq.write_table(
+        pa.table({"r_regionkey": [5], "r_comment": ["rewritten"]}), path
+    )
+    df, n_jobs = _jobs_launched(
+        spark, lambda: bio.load_table(spark, str(tmp_path), "region")
+    )
+    assert n_jobs >= 1
+    assert df.columns == ["r_regionkey", "r_comment"]
+    assert [tuple(r) for r in df.collect()] == [(5, "rewritten")]
+
+
+def test_load_table_directory_path_is_not_memoised(spark, tmp_path):
+    """A directory table (Spark's own part-file layout) loads exactly
+    as spark.read.parquet does, and leaves nothing in the memo."""
+    from baronbatch_etl_spark import io as bio
+
+    path = tmp_path / "region.parquet"
+    spark.range(6).selectExpr(
+        "id AS r_regionkey", "CAST(id AS STRING) AS r_name"
+    ).repartition(3).write.parquet(str(path))
+    before = dict(bio._SCHEMAS)
+    df = bio.load_table(spark, str(tmp_path), "region")
+    direct = spark.read.parquet(str(path))
+    assert df.schema == direct.schema
+    assert sorted(df.collect()) == sorted(direct.collect())
+    assert bio._SCHEMAS == before
+    _, n_again = _jobs_launched(
+        spark, lambda: bio.load_table(spark, str(tmp_path), "region")
+    )
+    assert n_again >= 1  # inferred afresh, as before the memo

@@ -1193,3 +1193,52 @@ def test_kmv_tokset_path_matches_docs_path(spark, sf_dir):
     assert a == b and len(a) > 0
     with pytest.raises(ValueError, match="docs= .* or tokset="):
         CP.kmv_source_overlap(None)
+
+
+def test_band_key_sql_matches_python_reference(spark):
+    """The band keys come from one SQL expression (LSH_BAND_KEYS_SQL);
+    they must equal the plain-Python spelling — each band's ROWS slots
+    joined by '-' — on signatures that include the empty-shingle-set
+    sentinel POLY_P, its neighbours and the long range's extremes."""
+    P = X.POLY_P
+    near = [0, 1, P - 1, P, P + 1, 2**31 - 1, 2**31, 2**63 - 1]
+    sigs = [
+        [P] * D.MINHASH_K,
+        [near[i % len(near)] for i in range(D.MINHASH_K)],
+        [P - i for i in range(D.MINHASH_K)],
+        [P + i for i in range(D.MINHASH_K)],
+        list(range(D.MINHASH_K)),
+    ]
+    df = spark.createDataFrame(
+        [(i, s) for i, s in enumerate(sigs)], "i int, sig array<bigint>"
+    )
+    got = {
+        r.i: r.keys
+        for r in df.selectExpr("i", f"{D.LSH_BAND_KEYS_SQL} AS keys").collect()
+    }
+    R = D.LSH_ROWS
+    for i, sig in enumerate(sigs):
+        want = [
+            "-".join(str(v) for v in sig[b * R:(b + 1) * R])
+            for b in range(D.LSH_BANDS)
+        ]
+        assert got[i] == want
+
+
+def test_minhash_threshold_stays_a_double_literal(spark):
+    """The verify filter is SQL text; its threshold must parse as a
+    DOUBLE literal (a bare 0.8 is a DECIMAL in SQL, which would put a
+    cast into the plan)."""
+    base = spark.createDataFrame(
+        [(1, [1] * D.MINHASH_K, [7, 8]), (2, [1] * D.MINHASH_K, [7, 8])],
+        "doc_id bigint, sig array<bigint>, sh array<bigint>",
+    )
+    out = D.minhash_lsh_pairs(None, threshold=0.8, base=base)
+    analyzed = out._jdf.queryExecution().analyzed().toString()
+    filters = [ln for ln in analyzed.splitlines() if "Filter (jaccard#" in ln]
+    assert len(filters) == 1
+    assert ">= 0.8)" in filters[0]
+    assert "cast" not in filters[0].lower()
+    assert [(r.doc_a, r.doc_b, r.jaccard) for r in out.collect()] == [
+        (1, 2, 1.0)
+    ]
