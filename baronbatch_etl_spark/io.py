@@ -116,10 +116,8 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
 #: upsample sizes (sf1 documents ≈ 2.4 MB pruned → 38 → clamped to
 #: the core count) while the tiny single-split fixtures stop paying a
 #: full-width shuffle fan-out for sub-second Arrow passes (sf0.1
-#: documents ≈ 250 KB pruned → 4 tasks). Env-overridable for sweeps.
-SPREAD_BYTES_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_BYTES_PER_TASK", 64 * 1024)
-)
+#: documents ≈ 250 KB pruned → 4 tasks).
+SPREAD_BYTES_PER_TASK = 64 * 1024
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -186,9 +184,7 @@ _FIXTURES: dict[tuple[str, str, str], DataFrame] = {}
 #: at build width was 10 sub-MB files → 10-task stages in every one
 #: of its ~15 consumers' row-local branches (measured +0.3-0.4 s per
 #: composite query); one file reads as 1-2 splits.
-FIXTURE_TARGET_FILE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FIXTURE_FILE_BYTES", 128 * 1024 * 1024)
-)
+FIXTURE_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 #: Seconds each staged fixture took to DERIVE AND WRITE in this
 #: process, keyed by fixture name (r10 verdict #1: the staging build
@@ -218,7 +214,9 @@ def session_fixture(
     re-deriving per consumer and caching: the scan is pushdown-capable,
     survives executor loss, and is exactly how the consumer would read
     the staging table in production). Falls back to memoizing the lazy
-    plan if scratch space is unavailable (read-only /tmp).
+    plan only when there is no staging root (a cluster master with no
+    configured root, or a read-only /tmp); a failing build or staging
+    write raises.
 
     Determinism contract: ``build`` must produce a frame whose VALUES
     are partition-order-independent (every staged fixture here is a
@@ -233,7 +231,17 @@ def session_fixture(
         return cached
     t0 = time.perf_counter()
     df = build()
-    try:
+    root = _session_scratch(spark)
+    if root is None:
+        # degraded mode (read-only tmp, or a non-local master with no
+        # configured staging root): a lazy localCheckpoint keeps the
+        # one-derivation-per-session semantics — the first action
+        # materializes the frame into block storage and every later
+        # consumer (including multi-branch plans like the degree
+        # distribution's union legs) reuses it instead of re-running
+        # the derivation.
+        df = df.localCheckpoint(eager=False)
+    else:
         import hashlib
 
         # distinct sf_dir strings must stage to distinct paths even
@@ -241,9 +249,6 @@ def session_fixture(
         # an overwrite would delete the part files under an earlier
         # fixture's still-live scan. Hash the raw string instead.
         sub = hashlib.sha256(sf_dir.encode()).hexdigest()[:16]
-        root = _session_scratch(spark)
-        if root is None:
-            raise OSError("no usable staging root for this master")
         path = f"{root}/{sub}/{name}"
         # size the OUTPUT files, not the build: a repartition (not
         # coalesce — coalesce would collapse the Arrow build pass's
@@ -269,15 +274,6 @@ def session_fixture(
             pass
         out.write.mode("overwrite").parquet(path)
         df = spark.read.parquet(path)
-    except Exception:  # noqa: BLE001 — scratch-space failure only
-        # degraded mode (read-only tmp, or a non-local master with no
-        # configured staging root): a lazy localCheckpoint keeps the
-        # one-derivation-per-session semantics — the first action
-        # materializes the frame into block storage and every later
-        # consumer (including multi-branch plans like the degree
-        # distribution's union legs) reuses it instead of re-running
-        # the derivation.
-        df = df.localCheckpoint(eager=False)
     FIXTURE_BUILD_SECONDS[name] = round(
         FIXTURE_BUILD_SECONDS.get(name, 0.0)
         + (time.perf_counter() - t0),
@@ -318,8 +314,8 @@ def select_scratch_mode(
 
 def _session_scratch(spark: SparkSession) -> str | None:
     """One staging root per session, or ``None`` when no root is
-    usable for this master (degraded mode — see
-    :func:`select_scratch_mode`).
+    usable (degraded mode): a non-local master with no configured root
+    (see :func:`select_scratch_mode`), or a ``mkdtemp`` that fails.
 
     * Explicit root (``$SPARK_GRAFT_SCRATCH`` or the
       ``spark.baronbatch.scratch`` conf): any filesystem every
@@ -356,8 +352,12 @@ def _session_scratch(spark: SparkSession) -> str | None:
             os.makedirs(base, mode=0o700, exist_ok=True)
             atexit.register(shutil.rmtree, base, ignore_errors=True)
     elif mode == "mkdtemp":
-        base = tempfile.mkdtemp(prefix="bb_fixtures_")
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
+        try:
+            base = tempfile.mkdtemp(prefix="bb_fixtures_")
+        except OSError:  # read-only or full tmp: degraded mode
+            base = None
+        else:
+            atexit.register(shutil.rmtree, base, ignore_errors=True)
     else:
         base = None
     _SCRATCH[app_id] = base

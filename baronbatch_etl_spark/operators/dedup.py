@@ -198,7 +198,7 @@ def _require_sig_base(base: DataFrame, cols: tuple[str, ...]) -> None:
 
 def minhash_lsh_pairs(
     docs: DataFrame | None, threshold: float = 0.8, n: int = 3,
-    ephemeral: bool = True, base: DataFrame | None = None,
+    base: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash-LSH banding, verified by exact
     shingle Jaccard ≥ threshold.
@@ -207,23 +207,23 @@ def minhash_lsh_pairs(
     → self-join on (band, key) for candidates → join shingle sets back
     → exact-verify. Shuffle only on band keys and candidate doc ids.
 
-    The default ``ephemeral=True`` materializes the internal signature
-    frame via a lazy localCheckpoint instead of ``.cache()``:
-    checkpoint blocks are freed by the ContextCleaner once the frame
-    is unreferenced, so neither a 187-query catalog run nor a caller
-    that builds pairs per micro-batch (streaming curate_ingest)
-    accumulates immortal executor-storage entries (the round-4 advice:
-    opt IN to ``.cache()``, never leak by default).
+    The internal signature frame is materialized via a lazy
+    localCheckpoint instead of ``.cache()``: checkpoint blocks are
+    freed by the ContextCleaner once the frame is unreferenced, so
+    neither a 187-query catalog run nor a caller that builds pairs per
+    micro-batch (streaming curate_ingest) accumulates immortal
+    executor-storage entries (the round-4 advice: never leak by
+    default).
 
-    Fault-tolerance trade (applies to every ``ephemeral`` site in
+    Fault-tolerance trade (applies to every localCheckpoint site in
     this module): localCheckpoint blocks are UNREPLICATED and the
     lineage is truncated, so losing an executor after materialization
     fails the job instead of recomputing the lost partitions. Fine
     for this repo's short interactive/bench runs; a long multi-tenant
     run where executor loss is routine (dynamic allocation, spot
-    nodes) should pass ``ephemeral=False`` and ``unpersist()`` the
-    result when done — cache keeps lineage, so a lost block recomputes
-    — or use a reliable ``checkpoint()`` to durable storage.
+    nodes) would want ``.cache()`` + ``unpersist()`` (cache keeps
+    lineage, so a lost block recomputes) or a reliable
+    ``checkpoint()`` to durable storage at these sites.
 
     ``base=`` hands in an already-staged ``(doc_id, sig, sh)``
     signature frame (e.g. the once-per-session
@@ -254,7 +254,7 @@ def minhash_lsh_pairs(
                 "doc_id", F.col("x.sig").alias("sig"), F.col("x.sh").alias("sh")
             )
         )
-        base = base.localCheckpoint(eager=False) if ephemeral else base.cache()
+        base = base.localCheckpoint(eager=False)
     cand = lsh_candidate_pairs(base)
     a = base.selectExpr("doc_id AS doc_a", "sh AS sh_a")
     b = base.selectExpr("doc_id AS doc_b", "sh AS sh_b")
@@ -273,7 +273,6 @@ def containment_pairs(
     threshold_pct: int = 90,
     rare_per_doc: int = 2,
     df_cap: int = 1000,
-    ephemeral: bool = True,
     base: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric containment near-dup pairs: rare-shingle blocking,
@@ -324,12 +323,10 @@ def containment_pairs(
             )
         )
         # inverted index + both verification sides reuse it; the
-        # default collectable checkpoint frees with the frame — opt in
-        # to cache() only from a caller that unpersists (the
-        # minhash_lsh_pairs pattern — see operators/multimodal.py:412
-        # for the leak story; fault-tolerance trade documented on
-        # minhash_lsh_pairs)
-        base = base.localCheckpoint(eager=False) if ephemeral else base.cache()
+        # collectable checkpoint frees with the frame (see
+        # operators/multimodal.py:412 for the leak story;
+        # fault-tolerance trade documented on minhash_lsh_pairs)
+        base = base.localCheckpoint(eager=False)
     index = base.select("doc_id", F.explode("sh").alias("h"))
     dfc = index.groupBy("h").agg(F.count("*").cast("long").alias("df"))
     w_rare = Window.partitionBy("doc_id").orderBy("df", "h")
@@ -452,7 +449,7 @@ def edit_distance_pairs(
                 "doc_id", "pfx",
                 F.col("x.sig").alias("sig"), F.col("x.sh").alias("sh"),
             )
-            # ephemeral checkpoint: banding + both verification sides
+            # collectable checkpoint: banding + both verification sides
             # reuse the materialized blocks, which free with the frame
             .localCheckpoint(eager=False)
         )
@@ -489,7 +486,6 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 25,
-    ephemeral: bool = True,
 ) -> DataFrame:
     """Cluster near-dup pairs into components: (node, component) where
     component = min doc_id reachable through the pair graph — the
@@ -519,11 +515,11 @@ def connected_components(
         .select("e.s", "e.d")
         .distinct()
     )
-    # default ephemeral: checkpoint blocks free with the frame (no
-    # per-query storage pinning); cache: opt-in, cleared by clearCache.
-    # Unreplicated + lineage-truncating: executor loss mid-run fails
-    # the job (fault-tolerance trade documented on minhash_lsh_pairs)
-    edges = edges.localCheckpoint(eager=False) if ephemeral else edges.cache()
+    # checkpoint blocks free with the frame (no per-query storage
+    # pinning). Unreplicated + lineage-truncating: executor loss
+    # mid-run fails the job (fault-tolerance trade documented on
+    # minhash_lsh_pairs)
+    edges = edges.localCheckpoint(eager=False)
     # seed with round 1 directly: label(node) = min(node, neighbors)
     # — one distributed agg instead of a full join round
     labels = edges.groupBy(F.col("s").alias("node")).agg(

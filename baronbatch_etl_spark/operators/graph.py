@@ -116,7 +116,7 @@ def pagerank(
     # Stage the degree-weighted edge list ONCE: a single src hash
     # partitioning, out-degree (or total out-weight) as a window
     # aggregate over the partition key (no join, no second shuffle),
-    # then an ephemeral localCheckpoint (the operators/dedup.py
+    # then a collectable localCheckpoint (the operators/dedup.py
     # pattern — LogicalRDD keeps the partitioning). Every round then
     # joins the small rank frame onto the stationary edge partitions
     # — the 100 TB shape: one partitioned materialize, after which
@@ -388,7 +388,7 @@ def hits(
     at all. Magnitudes stay ≤ (edge count)^iters ≪ 2^63 for the
     2–3 rounds authority scoring uses.
 
-    Scale shape: the pair list is staged once (ephemeral checkpoint);
+    Scale shape: the pair list is staged once (collectable checkpoint);
     each half-round is one join of a node-sized score frame onto the
     stationary pairs (AQE broadcasts it) plus one partial-agg
     shuffle — the PageRank iteration cost, alternating key sides.

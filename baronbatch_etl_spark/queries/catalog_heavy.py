@@ -558,7 +558,7 @@ def h_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = (
         li.groupBy("l_suppkey")
         .agg(F.sum(_rev()).alias("total_rev"))
-        # ephemeral checkpoint, not cache(): one lineitem scan still
+        # collectable checkpoint, not cache(): one lineitem scan still
         # feeds both branches, but the blocks free with the frame
         # instead of pinning executor storage for the session
         .localCheckpoint(eager=False)

@@ -402,8 +402,8 @@ def _doc_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived from ``text`` (the quality/exact-dedup subsets of
     d_dedup_report, t_corpus_dedup, curate_survivors) join their id
     set onto the fixture — measured 1.7× faster than re-running the
-    Arrow pass on the subset (tools/ab_sig_stage.py, survivor_subset
-    case), since the id join is AQE-broadcast while the inline pass
+    Arrow pass on the subset (the r10 interleaved A/B,
+    OPTIMIZATION_r10.md), since the id join is AQE-broadcast while the inline pass
     pays tokenize+shingle+hash over the survivor text."""
 
     def build() -> DataFrame:

@@ -24,12 +24,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from baronbatch_etl_spark.io import _pin_timestamp_confs
+
 #: events.parquet stores TIMESTAMP(NANOS); streaming readers declare it
 #: LONG (with the nanosAsLong conf) and rebuild microsecond timestamps.
 EVENTS_DDL = (
     "event_id LONG, ts LONG, user_id LONG, event_type STRING, "
     "value DOUBLE, props STRING"
 )
+
+
+def _stream_parquet(
+    spark: SparkSession, src_dir: str, ddl: str, glob: str
+) -> DataFrame:
+    """Shared file-source stream: one file per micro-batch (T5: bounded
+    batches; admission order = file drop order), declared schema (no
+    inference pass)."""
+    return (
+        spark.readStream.format("parquet")
+        .schema(ddl)
+        .option("maxFilesPerTrigger", 1)
+        .option("pathGlobFilter", glob)
+        .load(src_dir)
+    )
 
 
 def stream_events(
@@ -40,8 +57,7 @@ def stream_events(
     file-source offsets). `glob` selects the event files within the
     directory (the fixture dir holds all ten tables; a dedicated
     multi-file source dir streams with glob='*.parquet')."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _pin_timestamp_confs(spark)
     # Streams need a declared schema; fixture vintages store ts as
     # either TIMESTAMP(NANOS) (arrives as LONG under nanosAsLong) or
     # TIMESTAMP(MICROS) (a ready timestamp). Probe with a driver-side
@@ -53,13 +69,7 @@ def stream_events(
     ddl = EVENTS_DDL if ts_is_long else EVENTS_DDL.replace(
         "ts LONG", "ts TIMESTAMP"
     )
-    raw = (
-        spark.readStream.format("parquet")
-        .schema(ddl)
-        .option("maxFilesPerTrigger", 1)  # T5: bounded per micro-batch
-        .option("pathGlobFilter", glob)
-        .load(sf_dir)
-    )
+    raw = _stream_parquet(spark, sf_dir, ddl, glob)
     if ts_is_long:
         raw = raw.withColumn(
             "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
@@ -148,47 +158,97 @@ def click_purchase_join(events: DataFrame) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# Epoch store: the one exactly-once write path behind every ingest sink
+# ---------------------------------------------------------------------------
+
+
+def _epoch_sink(stream: DataFrame, query_name: str, write):
+    """The exactly-once sink contract every ingest operator below
+    shares — the Spark rewrite of the reference's timer + `processed`
+    flag + `$inc` upsert (transformer_loader/main.py:76-207).
+
+    ``write(batch, epoch_id)`` runs per micro-batch under foreachBatch
+    and writes only through :func:`_write_epoch`, i.e. under
+    ``<store>/epoch=<id>``. A retried batch overwrites its own epoch
+    directory, so at-least-once foreachBatch delivery folds to
+    exactly-once state. Additive stores are read back by re-summing
+    the epochs (:func:`_fold_epochs`); a gate that decides against
+    history reads every OTHER epoch (:func:`_prior_epochs`), so a
+    replayed batch sees exactly the state its first run saw. No
+    driver-side state; at scale the same shape is a MERGE into a
+    transactional table keyed by epoch. Every input here is a stateless
+    stream, so no output mode is set (it would have no effect)."""
+    return (
+        stream.writeStream.foreachBatch(write)
+        .queryName(query_name)
+        .trigger(availableNow=True)
+    )
+
+
+def _write_epoch(df: DataFrame, store: str, epoch_id: int, *partition_by):
+    """Overwrite ``store``'s directory for ``epoch_id`` with ``df``
+    (optionally partitioned within the epoch); returns that path."""
+    path = f"{store}/epoch={epoch_id}"
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
+    return path
+
+
+def _prior_epochs(spark: SparkSession, store: str, epoch_id: int):
+    """Every epoch of ``store`` except ``epoch_id`` (``epoch`` column
+    included), or ``None`` when the store does not exist yet."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(store).filter(F.col("epoch") != epoch_id)
+    except AnalysisException:
+        # missing-path only (first epoch, no store yet); corrupt files
+        # / transient FS errors surface at action time and FAIL the
+        # batch instead of silently deciding against an empty history
+        return None
+
+
+def _fold_epochs(
+    spark: SparkSession, store: str, keys: list[str], sums: list[str]
+) -> DataFrame:
+    """Re-sum an additive store's per-epoch partials by ``keys`` — the
+    read side of gold, hourly counts, token counts and CMS grids."""
+    return (
+        spark.read.parquet(store)
+        .groupBy(*keys)
+        .agg(*[F.sum(c).alias(c) for c in sums])
+    )
+
+
+def _gold_partial(batch: DataFrame) -> DataFrame:
+    """incremental_gold's per-batch partial: (user_id, event_type,
+    games, value_sum)."""
+    return batch.groupBy("user_id", "event_type").agg(
+        F.count("*").alias("games"), F.sum("value").alias("value_sum")
+    )
+
+
 def incremental_gold(
     events: DataFrame, gold_path: str, query_name: str = "gold"
 ):
-    """T4 exactly-once gold maintenance: foreachBatch writes each
-    micro-batch's PARTIAL aggregate to ``{gold_path}/epoch=<id>`` —
-    the Spark rewrite of the reference's `$inc` upsert
-    (transformer_loader/main.py:184-190).
-
-    Idempotence comes from the epoch key: a retried batch overwrites
-    its own epoch directory, so at-least-once foreachBatch delivery
-    folds to exactly-once gold totals. The partials are commutative
+    """T4 gold maintenance: each micro-batch's PARTIAL aggregate goes
+    to the epoch store at ``gold_path`` (the :func:`_epoch_sink`
+    contract) — the Spark rewrite of the reference's `$inc` upsert
+    (transformer_loader/main.py:184-190). The partials are commutative
     (count + sum), so ``read_gold`` recombines them with a second
-    groupBy — no driver-side state, and at scale the same shape is a
-    MERGE into a transactional table keyed by epoch."""
-
-    def merge(batch: DataFrame, epoch_id: int) -> None:
-        (
-            batch.groupBy("user_id", "event_type")
-            .agg(F.count("*").alias("games"), F.sum("value").alias("value_sum"))
-            .write.mode("overwrite")
-            .parquet(f"{gold_path}/epoch={epoch_id}")
-        )
-
-    return (
-        events.writeStream.foreachBatch(merge)
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
+    groupBy."""
+    return _epoch_sink(
+        events,
+        query_name,
+        lambda b, e: _write_epoch(_gold_partial(b), gold_path, e),
     )
 
 
 def read_gold(spark: SparkSession, gold_path: str) -> DataFrame:
     """Fold the per-epoch partial aggregates into current gold totals
     (the read side of incremental_gold)."""
-    return (
-        spark.read.parquet(gold_path)
-        .groupBy("user_id", "event_type")
-        .agg(
-            F.sum("games").alias("games"),
-            F.sum("value_sum").alias("value_sum"),
-        )
+    return _fold_epochs(
+        spark, gold_path, ["user_id", "event_type"], ["games", "value_sum"]
     )
 
 
@@ -227,32 +287,15 @@ def compact_epoch_store(
             f"compact_epoch_store: out_path {out_path!r} must not be "
             f"the store itself or inside it ({store_path!r})"
         )
-    folded = (
-        spark.read.parquet(store_path)
-        .groupBy(*group_cols)
-        .agg(*[F.sum(c).alias(c) for c in sum_cols])
+    base = _write_epoch(
+        _fold_epochs(spark, store_path, group_cols, sum_cols), out_path, -1
     )
-    folded.write.mode("overwrite").parquet(f"{out_path}/epoch=-1")
     # count the just-written base (small), not the lazy plan (which
     # would re-run the whole history fold a second time)
-    return spark.read.parquet(f"{out_path}/epoch=-1").count()
+    return spark.read.parquet(base).count()
 
 
 DOCS_DDL = "doc_id LONG, text STRING"
-
-
-def _stream_parquet(
-    spark: SparkSession, src_dir: str, ddl: str, glob: str
-) -> DataFrame:
-    """Shared file-source stream: one file per micro-batch (admission
-    order = file drop order), declared schema (no inference pass)."""
-    return (
-        spark.readStream.format("parquet")
-        .schema(ddl)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", glob)
-        .load(src_dir)
-    )
 
 
 def stream_documents(
@@ -305,11 +348,9 @@ def neardup_ingest(
          a lower-doc_id store-clean doc shares any key with it
          (bucket-greedy, non-recursive — the same admission decision
          replayed on a retry);
-      3. survivors' keys append to ``store_path`` and survivor docs to
-         ``accepted_path``, both under epoch=<id> (idempotent retry:
-         the batch overwrites its own epoch, and the store read
-         EXCLUDES the current epoch, so a replayed batch sees exactly
-         the state it saw first time).
+      3. survivors' keys go to the epoch store ``store_path`` and
+         survivor docs to ``accepted_path`` (the :func:`_epoch_sink`
+         contract: the store read excludes the current epoch).
 
     Scale shape: the store is (band, key) parquet — read as a
     key-partitioned join side, never the full corpus text; batch keys
@@ -319,24 +360,13 @@ def neardup_ingest(
     only, ~(bands+1) small rows per doc."""
 
     def gate(batch: DataFrame, epoch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        spark = batch.sparkSession
         keys = _doc_keys(batch).cache()
-        try:
-            store = (
-                spark.read.parquet(store_path)
-                .filter(F.col("epoch") != epoch_id)
-                .select("band", "key")
-            )
-        except AnalysisException:
-            # missing-path only (first epoch, no store yet); corrupt
-            # files / transient FS errors surface at action time and
-            # FAIL the batch instead of silently admitting duplicates
-            store = None
+        store = _prior_epochs(batch.sparkSession, store_path, epoch_id)
         if store is not None:
             hit = (
-                keys.join(store, ["band", "key"], "left_semi")
+                keys.join(
+                    store.select("band", "key"), ["band", "key"], "left_semi"
+                )
                 .select("doc_id")
                 .distinct()
             )
@@ -355,20 +385,14 @@ def neardup_ingest(
             .distinct()
         )
         surv_keys = clean_keys.join(dropped, "doc_id", "left_anti")
-        surv_keys.write.mode("overwrite").parquet(
-            f"{store_path}/epoch={epoch_id}"
-        )
-        batch.join(
+        _write_epoch(surv_keys, store_path, epoch_id)
+        accepted = batch.join(
             surv_keys.select("doc_id").distinct(), "doc_id", "left_semi"
-        ).write.mode("overwrite").parquet(f"{accepted_path}/epoch={epoch_id}")
+        )
+        _write_epoch(accepted, accepted_path, epoch_id)
         keys.unpersist()
 
-    return (
-        docs.writeStream.foreachBatch(gate)
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
+    return _epoch_sink(docs, query_name, gate)
 
 
 #: Full corpus-document schema (documents.parquet's curation columns).
@@ -406,10 +430,9 @@ def curate_ingest(
     key-store gate ``neardup_ingest`` is the documented contract
     there.)
 
-    Idempotence: survivors write under epoch=<id> and the accepted
-    read EXCLUDES the current epoch, so a replayed batch re-derives
-    exactly the decision it made first time (same contract as
-    neardup_ingest / ivf_ingest).
+    Survivors go to the epoch store ``accepted_path`` (the
+    :func:`_epoch_sink` contract: the accepted read excludes the
+    current epoch, so a replay re-derives its first decision).
 
     Scale: signatures for the accepted pool are recomputed per batch
     here for operator parity; a production run persists the signature
@@ -419,9 +442,6 @@ def curate_ingest(
     from baronbatch_etl_spark.operators import text as X
 
     def gate(batch: DataFrame, epoch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        spark = batch.sparkSession
         qual = batch.filter(X.quality_score("text", "n_chars") >= quality_min)
         keep = (
             qual.select("doc_id", F.md5("text").alias("_md5"))
@@ -429,15 +449,9 @@ def curate_ingest(
             .agg(F.min("doc_id").alias("doc_id"))
         )
         sdocs = qual.join(keep.select("doc_id"), "doc_id")
-        try:
-            accepted = (
-                spark.read.parquet(accepted_path)
-                .filter(F.col("epoch") != epoch_id)
-                .drop("epoch")
-            )
-        except AnalysisException:  # missing path only: first epoch
-            accepted = None
+        accepted = _prior_epochs(batch.sparkSession, accepted_path, epoch_id)
         if accepted is not None:
+            accepted = accepted.drop("epoch")
             sdocs = sdocs.join(
                 accepted.select(F.md5("text").alias("_md5")),
                 F.md5(sdocs["text"]) == F.col("_md5"),
@@ -452,13 +466,8 @@ def curate_ingest(
             )
         )
         # pairs among accepted docs cannot exist (each was admitted
-        # non-adjacent), so every pair touches this batch.
-        # ephemeral: the helper's internal signature frame checkpoints
-        # instead of caching, so per-batch state frees with the frame
-        # rather than accumulating one immortal cache entry per epoch
-        pairs = D.minhash_lsh_pairs(
-            pool, threshold=threshold, ephemeral=True
-        ).cache()
+        # non-adjacent), so every pair touches this batch
+        pairs = D.minhash_lsh_pairs(pool, threshold=threshold).cache()
         if accepted is not None:
             acc_a = accepted.select(F.col("doc_id").alias("doc_a"))
             acc_b = accepted.select(F.col("doc_id").alias("doc_b"))
@@ -477,23 +486,16 @@ def curate_ingest(
             cand = sdocs.join(store_adj, "doc_id", "left_anti")
         else:
             in_batch, cand = pairs, sdocs
-        comp = D.connected_components(in_batch, ephemeral=True)
+        comp = D.connected_components(in_batch)
         removed = comp.filter(F.col("node") != F.col("comp")).select(
             F.col("node").alias("doc_id")
         )
         surv = cand.join(removed, "doc_id", "left_anti")
-        surv.write.mode("overwrite").parquet(
-            f"{accepted_path}/epoch={epoch_id}"
-        )
+        _write_epoch(surv, accepted_path, epoch_id)
         pairs.unpersist()
         sdocs.unpersist()
 
-    return (
-        docs.writeStream.foreachBatch(gate)
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
+    return _epoch_sink(docs, query_name, gate)
 
 
 def read_curated(spark: SparkSession, accepted_path: str) -> DataFrame:
@@ -508,13 +510,7 @@ def stream_embeddings(
     spark: SparkSession, src_dir: str, glob: str = "*.parquet"
 ) -> DataFrame:
     """File-source stream of incoming embedding rows (index ingest)."""
-    return (
-        spark.readStream.format("parquet")
-        .schema(EMB_DDL)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", glob)
-        .load(src_dir)
-    )
+    return _stream_parquet(spark, src_dir, EMB_DDL, glob)
 
 
 def ivf_ingest(
@@ -527,8 +523,8 @@ def ivf_ingest(
     vectors is assigned to its nearest coarse cell (the trained
     k-means centroids, e.g. from ``similarity.kmeans_assign``) with
     the same map-only literal-centroid expression the batch trainer
-    uses, then appended to a CELL-PARTITIONED parquet index under
-    epoch=<id> (idempotent retry, same contract as neardup_ingest).
+    uses, then written to the epoch store ``index_path`` CELL-PARTITIONED
+    within each epoch (the :func:`_epoch_sink` contract).
 
     The payoff at scale: searches prune to one cell DIRECTORY
     (PartitionFilters at the scan — see ``ivf_search``), so the index
@@ -539,21 +535,12 @@ def ivf_ingest(
 
     def add(batch: DataFrame, epoch_id: int) -> None:
         best = _nearest_centroid(F.col("embedding"), cents)
-        (
-            batch.select(
-                "vec_id", "embedding", best.getField("cid").alias("cell")
-            )
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(f"{index_path}/epoch={epoch_id}")
+        cells = batch.select(
+            "vec_id", "embedding", best.getField("cid").alias("cell")
         )
+        _write_epoch(cells, index_path, epoch_id, "cell")
 
-    return (
-        vecs.writeStream.foreachBatch(add)
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
+    return _epoch_sink(vecs, query_name, add)
 
 
 def ivf_search(
@@ -589,37 +576,30 @@ def ivf_search(
     return scored.orderBy(F.col("cos_sim").desc(), "vec_id").limit(k)
 
 
+def _hourly_counts(batch: DataFrame) -> DataFrame:
+    """volume_monitor_ingest's per-batch partial: (event_type, hour, n)."""
+    return batch.groupBy(
+        "event_type", F.date_trunc("hour", "ts").alias("hour")
+    ).agg(F.count("*").cast("long").alias("n"))
+
+
 def volume_monitor_ingest(
     events: DataFrame, counts_path: str, query_name: str = "volume"
 ):
     """Streaming twin of ``w_anomaly_zscore``'s input build: each
-    micro-batch folds to (event_type, hour, n) hourly-count partials
-    written to ``{counts_path}/epoch=<id>`` — the same epoch-keyed
-    idempotent sink as incremental_gold (a retried batch overwrites
-    its own epoch, so at-least-once delivery folds to exactly-once
-    counts). Hourly counts are the mergeable monitoring state:
+    micro-batch folds to (event_type, hour, n) hourly-count partials in
+    the epoch store ``counts_path`` (the :func:`_epoch_sink` contract).
+    Hourly counts are the mergeable monitoring state:
     ``read_anomalies`` re-sums them and applies the shared trailing
     z-score fold (operators/corpus.py::hourly_zscores), so the live
     monitor's answer is bit-identical to the batch query over the
     same events — no raw events retained, only |types|×hours counts
     per epoch.
     """
-
-    def fold(batch: DataFrame, epoch_id: int) -> None:
-        (
-            batch.groupBy(
-                "event_type", F.date_trunc("hour", "ts").alias("hour")
-            )
-            .agg(F.count("*").cast("long").alias("n"))
-            .write.mode("overwrite")
-            .parquet(f"{counts_path}/epoch={epoch_id}")
-        )
-
-    return (
-        events.writeStream.foreachBatch(fold)
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
+    return _epoch_sink(
+        events,
+        query_name,
+        lambda b, e: _write_epoch(_hourly_counts(b), counts_path, e),
     )
 
 
@@ -629,11 +609,7 @@ def read_anomalies(spark: SparkSession, counts_path: str) -> DataFrame:
     same fold as the batch ``w_anomaly_zscore``)."""
     from baronbatch_etl_spark.operators.corpus import hourly_zscores
 
-    hourly = (
-        spark.read.parquet(counts_path)
-        .groupBy("event_type", "hour")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
+    hourly = _fold_epochs(spark, counts_path, ["event_type", "hour"], ["n"])
     return hourly_zscores(hourly, window_hours=24, min_history=12, top=20)
 
 
@@ -721,14 +697,23 @@ def stream_sourced_docs(
     return _stream_parquet(spark, src_dir, SOURCED_DOCS_DDL, glob)
 
 
+def _token_counts(batch: DataFrame) -> DataFrame:
+    """drift_monitor_ingest's per-batch partial: (source, tok, c_st)."""
+    from baronbatch_etl_spark.operators import text as X
+
+    return (
+        batch.select("source", F.explode(X.tokens("text")).alias("tok"))
+        .groupBy("source", "tok")
+        .agg(F.count("*").alias("c_st"))
+    )
+
+
 def drift_monitor_ingest(
     docs: DataFrame, stats_path: str, query_name: str = "drift"
 ):
     """Streaming twin of ``t_corpus_drift``: each micro-batch folds to
-    (source, tok, c_st) token-count partials written to
-    ``{stats_path}/epoch=<id>`` — the same epoch-keyed idempotent sink
-    as incremental_gold (a retried batch overwrites its own epoch, so
-    at-least-once delivery folds to exactly-once counts).
+    (source, tok, c_st) token-count partials in the epoch store
+    ``stats_path`` (the :func:`_epoch_sink` contract).
 
     Counts are the mergeable drift state: ``read_drift`` re-sums them
     and applies the shared exact-integer TV fold
@@ -736,24 +721,10 @@ def drift_monitor_ingest(
     the batch query over the same documents — no text is retained,
     only vocabulary-sized counts per epoch.
     """
-    from baronbatch_etl_spark.operators import text as X
-
-    def fold(batch: DataFrame, epoch_id: int) -> None:
-        (
-            batch.select(
-                "source", F.explode(X.tokens("text")).alias("tok")
-            )
-            .groupBy("source", "tok")
-            .agg(F.count("*").alias("c_st"))
-            .write.mode("overwrite")
-            .parquet(f"{stats_path}/epoch={epoch_id}")
-        )
-
-    return (
-        docs.writeStream.foreachBatch(fold)
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
+    return _epoch_sink(
+        docs,
+        query_name,
+        lambda b, e: _write_epoch(_token_counts(b), stats_path, e),
     )
 
 
@@ -762,51 +733,42 @@ def read_drift(spark: SparkSession, stats_path: str) -> DataFrame:
     TV drift (the read side of drift_monitor_ingest)."""
     from baronbatch_etl_spark.operators import corpus as C
 
-    st = (
-        spark.read.parquet(stats_path)
-        .groupBy("source", "tok")
-        .agg(F.sum("c_st").alias("c_st"))
-    )
+    st = _fold_epochs(spark, stats_path, ["source", "tok"], ["c_st"])
     return C.tv_drift_from_counts(st)
+
+
+def _cms_grid(batch: DataFrame) -> DataFrame:
+    """cms_monitor_ingest's per-batch partial: per-batch token counts
+    (a batch-bounded partial agg), then the shared grid fold
+    (operators/corpus.py) — (j, bucket, cell)."""
+    from baronbatch_etl_spark.operators import corpus as C
+    from baronbatch_etl_spark.operators import text as X
+
+    hashed = (
+        batch.select(F.explode(X.tokens("text")).alias("tok"))
+        .groupBy("tok")
+        .agg(F.count("*").alias("c"))
+        .select(X.char_poly_hash(F.col("tok")).alias("hv"), "c")
+    )
+    return C.cms_grid_from_hashes(hashed, weight="c")
 
 
 def cms_monitor_ingest(
     docs: DataFrame, grid_path: str, query_name: str = "cms"
 ):
     """Streaming twin of ``a_cms_heavy_hitters``'s grid build: each
-    micro-batch folds to a partial d×w count-min grid written to
-    ``{grid_path}/epoch=<id>`` — per-batch token counts first (a
-    batch-bounded partial agg), then the shared grid fold
-    (operators/corpus.py), so per-epoch state is ≤ d·w = 2048 BIGINT
-    cells no matter the batch size and no text or vocabulary is
-    retained at all.
+    micro-batch folds to a partial d×w count-min grid in the epoch
+    store ``grid_path`` (the :func:`_epoch_sink` contract), so
+    per-epoch state is ≤ d·w = 2048 BIGINT cells no matter the batch
+    size and no text or vocabulary is retained at all.
 
     Grids union by cell addition, so ``read_cms``'s re-sum is
-    bit-identical to the batch grid over the same documents. The
-    epoch-keyed overwrite makes at-least-once delivery fold to
-    exactly-once cells (same contract as incremental_gold).
+    bit-identical to the batch grid over the same documents.
     """
-    from baronbatch_etl_spark.operators import corpus as C
-    from baronbatch_etl_spark.operators import text as X
-
-    def fold(batch: DataFrame, epoch_id: int) -> None:
-        hashed = (
-            batch.select(F.explode(X.tokens("text")).alias("tok"))
-            .groupBy("tok")
-            .agg(F.count("*").alias("c"))
-            .select(X.char_poly_hash(F.col("tok")).alias("hv"), "c")
-        )
-        (
-            C.cms_grid_from_hashes(hashed, weight="c")
-            .write.mode("overwrite")
-            .parquet(f"{grid_path}/epoch={epoch_id}")
-        )
-
-    return (
-        docs.writeStream.foreachBatch(fold)
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
+    return _epoch_sink(
+        docs,
+        query_name,
+        lambda b, e: _write_epoch(_cms_grid(b), grid_path, e),
     )
 
 
@@ -816,11 +778,7 @@ def read_cms(spark: SparkSession, grid_path: str) -> DataFrame:
     as min over the d cells a token hashes to — join
     operators/corpus.cms_buckets against this frame, or use
     ``cms_estimate`` below."""
-    return (
-        spark.read.parquet(grid_path)
-        .groupBy("j", "bucket")
-        .agg(F.sum("cell").alias("cell"))
-    )
+    return _fold_epochs(spark, grid_path, ["j", "bucket"], ["cell"])
 
 
 def cms_estimate(
@@ -859,34 +817,26 @@ def media_features_ingest(
     """Streaming twin of the multimodal feature lane (mm_features +
     the aHash fingerprint): each micro-batch maps documents through
     the media convention, runs the Arrow feature extraction and
-    payload fingerprint, and writes the rows to
-    ``{features_path}/epoch=<id>`` — the same epoch-keyed idempotent
-    sink as incremental_gold (a retried batch overwrites its own
-    epoch). Feature extraction is row-local — no cross-batch state —
-    so the union of epochs equals the batch operators over the union
-    of inputs, bit-for-bit (asserted in
-    tests/test_streaming_multibatch.py). At 100 TB this is the shape
-    for continuous media-asset enrichment: decode cost rides the
-    ingest stream once, and downstream near-dup blocking reads the
-    accumulated fingerprint store instead of re-decoding the corpus.
+    payload fingerprint, and writes the rows to the epoch store
+    ``features_path`` (the :func:`_epoch_sink` contract). Feature
+    extraction is row-local — no cross-batch state — so the union of
+    epochs equals the batch operators over the union of inputs,
+    bit-for-bit (asserted in tests/test_streaming_multibatch.py). At
+    100 TB this is the shape for continuous media-asset enrichment:
+    decode cost rides the ingest stream once, and downstream near-dup
+    blocking reads the accumulated fingerprint store instead of
+    re-decoding the corpus.
     """
     from baronbatch_etl_spark.operators import multimodal as M
 
     def fold(batch: DataFrame, epoch_id: int) -> None:
         media = M.documents_as_media(batch)
-        (
-            M.extract_features(media)
-            .join(M.payload_fingerprints(media), "media_id")
-            .write.mode("overwrite")
-            .parquet(f"{features_path}/epoch={epoch_id}")
+        feats = M.extract_features(media).join(
+            M.payload_fingerprints(media), "media_id"
         )
+        _write_epoch(feats, features_path, epoch_id)
 
-    return (
-        docs.writeStream.foreachBatch(fold)
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
+    return _epoch_sink(docs, query_name, fold)
 
 
 def read_media_features(spark: SparkSession, features_path: str) -> DataFrame:
@@ -913,38 +863,32 @@ def stream_pairs(
     return _stream_parquet(spark, src_dir, PAIRS_DDL, glob)
 
 
+def _edge_set(batch: DataFrame) -> DataFrame:
+    """authority_ingest's per-batch partial: the distinct (c, s) pairs."""
+    return batch.select("c", "s").distinct()
+
+
 def authority_ingest(
     pairs: DataFrame, edges_path: str, query_name: str = "authority"
 ):
     """Streaming twin of the graph-authority family (``g_pagerank`` /
     ``g_hits``): each micro-batch folds its interaction pairs to a
-    DISTINCT (c, s) partial written to ``{edges_path}/epoch=<id>``.
+    DISTINCT (c, s) partial in the epoch store ``edges_path`` (the
+    :func:`_epoch_sink` contract).
 
     The edge SET is the mergeable graph state: partials union by
-    distinct-on-read, and a replayed epoch overwrites its own
-    directory, so at-least-once delivery folds to exactly-once edges
-    (the incremental_gold contract). ``read_authority`` re-runs the
-    shared deterministic operators over the folded set — link-graph
-    scores are recomputed per read, the production cadence for
-    authority priors (rank state is NOT incrementally mergeable, edge
-    sets are; recompute-from-edges is how host-graph PageRank is
-    actually refreshed). Per-epoch state: batch-bounded distinct key
-    pairs, nothing else retained.
+    distinct-on-read. ``read_authority`` re-runs the shared
+    deterministic operators over the folded set — link-graph scores
+    are recomputed per read, the production cadence for authority
+    priors (rank state is NOT incrementally mergeable, edge sets are;
+    recompute-from-edges is how host-graph PageRank is actually
+    refreshed). Per-epoch state: batch-bounded distinct key pairs,
+    nothing else retained.
     """
-
-    def fold(batch: DataFrame, epoch_id: int) -> None:
-        (
-            batch.select("c", "s")
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(f"{edges_path}/epoch={epoch_id}")
-        )
-
-    return (
-        pairs.writeStream.foreachBatch(fold)
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
+    return _epoch_sink(
+        pairs,
+        query_name,
+        lambda b, e: _write_epoch(_edge_set(b), edges_path, e),
     )
 
 

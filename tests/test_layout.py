@@ -310,6 +310,35 @@ def test_session_fixture_records_build_seconds(spark):
     assert bio.FIXTURE_BUILD_SECONDS.get("test_fixture_timed", 0) > 0
 
 
+def test_session_fixture_failing_build_raises(spark):
+    """Only a missing staging root degrades to localCheckpoint: a build
+    that fails while it runs, or a frame the staging write rejects,
+    must raise — never turn into an unreported slow path — and leave
+    nothing memoized."""
+    import pytest as _pytest
+    from pyspark.errors import AnalysisException, SparkRuntimeException
+
+    from baronbatch_etl_spark import io as bio
+
+    failing = {
+        "test_fixture_build_fails": (
+            lambda: spark.range(3).where("assert_true(id < 0) IS NULL"),
+            SparkRuntimeException,
+        ),
+        "test_fixture_write_fails": (
+            lambda: spark.range(3).selectExpr(
+                "id AS k", "make_interval(0, 0, 0, 1) AS iv"
+            ),
+            AnalysisException,
+        ),
+    }
+    for name, (build, err) in failing.items():
+        with _pytest.raises(err):
+            bio.session_fixture(spark, "/fake/sf_fail", name, build)
+        key = (spark.sparkContext.applicationId, "/fake/sf_fail", name)
+        assert key not in bio._FIXTURES
+
+
 def _jobs_launched(spark, fn):
     """(fn's result, number of Spark jobs fn launched), counted through
     the status tracker under a private job group."""

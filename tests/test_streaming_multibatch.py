@@ -375,23 +375,10 @@ def test_drift_monitor_epoch_idempotent(spark, tmp_path):
          Row(doc_id=2, text="a b b", lang="en", source="B", n_chars=5)]
     )
     stats_path = str(tmp_path / "drift_stats")
-    # drive the epoch fold directly (same body as the foreachBatch
-    # sink), replaying epoch 0 to model at-least-once delivery
-    from pyspark.sql import functions as F
-
-    from baronbatch_etl_spark.operators import text as X
-
-    def write_epoch(b, e):
-        (
-            b.select("source", F.explode(X.tokens("text")).alias("tok"))
-            .groupBy("source", "tok")
-            .agg(F.count("*").alias("c_st"))
-            .write.mode("overwrite")
-            .parquet(f"{stats_path}/epoch={e}")
-        )
-
-    write_epoch(batch, 0)
-    write_epoch(batch, 0)  # replay
+    # drive the sink's own epoch write directly, replaying epoch 0 to
+    # model at-least-once delivery
+    for _ in range(2):
+        ops._write_epoch(ops._token_counts(batch), stats_path, 0)
     out = {r.source: r.tv_dist for r in ops.read_drift(spark, stats_path).collect()}
     assert out["A"] == pytest.approx(1 / 6, abs=1e-15)
     assert out["B"] == pytest.approx(1 / 6, abs=1e-15)
@@ -441,28 +428,13 @@ def test_cms_monitor_epoch_idempotent(spark, tmp_path):
     from pyspark.sql import Row
 
     from baronbatch_etl_spark.operators import corpus as C
-    from baronbatch_etl_spark.operators import text as X
 
     batch = spark.createDataFrame(
         [Row(doc_id=1, text="a a b"), Row(doc_id=2, text="b c")]
     )
     grid_path = str(tmp_path / "cms_grid")
-
-    def write_epoch(b, e):
-        hashed = (
-            b.select(F.explode(X.tokens("text")).alias("tok"))
-            .groupBy("tok")
-            .agg(F.count("*").alias("c"))
-            .select(X.char_poly_hash(F.col("tok")).alias("hv"), "c")
-        )
-        (
-            C.cms_grid_from_hashes(hashed, weight="c")
-            .write.mode("overwrite")
-            .parquet(f"{grid_path}/epoch={e}")
-        )
-
-    write_epoch(batch, 0)
-    write_epoch(batch, 0)  # replay
+    for _ in range(2):  # epoch 0, then its at-least-once replay
+        ops._write_epoch(ops._cms_grid(batch), grid_path, 0)
     total = sum(r.cell for r in ops.read_cms(spark, grid_path).collect())
     assert total == 5 * C.CMS_D  # 5 tokens x d rows, counted once
 
@@ -473,24 +445,11 @@ def test_cms_estimate_probes_streamed_grid(spark, tmp_path):
     # counters, not "min of whatever cells exist")
     from pyspark.sql import Row
 
-    from baronbatch_etl_spark.operators import corpus as C
-    from baronbatch_etl_spark.operators import text as X
-
     batch = spark.createDataFrame(
         [Row(doc_id=1, text="alpha alpha beta"), Row(doc_id=2, text="beta gamma")]
     )
     grid_path = str(tmp_path / "cms_grid")
-    hashed = (
-        batch.select(F.explode(X.tokens("text")).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count("*").alias("c"))
-        .select(X.char_poly_hash(F.col("tok")).alias("hv"), "c")
-    )
-    (
-        C.cms_grid_from_hashes(hashed, weight="c")
-        .write.mode("overwrite")
-        .parquet(f"{grid_path}/epoch=0")
-    )
+    ops._write_epoch(ops._cms_grid(batch), grid_path, 0)
     est = {
         r.tok: r.cms_est
         for r in ops.cms_estimate(
@@ -499,6 +458,17 @@ def test_cms_estimate_probes_streamed_grid(spark, tmp_path):
     }
     assert est["alpha"] >= 2 and est["beta"] >= 2 and est["gamma"] >= 1
     assert est["never_seen"] == 0
+
+
+def test_prior_epochs_excludes_current_epoch(spark, tmp_path):
+    # a gate's history read: None before the store exists (first
+    # epoch), then every epoch but the one being (re)played
+    store = str(tmp_path / "store")
+    assert ops._prior_epochs(spark, store, 0) is None
+    for e in (0, 1, 2):
+        ops._write_epoch(spark.createDataFrame([(e,)], "k LONG"), store, e)
+    got = ops._prior_epochs(spark, store, 1).collect()
+    assert sorted((r.k, r.epoch) for r in got) == [(0, 0), (2, 2)]
 
 
 def test_compact_epoch_store_preserves_every_fold(spark, sf_dir, tmp_path):
@@ -856,17 +826,13 @@ def test_authority_epoch_replay_idempotent(spark, tmp_path):
     # set, so the recomputed ranks cannot change
     from pyspark.sql import Row
 
-    from baronbatch_etl_spark.operators import graph as G  # noqa: F401
-
     batch = spark.createDataFrame(
         [Row(c=1, s=10), Row(c=1, s=11), Row(c=2, s=10)]
     )
     edges_path = str(tmp_path / "edge_store")
 
     def write_epoch(b, e):
-        b.select("c", "s").distinct().write.mode("overwrite").parquet(
-            f"{edges_path}/epoch={e}"
-        )
+        ops._write_epoch(ops._edge_set(b), edges_path, e)
 
     write_epoch(batch, 0)
     first = {
@@ -928,23 +894,10 @@ def test_volume_monitor_epoch_idempotent(spark, tmp_path):
         "event_id long, event_type string, ts_s string",
     ).select("event_id", "event_type", F.col("ts_s").cast("timestamp").alias("ts"))
     counts_path = str(tmp_path / "hourly_counts")
-
-    def fold(batch, epoch_id):
-        (
-            batch.groupBy(
-                "event_type", F.date_trunc("hour", "ts").alias("hour")
-            )
-            .agg(F.count("*").cast("long").alias("n"))
-            .write.mode("overwrite")
-            .parquet(f"{counts_path}/epoch={epoch_id}")
-        )
-
-    fold(ev, 0)
-    fold(ev, 0)  # at-least-once replay of the same epoch
-    hourly = (
-        spark.read.parquet(counts_path)
-        .groupBy("event_type", "hour")
-        .agg(F.sum("n").alias("n"))
+    for _ in range(2):  # epoch 0, then its at-least-once replay
+        ops._write_epoch(ops._hourly_counts(ev), counts_path, 0)
+    hourly = ops._fold_epochs(
+        spark, counts_path, ["event_type", "hour"], ["n"]
     )
     got = {r.hour.hour: r.n for r in hourly.collect()}
     assert got == {1: 3, 2: 2, 3: 1}
