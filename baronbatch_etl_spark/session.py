@@ -7,13 +7,74 @@ re-planning/skew handling, Arrow for the pandas-UDF slow path, and
 shuffle partitions sized to the local core count rather than the
 200 default (right-sized partitions matter at 100 TB too — there
 the knob is set per-job from input size, not left at a constant).
+Parallelism and driver heap default to what the host can give
+(:func:`host_defaults`); a local master also gets the rename-based
+checkpoint manager (:func:`local_master_conf`).
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
+
+
+#: Checkpoint-log writes through Hadoop's FileSystem API: write a temp
+#: file, then rename it into place. Spark's default FileContext manager
+#: goes through the local filesystem's permission calls, which without
+#: Hadoop native IO fork a ``chmod``/``readlink`` process per file
+#: operation (SCALING.md "Micro-batch fixed cost").
+RENAME_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def host_defaults(
+    env: Mapping[str, str], usable_cpus: int, physical_mem_bytes: int
+) -> tuple[str, int, str]:
+    """(master, shuffle partitions, driver heap) for a host with
+    ``usable_cpus`` CPUs and ``physical_mem_bytes`` of memory.
+
+    ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM`` in ``env``
+    override the host. Otherwise the master is ``local[<usable CPUs>]``
+    and the heap is a quarter of physical memory (at least 1 GiB): the
+    JVM's resident size runs well past its heap, and the Python UDF
+    workers share the same memory.
+    """
+    cpus = env.get("SPARK_GRAFT_CPUS") or str(max(1, usable_cpus))
+    partitions = int(cpus) if cpus.isdigit() else max(1, usable_cpus)
+    heap = env.get("SPARK_GRAFT_DRIVER_MEM") or (
+        f"{max(1024, physical_mem_bytes // 4 // 2**20)}m"
+    )
+    return f"local[{cpus}]", partitions, heap
+
+
+def local_master_conf(master: str) -> dict[str, str]:
+    """Session defaults for ``local`` / ``local[...]`` masters, whose
+    streaming checkpoints sit on the driver's own disk.
+
+    The rename-based checkpoint manager is safe there: a rename on a
+    local POSIX filesystem is atomic, and each streaming query is the
+    only writer of its checkpoint directory (``streaming.ops._epoch_sink``).
+    A cluster master keeps Spark's default manager."""
+    if master.split("[", 1)[0] != "local":
+        return {}
+    return {
+        "spark.sql.streaming.checkpointFileManagerClass": RENAME_CHECKPOINT_MANAGER
+    }
+
+
+def _usable_cpus() -> int:
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
+def _physical_memory_bytes() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
 
 
 def get_spark(
@@ -26,13 +87,17 @@ def get_spark(
 
     Defaults are local-mode friendly but every setting is the one we
     would also want on a 1000-executor cluster (AQE, UTC, Arrow,
-    partition-size-aware file splits). ``SPARK_GRAFT_CPUS`` controls
-    local parallelism (driver contract).
+    partition-size-aware file splits). Parallelism and heap come from
+    :func:`host_defaults`; ``SPARK_GRAFT_CPUS`` controls local
+    parallelism (driver contract) and ``SPARK_GRAFT_DRIVER_MEM`` the
+    heap.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    default_master, partitions, heap = host_defaults(
+        os.environ, _usable_cpus(), _physical_memory_bytes()
+    )
+    master = master or default_master
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = partitions
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -47,8 +112,10 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
+        .config("spark.driver.memory", heap)
     )
+    for k, v in local_master_conf(master).items():
+        builder = builder.config(k, v)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -178,7 +178,18 @@ def _epoch_sink(stream: DataFrame, query_name: str, write):
     replayed batch sees exactly the state its first run saw. No
     driver-side state; at scale the same shape is a MERGE into a
     transactional table keyed by epoch. Every input here is a stateless
-    stream, so no output mode is set (it would have no effect)."""
+    stream, so no output mode is set (it would have no effect).
+
+    On a local master the checkpoint logs (offsets, commits, the file
+    source's seen-files log) are written by rename
+    (``session.local_master_conf``): each log entry goes to a temp file
+    that is then renamed into place. A rename on a local POSIX
+    filesystem is atomic, so a reader never sees a partial entry. The
+    manager's "do not overwrite an existing batch" check is an exists
+    test before the rename, which is only safe with one writer — and
+    each query here is the only writer of its checkpoint: every caller
+    gives each query its own ``checkpointLocation``, and Spark refuses
+    to start a query whose id is already active in the session."""
     return (
         stream.writeStream.foreachBatch(write)
         .queryName(query_name)
@@ -194,13 +205,25 @@ def _write_epoch(df: DataFrame, store: str, epoch_id: int, *partition_by):
     return path
 
 
-def _prior_epochs(spark: SparkSession, store: str, epoch_id: int):
+def _read_epochs(spark: SparkSession, store: str, schema: str | None):
+    """``store``'s epochs (``epoch`` column included), or one epoch's
+    directory. A declared ``schema`` (the partial's columns) saves the
+    Spark job that parquet schema inference runs on every read;
+    ``None`` infers it."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(store)
+
+
+def _prior_epochs(
+    spark: SparkSession, store: str, epoch_id: int, schema: str | None = None
+):
     """Every epoch of ``store`` except ``epoch_id`` (``epoch`` column
     included), or ``None`` when the store does not exist yet."""
     from pyspark.errors import AnalysisException
 
     try:
-        return spark.read.parquet(store).filter(F.col("epoch") != epoch_id)
+        epochs = _read_epochs(spark, store, schema)
+        return epochs.filter(F.col("epoch") != epoch_id)
     except AnalysisException:
         # missing-path only (first epoch, no store yet); corrupt files
         # / transient FS errors surface at action time and FAIL the
@@ -209,15 +232,23 @@ def _prior_epochs(spark: SparkSession, store: str, epoch_id: int):
 
 
 def _fold_epochs(
-    spark: SparkSession, store: str, keys: list[str], sums: list[str]
+    spark: SparkSession,
+    store: str,
+    keys: list[str],
+    sums: list[str],
+    schema: str | None = None,
 ) -> DataFrame:
     """Re-sum an additive store's per-epoch partials by ``keys`` — the
     read side of gold, hourly counts, token counts and CMS grids."""
     return (
-        spark.read.parquet(store)
+        _read_epochs(spark, store, schema)
         .groupBy(*keys)
         .agg(*[F.sum(c).alias(c) for c in sums])
     )
+
+
+#: incremental_gold's epoch store: one partial per (user, event type).
+GOLD_DDL = "user_id LONG, event_type STRING, games LONG, value_sum DOUBLE"
 
 
 def _gold_partial(batch: DataFrame) -> DataFrame:
@@ -248,7 +279,11 @@ def read_gold(spark: SparkSession, gold_path: str) -> DataFrame:
     """Fold the per-epoch partial aggregates into current gold totals
     (the read side of incremental_gold)."""
     return _fold_epochs(
-        spark, gold_path, ["user_id", "event_type"], ["games", "value_sum"]
+        spark,
+        gold_path,
+        ["user_id", "event_type"],
+        ["games", "value_sum"],
+        GOLD_DDL,
     )
 
 
@@ -306,6 +341,10 @@ def stream_documents(
     return _stream_parquet(spark, src_dir, DOCS_DDL, glob)
 
 
+#: neardup_ingest's key store: the admission keys of accepted docs.
+DOC_KEYS_DDL = "doc_id LONG, band INT, key STRING"
+
+
 def _doc_keys(batch: DataFrame) -> DataFrame:
     """(doc_id, band, key) admission keys for a document micro-batch:
     the MinHash-LSH band keys (near-dup granularity) plus an md5
@@ -352,42 +391,53 @@ def neardup_ingest(
          survivor docs to ``accepted_path`` (the :func:`_epoch_sink`
          contract: the store read excludes the current epoch).
 
+    The admission is derived once per batch. Step 2 is a
+    ``min(doc_id)`` window over (band, key) followed by an all-keys
+    check per doc, so the clean keys are never self-joined. Step 3
+    writes the survivors' keys, then semi-joins the batch against the
+    key epoch just written (read back with its declared schema) —
+    every doc has a digest key, so that epoch's doc ids are exactly
+    the accepted docs. Semi and anti joins need no ``distinct()``.
+
     Scale shape: the store is (band, key) parquet — read as a
     key-partitioned join side, never the full corpus text; batch keys
     shuffle on (band, key) against it (at 100 TB: bucketed store +
     AQE, or a Bloom pre-filter on key like bloom_build to make the
     common no-hit path map-only). State grows with ACCEPTED docs
     only, ~(bands+1) small rows per doc."""
+    from pyspark.sql import Window
+
+    by_key = Window.partitionBy("band", "key")
+    by_doc = Window.partitionBy("doc_id")
 
     def gate(batch: DataFrame, epoch_id: int) -> None:
+        spark = batch.sparkSession
         keys = _doc_keys(batch).cache()
-        store = _prior_epochs(batch.sparkSession, store_path, epoch_id)
+        store = _prior_epochs(spark, store_path, epoch_id, DOC_KEYS_DDL)
         if store is not None:
-            hit = (
-                keys.join(
-                    store.select("band", "key"), ["band", "key"], "left_semi"
-                )
-                .select("doc_id")
-                .distinct()
-            )
+            hit = keys.join(
+                store.select("band", "key"), ["band", "key"], "left_semi"
+            ).select("doc_id")
             clean_keys = keys.join(hit, "doc_id", "left_anti")
         else:
             clean_keys = keys
-        l, r = clean_keys.alias("l"), clean_keys.alias("r")
-        dropped = (
-            l.join(
-                r,
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.key") == F.col("r.key"))
-                & (F.col("l.doc_id") < F.col("r.doc_id")),
+        # a doc survives iff it holds the lowest clean doc_id on every
+        # one of its keys
+        surv_keys = (
+            clean_keys.withColumn(
+                "_first", F.col("doc_id") == F.min("doc_id").over(by_key)
             )
-            .select(F.col("r.doc_id").alias("doc_id"))
-            .distinct()
+            .withColumn(
+                "_surv", F.min(F.col("_first").cast("int")).over(by_doc)
+            )
+            .where("_surv = 1")
+            .select("doc_id", "band", "key")
         )
-        surv_keys = clean_keys.join(dropped, "doc_id", "left_anti")
-        _write_epoch(surv_keys, store_path, epoch_id)
+        written = _write_epoch(surv_keys, store_path, epoch_id)
         accepted = batch.join(
-            surv_keys.select("doc_id").distinct(), "doc_id", "left_semi"
+            _read_epochs(spark, written, DOC_KEYS_DDL).select("doc_id"),
+            "doc_id",
+            "left_semi",
         )
         _write_epoch(accepted, accepted_path, epoch_id)
         keys.unpersist()
@@ -449,7 +499,9 @@ def curate_ingest(
             .agg(F.min("doc_id").alias("doc_id"))
         )
         sdocs = qual.join(keep.select("doc_id"), "doc_id")
-        accepted = _prior_epochs(batch.sparkSession, accepted_path, epoch_id)
+        accepted = _prior_epochs(
+            batch.sparkSession, accepted_path, epoch_id, CORPUS_DDL
+        )
         if accepted is not None:
             accepted = accepted.drop("epoch")
             sdocs = sdocs.join(
@@ -576,6 +628,10 @@ def ivf_search(
     return scored.orderBy(F.col("cos_sim").desc(), "vec_id").limit(k)
 
 
+#: volume_monitor_ingest's epoch store.
+HOURLY_DDL = "event_type STRING, hour TIMESTAMP, n LONG"
+
+
 def _hourly_counts(batch: DataFrame) -> DataFrame:
     """volume_monitor_ingest's per-batch partial: (event_type, hour, n)."""
     return batch.groupBy(
@@ -609,7 +665,9 @@ def read_anomalies(spark: SparkSession, counts_path: str) -> DataFrame:
     same fold as the batch ``w_anomaly_zscore``)."""
     from baronbatch_etl_spark.operators.corpus import hourly_zscores
 
-    hourly = _fold_epochs(spark, counts_path, ["event_type", "hour"], ["n"])
+    hourly = _fold_epochs(
+        spark, counts_path, ["event_type", "hour"], ["n"], HOURLY_DDL
+    )
     return hourly_zscores(hourly, window_hours=24, min_history=12, top=20)
 
 
@@ -697,6 +755,10 @@ def stream_sourced_docs(
     return _stream_parquet(spark, src_dir, SOURCED_DOCS_DDL, glob)
 
 
+#: drift_monitor_ingest's epoch store.
+TOKEN_COUNTS_DDL = "source STRING, tok STRING, c_st LONG"
+
+
 def _token_counts(batch: DataFrame) -> DataFrame:
     """drift_monitor_ingest's per-batch partial: (source, tok, c_st)."""
     from baronbatch_etl_spark.operators import text as X
@@ -733,8 +795,14 @@ def read_drift(spark: SparkSession, stats_path: str) -> DataFrame:
     TV drift (the read side of drift_monitor_ingest)."""
     from baronbatch_etl_spark.operators import corpus as C
 
-    st = _fold_epochs(spark, stats_path, ["source", "tok"], ["c_st"])
+    st = _fold_epochs(
+        spark, stats_path, ["source", "tok"], ["c_st"], TOKEN_COUNTS_DDL
+    )
     return C.tv_drift_from_counts(st)
+
+
+#: cms_monitor_ingest's epoch store.
+CMS_GRID_DDL = "j INT, bucket LONG, cell LONG"
 
 
 def _cms_grid(batch: DataFrame) -> DataFrame:
@@ -778,7 +846,9 @@ def read_cms(spark: SparkSession, grid_path: str) -> DataFrame:
     as min over the d cells a token hashes to — join
     operators/corpus.cms_buckets against this frame, or use
     ``cms_estimate`` below."""
-    return _fold_epochs(spark, grid_path, ["j", "bucket"], ["cell"])
+    return _fold_epochs(
+        spark, grid_path, ["j", "bucket"], ["cell"], CMS_GRID_DDL
+    )
 
 
 def cms_estimate(

@@ -187,6 +187,132 @@ def test_neardup_ingest_restart_is_noop(spark, tmp_path):
     assert got == [0]  # near-dup dropped once, restart adds nothing
 
 
+def test_neardup_ingest_jobs_per_batch_stay_flat(spark, tmp_path):
+    """A micro-batch's job count must not grow with the store's epoch
+    history. Each batch runs as its own availableNow query run over
+    one new file; the run id is the job group of every job that run
+    launches, so it counts one batch's jobs exactly."""
+    import glob as g
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    words = (
+        "alpha bravo charlie delta echo foxtrot golf hotel india juliet "
+        "kilo lima mike november oscar papa quebec romeo sierra tango"
+    ).split()
+
+    def text(k: int) -> str:
+        step = k % 5 + 1
+        return " ".join(words[(k * 7 + t * step) % len(words)] for t in range(12))
+
+    batches = []
+    for i in range(11):
+        rows = [(i * 100 + j, text(i * 10 + j)) for j in range(10)]
+        if i:  # an exact replay (doc i*100+99) of the batch before's first doc
+            rows.append((i * 100 + 99, batches[-1][0][1]))
+        batches.append(rows)
+
+    src = tmp_path / "src"
+    src.mkdir()
+    store, acc = str(tmp_path / "store"), str(tmp_path / "accepted")
+    sc = spark.sparkContext
+    jobs = []
+    for i, rows in enumerate(batches):
+        doc_id, body = zip(*rows)
+        pq.write_table(
+            pa.table(
+                {"doc_id": pa.array(doc_id, pa.int64()), "text": list(body)}
+            ),
+            src / f"b{i:02d}.parquet",
+        )
+        q = (
+            ops.neardup_ingest(
+                ops.stream_documents(spark, str(src)), store, acc, "mb_flat"
+            )
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start()
+        )
+        try:
+            assert q.awaitTermination(120)
+        finally:
+            q.stop()
+        # one micro-batch per run (numInputRows counts every scan of the
+        # batch, so it is not the batch's row count)
+        assert sum(bool(p["numInputRows"]) for p in q.recentProgress) == 1
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(str(q.runId))))
+
+    assert 0 < jobs[10] <= jobs[2], jobs
+    # one file per store epoch at this size
+    epochs = sorted(g.glob(f"{store}/epoch=*"))
+    assert len(epochs) == len(batches)
+    assert all(len(g.glob(f"{e}/*.parquet")) == 1 for e in epochs)
+    got = sorted(
+        r.doc_id for r in spark.read.parquet(acc).select("doc_id").collect()
+    )
+    assert got == _greedy_replay(spark, batches)
+    assert not {i * 100 + 99 for i in range(1, 11)} & set(got)  # replays dropped
+
+
+def test_epoch_store_ddls_match_the_written_partials(spark, tmp_path):
+    """Each declared epoch-store schema reads back exactly what its
+    sink's partial writes (column names, order and types)."""
+    from pyspark.sql import Row
+
+    ev = spark.createDataFrame(
+        [(1, "2024-01-01 01:15:00", 7, "click", 1.5)],
+        "event_id long, ts_s string, user_id long, event_type string, value double",
+    ).select(
+        "event_id", F.col("ts_s").cast("timestamp").alias("ts"),
+        "user_id", "event_type", "value",
+    )
+    docs = spark.createDataFrame(
+        [Row(doc_id=1, text="the quick brown fox jumps over the lazy dog",
+             source="A")]
+    )
+    for name, partial, ddl in (
+        ("gold", ops._gold_partial(ev), ops.GOLD_DDL),
+        ("hourly", ops._hourly_counts(ev), ops.HOURLY_DDL),
+        ("tokens", ops._token_counts(docs), ops.TOKEN_COUNTS_DDL),
+        ("cms", ops._cms_grid(docs), ops.CMS_GRID_DDL),
+        ("keys", ops._doc_keys(docs.select("doc_id", "text")), ops.DOC_KEYS_DDL),
+    ):
+        path = ops._write_epoch(partial, str(tmp_path / name), 0)
+        inferred = spark.read.parquet(path).schema.simpleString()
+        declared = spark.read.schema(ddl).parquet(path).schema.simpleString()
+        assert declared == inferred, name
+
+
+def test_epoch_store_reads_launch_no_job(spark, tmp_path):
+    """Reads that declare the store's schema skip parquet schema
+    inference: building the read_gold fold or a gate's prior-epoch
+    read launches no Spark job, and the fold's answer is unchanged."""
+    from tests.test_layout import _jobs_launched
+
+    ev = spark.createDataFrame(
+        [(1, "click", 1.0), (1, "click", 2.0), (2, "buy", 5.0)],
+        "user_id long, event_type string, value double",
+    )
+    gold = str(tmp_path / "gold")
+    for e in (0, 1):
+        ops._write_epoch(ops._gold_partial(ev), gold, e)
+    df, n_jobs = _jobs_launched(spark, lambda: ops.read_gold(spark, gold))
+    assert n_jobs == 0
+    assert sorted(map(tuple, df.collect())) == [
+        (1, "click", 4, 6.0), (2, "buy", 2, 10.0)
+    ]
+
+    store = str(tmp_path / "store")
+    keys = spark.createDataFrame([(1, -1, "k1")], ops.DOC_KEYS_DDL)
+    ops._write_epoch(keys, store, 0)
+    prior, n_jobs = _jobs_launched(
+        spark, lambda: ops._prior_epochs(spark, store, 1, ops.DOC_KEYS_DDL)
+    )
+    assert n_jobs == 0
+    assert [tuple(r) for r in prior.collect()] == [(1, -1, "k1", 0)]
+
+
 def test_streaming_training_set_equals_batch_capstone(
     spark, sf_dir, tmp_path
 ):
