@@ -148,25 +148,39 @@ def spread(df: DataFrame) -> DataFrame:
     current = df.rdd.getNumPartitions()
     if current >= target:
         return df
-    est = int(
-        str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    )
-    width = spread_width(est, current, target)
+    width = spread_width(plan_bytes(df), current, target)
     if width <= current:
         return df
     return df.repartition(width)
 
 
+def plan_bytes(df: DataFrame) -> int:
+    """Catalyst's plan-time size estimate of ``df`` in bytes — real
+    footer sizes for a parquet scan, the optimizer's propagated
+    estimate above it (driver-side planning, no job). The one probe
+    behind every size-aware decision in the engine: :func:`spread`,
+    :func:`session_fixture`'s file count, the rank range partitions,
+    small-file compaction and the d_source_overlap shape gate."""
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    return int(str(stats.sizeInBytes()))
+
+
 def spread_width(
-    est_bytes: int, current: int, target: int, bytes_per_task: int | None = None
+    est_bytes: int,
+    lo: int,
+    hi: int | None = None,
+    bytes_per_part: int = SPREAD_BYTES_PER_TASK,
 ) -> int:
-    """The spread() width rule as a pure function: one task per
-    ``bytes_per_task`` of estimated input, clamped to
-    [current, target]. Property-tested in test_layout.py."""
-    if bytes_per_task is None:
-        bytes_per_task = SPREAD_BYTES_PER_TASK
-    proportional = -(-est_bytes // max(bytes_per_task, 1))  # ceil div
-    return max(current, min(target, proportional))
+    """The one bytes→partitions rule: one partition (task or output
+    file) per ``bytes_per_part`` of estimated input, clamped to
+    [lo, hi] (no upper bound when ``hi`` is None; ``lo`` wins when
+    ``lo > hi``). Integer ceil-division, so estimates near 2^63
+    (Catalyst's "unknown") stay exact. Property-tested in
+    test_layout.py."""
+    want = -(-est_bytes // bytes_per_part)
+    if hi is not None:
+        want = min(hi, want)
+    return max(lo, want)
 
 
 #: Per-session memo of staged derived frames (see
@@ -258,20 +272,11 @@ def session_fixture(
         # keyed-aggregate (partition-order independent), so the
         # staged values are unaffected.
         out = df
-        try:
-            est = int(
-                str(
-                    df._jdf.queryExecution()
-                    .optimizedPlan()
-                    .stats()
-                    .sizeInBytes()
-                )
-            )
-            nfiles = max(1, -(-est // FIXTURE_TARGET_FILE_BYTES))
-            if nfiles < out.rdd.getNumPartitions():
-                out = out.repartition(nfiles)
-        except Exception:  # noqa: BLE001 — stats are best-effort
-            pass
+        nfiles = spread_width(
+            plan_bytes(df), 1, bytes_per_part=FIXTURE_TARGET_FILE_BYTES
+        )
+        if nfiles < out.rdd.getNumPartitions():
+            out = out.repartition(nfiles)
         out.write.mode("overwrite").parquet(path)
         df = spark.read.parquet(path)
     FIXTURE_BUILD_SECONDS[name] = round(
@@ -337,14 +342,10 @@ def _session_scratch(spark: SparkSession) -> str | None:
     app_id = spark.sparkContext.applicationId
     if app_id in _SCRATCH:
         return _SCRATCH[app_id]
-    try:
-        conf_root = spark.conf.get("spark.baronbatch.scratch", None)
-    except Exception:  # noqa: BLE001 — conf surface differences
-        conf_root = None
     mode, root = select_scratch_mode(
         spark.sparkContext.master,
         os.environ.get("SPARK_GRAFT_SCRATCH"),
-        conf_root,
+        spark.conf.get("spark.baronbatch.scratch", None),
     )
     if mode == "root":
         base = f"{root}/bb_fixtures_{app_id}"

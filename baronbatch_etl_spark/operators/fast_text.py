@@ -118,8 +118,7 @@ def _cdc_chunk_arrays(
     Returns ``(doc_idx, chunk_id, n_tokens, fp)`` flat arrays, one
     entry per chunk, in (doc, position) order: ``doc_idx`` indexes
     into ``texts``, ``chunk_id`` is the 0-based chunk ordinal within
-    its doc. Shared by the array-returning pandas UDF and the
-    flat-row mapInPandas mapper so both stay bit-identical.
+    its doc. The numpy core of :func:`make_cdc_chunk_rows_mapper`.
     """
     flat, offs = _per_doc_hashes(texts, _tokenize)
     # chunk ends: boundary tokens, plus each doc's last token
@@ -156,13 +155,21 @@ def _cdc_chunk_arrays(
 
 
 def make_cdc_chunk_rows_mapper(modulus: int = 64):
-    """Flat-row twin of :func:`make_cdc_chunks_udf` for mapInPandas.
+    """Content-defined chunking as a mapInPandas mapper: a token whose
+    polynomial hash is ≡ 0 (mod ``modulus``) ENDS the current chunk
+    (rsync/Rabin-style boundary rule — split points follow content,
+    so an insertion early in a document shifts only its own chunk,
+    not every chunk after it). ``fp`` is the chunk-local Horner fold
+    ``(acc·131 + token_hash) % P`` — doc_fingerprint's constants,
+    segmented — so identical chunk content ⇒ identical fp anywhere
+    in the corpus.
 
     Emits ``(doc_id, chunk_id, n_tokens, fp)`` rows straight from the
-    numpy pass — no per-doc Python list assembly and no JVM-side
-    explode of a nested column, which together dominate the
-    array-returning UDF's cost. Row-local: zero shuffle at any
-    corpus size. Input batches must carry ``doc_id`` and ``text``.
+    numpy pass (boundary mask for chunk ends, then ALL chunks of the
+    batch fold as rows of one padded matrix) — no per-doc Python
+    list assembly and no JVM-side explode of a nested column.
+    Row-local: zero shuffle at any corpus size. Input batches must
+    carry ``doc_id`` and ``text``.
     """
 
     def cdc_chunk_rows(batches):
@@ -180,45 +187,6 @@ def make_cdc_chunk_rows_mapper(modulus: int = 64):
             )
 
     return cdc_chunk_rows
-
-
-def make_cdc_chunks_udf(modulus: int = 64):
-    """Content-defined chunking: a token whose polynomial hash is
-    ≡ 0 (mod ``modulus``) ENDS the current chunk (rsync/Rabin-style
-    boundary rule — split points follow content, so an insertion
-    early in a document shifts only its own chunk, not every chunk
-    after it). Returns per-doc ``array<struct<chunk_id, n_tokens,
-    fp>>`` where ``fp`` is the chunk-local Horner fold
-    ``(acc·131 + token_hash) % P`` — doc_fingerprint's constants,
-    segmented — so identical chunk content ⇒ identical fp anywhere
-    in the corpus.
-
-    Fully vectorized: one token-hash pass for the batch, boundary
-    mask + cumsum for chunk ids, then ALL chunks of the batch fold
-    as rows of one padded matrix (the _hash_strings trick one level
-    up). Row-local ⇒ zero shuffle at any corpus size.
-    """
-    ret = T.ArrayType(
-        T.StructType(
-            [
-                T.StructField("chunk_id", T.LongType()),
-                T.StructField("n_tokens", T.LongType()),
-                T.StructField("fp", T.LongType()),
-            ]
-        )
-    )
-
-    @F.pandas_udf(ret)
-    def cdc_chunks(texts: pd.Series) -> pd.Series:
-        doc_idx, chunk_id, lens, fps = _cdc_chunk_arrays(texts, modulus)
-        out: list[list[tuple[int, int, int]]] = [[] for _ in texts]
-        for c in range(len(doc_idx)):
-            out[doc_idx[c]].append(
-                (int(chunk_id[c]), int(lens[c]), int(fps[c]))
-            )
-        return pd.Series(out)
-
-    return cdc_chunks
 
 
 @F.pandas_udf(T.ArrayType(T.LongType()))
@@ -313,25 +281,6 @@ def make_sig_and_shingles_udf(a: tuple, b: tuple, p: int = POLY_P):
         return pd.DataFrame({"sig": sigs, "sh": shs})
 
     return sig_and_shingles
-
-
-@F.pandas_udf(T.DoubleType())
-def cosine_fast(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Vectorized twin of similarity.cosine: dot and norms accumulate
-    dimension-by-dimension in float64 (the exact fold order of the
-    expression version and the DuckDB oracle), vectorized across rows."""
-    if len(a) == 0:
-        return pd.Series([], dtype="float64")
-    am = np.vstack([np.asarray(v, dtype=np.float64) for v in a])
-    bm = np.vstack([np.asarray(v, dtype=np.float64) for v in b])
-    dot = np.zeros(len(a))
-    na = np.zeros(len(a))
-    nb = np.zeros(len(a))
-    for i in range(am.shape[1]):  # sequential over dims == fold order
-        dot += am[:, i] * bm[:, i]
-        na += am[:, i] * am[:, i]
-        nb += bm[:, i] * bm[:, i]
-    return pd.Series(dot / (np.sqrt(na) * np.sqrt(nb)))
 
 
 @F.pandas_udf(T.DoubleType())

@@ -45,6 +45,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from baronbatch_etl_spark.io import plan_bytes, spread_width
+
 # Reserved infra column names. `_gr_pid` also serves as the plan-audit
 # allowlist marker: tools/explain_audit.py accepts an unpartitioned
 # WindowExec ONLY when it orders by this column (the ≤P-row offsets
@@ -84,29 +86,10 @@ def release_rank_caches() -> None:
 #: per partition — small fixtures collapse to a handful of tasks
 #: (each extra task costs fixed scheduler/shuffle overhead that
 #: dominates sub-second queries), while any at-scale input rides the
-#: shuffle-parallelism cap. Same bytes-aware philosophy as
-#: io.spread(), which the r6->r8 rounds settled on after fixed widths
-#: lost in one regime or the other.
+#: shuffle-parallelism cap. Same bytes-aware rule
+#: (io.spread_width) as io.spread(), which the r6->r8 rounds settled
+#: on after fixed widths lost in one regime or the other.
 _BYTES_PER_RANGE_PARTITION = 4 << 20
-
-
-def _auto_partitions(df: DataFrame, cap: int) -> int:
-    """Range-partition count from Catalyst's plan-time size estimate,
-    clamped to [2, cap] (2 keeps the multi-partition path exercised
-    even on toy inputs; overestimates just ride the cap)."""
-    try:
-        est = int(
-            str(
-                df._jdf.queryExecution()
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        )
-    except Exception:  # noqa: BLE001 — stats unavailable: use the cap
-        return cap
-    want = -(-est // _BYTES_PER_RANGE_PARTITION)  # ceil div
-    return max(2, min(cap, want))
 
 
 def global_row_number(
@@ -116,7 +99,6 @@ def global_row_number(
     rank_name: str = "grank",
     total_name: str | None = None,
     num_partitions: int | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """All of ``df``'s columns plus ``rank_name`` = the exact 1-based
     global row number under ``order_by`` (which MUST be a unique total
@@ -134,29 +116,30 @@ def global_row_number(
     tagged frame — the pid→offset map must describe the exact
     partitioning the sequence numbers were minted under.
 
-    ``persist`` (default on) caches ``df`` and the tagged frame at
-    MEMORY_AND_DISK. The plan has three physical consumers of the
-    input — the range sampler, the offsets branch, and the output
-    branch — and Catalyst cannot ReusedExchange across them (column
-    pruning gives each branch a different exchange subtree), so
-    without caching the ENTIRE upstream runs up to 3× per rank and
-    compounds under chained ntiles. The cached frames are the rank
-    input itself — an already-aggregated grain orders of magnitude
-    smaller than the fact/corpus tables — so MEMORY_AND_DISK across
-    a cluster is cheap, lineage stays intact (executor loss =
-    recompute, not job failure), and upstream runs exactly once.
-    Pass ``persist=False`` inside loops that manage their own
-    caching. Every handle persisted here is tracked in
-    :data:`_PERSISTED`; long-lived sessions release them between
-    actions via :func:`release_rank_caches`.
+    ``df`` and the tagged frame are cached at MEMORY_AND_DISK. The
+    plan has three physical consumers of the input — the range
+    sampler, the offsets branch, and the output branch — and Catalyst
+    cannot ReusedExchange across them (column pruning gives each
+    branch a different exchange subtree), so without caching the
+    ENTIRE upstream runs up to 3× per rank and compounds under
+    chained ntiles. The cached frames are the rank input itself — an
+    already-aggregated grain orders of magnitude smaller than the
+    fact/corpus tables — so MEMORY_AND_DISK across a cluster is
+    cheap, lineage stays intact (executor loss = recompute, not job
+    failure), and upstream runs exactly once. Every handle persisted
+    here is tracked in :data:`_PERSISTED`; long-lived sessions
+    release them between actions via :func:`release_rank_caches`.
     """
     spark = df.sparkSession
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    parts = num_partitions or _auto_partitions(df, cap)
+    # 2 keeps the multi-partition path exercised even on toy inputs;
+    # overestimates just ride the cap
+    parts = num_partitions or spread_width(
+        plan_bytes(df), 2, cap, _BYTES_PER_RANGE_PARTITION
+    )
     cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    if persist:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        _PERSISTED.append(df)
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    _PERSISTED.append(df)
     ranged = df.repartitionByRange(parts, *cols).sortWithinPartitions(
         *cols
     )
@@ -168,13 +151,12 @@ def global_row_number(
             ),
         }
     )
-    if persist:
-        # both branches (offsets + output) read the materialized
-        # post-shuffle frame instead of re-running the exchange; this
-        # also pins ONE pid/seq assignment by construction rather
-        # than by recompute determinism
-        tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
-        _PERSISTED.append(tagged)
+    # both branches (offsets + output) read the materialized
+    # post-shuffle frame instead of re-running the exchange; this
+    # also pins ONE pid/seq assignment by construction rather than
+    # by recompute determinism
+    tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
+    _PERSISTED.append(tagged)
     counts = tagged.groupBy(_PID).agg(F.count("*").alias(_CNT))
     # prefix-sum over ONE ROW PER RANGE PARTITION — bounded by the
     # cluster's partition count (P), not by the data
@@ -241,7 +223,6 @@ def global_ntile(
     *,
     bucket_name: str,
     num_partitions: int | None = None,
-    persist: bool = True,
     approx: bool = False,
     approx_error: float = 1e-4,
 ) -> DataFrame:
@@ -249,8 +230,6 @@ def global_ntile(
     ``ntile(k)`` over the global ``order_by`` order (unique key
     required), computed as arithmetic on the distributed global rank
     — no single-partition WindowExec anywhere in the plan.
-    ``persist`` passes through to :func:`global_row_number` — turn it
-    off when the caller already persists ``df``.
 
     ``approx=True`` is the 100 TB opt-in (r9 verdict #6): instead of
     range-shuffling the frame to rank it, compute the k-1 bucket
@@ -315,7 +294,6 @@ def global_ntile(
         rank_name="_gr_rank",
         total_name="_gr_n",
         num_partitions=num_partitions,
-        persist=persist,
     )
     return ranked.withColumn(
         bucket_name, _ntile_from_rank("_gr_rank", "_gr_n", k)

@@ -12,12 +12,15 @@ agree exactly (the same trick t_tfidf uses for idf-free weights).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from baronbatch_etl_spark.io import load_table, session_fixture, spread
+from baronbatch_etl_spark.io import (
+    load_table,
+    plan_bytes,
+    session_fixture,
+    spread,
+)
 from baronbatch_etl_spark.operators import corpus as C
 from baronbatch_etl_spark.operators import dedup as D
 from baronbatch_etl_spark.operators import text as X
@@ -141,65 +144,18 @@ def t_corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cross-source overlap: MinHash-estimated + exact Jaccard per source pair
 # ---------------------------------------------------------------------------
 
-def _parse_size_bytes(v: str | int | None) -> int:
-    """Parse a Spark size conf value ('10MB', '10485760b', '-1') to
-    bytes. Unknown/unset → -1 (gate stays on the self-join shape)."""
-    if v is None:
-        return -1
-    s = str(v).strip().lower()
-    mult = 1
-    for suffix, m in (
-        ("kb", 1024), ("mb", 1024**2), ("gb", 1024**3), ("tb", 1024**4),
-        ("k", 1024), ("m", 1024**2), ("g", 1024**3), ("t", 1024**4),
-        ("b", 1),
-    ):
-        if s.endswith(suffix):
-            s, mult = s[: -len(suffix)], m
-            break
-    try:
-        return int(float(s) * mult)
-    except ValueError:
-        return -1
-
-
 def _broadcast_threshold_bytes(spark: SparkSession) -> int:
-    try:
-        return _parse_size_bytes(
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        )
-    except Exception:  # noqa: BLE001 — conf surface differences
-        return -1
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes,
+    as Spark itself parsed it (-1 when broadcasting is disabled)."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return int(conf.autoBroadcastJoinThreshold())
 
 
-def _pruned_scan_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for a pruned scan — REAL compressed
-    bytes when the source is parquet on storage (the staged fixture),
-    so the shape gate below decides from measurements, not guesses."""
-    try:
-        return int(
-            str(
-                df._jdf.queryExecution().optimizedPlan().stats()
-                .sizeInBytes()
-            )
-        )
-    except Exception:  # noqa: BLE001 — py4j surface differences
-        return -1
-
-
-def _overlap_use_expansion(
-    est_bytes: int, threshold_bytes: int, force: str | None = None
-) -> bool:
+def _overlap_use_expansion(est_bytes: int, threshold_bytes: int) -> bool:
     """The d_source_overlap shape gate as a pure, unit-testable rule:
     pair-expansion once the shingle vocabulary can no longer
-    broadcast (est > threshold), self-join otherwise. Unknown
-    estimate or disabled/unknown threshold → self-join (the measured
-    winner at bench scale). ``force`` ('expand' / 'selfjoin', from
-    $SPARK_GRAFT_OVERLAP_SHAPE) pins a branch for A/B runs and the
-    per-branch oracle tests."""
-    if force == "expand":
-        return True
-    if force == "selfjoin":
-        return False
+    broadcast (est > threshold), self-join otherwise. A disabled
+    threshold → self-join (the measured winner at bench scale)."""
     return est_bytes > threshold_bytes > 0
 
 
@@ -326,9 +282,8 @@ def d_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (source, sh) parquet columns, against the session's
     # autoBroadcastJoinThreshold.
     if _overlap_use_expansion(
-        _pruned_scan_bytes(sigs.select("source", "sh")),
+        plan_bytes(sigs.select("source", "sh")),
         _broadcast_threshold_bytes(spark),
-        os.environ.get("SPARK_GRAFT_OVERLAP_SHAPE"),
     ):
         pair_structs = F.flatten(
             F.transform(

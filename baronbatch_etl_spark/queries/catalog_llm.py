@@ -17,7 +17,6 @@ from baronbatch_etl_spark.operators import dedup as D
 from baronbatch_etl_spark.operators.fast_text import (
     char_entropy_fast,
     make_cdc_chunk_rows_mapper,
-    make_cdc_chunks_udf,
     make_shingle_hashes_udf,
     word_bigrams_fast,
 )
@@ -1191,7 +1190,6 @@ def s_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: (≈32-token average chunks on this fixture; production uses larger).
 _CDC_MOD = 32
 
-_cdc_chunks = make_cdc_chunks_udf(_CDC_MOD)
 _cdc_chunk_rows = make_cdc_chunk_rows_mapper(_CDC_MOD)
 _CDC_ROWS_SCHEMA = "doc_id bigint, chunk_id bigint, n_tokens bigint, fp bigint"
 
@@ -1248,9 +1246,9 @@ def _chunk_df(spark: SparkSession, sf_dir: str, widen: bool = False) -> DataFram
 def t_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-defined chunking: split every document at tokens whose
     hash ≡ 0 (mod 32) and fingerprint each chunk (see
-    ``fast_text.make_cdc_chunks_udf``). Row-local Arrow pass — zero
-    shuffle at any corpus size; boundaries follow content, so edits
-    shift only their own chunk."""
+    ``fast_text.make_cdc_chunk_rows_mapper``). Row-local Arrow pass —
+    zero shuffle at any corpus size; boundaries follow content, so
+    edits shift only their own chunk."""
     return _chunk_df(spark, sf_dir)
 
 

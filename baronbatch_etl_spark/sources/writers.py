@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from baronbatch_etl_spark.io import plan_bytes, spread_width
+
 
 def write_partitioned(
     df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
@@ -102,13 +104,8 @@ def compact(
     are unaffected until the swap, which stays the caller's atomic
     rename/metastore update).
     """
-    import math
-
     df = spark.read.parquet(in_path)
-    size = int(
-        df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    n = max(1, math.ceil(size / target_file_bytes))
+    n = spread_width(plan_bytes(df), 1, bytes_per_part=target_file_bytes)
     if sort_col:
         out = df.repartitionByRange(n, sort_col).sortWithinPartitions(
             sort_col

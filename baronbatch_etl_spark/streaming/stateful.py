@@ -61,8 +61,6 @@ FUNNEL_OUTPUT_SCHEMA = (
 )
 FUNNEL_STATE_SCHEMA = "t_view_us LONG, t_click_us LONG, t_purchase_us LONG"
 
-_FUNNEL_STAGES = ("view", "click", "purchase")
-
 
 def _update_funnel(
     key: tuple,

@@ -11,7 +11,7 @@ from baronbatch_etl_spark.operators import dedup as D
 from baronbatch_etl_spark.operators import text as X
 from baronbatch_etl_spark.operators.fast_text import (
     doc_fingerprint_fast,
-    make_cdc_chunks_udf,
+    make_cdc_chunk_rows_mapper,
     make_shingle_hashes_udf,
     shingle_hashes_fast,
     token_hashes_fast,
@@ -125,37 +125,41 @@ def _ref_cdc(text: str, modulus: int):
     return out
 
 
+def _cdc_chunks(spark, texts, modulus):
+    # {doc_id: [(chunk_id, n_tokens, fp), ...]} through the
+    # mapInPandas mapper t_cdc_chunks runs, chunks in ordinal order
+    df = spark.createDataFrame(
+        [Row(doc_id=i, text=t) for i, t in enumerate(texts)]
+    )
+    got = {}
+    for r in df.mapInPandas(
+        make_cdc_chunk_rows_mapper(modulus),
+        "doc_id long, chunk_id long, n_tokens long, fp long",
+    ).collect():
+        got.setdefault(r.doc_id, []).append((r.chunk_id, r.n_tokens, r.fp))
+    return {d: sorted(cs) for d, cs in got.items()}
+
+
 def test_cdc_chunks_vs_reference(spark):
     # small modulus → several chunks per doc; includes empty doc
     # (hash 0 ≡ 0 → single 1-token chunk) and boundary-at-doc-end
     texts = TEXTS + ["x " * 50, "lone"]
-    cdc = make_cdc_chunks_udf(4)
-    df = spark.createDataFrame(
-        [Row(doc_id=i, text=t) for i, t in enumerate(texts)]
-    )
-    got = {
-        r.doc_id: [(c.chunk_id, c.n_tokens, c.fp) for c in r.c]
-        for r in df.select("doc_id", cdc(F.col("text")).alias("c")).collect()
-    }
+    got = _cdc_chunks(spark, texts, 4)
     for i, t in enumerate(texts):
-        assert got[i] == _ref_cdc(t, 4), f"doc {i}: {t!r}"
+        assert got.get(i) == _ref_cdc(t, 4), f"doc {i}: {t!r}"
 
 
 def test_cdc_total_tokens_conserved(spark):
     # chunking is a partition of the token stream: per-doc chunk token
     # counts must sum to the doc's token count
-    df = _df(spark)
-    cdc = make_cdc_chunks_udf(8)
-    out = df.select(
-        F.size(F.split("text", " ")).alias("n_tok"),
-        F.aggregate(
-            cdc(F.col("text")),
-            F.lit(0).cast("long"),
-            lambda acc, c: acc + c.n_tokens,
-        ).alias("chunk_tok"),
-    ).collect()
-    for r in out:
-        assert r.n_tok == r.chunk_tok
+    n_tok = {
+        r.doc_id: r.n_tok
+        for r in _df(spark)
+        .select("doc_id", F.size(F.split("text", " ")).alias("n_tok"))
+        .collect()
+    }
+    got = _cdc_chunks(spark, TEXTS, 8)
+    assert {d: sum(c[1] for c in cs) for d, cs in got.items()} == n_tok
 
 
 def test_sig_and_shingles_parity(spark):
@@ -204,33 +208,3 @@ def test_word_bigrams_parity(spark):
     for r in out:
         assert sorted(set(r.expr)) == sorted(set(r.fast))
         assert len(set(r.fast)) == len(r.fast)  # distinct contract
-
-
-def test_cdc_row_mapper_matches_array_udf(spark):
-    # the mapInPandas flat-row mapper and the array-returning UDF share
-    # _cdc_chunk_arrays today; this pins them together if either path
-    # is ever edited independently
-    from baronbatch_etl_spark.operators.fast_text import (
-        make_cdc_chunk_rows_mapper,
-        make_cdc_chunks_udf,
-    )
-
-    texts = TEXTS + ["x " * 50, "lone", ""]
-    df = spark.createDataFrame(
-        [Row(doc_id=i, text=t) for i, t in enumerate(texts)]
-    )
-    via_udf = {
-        (r.doc_id, c.chunk_id, c.n_tokens, c.fp)
-        for r in df.select(
-            "doc_id", make_cdc_chunks_udf(4)(F.col("text")).alias("c")
-        ).collect()
-        for c in r.c
-    }
-    via_rows = {
-        (r.doc_id, r.chunk_id, r.n_tokens, r.fp)
-        for r in df.mapInPandas(
-            make_cdc_chunk_rows_mapper(4),
-            "doc_id long, chunk_id long, n_tokens long, fp long",
-        ).collect()
-    }
-    assert via_rows == via_udf

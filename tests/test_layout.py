@@ -122,9 +122,7 @@ def test_spread_width_is_bytes_aware(spark, sf_dir):
 
     target = spark.sparkContext.defaultParallelism
     docs = IO.load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    est = int(
-        str(docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    )
+    est = IO.plan_bytes(docs)
     expected = min(target, -(-est // IO.SPREAD_BYTES_PER_TASK))
     got = IO.spread(docs).rdd.getNumPartitions()
     assert got == max(expected, docs.rdd.getNumPartitions())
@@ -147,9 +145,13 @@ def test_spread_width_is_bytes_aware(spark, sf_dir):
 
 
 def test_spread_width_properties():
-    """Property-pin the pure width rule: bounded by [current, target],
-    monotonic in the estimate, full width from 'big enough', and the
-    ceil never starves a nonempty input to zero tasks."""
+    """Property-pin the one bytes→partitions rule under each clamp the
+    engine passes it: spread() ([current, target]), the rank range
+    partitions ([2, shuffle partitions]) and the staged-fixture and
+    compaction file counts (at least 1, no upper bound). Bounded,
+    monotonic in the estimate, full width from 'big enough', never
+    zero partitions, and an exact integer ceil even near 2^63
+    (Catalyst's estimate for an unknown size)."""
     from hypothesis import given, strategies as st
 
     from baronbatch_etl_spark.io import spread_width
@@ -175,7 +177,44 @@ def test_spread_width_properties():
         if est > 0 and current == 1:
             assert w >= 1
 
+    @given(
+        est=st.integers(min_value=0, max_value=1 << 50),
+        cap=st.integers(min_value=1, max_value=4096),
+        bpp=st.integers(min_value=1, max_value=1 << 30),
+    )
+    def check_rank(est, cap, bpp):
+        w = spread_width(est, 2, cap, bpp)
+        # at least 2 keeps the multi-partition path exercised
+        assert 2 <= w <= max(2, cap)
+        assert spread_width(est + bpp, 2, cap, bpp) >= w
+        assert spread_width(cap * bpp, 2, cap, bpp) == max(2, cap)
+
+    def exact_ceil(est, bpp):
+        # the count is the exact ceil: every byte fits, no spare part
+        n = spread_width(est, 1, bytes_per_part=bpp)
+        assert n >= 1
+        assert n * bpp >= est
+        assert n == 1 or (n - 1) * bpp < est
+        return n
+
+    @given(
+        est=st.integers(min_value=0, max_value=1 << 50),
+        bpp=st.integers(min_value=1, max_value=1 << 30),
+    )
+    def check_files(est, bpp):
+        exact_ceil(est, bpp)
+
     check()
+    check_rank()
+    check_files()
+    top = (1 << 63) - 1
+    for bpp in (1, 3, 7, 64 << 10, 4 << 20, 128 << 20, (1 << 40) + 1):
+        for est in (top, top - 1, top - bpp, 1 << 62, (1 << 62) + 1):
+            exact_ceil(est, bpp)
+    # float division rounds here (ceil(top / 3) is off by 171)
+    assert spread_width(top, 1, bytes_per_part=3) == top // 3 + 1
+    assert spread_width(top, 1, bytes_per_part=128 << 20) == 1 << 36
+    assert spread_width(top, 2, 8, 4 << 20) == 8
 
 
 def test_session_fixture_stages_once_and_matches_build(spark, sf_dir):

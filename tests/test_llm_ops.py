@@ -1097,50 +1097,66 @@ def test_curate_survivors_staged_matches_inline(spark, sf_dir):
     assert staged == inline and len(staged) > 0
 
 
-def test_overlap_shape_gate_rules():
+def test_overlap_shape_gate_rules(spark):
     """d_source_overlap's size gate (r10 verdict #5): expansion only
-    when the vocabulary provably cannot broadcast; unknown sizes and
-    disabled thresholds stay on the measured bench-scale winner."""
+    when the vocabulary provably cannot broadcast; disabled thresholds
+    stay on the measured bench-scale winner. The threshold is read as
+    Spark itself parsed the session's size string."""
     from baronbatch_etl_spark.queries.catalog_corpus import (
+        _broadcast_threshold_bytes as threshold,
         _overlap_use_expansion as gate,
-        _parse_size_bytes as psize,
     )
 
-    assert psize("10MB") == 10 * 1024**2
-    assert psize("10485760b") == 10485760
-    assert psize("-1") == -1 and psize(None) == -1
     assert gate(20 * 1024**2, 10 * 1024**2)
     assert not gate(5 * 1024**2, 10 * 1024**2)
     assert not gate(99, -1)  # broadcast disabled → self-join shape
     assert not gate(-1, 10 * 1024**2)  # unknown estimate → self-join
-    assert gate(1, 10**9, force="expand")
-    assert not gate(10**12, 1, force="selfjoin")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        for size, want in (
+            ("10MB", 10 * 1024**2),
+            ("10485760b", 10485760),
+            ("-1", -1),
+        ):
+            spark.conf.set(key, size)
+            assert threshold(spark) == want, size
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_source_overlap_branches_agree(spark, sf_dir):
     """Both d_source_overlap shapes must produce identical rows —
-    the gate may only ever change the plan, never the answer."""
-    import os as _os
-
+    the gate may only ever change the plan, never the answer. Each
+    branch is reached through the input the gate reads: a 1-byte
+    broadcast threshold forces the expansion, a disabled one the
+    self-join. The plan shape is checked too, so a threshold that
+    failed to take effect cannot compare one shape with itself."""
     from baronbatch_etl_spark.queries import load_all
 
     fn = load_all()["d_source_overlap"].fn
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
 
-    def rows(shape):
-        _os.environ["SPARK_GRAFT_OVERLAP_SHAPE"] = shape
+    def run(size):
+        spark.conf.set(key, size)
         try:
-            return sorted(
+            df = fn(spark, sf_dir)
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            rows = sorted(
                 (
                     r.src_a, r.src_b, r.n_a, r.n_b, r.n_inter,
                     r.exact_jaccard, r.sig_matches, r.est_jaccard,
                 )
-                for r in fn(spark, sf_dir).collect()
+                for r in df.collect()
             )
         finally:
-            del _os.environ["SPARK_GRAFT_OVERLAP_SHAPE"]
+            spark.conf.set(key, old)
+        return "collect_set" in plan, rows
 
-    a = rows("selfjoin")
-    b = rows("expand")
+    selfjoin_expands, a = run("-1")
+    expansion_expands, b = run("1")
+    assert not selfjoin_expands and expansion_expands
     assert a == b and len(a) > 0
 
 

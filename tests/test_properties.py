@@ -231,21 +231,28 @@ def test_ngram_jaccard_prefix_filter_is_lossless(spark, texts, threshold):
     st.sampled_from([2, 4, 16]),
 )
 def test_cdc_chunks_match_python_reference(texts, modulus):
-    # drive the Arrow UDF's wrapped function directly (no Spark round
-    # trip) so hypothesis can explore many corpora; tiny alphabet with
-    # spaces inside the generated tokens stresses empty-token hashes
-    # (h=0 is always a boundary) and multi-chunk documents
+    # drive the mapInPandas mapper directly on one pandas batch (no
+    # Spark round trip) so hypothesis can explore many corpora; tiny
+    # alphabet with spaces inside the generated tokens stresses
+    # empty-token hashes (h=0 is always a boundary) and multi-chunk
+    # documents
     from tests.test_fast_parity import _ref_cdc
     from baronbatch_etl_spark.operators.fast_text import (
-        make_cdc_chunks_udf,
+        make_cdc_chunk_rows_mapper,
     )
 
-    fn = make_cdc_chunks_udf(modulus).func
-    got = fn(pd.Series(texts))
-    for text, chunks in zip(texts, got):
-        assert [tuple(c) for c in chunks] == _ref_cdc(text, modulus), (
-            f"{text!r} mod {modulus}"
+    batch = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
+    (rows,) = make_cdc_chunk_rows_mapper(modulus)([batch])
+    for i, text in enumerate(texts):
+        chunks = rows[rows["doc_id"] == i]
+        got = list(
+            zip(
+                chunks["chunk_id"].tolist(),
+                chunks["n_tokens"].tolist(),
+                chunks["fp"].tolist(),
+            )
         )
+        assert got == _ref_cdc(text, modulus), f"{text!r} mod {modulus}"
 
 
 @settings(max_examples=10, deadline=None)
