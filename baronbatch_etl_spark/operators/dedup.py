@@ -1,14 +1,21 @@
 """Deduplication operators for LLM-data pipelines: exact, MinHash-LSH,
-SimHash, n-gram Jaccard (north-star family; the reference's only dedup
-is keep-first on a key, utils/clean_db.py:14-24 — covered by
-catalog_aggs.a8).
+SimHash, n-gram Jaccard, containment and edit distance (north-star
+family; the reference's only dedup is keep-first on a key,
+utils/clean_db.py:14-24 — covered by catalog_aggs.a8).
+
+One signature table: :func:`signatures` is the only place (outside the
+streaming micro-batch key gate) where text becomes MinHash signatures,
+shingle sets and SimHash fingerprints — one Arrow pass per document.
+Every pair operator below reads that frame (or a row subset of it) as
+its first argument and never materializes it; see the contract in
+:func:`signatures`.
 
 Scale design:
-  * signatures/fingerprints are ROW-LOCAL higher-order expressions —
-    computed at scan speed, no shuffle, no UDF;
-  * the only shuffles are the LSH band-bucket join (shuffle on band
-    key — standard production shape) and the final pair verification
-    joins;
+  * signatures are row-local — computed in the scan's own stage, no
+    shuffle;
+  * the only shuffles are the candidate-blocking joins (band keys,
+    SimHash blocks, rare shingles, prefix tokens — standard production
+    shapes) and the final pair verification joins;
   * all hash constants are fixed literals so runs are deterministic
     and the DuckDB oracle can replay them bit-for-bit.
 """
@@ -23,12 +30,12 @@ from pyspark.sql import functions as F
 from baronbatch_etl_spark.io import spread
 from baronbatch_etl_spark.operators.fast_text import (
     jaccard_fast,
-    make_minhash_udf,
+    make_shingle_hashes_udf,
     make_sig_and_shingles_udf,
     make_simhash_udf,
-    shingle_hashes_fast,
 )
 from baronbatch_etl_spark.operators.text import (
+    CONTAM_SHINGLE_N,
     POLY_P,
     char_poly_hash,
     char_poly_hash131,
@@ -52,10 +59,9 @@ MINHASH_B = (
 LSH_BANDS = 4  # 4 bands × 4 rows ⇒ P(candidate) = 1-(1-s⁴)⁴
 LSH_ROWS = MINHASH_K // LSH_BANDS
 
-#: Prefix width the staged signature table stores in its ``pfx``
-#: column (catalog_llm._doc_signatures and its DuckDB oracle twin
-#: both read this). edit_distance_pairs(base=...) accepts any
-#: prefix_len <= this width exactly, and raises beyond it.
+#: Prefix width of the signature frame's ``pfx`` column (the DuckDB
+#: oracle of d_edit_distance reads it too). edit_distance_pairs
+#: accepts any prefix_len <= this width exactly, and raises beyond it.
 STAGED_PREFIX_LEN = 64
 
 # 60-bit fingerprint assembled from TWO independent token-hash
@@ -70,9 +76,64 @@ SIMHASH_BLOCK_BITS = SIMHASH_BITS // 4  # 4 blocks: complete for r ≤ 3
 
 # Arrow-vectorized signature UDFs (same arithmetic as the expression
 # versions below — see operators/fast_text.py; parity is tested).
-minhash_signature_fast = make_minhash_udf(MINHASH_A, MINHASH_B)
 sig_and_shingles_fast = make_sig_and_shingles_udf(MINHASH_A, MINHASH_B)
 simhash_fast = make_simhash_udf(SIMHASH_BITS, SIMHASH_HALF)
+#: The contamination-width shingle hashes (``sh4``): the one instance
+#: the signature frame and the contamination query both use, so the
+#: staged column and the inline pass can never diverge.
+contam_shingles_fast = make_shingle_hashes_udf(CONTAM_SHINGLE_N)
+
+
+def signatures(docs: DataFrame) -> DataFrame:
+    """The signature frame of a document frame: every column of
+    ``docs`` (which must carry ``doc_id`` and ``text``) plus
+
+    * ``pfx`` — the first :data:`STAGED_PREFIX_LEN` characters;
+    * ``sig``, ``sh`` — the MinHash(16) signature and the sorted,
+      deduped word-3-gram shingle hashes, from one
+      ``sig_and_shingles_fast`` call;
+    * ``simhash`` — the 60-bit SimHash fingerprint;
+    * ``sh4`` — the :data:`CONTAM_SHINGLE_N`-gram shingle hashes.
+
+    All of them are row-local functions of ``text``, and every UDF
+    evaluates in one ArrowEvalPython pass, so the text crosses the
+    Python boundary once. Column pruning keeps a narrow select cheap:
+    ``signatures(docs).select("doc_id", "sig", "sh")`` plans only
+    ``sig_and_shingles_fast``.
+
+    Contract for the pair operators of this module, which take this
+    frame (or a row subset of it) as their first argument: they never
+    materialize their input. Each of them reads it from several plan
+    branches (blocking plus both verification sides), so a caller that
+    builds the frame lazily and reuses it materializes it — the
+    session-staged parquet fixture (catalog_llm._doc_signatures) or a
+    lazy ``localCheckpoint`` (streaming curate_ingest). A
+    ``localCheckpoint`` frees its blocks with the frame but is
+    unreplicated and truncates lineage: losing an executor fails the
+    job instead of recomputing. A run where executor loss is routine
+    would use ``cache()`` + ``unpersist()`` or a reliable
+    ``checkpoint()`` instead.
+
+    The result is lazy: nothing here checkpoints or caches.
+    """
+    return (
+        spread(docs)
+        .select(
+            "*",
+            F.substring(F.col("text"), 1, STAGED_PREFIX_LEN).alias("pfx"),
+            sig_and_shingles_fast(F.col("text")).alias("_x"),
+            simhash_fast(F.col("text")).alias("simhash"),
+            contam_shingles_fast(F.col("text")).alias("sh4"),
+        )
+        .select(
+            *docs.columns,
+            "pfx",
+            F.col("_x.sig").alias("sig"),
+            F.col("_x.sh").alias("sh"),
+            "simhash",
+            "sh4",
+        )
+    )
 
 
 def exact_dedup_survivors(docs: DataFrame) -> DataFrame:
@@ -162,99 +223,31 @@ def lsh_candidate_pairs(base: DataFrame) -> DataFrame:
     )
 
 
-#: Columns a caller-staged signature frame must carry (see the
-#: ``base=`` parameter of :func:`minhash_lsh_pairs` /
-#: :func:`containment_pairs`).
-_SIG_BASE_COLS = ("doc_id", "sig", "sh")
-
-
-def _require_docs_or_base(
-    docs: DataFrame | None, base: DataFrame | None
-) -> None:
-    """Loud misuse guard: every pair operator needs either the raw
-    ``docs`` frame or a staged ``base`` — with neither, the failure
-    used to surface as an opaque AttributeError deep inside
-    ``spread(None)`` (the r10 advice item)."""
-    if docs is None and base is None:
-        raise ValueError(
-            "pass either docs= (raw documents) or base= (a staged "
-            "signature frame); both were None"
-        )
-
-
-def _require_sig_base(base: DataFrame, cols: tuple[str, ...]) -> None:
-    """Loud misuse guard for caller-staged signature frames: a base
-    missing a required column would otherwise fail deep inside the
-    plan with an unresolved-attribute error (or worse, resolve against
-    an unrelated column of the same name)."""
-    missing = [c for c in cols if c not in base.columns]
+def _require_sig_base(sigs: DataFrame, cols: tuple[str, ...]) -> None:
+    """Loud misuse guard for the signature frame a pair operator is
+    handed: a frame missing a required column would otherwise fail deep
+    inside the plan with an unresolved-attribute error (or worse,
+    resolve against an unrelated column of the same name)."""
+    missing = [c for c in cols if c not in sigs.columns]
     if missing:
         raise ValueError(
-            f"signature base is missing column(s) {missing}; expected "
-            f"at least {list(cols)} (doc_id + the sig_and_shingles_fast "
-            "outputs)"
+            f"signature frame is missing column(s) {missing}; expected "
+            f"at least {list(cols)} (doc_id + the signatures() outputs)"
         )
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame | None, threshold: float = 0.8, n: int = 3,
-    base: DataFrame | None = None,
-) -> DataFrame:
+def minhash_lsh_pairs(sigs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Near-duplicate pairs via MinHash-LSH banding, verified by exact
-    shingle Jaccard ≥ threshold.
+    shingle Jaccard ≥ threshold, over a :func:`signatures` frame (needs
+    ``doc_id``, ``sig``, ``sh``).
 
-    Plan: scan → row-local signature/bands → explode bands (×4 rows)
-    → self-join on (band, key) for candidates → join shingle sets back
-    → exact-verify. Shuffle only on band keys and candidate doc ids.
-
-    The internal signature frame is materialized via a lazy
-    localCheckpoint instead of ``.cache()``: checkpoint blocks are
-    freed by the ContextCleaner once the frame is unreferenced, so
-    neither a 187-query catalog run nor a caller that builds pairs per
-    micro-batch (streaming curate_ingest) accumulates immortal
-    executor-storage entries (the round-4 advice: never leak by
-    default).
-
-    Fault-tolerance trade (applies to every localCheckpoint site in
-    this module): localCheckpoint blocks are UNREPLICATED and the
-    lineage is truncated, so losing an executor after materialization
-    fails the job instead of recomputing the lost partitions. Fine
-    for this repo's short interactive/bench runs; a long multi-tenant
-    run where executor loss is routine (dynamic allocation, spot
-    nodes) would want ``.cache()`` + ``unpersist()`` (cache keeps
-    lineage, so a lost block recomputes) or a reliable
-    ``checkpoint()`` to durable storage at these sites.
-
-    ``base=`` hands in an already-staged ``(doc_id, sig, sh)``
-    signature frame (e.g. the once-per-session
-    ``catalog_llm._doc_signatures`` parquet fixture) instead of
-    re-running the Arrow signature pass per call — the "materialize
-    the signature table" deployment shape the paragraph above
-    describes, actually stored. A staged base is NOT re-checkpointed
-    (the stage=False precedent from operators/graph.py): it is
-    already storage-backed, so the three consuming branches fan out
-    from the pushdown-capable scan directly, and column pruning gives
-    the banding branch (doc_id, sig) and the verify branches
-    (doc_id, sh) without either reading the other's array column."""
-    _require_docs_or_base(docs, base)
-    if base is not None:
-        _require_sig_base(base, _SIG_BASE_COLS)
-        base = base.select("doc_id", "sig", "sh")
-    else:
-        # Signatures + shingle hashes in one Arrow pass (shared
-        # tokenize/shingle/hash work); the frame is materialized
-        # because three plan branches (banding + both verification
-        # sides) reuse it — at 100 TB you'd materialize the signature
-        # table the same way (that is exactly what ``base=`` feeds in).
-        base = (
-            spread(docs).select(
-                "doc_id", sig_and_shingles_fast(F.col("text")).alias("x")
-            )
-            .select(
-                "doc_id", F.col("x.sig").alias("sig"), F.col("x.sh").alias("sh")
-            )
-        )
-        base = base.localCheckpoint(eager=False)
+    Plan: explode bands (×4 rows) → self-join on (band, key) for
+    candidates → join shingle sets back → exact-verify. Shuffle only on
+    band keys and candidate doc ids. Column pruning gives the banding
+    branch (doc_id, sig) and the verify branches (doc_id, sh), so a
+    staged frame is never read wider than a branch needs."""
+    _require_sig_base(sigs, ("doc_id", "sig", "sh"))
+    base = sigs.select("doc_id", "sig", "sh")
     cand = lsh_candidate_pairs(base)
     a = base.selectExpr("doc_id AS doc_a", "sh AS sh_a")
     b = base.selectExpr("doc_id AS doc_b", "sh AS sh_b")
@@ -269,11 +262,10 @@ def minhash_lsh_pairs(
 
 
 def containment_pairs(
-    docs: DataFrame | None,
+    sigs: DataFrame,
     threshold_pct: int = 90,
     rare_per_doc: int = 2,
     df_cap: int = 1000,
-    base: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric containment near-dup pairs: rare-shingle blocking,
     verified by exact shingle containment ``|A∩B| / min(|A|, |B|)``
@@ -303,30 +295,12 @@ def containment_pairs(
     Threshold test is pure integer arithmetic; the score is one IEEE
     division.
 
-    ``base=`` accepts the staged ``(doc_id, …, sh)`` signature frame
-    (``sh`` is already sorted+deduped by the Arrow UDF contract —
-    see make_sig_and_shingles_udf) so a catalog session computes the
-    shingle sets once; a staged base is storage-backed and is not
-    re-checkpointed (the minhash_lsh_pairs ``base=`` contract).
+    Reads ``doc_id`` and ``sh`` of a :func:`signatures` frame (``sh``
+    is sorted and deduped by the Arrow UDF contract — see
+    make_sig_and_shingles_udf).
     """
-    _require_docs_or_base(docs, base)
-    if base is not None:
-        _require_sig_base(base, ("doc_id", "sh"))
-        base = base.select("doc_id", "sh")
-    else:
-        base = (
-            spread(docs).select(
-                "doc_id", sig_and_shingles_fast(F.col("text")).alias("x")
-            )
-            .select(
-                "doc_id", F.array_distinct(F.col("x.sh")).alias("sh")
-            )
-        )
-        # inverted index + both verification sides reuse it; the
-        # collectable checkpoint frees with the frame (see
-        # operators/multimodal.py:412 for the leak story;
-        # fault-tolerance trade documented on minhash_lsh_pairs)
-        base = base.localCheckpoint(eager=False)
+    _require_sig_base(sigs, ("doc_id", "sh"))
+    base = sigs.select("doc_id", "sh")
     index = base.select("doc_id", F.explode("sh").alias("h"))
     dfc = index.groupBy("h").agg(F.count("*").cast("long").alias("df"))
     w_rare = Window.partitionBy("doc_id").orderBy("df", "h")
@@ -381,10 +355,9 @@ def containment_pairs(
 
 
 def edit_distance_pairs(
-    docs: DataFrame | None,
-    prefix_len: int = 64,
+    sigs: DataFrame,
+    prefix_len: int = STAGED_PREFIX_LEN,
     max_dist: int = 8,
-    base: DataFrame | None = None,
 ) -> DataFrame:
     """Character-level near-dup pairs: LSH band-collision candidates
     verified by bounded-prefix Levenshtein ≤ ``max_dist``.
@@ -403,56 +376,27 @@ def edit_distance_pairs(
     = 1 − dist/max(|pfx_a|, |pfx_b|) (one IEEE division — oracle
     bit-stable).
 
-    ``base=`` accepts a staged ``(doc_id, pfx, sig, sh)`` frame (the
-    minhash_lsh_pairs contract, plus ``pfx`` which must hold AT LEAST
-    ``prefix_len`` chars of each document's text; catalog_llm.
-    _doc_signatures stores the 64-char default). The staged column is
-    re-trimmed to ``prefix_len`` here — exact whenever the stored
-    width ≥ ``prefix_len`` (substring of a longer stored prefix IS
-    the requested prefix); a caller asking for MORE than the stored
-    width would get stored-width distances silently, so that case
-    raises (the stored width is not introspectable from the frame,
-    but any doc with a full-width ``pfx`` proves the stage width —
-    cheaper to verify at plan level: we require prefix_len <= the
-    documented stage width). A staged base is storage-backed and not
-    re-checkpointed.
+    Reads ``doc_id``, ``pfx``, ``sig`` and ``sh`` of a
+    :func:`signatures` frame. Its ``pfx`` holds
+    :data:`STAGED_PREFIX_LEN` characters and is re-trimmed to
+    ``prefix_len`` here — exact, since a substring of the stored prefix
+    IS the requested prefix. Asking for more than the stored width
+    would silently give stored-width distances, so it raises.
     """
-    _require_docs_or_base(docs, base)
-    if base is not None:
-        _require_sig_base(base, ("doc_id", "pfx", "sig", "sh"))
-        if prefix_len > STAGED_PREFIX_LEN:
-            raise ValueError(
-                f"prefix_len={prefix_len} exceeds the staged prefix "
-                f"width ({STAGED_PREFIX_LEN}); rebuild the signature "
-                "base with a wider pfx or pass docs= for an inline "
-                "pass"
-            )
-        base = base.select(
-            "doc_id",
-            # exact: stored pfx is substring(text, 1, STAGED_PREFIX_LEN)
-            # and prefix_len <= STAGED_PREFIX_LEN, so this equals
-            # substring(text, 1, prefix_len) (the r10 advice item:
-            # the parameter used to be silently ignored)
-            F.substring(F.col("pfx"), 1, prefix_len).alias("pfx"),
-            "sig",
-            "sh",
+    _require_sig_base(sigs, ("doc_id", "pfx", "sig", "sh"))
+    if prefix_len > STAGED_PREFIX_LEN:
+        raise ValueError(
+            f"prefix_len={prefix_len} exceeds the signature frame's "
+            f"prefix width ({STAGED_PREFIX_LEN})"
         )
-    else:
-        base = (
-            spread(docs)
-            .select(
-                "doc_id",
-                F.substring(F.col("text"), 1, prefix_len).alias("pfx"),
-                sig_and_shingles_fast(F.col("text")).alias("x"),
-            )
-            .select(
-                "doc_id", "pfx",
-                F.col("x.sig").alias("sig"), F.col("x.sh").alias("sh"),
-            )
-            # collectable checkpoint: banding + both verification sides
-            # reuse the materialized blocks, which free with the frame
-            .localCheckpoint(eager=False)
-        )
+    base = sigs.select(
+        "doc_id",
+        # stored pfx is substring(text, 1, STAGED_PREFIX_LEN), so this
+        # equals substring(text, 1, prefix_len)
+        F.substring(F.col("pfx"), 1, prefix_len).alias("pfx"),
+        "sig",
+        "sh",
+    )
     cand = lsh_candidate_pairs(base)
     a = base.select(F.col("doc_id").alias("doc_a"), F.col("pfx").alias("pfx_a"))
     b = base.select(F.col("doc_id").alias("doc_b"), F.col("pfx").alias("pfx_b"))
@@ -518,7 +462,7 @@ def connected_components(
     # checkpoint blocks free with the frame (no per-query storage
     # pinning). Unreplicated + lineage-truncating: executor loss
     # mid-run fails the job (fault-tolerance trade documented on
-    # minhash_lsh_pairs)
+    # signatures)
     edges = edges.localCheckpoint(eager=False)
     # seed with round 1 directly: label(node) = min(node, neighbors)
     # — one distributed agg instead of a full join round
@@ -583,35 +527,22 @@ def simhash(text: Column, bits: int = SIMHASH_BITS) -> Column:
     return acc
 
 
-def simhash_near_pairs(
-    docs: DataFrame | None,
-    max_hamming: int = 3,
-    base: DataFrame | None = None,
-) -> DataFrame:
+def simhash_near_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash: block on the four 15-bit slices of
     the 60-bit fingerprint (pigeonhole: any pair within hamming ≤ 3
     has at least one untouched slice, so it collides in ≥1 block),
     then verify candidates with popcount(xor) ≤ max_hamming.
 
-    ``base=`` accepts a staged ``(doc_id, simhash)`` fingerprint frame
-    (the column is named ``simhash`` to avoid colliding with the
-    signature table's shingle-set ``sh``); staged bases are
-    storage-backed and not re-checkpointed (the minhash_lsh_pairs
-    contract)."""
+    Reads ``doc_id`` and ``simhash`` of a :func:`signatures` frame
+    (renamed ``sh`` inside, where no shingle set is in scope)."""
     if max_hamming > 3:
         raise ValueError(
             "4-block blocking is only complete for max_hamming <= 3; "
             f"got {max_hamming} — pairs differing in every block would be "
             "silently missed (use more/smaller blocks for larger radii)"
         )
-    _require_docs_or_base(docs, base)
-    if base is not None:
-        _require_sig_base(base, ("doc_id", "simhash"))
-        base = base.selectExpr("doc_id", "simhash AS sh")
-    else:
-        base = spread(docs).select(
-            "doc_id", simhash_fast(F.col("text")).alias("sh")
-        ).localCheckpoint(eager=False)  # freed with the frame
+    _require_sig_base(sigs, ("doc_id", "simhash"))
+    base = sigs.selectExpr("doc_id", "simhash AS sh")
     # SimHash bits are CORRELATED across similar-vocabulary docs, so
     # block buckets skew beyond what uniform hashing suggests; 15-bit
     # keys (32k buckets/block) keep the candidate multiset small where
@@ -685,11 +616,7 @@ _SIMHASH_FIRST_BLOCK_SQL = _fold_sql(
 
 
 def ngram_jaccard_pairs(
-    docs: DataFrame | None,
-    threshold: float,
-    n: int = 3,
-    max_char_delta: int = 10,
-    base: DataFrame | None = None,
+    sigs: DataFrame, threshold: float, max_char_delta: int = 10
 ) -> DataFrame:
     """Exact n-gram Jaccard over blocked candidate pairs: only
     same-language docs within max_char_delta chars are compared, and a
@@ -707,24 +634,13 @@ def ngram_jaccard_pairs(
     is the difference between O(pairs-in-stratum) and
     O(pairs-sharing-a-rare-prefix-token).
 
-    ``base=`` accepts a staged ``(doc_id, lang, n_chars, sh)`` frame
-    (``sh`` is shingle_hashes_fast's sorted/deduped hashes — the
-    minhash_lsh_pairs contract); a staged base is storage-backed and
-    not re-checkpointed.
+    Reads ``doc_id``, ``lang``, ``n_chars`` and the sorted, deduped
+    word-3-gram hashes ``sh`` of a :func:`signatures` frame.
     """
     if threshold <= 0:
         raise ValueError("prefix filter requires threshold > 0")
-    _require_docs_or_base(docs, base)
-    if base is not None:
-        _require_sig_base(base, ("doc_id", "lang", "n_chars", "sh"))
-        hashed = base.select("doc_id", "lang", "n_chars", "sh")
-    else:
-        hashed = spread(docs).select(
-            "doc_id", "lang", "n_chars",
-            shingle_hashes_fast(F.col("text")).alias("sh"),
-        ).localCheckpoint(  # one Arrow hashing pass feeds prefixes AND
-            eager=False  # verification; blocks free with the frame
-        )
+    _require_sig_base(sigs, ("doc_id", "lang", "n_chars", "sh"))
+    hashed = sigs.select("doc_id", "lang", "n_chars", "sh")
     # first (len − ⌈τ·len⌉ + 1) of the ascending-sorted distinct hashes
     pref_len = F.size("sh") - F.ceil(
         F.lit(float(threshold)) * F.size("sh")

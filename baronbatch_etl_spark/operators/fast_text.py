@@ -106,10 +106,6 @@ def make_shingle_hashes_udf(n: int = 3):
     return shingle_hashes_n
 
 
-#: The width-3 instance (the MinHash input).
-shingle_hashes_fast = make_shingle_hashes_udf(3)
-
-
 def _cdc_chunk_arrays(
     texts: pd.Series, modulus: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
@@ -189,15 +185,6 @@ def make_cdc_chunk_rows_mapper(modulus: int = 64):
     return cdc_chunk_rows
 
 
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def token_hashes_fast(texts: pd.Series) -> pd.Series:
-    """Vectorized twin of text.token_hashes."""
-    flat, offs = _per_doc_hashes(texts, _tokenize)
-    return pd.Series(
-        [flat[offs[i] : offs[i + 1]].tolist() for i in range(len(texts))]
-    )
-
-
 @F.pandas_udf(T.LongType())
 def doc_fingerprint_fast(texts: pd.Series) -> pd.Series:
     """Vectorized twin of text.doc_fingerprint: Horner fold
@@ -222,28 +209,6 @@ def doc_fingerprint_fast(texts: pd.Series) -> pd.Series:
         step = (h * 131 + mat[:, j]) % POLY_P
         h = np.where(mask[:, j], step, h)
     return pd.Series(h)
-
-
-def make_minhash_udf(a: tuple, b: tuple, p: int = POLY_P):
-    """MinHash signatures from text: shingle-hash then per-permutation
-    min, all in one Arrow batch. (A·h+B) ≤ 2^61 — no overflow."""
-    av = np.asarray(a, dtype=np.int64)[None, :]
-    bv = np.asarray(b, dtype=np.int64)[None, :]
-    sentinel = np.full(len(a), p, dtype=np.int64)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def minhash_fast(texts: pd.Series) -> pd.Series:
-        flat, offs = _per_doc_hashes(texts, _doc_shingles)
-        perms = (flat[:, None] * av + bv) % p  # (n_shingles × k)
-        out = []
-        for i in range(len(texts)):
-            lo, hi = offs[i], offs[i + 1]
-            out.append(
-                sentinel.tolist() if hi == lo else perms[lo:hi].min(axis=0).tolist()
-            )
-        return pd.Series(out)
-
-    return minhash_fast
 
 
 def make_sig_and_shingles_udf(a: tuple, b: tuple, p: int = POLY_P):
@@ -276,7 +241,8 @@ def make_sig_and_shingles_udf(a: tuple, b: tuple, p: int = POLY_P):
                 shs.append([])
             else:
                 sigs.append(perms[lo:hi].min(axis=0).tolist())
-                # same contract as shingle_hashes_fast: sorted, deduped
+                # same contract as make_shingle_hashes_udf: sorted,
+                # deduped
                 shs.append(np.unique(flat[lo:hi]).tolist())
         return pd.DataFrame({"sig": sigs, "sh": shs})
 
@@ -290,8 +256,8 @@ def jaccard_fast(a: pd.Series, b: pd.Series) -> pd.Series:
     size(array_intersect)/size(array_distinct(concat))."""
     out = np.empty(len(a), dtype=np.float64)
     for i, (xs, ys) in enumerate(zip(a, b)):
-        # inputs come from shingle_hashes_fast, which dedupes hash
-        # values per doc (collision-safe) — uniqueness holds
+        # inputs come from sig_and_shingles' ``sh``, which dedupes
+        # hash values per doc (collision-safe) — uniqueness holds
         xa = np.asarray(xs, dtype=np.int64)
         ya = np.asarray(ys, dtype=np.int64)
         ni = np.intersect1d(xa, ya, assume_unique=True).size

@@ -213,7 +213,7 @@ def pagerank(
     return ranks
 
 
-def triangle_stats(edges: DataFrame, *, stage: bool = True) -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """Exact triangle census of an undirected graph → one row
     ``(n_nodes, n_edges, n_wedges, n_triangles)``.
 
@@ -237,18 +237,12 @@ def triangle_stats(edges: DataFrame, *, stage: bool = True) -> DataFrame:
     closing edge hash-join. Every count is an exact BIGINT — no
     floating point anywhere, bit-deterministic by associativity.
     """
-    # Stage the canonical edge list ONCE: degree counting, the
-    # orientation joins, the closing-edge probe and the edge count
-    # all fan out from it — without this the (possibly expensive)
-    # upstream edge derivation replays once per consumer. Callers
-    # whose edge list is ALREADY materialized storage (a session
-    # fixture / staging-table parquet scan) pass ``stage=False``:
-    # re-checkpointing a stored table into block storage is a
-    # redundant extra pass, and the pushdown-capable scan is the
-    # cheaper thing to fan out from.
+    # Degree counting, the orientation joins, the closing-edge probe
+    # and the edge count all fan out from ``edges``, so a lazy edge
+    # derivation would replay once per consumer: callers hand in
+    # materialized storage (a session fixture / staging-table parquet
+    # scan, or their own checkpoint) — the operator never stages it.
     edges = edges.select("a", "b")
-    if stage:
-        edges = edges.localCheckpoint()
     deg = (
         edges.select(F.col("a").alias("node"))
         .unionByName(edges.select(F.col("b").alias("node")))
@@ -316,7 +310,7 @@ def triangle_stats(edges: DataFrame, *, stage: bool = True) -> DataFrame:
 
 
 def adamic_adar(
-    edges: DataFrame, max_degree: int = 10_000, *, stage: bool = True
+    edges: DataFrame, max_degree: int = 10_000
 ) -> DataFrame:
     """Adamic–Adar link prediction over a canonical ``(a, b)`` edge
     list (``a < b``, distinct) → scored NON-adjacent candidate pairs
@@ -340,11 +334,8 @@ def adamic_adar(
     partition-order-proof — and ``1/ln(d)`` is one IEEE op per center
     from an exact integer degree.
     """
-    # stage=False for callers feeding an already-materialized staging
-    # table (see triangle_stats)
+    # ``edges`` is materialized by the caller (see triangle_stats)
     edges = edges.select("a", "b")
-    if stage:
-        edges = edges.localCheckpoint()
     adj = edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).withColumnRenamed("a", "w").withColumnRenamed("b", "nbr")
@@ -374,7 +365,7 @@ def adamic_adar(
 
 
 def hits(
-    pairs: DataFrame, iters: int = 2, *, stage: bool = True
+    pairs: DataFrame, iters: int = 2
 ) -> tuple[DataFrame, DataFrame]:
     """HITS hubs & authorities over a bipartite ``(c, s)`` pair frame
     → ``(authorities (s, score), hubs (c, score))``.
@@ -388,18 +379,15 @@ def hits(
     at all. Magnitudes stay ≤ (edge count)^iters ≪ 2^63 for the
     2–3 rounds authority scoring uses.
 
-    Scale shape: the pair list is staged once (collectable checkpoint);
+    Scale shape: the pair list comes materialized from the caller;
     each half-round is one join of a node-sized score frame onto the
     stationary pairs (AQE broadcasts it) plus one partial-agg
     shuffle — the PageRank iteration cost, alternating key sides.
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
-    # stage=False for callers feeding an already-materialized staging
-    # table (see triangle_stats)
+    # ``pairs`` is materialized by the caller (see triangle_stats)
     pairs = pairs.select("c", "s")
-    if stage:
-        pairs = pairs.localCheckpoint()
     # round 1 from unit hubs: authority = in-degree (exact count)
     auth = pairs.groupBy("s").agg(
         F.count("*").cast("long").alias("score")

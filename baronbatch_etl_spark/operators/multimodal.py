@@ -385,11 +385,7 @@ def payload_fingerprints(media: DataFrame) -> DataFrame:
     return media.select("media_id", _ahash_fast(F.col("payload")).alias("fp"))
 
 
-def fingerprint_near_pairs(
-    media: DataFrame | None = None,
-    max_hamming: int = 4,
-    fps: DataFrame | None = None,
-) -> DataFrame:
+def fingerprint_near_pairs(fps: DataFrame, max_hamming: int = 4) -> DataFrame:
     """Near-duplicate media pairs by banded fingerprint blocking: the
     56-bit code splits into 4 × 14-bit bands; candidates collide on at
     least one whole band and are verified by popcount(xor).
@@ -406,17 +402,14 @@ def fingerprint_near_pairs(
     asset; bucket sizes stay uniform because the code bits are
     hash-mixed.
 
-    The fingerprint branch feeds both join sides and so computes
-    twice — deliberate: one Arrow pass is cheaper than pinning the
-    fingerprint frame in executor storage for the session (an
-    unbounded ``cache()`` here leaked across a 138-query catalog
-    run), and at scale a caller who already materialized fingerprints
-    passes them through ``fps`` instead.
+    ``fps`` is a ``(media_id, fp)`` frame, e.g.
+    :func:`payload_fingerprints`. It feeds both join sides, so a lazy
+    fingerprint frame computes twice — deliberate: one Arrow pass is
+    cheaper than pinning the fingerprint frame in executor storage for
+    the session (an unbounded ``cache()`` here leaked across a
+    138-query catalog run); a caller that already materialized
+    fingerprints passes the stored frame.
     """
-    if fps is None:
-        if media is None:
-            raise ValueError("pass media or a precomputed fps frame")
-        fps = payload_fingerprints(media)
     blocks = fps.select(
         "media_id",
         "fp",

@@ -191,7 +191,7 @@ def global_row_number(
     return out.drop(_PID, _SEQ, _OFF)
 
 
-def _ntile_from_rank(rank: str, total: str, k: int) -> Column:
+def ntile_from_rank(rank: str, total: str, k: int) -> Column:
     """SQL ``ntile(k)`` as exact integer arithmetic on a global rank:
     with q = n div k and r = n mod k, the first r buckets take q+1
     rows and the rest take q — so rank x lands in bucket
@@ -200,20 +200,15 @@ def _ntile_from_rank(rank: str, total: str, k: int) -> Column:
     ``floor((x-1)*k/n)+1`` shortcut is NOT ntile: at n=5,k=2 it
     splits 2/3 where ntile splits 3/2.) CASE evaluates lazily, so
     the q=0 branch (n < k, every rank in the fat prefix) never
-    divides by zero."""
+    divides by zero. Callers that already hold (rank, total) columns
+    from global_row_number use it to take several statistics from one
+    ranked pass."""
     return F.expr(
         f"CAST(CASE WHEN {rank} <= ({total} % {k}) * (({total} div {k}) + 1) "
         f"THEN ({rank} + ({total} div {k})) div (({total} div {k}) + 1) "
         f"ELSE ({total} % {k}) + ({rank} - ({total} % {k}) * (({total} div {k}) + 1) "
         f"+ ({total} div {k}) - 1) div ({total} div {k}) END AS INT)"
     )
-
-
-def ntile_from_rank(rank: str, total: str, k: int) -> Column:
-    """Public alias of :func:`_ntile_from_rank` for callers that
-    already hold (rank, total) columns from global_row_number and
-    want several statistics from one ranked pass."""
-    return _ntile_from_rank(rank, total, k)
 
 
 def global_ntile(
@@ -296,7 +291,7 @@ def global_ntile(
         num_partitions=num_partitions,
     )
     return ranked.withColumn(
-        bucket_name, _ntile_from_rank("_gr_rank", "_gr_n", k)
+        bucket_name, ntile_from_rank("_gr_rank", "_gr_n", k)
     ).drop("_gr_rank", "_gr_n")
 
 

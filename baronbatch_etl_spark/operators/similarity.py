@@ -746,17 +746,6 @@ def _pq_assign(
     )
 
 
-def pq_train(
-    embeddings: DataFrame, m: int = 4, k: int = 4, iters: int = 2
-) -> dict[int, list[tuple[int, list[float]]]]:
-    """Per-subspace Lloyd codebooks: seeds are the k lowest vec_ids'
-    subvectors; ``iters - 1`` fixed-point M-steps (the codebooks the
-    round-``iters`` assignment uses — matching the unrolled SQL twin).
-    Driver state is k·dim scalars per round."""
-    cents, _ = _pq_train_with_dim(embeddings, m=m, k=k, iters=iters)
-    return cents
-
-
 def pq_train_state(
     embeddings: DataFrame, m: int = 4, k: int = 4, iters: int = 2
 ) -> tuple[dict[int, list[tuple[int, list[float]]]], int]:
@@ -766,16 +755,22 @@ def pq_train_state(
     codebooks once and every encode/search/recall pass reuses them.
     Pass the returned tuple as the ``trained`` argument of
     :func:`pq_encode` / :func:`pq_adc_topk` / :func:`pq_recall_at_k`
-    to skip retraining (the codebooks are k·dim driver scalars —
-    deterministic, so reuse is value-identical to retraining)."""
+    (the codebooks are k·dim driver scalars — deterministic, so one
+    state serves every pass value-identically).
+
+    Per-subspace Lloyd codebooks: seeds are the k lowest vec_ids'
+    subvectors; ``iters - 1`` fixed-point M-steps (the codebooks the
+    round-``iters`` assignment uses — matching the unrolled SQL twin).
+    Driver state is k·dim scalars per round."""
     return _pq_train_with_dim(embeddings, m=m, k=k, iters=iters)
 
 
 def _pq_train_with_dim(
     embeddings: DataFrame, m: int, k: int, iters: int
 ) -> tuple[dict[int, list[tuple[int, list[float]]]], int]:
-    """pq_train plus the vector dimensionality (read off the collected
-    seed rows — one fewer probe job for every downstream subframe)."""
+    """The trained codebooks plus the vector dimensionality (read off
+    the collected seed rows — one fewer probe job for every downstream
+    subframe)."""
     if iters < 1:
         raise ValueError("iters must be >= 1")
     emb = embeddings.select("vec_id", "embedding")
@@ -829,15 +824,14 @@ def _pq_train_with_dim(
 
 def pq_encode(
     embeddings: DataFrame,
+    trained: tuple[dict[int, list[tuple[int, list[float]]]], int],
     m: int = 4,
-    k: int = 4,
-    iters: int = 2,
-    trained: tuple[dict[int, list[tuple[int, list[float]]]], int]
-    | None = None,
 ) -> DataFrame:
     """Product quantization (Jégou et al. 2011): split every vector
-    into ``m`` contiguous subspaces, Lloyd-train ``k`` centroids per
-    subspace, and encode each vector as its m nearest-centroid ids →
+    into ``m`` contiguous subspaces and encode it as its m
+    nearest-centroid ids under the ``trained`` codebooks (from
+    :func:`pq_train_state`, which Lloyd-trains k centroids per
+    subspace) →
     (vec_id, codes array<int>, qdist). codes is the compressed
     representation (m·log2(k) bits per vector — the IVF-PQ memory
     budget that makes billion-vector ANN fit in RAM); qdist is the
@@ -851,20 +845,12 @@ def pq_encode(
     Scale shape: identical to kmeans_assign run per subspace, fused —
     ONE posexplode produces the (vec, subspace) rows, assignment is a
     map-only pass (m·k·(dim/m) = k·dim literal scalars in the plan),
-    each M-step is one (sub, cluster, dim)-keyed partial-agg shuffle
-    of m·k·(dim/m) groups, and the final per-vector code rollup is a
-    vec_id-keyed agg of m rows. Driver state per round is k·dim
-    scalars. Empty clusters drop out exactly as in kmeans_assign.
-
-    ``trained`` (from :func:`pq_train_state`) skips the training jobs
-    — the train-once path every additional consumer of one codebook
-    set rides.
+    and the per-vector code rollup is a vec_id-keyed agg of m rows.
+    Training (each M-step one (sub, cluster, dim)-keyed partial-agg
+    shuffle) runs once in :func:`pq_train_state`; every encode, search
+    and recall pass reuses its state, as a deployed index does.
     """
-    cents, dim = (
-        _check_trained(trained, m)
-        if trained
-        else _pq_train_with_dim(embeddings, m=m, k=k, iters=iters)
-    )
+    cents, dim = _check_trained(trained, m)
     sub, _, _ = _pq_subframe(embeddings, m, dim=dim)
     assigned = _pq_assign(sub, cents, m)
     coded = assigned.groupBy("vec_id").agg(
@@ -884,13 +870,10 @@ def pq_encode(
 def pq_adc_topk(
     embeddings: DataFrame,
     query_vec_id: int,
+    trained: tuple[dict[int, list[tuple[int, list[float]]]], int],
     topk: int = 10,
     m: int = 4,
-    k: int = 4,
-    iters: int = 2,
     cell_col: str | None = None,
-    trained: tuple[dict[int, list[tuple[int, list[float]]]], int]
-    | None = None,
 ) -> DataFrame:
     """Asymmetric-distance-computation search over PQ codes (the query
     leg of IVF-PQ): the query stays full precision, the corpus is its
@@ -916,14 +899,10 @@ def pq_adc_topk(
     streaming/ops.py) the probe touches one cell's files instead of
     the corpus. Codebooks stay corpus-global, as FAISS trains them.
 
-    ``trained`` (from :func:`pq_train_state`) skips retraining — the
-    every-search path of a deployed index.
+    ``trained`` comes from :func:`pq_train_state` — the every-search
+    path of a deployed index.
     """
-    cents, dim = (
-        _check_trained(trained, m)
-        if trained
-        else _pq_train_with_dim(embeddings, m=m, k=k, iters=iters)
-    )
+    cents, dim = _check_trained(trained, m)
     q_cols = ["embedding"] + ([cell_col] if cell_col else [])
     q_row = (
         embeddings.filter(F.col("vec_id") == query_vec_id)
@@ -972,12 +951,9 @@ def pq_adc_topk(
 def pq_recall_at_k(
     embeddings: DataFrame,
     query_vec_id: int,
+    trained: tuple[dict[int, list[tuple[int, list[float]]]], int],
     k: int = 10,
     m: int = 4,
-    codebook_k: int = 4,
-    iters: int = 2,
-    trained: tuple[dict[int, list[tuple[int, list[float]]]], int]
-    | None = None,
 ) -> DataFrame:
     """Recall@k of ADC-over-PQ-codes against exact squared-L2 brute
     force → one row ``(k, n_hits, recall_at_k)`` — the compression-
@@ -989,13 +965,7 @@ def pq_recall_at_k(
     query row, and the recall join touches 2·k surviving rows.
     """
     adc = pq_adc_topk(
-        embeddings,
-        query_vec_id,
-        topk=k,
-        m=m,
-        k=codebook_k,
-        iters=iters,
-        trained=trained,
+        embeddings, query_vec_id, trained, topk=k, m=m
     ).select("vec_id")
     q = embeddings.filter(F.col("vec_id") == query_vec_id).select(
         F.col("embedding").alias("q_emb")

@@ -231,8 +231,8 @@ def d_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     divides BIGINTs once — both bit-stable across engines.
     """
     # per-doc shingle sets come from the staged corpus signature table
-    # (catalog_llm._doc_signatures — its `sh` column is exactly
-    # shingle_hashes_fast's sorted/deduped output, parity-tested in
+    # (catalog_llm._doc_signatures — its `sh` column is the sorted,
+    # deduped word-3-gram hash set, parity-tested in
     # test_fast_parity.py): the char-level Horner fold was this
     # query's hot loop, and the staged scan replaces it with a
     # column-pruned parquet read shared across the session

@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from baronbatch_etl_spark.io import load_table, spread
-from baronbatch_etl_spark.operators import fast_text as FX
 from baronbatch_etl_spark.operators import ranking as R
 from baronbatch_etl_spark.operators import text as X
 from baronbatch_etl_spark.queries import register
@@ -34,18 +33,14 @@ _SQL_TOKEN_COUNT = (
 # ---------------------------------------------------------------------------
 
 #: Shingle width for contamination checks — read from the shared
-#: constant so the staged ``sh4`` column (catalog_llm._sh4_fast) can
-#: never silently diverge in width (the r10 advice item).
+#: constant so the oracle and the ``sh4`` column of
+#: ``dedup.signatures`` can never diverge in width.
 _CONTAM_N = X.CONTAM_SHINGLE_N
 
 _CONTAM_SHINGLES = (
     f"list_transform({X.sql_word_ngrams(_SQL_TOKENS, _CONTAM_N)}, "
     f"g -> {X.sql_char_poly_hash('g')})"
 )
-
-#: Arrow twin of ``X.shingle_hashes(text, 4)`` — same hashes (parity-
-#: tested), ~10× the per-char expression fold that dominated the bench.
-_contam_shingles_fast = FX.make_shingle_hashes_udf(_CONTAM_N)
 
 
 @register(
@@ -653,33 +648,23 @@ FROM tagged GROUP BY split, lang
 """
 
 
-def curate_stats(
-    docs: DataFrame, deduped: DataFrame, signatures: DataFrame | None = None
-) -> DataFrame:
+def curate_stats(sigs: DataFrame, deduped: DataFrame) -> DataFrame:
     """Stages 4–7 of the training-set pipeline — benchmark holdout +
     decontamination → target-mixture sampling → train/val/test split →
     per-(split, lang) dataset-card stats — over an already quality-
-    filtered and deduplicated survivor frame (needs doc_id, lang,
-    text). Shared by the batch capstone ``t_training_set`` and the
-    streaming corpus build (examples/streaming_training_set.py), so
-    the two twins differ ONLY in how the survivor set is produced.
+    filtered and deduplicated survivor frame ``deduped`` (needs doc_id,
+    lang, and n_tok or text). Shared by the batch capstone
+    ``t_training_set`` and the streaming corpus build
+    (examples/streaming_training_set.py), so the two twins differ ONLY
+    in how the survivor set is produced.
 
-    ``signatures=`` hands in the staged signature table: the
-    contamination shingles then come from its ``sh4`` column (the
-    same maker/width as ``_contam_shingles_fast`` — bit-identical
-    values) instead of a per-call Arrow pass over text. When
-    ``deduped`` carries a staged ``n_tok`` column (the signatures
-    path of :func:`curate_survivors`), the dataset-card token sums
-    read it instead of re-tokenizing text — the same row-local
-    value, so the rollup is bit-identical. The streaming twin keeps
-    the inline pass (micro-batches are not corpus-keyed)."""
-    if signatures is not None:
-        sh = signatures.select("doc_id", F.explode("sh4").alias("h"))
-    else:
-        sh = spread(docs).select(
-            "doc_id",
-            F.explode(_contam_shingles_fast(F.col("text"))).alias("h"),
-        )
+    ``sigs`` is the corpus's :func:`dedup.signatures` frame (the staged
+    fixture in the batch capstone): the contamination shingles come
+    from its ``sh4`` column. When ``deduped`` carries a staged
+    ``n_tok`` column (what :func:`curate_survivors` returns), the
+    dataset-card token sums read it instead of re-tokenizing text —
+    the same row-local value, so the rollup is bit-identical."""
+    sh = sigs.select("doc_id", F.explode("sh4").alias("h"))
     bench = sh.filter(F.col("doc_id") % 97 == 0).select("h").distinct()
     contam = (
         sh.filter(F.col("doc_id") % 97 != 0)
@@ -756,73 +741,52 @@ def t_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from baronbatch_etl_spark.queries.catalog_llm import _doc_signatures
 
-    docs = load_table(spark, sf_dir, "documents")
     sigs = _doc_signatures(spark, sf_dir)
-    return curate_stats(
-        docs, curate_survivors(docs, signatures=sigs), signatures=sigs
-    )
+    return curate_stats(sigs, curate_survivors(sigs))
 
 
-def curate_survivors(
-    docs: DataFrame, signatures: DataFrame | None = None
-) -> DataFrame:
+def curate_survivors(sigs: DataFrame) -> DataFrame:
     """Stages 1–3 of the training-set pipeline: quality filter → exact
     dedup keep-min → MinHash-LSH connected-component keep-one. The
     streaming twin (streaming/ops.curate_ingest) builds this same
     survivor set incrementally; tests/test_streaming_multibatch.py
     asserts the two sets coincide.
 
-    ``signatures=`` hands in the staged corpus signature table
+    ``sigs`` is the staged corpus signature table
     (catalog_llm._doc_signatures): the quality gate, the exact-dedup
-    digest AND the LSH stage then read row-local per-document columns
+    digest AND the LSH stage read row-local per-document columns
     (qscore, md5, sig, sh) from storage instead of re-scanning and
-    re-hashing the full text per query — value-identical because all
-    of them are row-local functions of (doc_id, text), and the
-    survivor DERIVATION (digest group-min, banding join, verification,
-    component propagation, anti-join) still runs in-plan here, per
-    query. In this path the returned frame carries
-    (doc_id, lang, n_chars, n_tok) — no text column at all, so
-    nothing downstream ever moves document bodies. The streaming twin
-    keeps the inline pass (its micro-batches are not corpus-keyed)."""
+    re-hashing the full text per query, while the survivor DERIVATION
+    (digest group-min, banding join, verification, component
+    propagation, anti-join) still runs in-plan here, per query. The
+    returned frame carries (doc_id, lang, n_chars, n_tok) — no text
+    column at all, so nothing downstream ever moves document bodies."""
     from baronbatch_etl_spark.operators import dedup as D
 
-    if signatures is not None:
-        # pruned fixture scan: (doc_id, lang, n_chars, n_tok, qscore,
-        # md5) — narrow columns, but the digest group-min is still a
-        # shuffle with several consumer branches (LSH base, the
-        # anti-join side, the caller's stats chain), so the survivor
-        # frame keeps the lazy-checkpoint barrier; materializing it
-        # is cheap now that it carries no text
-        qual = signatures.select(
-            "doc_id", "lang", "n_chars", "n_tok", "qscore", "md5"
-        ).filter(F.col("qscore") >= 0.35)
-        keep = (
-            qual.select("doc_id", F.col("md5").alias("text_md5"))
-            .groupBy("text_md5")
-            .agg(F.min("doc_id").alias("doc_id"))
+    # pruned fixture scan: (doc_id, lang, n_chars, n_tok, qscore, md5)
+    # — narrow columns, but the digest group-min is still a shuffle
+    # with several consumer branches (LSH input, the anti-join side,
+    # the caller's stats chain), so the survivor frame keeps the
+    # lazy-checkpoint barrier; materializing it is cheap since it
+    # carries no text
+    qual = sigs.select(
+        "doc_id", "lang", "n_chars", "n_tok", "qscore", "md5"
+    ).filter(F.col("qscore") >= 0.35)
+    keep = (
+        qual.select("doc_id", F.col("md5").alias("text_md5"))
+        .groupBy("text_md5")
+        .agg(F.min("doc_id").alias("doc_id"))
+    )
+    sdocs = (
+        qual.select("doc_id", "lang", "n_chars", "n_tok")
+        .join(keep.select("doc_id"), "doc_id")
+        .localCheckpoint(eager=False)
+    )
+    comp = D.connected_components(
+        D.minhash_lsh_pairs(
+            sigs.join(sdocs.select("doc_id"), "doc_id"), threshold=0.8
         )
-        sdocs = (
-            qual.select("doc_id", "lang", "n_chars", "n_tok")
-            .join(keep.select("doc_id"), "doc_id")
-            .localCheckpoint(eager=False)
-        )
-        base = signatures.join(sdocs.select("doc_id"), "doc_id")
-        comp = D.connected_components(
-            D.minhash_lsh_pairs(None, threshold=0.8, base=base)
-        )
-    else:
-        qual = docs.filter(X.quality_score("text", "n_chars") >= 0.35)
-        keep = (
-            qual.select("doc_id", F.md5("text").alias("text_md5"))
-            .groupBy("text_md5")
-            .agg(F.min("doc_id").alias("doc_id"))
-        )
-        sdocs = qual.join(keep.select("doc_id"), "doc_id").localCheckpoint(
-            eager=False  # freed with the frame, not pinned for the session
-        )
-        comp = D.connected_components(
-            D.minhash_lsh_pairs(sdocs, threshold=0.8)
-        )
+    )
     removed = comp.filter(F.col("node") != F.col("comp")).select(
         F.col("node").alias("doc_id")
     )
@@ -853,10 +817,9 @@ def t_curate_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep is a doc_id anti-join."""
     from baronbatch_etl_spark.queries.catalog_llm import _doc_signatures
 
-    docs = load_table(spark, sf_dir, "documents")
-    return curate_survivors(
-        docs, signatures=_doc_signatures(spark, sf_dir)
-    ).select("doc_id", "lang", "n_chars")
+    return curate_survivors(_doc_signatures(spark, sf_dir)).select(
+        "doc_id", "lang", "n_chars"
+    )
 
 
 @register(
@@ -1283,7 +1246,7 @@ def t_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from baronbatch_etl_spark.queries.catalog_llm import _doc_signatures
 
     sigs = _doc_signatures(spark, sf_dir)
-    pairs = D.minhash_lsh_pairs(None, threshold=0.8, base=sigs)
+    pairs = D.minhash_lsh_pairs(sigs, threshold=0.8)
     comp = D.connected_components(pairs).withColumnRenamed("node", "doc_id")
     # the universe of doc_ids comes from the fixture's pruned id
     # column — one row per document by construction, so the left

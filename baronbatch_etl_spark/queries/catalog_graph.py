@@ -264,10 +264,9 @@ def g_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the two must agree exactly.
     """
     pairs = _frequent_copurchase_edges(spark, sf_dir)
-    # stage=False: the fixture is already materialized (session-staged
-    # parquet, or the fallback's own lazy checkpoint) — the operator
-    # re-checkpointing it would pay one more full pass for nothing
-    stats = G.triangle_stats(pairs, stage=False)
+    # the fixture is already materialized (session-staged parquet, or
+    # the fallback's own lazy checkpoint)
+    stats = G.triangle_stats(pairs)
     return stats.select(
         "n_nodes",
         "n_edges",
@@ -328,8 +327,7 @@ def g_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     `g_pagerank`'s single blended rank.
     """
     pairs = _order_pair_counts(spark, sf_dir).select("c", "s")
-    # stage=False: fixture already materialized (see g_triangle_count)
-    auth, hub = G.hits(pairs, iters=_HITS_ITERS, stage=False)
+    auth, hub = G.hits(pairs, iters=_HITS_ITERS)
     top_a = (
         auth.select(
             F.lit("authority").alias("role"),
@@ -489,9 +487,7 @@ def g_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     pairs = _frequent_copurchase_edges(spark, sf_dir)
     return (
-        # stage=False: fixture already materialized (see
-        # g_triangle_count)
-        G.adamic_adar(pairs, max_degree=64, stage=False)
+        G.adamic_adar(pairs, max_degree=64)
         .orderBy(F.col("score").desc(), "x", "y")
         .limit(20)
     )

@@ -14,25 +14,14 @@ from pyspark.sql import functions as F
 from baronbatch_etl_spark.functions.scalars import round_half_up
 from baronbatch_etl_spark.io import load_table, session_fixture, spread
 from baronbatch_etl_spark.operators import dedup as D
-from baronbatch_etl_spark.operators.fast_text import (
-    char_entropy_fast,
-    make_cdc_chunk_rows_mapper,
-    make_shingle_hashes_udf,
-    word_bigrams_fast,
-)
-
-#: Contamination-width shingle hasher for the staged ``sh4`` column —
-#: the same maker AND width as catalog_curation._contam_shingles_fast
-#: (both read the one shared constant: a width change must never
-#: silently diverge the staged column from the oracle and the
-#: streaming twin — the r10 advice item; a direct import from
-#: catalog_curation would cycle, since its oracles evaluate this
-#: module's SQL fragments at import time).
 from baronbatch_etl_spark.operators import multimodal as M
 from baronbatch_etl_spark.operators import similarity as S
 from baronbatch_etl_spark.operators import text as X
-
-_sh4_fast = make_shingle_hashes_udf(X.CONTAM_SHINGLE_N)
+from baronbatch_etl_spark.operators.fast_text import (
+    char_entropy_fast,
+    make_cdc_chunk_rows_mapper,
+    word_bigrams_fast,
+)
 from baronbatch_etl_spark.queries import register
 
 # --- shared SQL fragments (DuckDB twins of the text operators) -------------
@@ -379,8 +368,10 @@ pairs AS (
 
 def _doc_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus signature table ``(doc_id, source, lang, n_chars,
-    pfx, sig, sh, simhash)``, staged once per (session, sf_dir) via
-    :func:`io.session_fixture` — ONE Arrow pass (both pandas UDFs
+    pfx, sig, sh, simhash, sh4, md5, qscore, n_tok)``: the
+    :func:`dedup.signatures` frame of the documents plus three
+    row-local scores, staged once per (session, sf_dir) via
+    :func:`io.session_fixture` — ONE Arrow pass (the three pandas UDFs
     evaluate in the same ArrowEvalPython projection) feeding the
     whole-corpus dedup family (`d_minhash_lsh`, `d_dup_clusters`,
     `d_cluster_canonical`, `d_lsh_recall`, `t_split_leakage_safe`,
@@ -404,64 +395,41 @@ def _doc_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow pass on the subset (the r10 interleaved A/B,
     OPTIMIZATION_r10.md), since the id join is AQE-broadcast while the inline pass
     pays tokenize+shingle+hash over the survivor text."""
+    return session_fixture(
+        spark,
+        sf_dir,
+        "doc_signatures",
+        lambda: _signature_table(load_table(spark, sf_dir, "documents")),
+    )
 
-    def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
-        return (
-            spread(docs)
-            .select(
-                "doc_id",
-                "source",
-                "lang",
-                "n_chars",
-                # the 64-char verification prefix of
-                # dedup.edit_distance_pairs — substring is row-local
-                # and the stored copy saves its consumers the text
-                # column entirely
-                F.substring(
-                    F.col("text"), 1, D.STAGED_PREFIX_LEN
-                ).alias("pfx"),
-                D.sig_and_shingles_fast(F.col("text")).alias("x"),
-                # all three pandas UDFs evaluate in the ONE
-                # ArrowEvalPython pass of this projection — text
-                # crosses the Python boundary once for the whole
-                # fixture
-                D.simhash_fast(F.col("text")).alias("simhash"),
-                # the 4-gram contamination shingles (same maker and
-                # width as catalog_curation._contam_shingles_fast —
-                # identical hash values)
-                _sh4_fast(F.col("text")).alias("sh4"),
-                # r11: three more row-local derived columns, same
-                # class as sig/simhash (per-document index state, NOT
-                # query results — d_exact_dedup, t_quality_score and
-                # the per-doc token scorers all stay inline): the
-                # exact-dedup digest, the curation quality score (a
-                # fixed IEEE expression — parquet round-trips doubles
-                # exactly) and the whitespace token count. The
-                # survivor composites were paying a second full-text
-                # scan + digest/score/tokenize per query for these
-                # (measured 1.14 s of t_training_set's 2.84 s).
-                F.md5("text").alias("md5"),
-                X.quality_score("text", "n_chars").alias("qscore"),
-                X.token_count("text").cast("long").alias("n_tok"),
-            )
-            .select(
-                "doc_id",
-                "source",
-                "lang",
-                "n_chars",
-                "pfx",
-                F.col("x.sig").alias("sig"),
-                F.col("x.sh").alias("sh"),
-                "simhash",
-                "sh4",
-                "md5",
-                "qscore",
-                "n_tok",
-            )
-        )
 
-    return session_fixture(spark, sf_dir, "doc_signatures", build)
+def _signature_table(docs: DataFrame) -> DataFrame:
+    """The lazy build of :func:`_doc_signatures` over a documents
+    frame: its :func:`dedup.signatures` columns plus the three
+    row-local scores, in the staged column order."""
+    return D.signatures(docs).select(
+        "doc_id",
+        "source",
+        "lang",
+        "n_chars",
+        "pfx",
+        "sig",
+        "sh",
+        "simhash",
+        "sh4",
+        # r11: three more row-local derived columns, same class as
+        # sig/simhash (per-document index state, NOT query results —
+        # d_exact_dedup, t_quality_score and the per-doc token scorers
+        # all stay inline): the exact-dedup digest, the curation
+        # quality score (a fixed IEEE expression — parquet round-trips
+        # doubles exactly) and the whitespace token count. The survivor
+        # composites were paying a second full-text scan +
+        # digest/score/tokenize per query for these (measured 1.14 s of
+        # t_training_set's 2.84 s).
+        F.md5("text").alias("md5"),
+        X.quality_score("text", "n_chars").alias("qscore"),
+        X.token_count("text").cast("long").alias("n_tok"),
+    )
 
 
 def _minhash_sql() -> str:
@@ -474,9 +442,7 @@ def d_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-Jaccard-verified at 0.8 — the canonical 100 TB near-dedup
     plan (row-local signatures, shuffle only on band buckets; the
     signature table is the staged `_doc_signatures` fixture)."""
-    return D.minhash_lsh_pairs(
-        None, threshold=0.8, base=_doc_signatures(spark, sf_dir)
-    )
+    return D.minhash_lsh_pairs(_doc_signatures(spark, sf_dir), threshold=0.8)
 
 
 @register(
@@ -510,9 +476,7 @@ def d_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min-label propagation; DuckDB oracle replays it as a recursive
     transitive closure) + per-cluster size — the keep-one-per-cluster
     contract of a production dedup pass."""
-    pairs = D.minhash_lsh_pairs(
-        None, threshold=0.8, base=_doc_signatures(spark, sf_dir)
-    )
+    pairs = D.minhash_lsh_pairs(_doc_signatures(spark, sf_dir), threshold=0.8)
     comp = D.connected_components(pairs)
     sizes = comp.groupBy("comp").agg(F.count("*").alias("csize"))
     return comp.join(sizes, "comp").select(
@@ -598,11 +562,7 @@ def d_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     comp = D.connected_components(
-        D.minhash_lsh_pairs(
-            None,
-            threshold=0.8,
-            base=sigs.join(keep, "doc_id"),
-        )
+        D.minhash_lsh_pairs(sigs.join(keep, "doc_id"), threshold=0.8)
     )
     removed = comp.filter(F.col("node") != F.col("comp")).select(
         F.col("node").alias("doc_id")
@@ -748,11 +708,7 @@ def t_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     comp = D.connected_components(
-        D.minhash_lsh_pairs(
-            None,
-            threshold=0.8,
-            base=sigs.join(sdocs, "doc_id"),
-        )
+        D.minhash_lsh_pairs(sigs.join(sdocs, "doc_id"), threshold=0.8)
     )
     removed = comp.filter(F.col("node") != F.col("comp")).select(
         F.col("node").alias("doc_id")
@@ -796,9 +752,7 @@ def d_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     token-hash families; Arrow-vectorized path, expression twin in
     operators.dedup)."""
     docs = load_table(spark, sf_dir, "documents")
-    return spread(docs).select(
-        "doc_id", D.simhash_fast(F.col("text")).alias("simhash")
-    )
+    return D.signatures(docs).select("doc_id", "simhash")
 
 
 @register(
@@ -832,9 +786,7 @@ def d_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately stays inline: its declared RESULT is the fingerprint
     frame, and serving a query's own output from session staging
     would be result caching, not derivation sharing.)"""
-    return D.simhash_near_pairs(
-        None, base=_doc_signatures(spark, sf_dir)
-    )
+    return D.simhash_near_pairs(_doc_signatures(spark, sf_dir))
 
 
 @register(
@@ -857,9 +809,7 @@ WHERE len(list_intersect(a.hs, b.hs)) * 1.0
 def d_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard ≥ 0.5 over language+length-blocked pairs
     (shingle sets from the staged `_doc_signatures` table)."""
-    return D.ngram_jaccard_pairs(
-        None, threshold=0.5, base=_doc_signatures(spark, sf_dir)
-    )
+    return D.ngram_jaccard_pairs(_doc_signatures(spark, sf_dir), threshold=0.5)
 
 
 @register(
@@ -886,12 +836,7 @@ def d_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (64-char prefix, thresholded DP that stops at k+1 — O(k·len), not
     O(len²)). The strongest exact verifier in the dedup family, never
     run all-pairs (operators/dedup.py edit_distance_pairs)."""
-    return D.edit_distance_pairs(
-        None,
-        prefix_len=D.STAGED_PREFIX_LEN,  # the fixture's stored width
-        max_dist=8,
-        base=_doc_signatures(spark, sf_dir),
-    )
+    return D.edit_distance_pairs(_doc_signatures(spark, sf_dir), max_dist=8)
 
 
 @register(
@@ -952,9 +897,7 @@ def d_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold arithmetic, one IEEE division for the score.
     """
     return (
-        D.containment_pairs(
-            None, threshold_pct=90, base=_doc_signatures(spark, sf_dir)
-        )
+        D.containment_pairs(_doc_signatures(spark, sf_dir), threshold_pct=90)
         .orderBy(F.col("containment").desc(), "doc_a", "doc_b")
     )
 
@@ -1363,7 +1306,7 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/multimodal.payload_fingerprints). The oracle replays the
     identical folds over the text the payload encodes."""
     media = M.documents_as_media(load_table(spark, sf_dir, "documents"))
-    return M.fingerprint_near_pairs(media, max_hamming=4)
+    return M.fingerprint_near_pairs(M.payload_fingerprints(media), max_hamming=4)
 
 
 # ---------------------------------------------------------------------------
@@ -1964,16 +1907,14 @@ def d_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     sub = _doc_signatures(spark, sf_dir).filter(F.col("doc_id") % 3 == 0)
     exact = D.ngram_jaccard_pairs(
-        None,
+        # one synthetic language block — row-local on the staged scan
+        sub.withColumn("lang", F.lit("_")),
         threshold=0.8,
         max_char_delta=1 << 40,
-        # one synthetic language block, as before — row-local on the
-        # staged scan
-        base=sub.withColumn("lang", F.lit("_")),
     )
     # the stratum filter is row-local in the fixture's columns, so
     # both the exact and the LSH side read the same staged scan
-    lsh = D.minhash_lsh_pairs(None, threshold=0.8, base=sub)
+    lsh = D.minhash_lsh_pairs(sub, threshold=0.8)
     n_exact = exact.agg(F.count("*").alias("n_exact"))
     n_lsh = lsh.agg(F.count("*").alias("n_lsh"))
     return (
@@ -2395,10 +2336,8 @@ def s_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     coded = S.pq_encode(
         load_table(spark, sf_dir, "embeddings"),
-        m=_PQ_M,
-        k=_PQ_K,
-        iters=2,
         trained=_pq_trained(spark, sf_dir),
+        m=_PQ_M,
     )
     return coded.select(
         "vec_id",
@@ -2498,11 +2437,9 @@ def s_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.pq_adc_topk(
         load_table(spark, sf_dir, "embeddings"),
         0,
+        trained=_pq_trained(spark, sf_dir),
         topk=10,
         m=_PQ_M,
-        k=_PQ_K,
-        iters=2,
-        trained=_pq_trained(spark, sf_dir),
     )
 
 
@@ -2560,12 +2497,10 @@ def s_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.pq_adc_topk(
         load_table(spark, sf_dir, "embeddings"),
         0,
+        trained=_pq_trained(spark, sf_dir),
         topk=10,
         m=_PQ_M,
-        k=_PQ_K,
-        iters=2,
         cell_col="label",
-        trained=_pq_trained(spark, sf_dir),
     )
 
 
@@ -2629,11 +2564,9 @@ def s_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.pq_recall_at_k(
         load_table(spark, sf_dir, "embeddings"),
         0,
+        trained=_pq_trained(spark, sf_dir),
         k=10,
         m=_PQ_M,
-        codebook_k=_PQ_K,
-        iters=2,
-        trained=_pq_trained(spark, sf_dir),
     )
 
 
@@ -3205,7 +3138,7 @@ def d_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sigs = _doc_signatures(spark, sf_dir)
     comp = D.connected_components(
-        D.minhash_lsh_pairs(None, threshold=0.8, base=sigs)
+        D.minhash_lsh_pairs(sigs, threshold=0.8)
     ).withColumnRenamed("node", "doc_id")
     # the staged qscore column (row-local, bit-identical to the
     # inline expression — parquet round-trips doubles exactly)

@@ -518,8 +518,15 @@ def curate_ingest(
             )
         )
         # pairs among accepted docs cannot exist (each was admitted
-        # non-adjacent), so every pair touches this batch
-        pairs = D.minhash_lsh_pairs(pool, threshold=threshold).cache()
+        # non-adjacent), so every pair touches this batch. The pair
+        # operator reads its signature frame from several branches, so
+        # the pool's signatures are materialized once here
+        sigs = (
+            D.signatures(pool)
+            .select("doc_id", "sig", "sh")
+            .localCheckpoint(eager=False)
+        )
+        pairs = D.minhash_lsh_pairs(sigs, threshold=threshold).cache()
         if accepted is not None:
             acc_a = accepted.select(F.col("doc_id").alias("doc_a"))
             acc_b = accepted.select(F.col("doc_id").alias("doc_b"))

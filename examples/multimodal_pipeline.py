@@ -77,7 +77,7 @@ def main() -> None:
     print("== 4. near-dup lane over documents (banded aHash) ==")
     docs = load_table(spark, sf_dir, "documents").limit(500)
     pairs = M.fingerprint_near_pairs(
-        M.documents_as_media(docs), max_hamming=4
+        M.payload_fingerprints(M.documents_as_media(docs)), max_hamming=4
     ).collect()
     for row in pairs[:10]:
         print(row)

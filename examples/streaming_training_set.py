@@ -30,6 +30,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F
 
 from baronbatch_etl_spark.io import DEFAULT_SF_DIR, load_table
+from baronbatch_etl_spark.operators import dedup as D
 from baronbatch_etl_spark.queries import catalog_curation as C
 from baronbatch_etl_spark.queries import load_all
 from baronbatch_etl_spark.session import get_spark
@@ -83,7 +84,9 @@ def main() -> None:
     accepted = ops.read_curated(spark, acc)
     print(f"stream-accepted survivors: {accepted.count()} of {n}")
 
-    card = C.curate_stats(docs, accepted).orderBy("split", "lang")
+    card = C.curate_stats(D.signatures(docs), accepted).orderBy(
+        "split", "lang"
+    )
     print("\n=== dataset card from the STREAM-built corpus ===")
     card.show(50, truncate=False)
 

@@ -160,7 +160,7 @@ def test_leakage_safe_split_keeps_clusters_together(spark, sf_dir):
 
     out = REG["t_split_leakage_safe"].fn(spark, sf_dir)
     pairs = D.minhash_lsh_pairs(
-        load_table(spark, sf_dir, "documents"), threshold=0.8
+        D.signatures(load_table(spark, sf_dir, "documents")), threshold=0.8
     )
     straddlers = (
         pairs.join(

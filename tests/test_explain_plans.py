@@ -656,3 +656,27 @@ def test_simhash_pairs_verify_runs_in_join_condition(spark, registry, sf_dir):
     assert "Aggregate" not in final
     shuffles = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", final)
     assert len(shuffles) == 1 and re.fullmatch(r"doc_id#\d+L?, \d+", shuffles[0])
+
+
+def _arrow_evals(df) -> list[str]:
+    """The ArrowEvalPython nodes of a frame's optimized plan."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+
+
+def test_signature_frame_runs_one_arrow_pass_and_prunes(spark, sf_dir):
+    # the staged doc_signatures build evaluates all three signature
+    # UDFs in ONE Arrow pass, and a narrow select of the same lazy
+    # frame plans only the UDF it reads — the pruning every
+    # signatures() caller relies on
+    from baronbatch_etl_spark.io import load_table
+    from baronbatch_etl_spark.operators import dedup as D
+    from baronbatch_etl_spark.queries.catalog_llm import _signature_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    (full,) = _arrow_evals(_signature_table(docs))
+    for udf in ("sig_and_shingles(", "simhash_fast(", "shingle_hashes_n("):
+        assert full.count(udf) == 1, full
+    (narrow,) = _arrow_evals(D.signatures(docs).select("doc_id", "sig", "sh"))
+    assert "sig_and_shingles(" in narrow
+    assert "simhash_fast(" not in narrow and "shingle_hashes_n(" not in narrow

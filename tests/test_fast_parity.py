@@ -12,9 +12,6 @@ from baronbatch_etl_spark.operators import text as X
 from baronbatch_etl_spark.operators.fast_text import (
     doc_fingerprint_fast,
     make_cdc_chunk_rows_mapper,
-    make_shingle_hashes_udf,
-    shingle_hashes_fast,
-    token_hashes_fast,
 )
 from baronbatch_etl_spark.operators.text import POLY_P
 
@@ -36,38 +33,29 @@ def _df(spark):
 
 
 def test_shingle_hash_parity(spark):
-    # fast path returns sorted-unique hash values (set semantics);
-    # compare as sets — every consumer is order-insensitive
+    # the engine's 3-gram hashes are sig_and_shingles' ``sh``: sorted-
+    # unique hash values (set semantics); compare as sets — every
+    # consumer is order-insensitive
     df = _df(spark)
     out = df.select(
-        X.shingle_hashes(F.col("text")).alias("expr"),
-        shingle_hashes_fast(F.col("text")).alias("fast"),
+        X.shingle_hashes(F.col("text"), 3).alias("expr"),
+        D.sig_and_shingles_fast(F.col("text")).alias("x"),
     ).collect()
     for r in out:
-        assert sorted(set(r.expr)) == r.fast
+        assert sorted(set(r.expr)) == r.x.sh
 
 
 def test_shingle_hash_parity_width4(spark):
-    # the contamination path uses 4-gram shingles via the factory;
-    # same set-semantics comparison as the width-3 test
+    # the contamination path uses the 4-gram instance the signature
+    # frame stages as ``sh4``; same set-semantics comparison as the
+    # width-3 test
     df = _df(spark)
-    fast4 = make_shingle_hashes_udf(4)
     out = df.select(
         X.shingle_hashes(F.col("text"), 4).alias("expr"),
-        fast4(F.col("text")).alias("fast"),
+        D.contam_shingles_fast(F.col("text")).alias("fast"),
     ).collect()
     for r in out:
         assert sorted(set(r.expr)) == r.fast
-
-
-def test_token_hash_parity(spark):
-    df = _df(spark)
-    out = df.select(
-        X.token_hashes(F.col("text")).alias("expr"),
-        token_hashes_fast(F.col("text")).alias("fast"),
-    ).collect()
-    for r in out:
-        assert r.expr == r.fast
 
 
 def test_fingerprint_parity(spark):
@@ -84,10 +72,10 @@ def test_minhash_parity(spark):
     df = _df(spark)
     out = df.select(
         D.minhash_signature(F.col("text")).alias("expr"),
-        D.minhash_signature_fast(F.col("text")).alias("fast"),
+        D.sig_and_shingles_fast(F.col("text")).alias("x"),
     ).collect()
     for r in out:
-        assert r.expr == r.fast
+        assert r.expr == r.x.sig
 
 
 def test_simhash_parity(spark):
@@ -163,16 +151,17 @@ def test_cdc_total_tokens_conserved(spark):
 
 
 def test_sig_and_shingles_parity(spark):
-    # the fused UDF must agree with both single-output fast paths
+    # both outputs of the fused UDF must agree with their expression
+    # twins in the same pass
     df = _df(spark)
     out = df.select(
-        D.minhash_signature_fast(F.col("text")).alias("sig1"),
-        shingle_hashes_fast(F.col("text")).alias("sh1"),
+        D.minhash_signature(F.col("text")).alias("sig1"),
+        X.shingle_hashes(F.col("text"), 3).alias("sh1"),
         D.sig_and_shingles_fast(F.col("text")).alias("x"),
     ).collect()
     for r in out:
         assert r.sig1 == r.x.sig
-        assert r.sh1 == r.x.sh
+        assert sorted(set(r.sh1)) == r.x.sh
 
 
 def test_payload_ahash_parity(spark):

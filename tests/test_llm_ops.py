@@ -54,7 +54,7 @@ def test_minhash_lsh_finds_exact_dup_not_other(spark):
     docs = _docs(spark, [BASE, BASE, OTHER])
     pairs = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in D.minhash_lsh_pairs(docs, threshold=0.5).collect()
+        for r in D.minhash_lsh_pairs(D.signatures(docs), threshold=0.5).collect()
     }
     assert pairs == {(0, 1): 1.0}
 
@@ -65,13 +65,13 @@ def test_simhash_identical_and_near(spark):
            docs.select("doc_id", D.simhash(F.col("text")).alias("simhash")).collect()}
     assert out[0] == out[1]
     assert out[0] != out[2]
-    pairs = D.simhash_near_pairs(docs).collect()
+    pairs = D.simhash_near_pairs(D.signatures(docs)).collect()
     assert any(p.doc_a == 0 and p.doc_b == 1 and p.hamming == 0 for p in pairs)
 
 
 def test_ngram_jaccard_threshold(spark):
     docs = _docs(spark, [BASE, NEAR, OTHER])
-    pairs = D.ngram_jaccard_pairs(docs, threshold=0.3).collect()
+    pairs = D.ngram_jaccard_pairs(D.signatures(docs), threshold=0.3).collect()
     assert [(p.doc_a, p.doc_b) for p in pairs] == [(0, 1)]
     assert 0.3 <= pairs[0].jaccard < 1.0
 
@@ -365,7 +365,9 @@ def test_ahash_flat_payload_codes_zero(spark):
 
 
 def test_fingerprint_near_pairs_finds_exact_dup(spark):
-    out = M.fingerprint_near_pairs(_media(spark, [BASE, OTHER, BASE])).collect()
+    out = M.fingerprint_near_pairs(
+        M.payload_fingerprints(_media(spark, [BASE, OTHER, BASE]))
+    ).collect()
     pairs = {(r.media_a, r.media_b): r.hamming for r in out}
     assert pairs.get((0, 2)) == 0
     assert (0, 1) not in pairs and (1, 2) not in pairs
@@ -379,7 +381,9 @@ def test_fingerprint_near_pairs_pigeonhole_recall(spark):
             _media(spark, [BASE, NEAR, OTHER])
         ).collect()
     }
-    out = M.fingerprint_near_pairs(_media(spark, [BASE, NEAR, OTHER]), 56)
+    out = M.fingerprint_near_pairs(
+        M.payload_fingerprints(_media(spark, [BASE, NEAR, OTHER])), 56
+    )
     got = {(r.media_a, r.media_b) for r in out.collect()}
     for a in fps:
         for b in fps:
@@ -733,7 +737,8 @@ def test_pq_encode_codes_and_reconstruction(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
-    rows = S.pq_encode(emb, m=4, k=4, iters=2).collect()
+    state = S.pq_train_state(emb, m=4, k=4, iters=2)
+    rows = S.pq_encode(emb, state, m=4).collect()
     assert len(rows) == n  # every vector coded exactly once
     for r in rows:
         assert len(r.codes) == 4
@@ -751,7 +756,11 @@ def test_pq_encode_rejects_indivisible_dim(spark):
         [Row(vec_id=i, embedding=[float(i), 0.0, 1.0]) for i in range(6)]
     )
     with pytest.raises(ValueError):
-        S.pq_encode(emb, m=2, k=2, iters=1)
+        S.pq_train_state(emb, m=2, k=2, iters=1)
+    # a state whose codebooks fit m=2 cannot split a 3-dim vector either
+    state = ({0: [(0, [0.0])], 1: [(0, [0.0])]}, 3)
+    with pytest.raises(ValueError, match="not divisible"):
+        S.pq_encode(emb, state, m=2)
 
 
 def test_pq_adc_search_agrees_with_coded_corpus(spark, sf_dir):
@@ -761,7 +770,8 @@ def test_pq_adc_search_agrees_with_coded_corpus(spark, sf_dir):
     from baronbatch_etl_spark.io import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").limit(300)
-    adc = S.pq_adc_topk(emb, 0, topk=10).collect()
+    state = S.pq_train_state(emb, m=4, k=4, iters=2)
+    adc = S.pq_adc_topk(emb, 0, state, topk=10).collect()
     assert len(adc) == 10
     assert all(r.adc_dist >= 0.0 for r in adc)
     assert [r.adc_dist for r in adc] == sorted(r.adc_dist for r in adc)
@@ -799,7 +809,8 @@ def test_ivfpq_prunes_to_query_cell(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings").limit(300)
     q_label = emb.filter(F.col("vec_id") == 0).first().label
-    got = S.pq_adc_topk(emb, 0, topk=5, cell_col="label").collect()
+    state = S.pq_train_state(emb, m=4, k=4, iters=2)
+    got = S.pq_adc_topk(emb, 0, state, topk=5, cell_col="label").collect()
     labels = {
         r.label
         for r in emb.filter(
@@ -809,7 +820,7 @@ def test_ivfpq_prunes_to_query_cell(spark, sf_dir):
     assert labels == {q_label}
     # codebooks are corpus-global, so the pruned ranking must equal
     # the unpruned ADC ranking post-filtered to the cell
-    full = S.pq_adc_topk(emb, 0, topk=300).collect()
+    full = S.pq_adc_topk(emb, 0, state, topk=300).collect()
     cell_ids = {
         r.vec_id
         for r in emb.filter(F.col("label") == q_label).collect()
@@ -824,12 +835,13 @@ def test_pq_recall_counts_adc_brute_overlap(spark, sf_dir):
     from baronbatch_etl_spark.io import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").limit(200)
-    row = S.pq_recall_at_k(emb, 0, k=5).first()
+    state = S.pq_train_state(emb, m=4, k=4, iters=2)
+    row = S.pq_recall_at_k(emb, 0, state, k=5).first()
     assert row.k == 5
     assert 0 <= row.n_hits <= 5
     assert row.recall_at_k == row.n_hits / 5.0
     # n_hits really is the intersection of the two rankings
-    adc = {r.vec_id for r in S.pq_adc_topk(emb, 0, topk=5).collect()}
+    adc = {r.vec_id for r in S.pq_adc_topk(emb, 0, state, topk=5).collect()}
     q = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("q_emb")
     )
@@ -858,7 +870,7 @@ def test_containment_subset_detected(spark):
     docs = _docs(spark, [BASE, longer, OTHER])
     rows = {
         (r.doc_a, r.doc_b): (r.containment, r.inner_doc)
-        for r in D.containment_pairs(docs, threshold_pct=90).collect()
+        for r in D.containment_pairs(D.signatures(docs), threshold_pct=90).collect()
     }
     assert (0, 1) in rows
     cont, inner = rows[(0, 1)]
@@ -870,36 +882,9 @@ def test_containment_tie_prefers_doc_a(spark):
     # identical docs: equal set sizes — inner_doc falls to doc_a by
     # the documented convention (mirrored in the oracle's CASE)
     docs = _docs(spark, [BASE, BASE])
-    rows = D.containment_pairs(docs, threshold_pct=90).collect()
+    rows = D.containment_pairs(D.signatures(docs), threshold_pct=90).collect()
     assert len(rows) == 1
     assert rows[0].inner_doc == rows[0].doc_a
-
-
-def test_pq_trained_state_reuse_is_value_identical(spark, sf_dir):
-    """The train-once path (pq_train_state + trained=) must be
-    bit-identical to inline retraining for every PQ consumer — the
-    contract that lets the catalog share one codebook set per session
-    (FAISS's train()/search() separation)."""
-    from baronbatch_etl_spark.io import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").limit(200)
-    state = S.pq_train_state(emb, m=4, k=4, iters=2)
-    cents, dim = state
-    assert set(cents) == {0, 1, 2, 3}
-    assert dim % 4 == 0
-
-    fresh_enc = S.pq_encode(emb, m=4, k=4, iters=2).collect()
-    reuse_enc = S.pq_encode(emb, m=4, k=4, iters=2, trained=state).collect()
-    key = lambda r: r.vec_id  # noqa: E731
-    assert sorted(fresh_enc, key=key) == sorted(reuse_enc, key=key)
-
-    fresh_adc = S.pq_adc_topk(emb, 0, topk=7).collect()
-    reuse_adc = S.pq_adc_topk(emb, 0, topk=7, trained=state).collect()
-    assert fresh_adc == reuse_adc
-
-    fresh_rec = S.pq_recall_at_k(emb, 0, k=5).first()
-    reuse_rec = S.pq_recall_at_k(emb, 0, k=5, trained=state).first()
-    assert fresh_rec == reuse_rec
 
 
 def test_pq_trained_state_rejects_mismatched_m(spark, sf_dir):
@@ -911,72 +896,20 @@ def test_pq_trained_state_rejects_mismatched_m(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").limit(50)
     state = S.pq_train_state(emb, m=4, k=4, iters=2)
     with pytest.raises(ValueError, match="requested m=8"):
-        S.pq_encode(emb, m=8, k=4, iters=2, trained=state)
+        S.pq_encode(emb, state, m=8)
     with pytest.raises(ValueError, match="requested m=2"):
-        S.pq_adc_topk(emb, 0, topk=5, m=2, trained=state)
-
-
-def test_signature_base_reuse_is_value_identical(spark, sf_dir):
-    """The staged-signature path (base=) must be value-identical to
-    the inline Arrow signature pass for both consumers — the contract
-    that lets the catalog share one signature table per session
-    (catalog_llm._doc_signatures)."""
-    from baronbatch_etl_spark.io import load_table
-    from baronbatch_etl_spark.operators.dedup import sig_and_shingles_fast
-
-    docs = load_table(spark, sf_dir, "documents").limit(200)
-    base = docs.select(
-        "doc_id",
-        "lang",
-        "n_chars",
-        F.substring(F.col("text"), 1, 64).alias("pfx"),
-        sig_and_shingles_fast(F.col("text")).alias("x"),
-    ).select(
-        "doc_id",
-        "lang",
-        "n_chars",
-        "pfx",
-        F.col("x.sig").alias("sig"),
-        F.col("x.sh").alias("sh"),
-    )
-
-    key = lambda r: (r.doc_a, r.doc_b)  # noqa: E731
-    fresh_lsh = D.minhash_lsh_pairs(docs, threshold=0.8).collect()
-    reuse_lsh = D.minhash_lsh_pairs(None, threshold=0.8, base=base).collect()
-    assert sorted(fresh_lsh, key=key) == sorted(reuse_lsh, key=key)
-
-    fresh_ct = D.containment_pairs(docs, threshold_pct=90).collect()
-    reuse_ct = D.containment_pairs(None, threshold_pct=90, base=base).collect()
-    assert sorted(fresh_ct, key=key) == sorted(reuse_ct, key=key)
-
-    fresh_ng = D.ngram_jaccard_pairs(docs, threshold=0.5).collect()
-    reuse_ng = D.ngram_jaccard_pairs(
-        None, threshold=0.5, base=base
-    ).collect()
-    assert sorted(fresh_ng, key=key) == sorted(reuse_ng, key=key)
-
-    fresh_ed = D.edit_distance_pairs(docs, prefix_len=64).collect()
-    reuse_ed = D.edit_distance_pairs(
-        None, prefix_len=64, base=base
-    ).collect()
-    assert sorted(fresh_ed, key=key) == sorted(reuse_ed, key=key)
-
-    sim_base = docs.select(
-        "doc_id", D.simhash_fast(F.col("text")).alias("simhash")
-    )
-    fresh_sp = D.simhash_near_pairs(docs).collect()
-    reuse_sp = D.simhash_near_pairs(None, base=sim_base).collect()
-    assert sorted(fresh_sp, key=key) == sorted(reuse_sp, key=key)
+        S.pq_adc_topk(emb, 0, state, topk=5, m=2)
 
 
 def test_signature_base_rejects_missing_columns(spark):
-    """A base missing a required column must raise up front instead of
-    resolving against an unrelated same-named column deep in the plan."""
+    """A signature frame missing a required column must raise up front
+    instead of resolving against an unrelated same-named column deep in
+    the plan."""
     bad = spark.createDataFrame([Row(doc_id=1, sig=[1, 2])])
     with pytest.raises(ValueError, match="missing column"):
-        D.minhash_lsh_pairs(None, threshold=0.8, base=bad)
+        D.minhash_lsh_pairs(bad, threshold=0.8)
     with pytest.raises(ValueError, match="missing column"):
-        D.containment_pairs(None, threshold_pct=90, base=bad.select("sig"))
+        D.containment_pairs(bad.select("sig"), threshold_pct=90)
 
 
 def test_kmeans_mstep_centroids_exact(spark):
@@ -996,33 +929,16 @@ def test_kmeans_mstep_centroids_exact(spark):
     assert rows[3].cluster == 1 and rows[3].dist == 0.5
 
 
-def test_pair_operators_reject_double_none():
-    """Every pair operator must raise a clear misuse error when both
-    docs= and base= are None (the r10 advice item: the failure used to
-    be an opaque AttributeError inside spread(None))."""
-    for call in (
-        lambda: D.minhash_lsh_pairs(None),
-        lambda: D.containment_pairs(None),
-        lambda: D.edit_distance_pairs(None),
-        lambda: D.simhash_near_pairs(None),
-        lambda: D.ngram_jaccard_pairs(None, 0.5),
-    ):
-        with pytest.raises(ValueError, match="docs= .* or base="):
-            call()
-
-
 def test_edit_distance_base_honors_prefix_len(spark, sf_dir):
-    """edit_distance_pairs(base=...) used to silently ignore
-    prefix_len (the r10 advice item); now the staged pfx is re-trimmed
-    — a narrower prefix_len over the staged base must agree exactly
-    with the inline pass at that prefix_len, and a prefix_len wider
-    than the staged column must raise instead of silently using
-    stored-width distances."""
+    """edit_distance_pairs re-trims the staged pfx to prefix_len: a
+    narrower prefix_len must give exactly the bounded Levenshtein of
+    the first prefix_len characters over the LSH candidates, and a
+    prefix_len wider than the staged column must raise instead of
+    silently using stored-width distances."""
+    from baronbatch_etl_spark.io import load_table
     from baronbatch_etl_spark.queries.catalog_llm import _doc_signatures
 
-    docs = __import__(
-        "baronbatch_etl_spark.io", fromlist=["load_table"]
-    ).load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     base = _doc_signatures(spark, sf_dir)
 
     def key(df):
@@ -1031,13 +947,29 @@ def test_edit_distance_base_honors_prefix_len(spark, sf_dir):
             for r in df.collect()
         )
 
-    staged = key(D.edit_distance_pairs(None, prefix_len=16, base=base))
-    inline = key(D.edit_distance_pairs(docs, prefix_len=16))
-    assert staged == inline and staged  # non-vacuous at sf0.001
-    with pytest.raises(ValueError, match="exceeds the staged prefix"):
-        D.edit_distance_pairs(
-            None, prefix_len=D.STAGED_PREFIX_LEN + 1, base=base
+    staged = key(D.edit_distance_pairs(base, prefix_len=16))
+    pfx = docs.select("doc_id", F.substring("text", 1, 16).alias("p"))
+    expect = (
+        D.lsh_candidate_pairs(base)
+        .join(pfx.withColumnsRenamed({"doc_id": "doc_a", "p": "pa"}), "doc_a")
+        .join(pfx.withColumnsRenamed({"doc_id": "doc_b", "p": "pb"}), "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.levenshtein("pa", "pb", 8).alias("prefix_dist"),
+            F.greatest(F.length("pa"), F.length("pb")).alias("m"),
         )
+        .where("prefix_dist BETWEEN 0 AND 8")
+        .select(
+            "doc_a",
+            "doc_b",
+            "prefix_dist",
+            (1.0 - F.col("prefix_dist") / F.col("m")).alias("prefix_sim"),
+        )
+    )
+    assert staged == key(expect) and staged  # non-vacuous at sf0.001
+    with pytest.raises(ValueError, match="exceeds the signature frame"):
+        D.edit_distance_pairs(base, prefix_len=D.STAGED_PREFIX_LEN + 1)
 
 
 def test_staged_scalar_columns_match_inline(spark, sf_dir):
@@ -1065,35 +997,6 @@ def test_staged_scalar_columns_match_inline(spark, sf_dir):
         .select("doc_id", "md5", "qscore", "n_tok")
         .collect()
     }
-    assert staged == inline and len(staged) > 0
-
-
-def test_curate_survivors_staged_matches_inline(spark, sf_dir):
-    """curate_survivors must produce the SAME survivor set through the
-    staged-fixture path as through the inline full-text path (the
-    streaming twin's shape) — the survivor derivation itself always
-    runs in-plan; only row-local inputs are staged."""
-    from baronbatch_etl_spark.io import load_table
-    from baronbatch_etl_spark.queries.catalog_curation import (
-        curate_survivors,
-    )
-    from baronbatch_etl_spark.queries.catalog_llm import _doc_signatures
-
-    docs = load_table(spark, sf_dir, "documents")
-    inline = sorted(
-        (r.doc_id, r.lang, r.n_chars)
-        for r in curate_survivors(docs)
-        .select("doc_id", "lang", "n_chars")
-        .collect()
-    )
-    staged = sorted(
-        (r.doc_id, r.lang, r.n_chars)
-        for r in curate_survivors(
-            docs, signatures=_doc_signatures(spark, sf_dir)
-        )
-        .select("doc_id", "lang", "n_chars")
-        .collect()
-    )
     assert staged == inline and len(staged) > 0
 
 
@@ -1249,7 +1152,7 @@ def test_minhash_threshold_stays_a_double_literal(spark):
         [(1, [1] * D.MINHASH_K, [7, 8]), (2, [1] * D.MINHASH_K, [7, 8])],
         "doc_id bigint, sig array<bigint>, sh array<bigint>",
     )
-    out = D.minhash_lsh_pairs(None, threshold=0.8, base=base)
+    out = D.minhash_lsh_pairs(base, threshold=0.8)
     analyzed = out._jdf.queryExecution().analyzed().toString()
     filters = [ln for ln in analyzed.splitlines() if "Filter (jaccard#" in ln]
     assert len(filters) == 1

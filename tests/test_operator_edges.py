@@ -12,6 +12,7 @@ from pyspark.sql import Row
 
 from baronbatch_etl_spark.operators.dedup import (
     minhash_lsh_pairs,
+    signatures,
     simhash_near_pairs,
 )
 from baronbatch_etl_spark.operators.joins import asof_join, range_join_bucketed
@@ -77,7 +78,7 @@ def test_minhash_short_docs_never_pair(spark):
             for i, t in enumerate(["a b", "c d", "e", "f g", ""])
         ]
     )
-    assert minhash_lsh_pairs(docs, threshold=0.0).count() == 0
+    assert minhash_lsh_pairs(signatures(docs), threshold=0.0).count() == 0
 
 
 def test_resample_ffill_semantics(spark):
@@ -287,8 +288,9 @@ def test_pq_adc_cell_filter_missing_column_errors(spark):
         [Row(vec_id=i, embedding=[float(i), 0.0, 0.0, 1.0], label=0)
          for i in range(6)]
     )
-    with pytest.raises(Exception):
-        S.pq_adc_topk(emb, 0, cell_col="no_such_col")
+    state = S.pq_train_state(emb, m=4, k=4, iters=1)
+    with pytest.raises(Exception, match="no_such_col"):
+        S.pq_adc_topk(emb, 0, state, cell_col="no_such_col")
 
 
 def test_knn_graph_drops_zero_norm_vectors(spark):

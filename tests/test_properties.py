@@ -188,7 +188,10 @@ def test_ngram_jaccard_prefix_filter_is_lossless(spark, texts, threshold):
     heavy shingle overlap, the prefix pruning's hardest case."""
     from itertools import combinations
 
-    from baronbatch_etl_spark.operators.dedup import ngram_jaccard_pairs
+    from baronbatch_etl_spark.operators.dedup import (
+        ngram_jaccard_pairs,
+        signatures,
+    )
 
     docs = spark.createDataFrame(
         [
@@ -198,7 +201,9 @@ def test_ngram_jaccard_prefix_filter_is_lossless(spark, texts, threshold):
     )
     got = {
         (r.doc_a, r.doc_b)
-        for r in ngram_jaccard_pairs(docs, threshold=threshold).collect()
+        for r in ngram_jaccard_pairs(
+            signatures(docs), threshold=threshold
+        ).collect()
     }
 
     def shingles(t: str) -> set:
@@ -554,9 +559,7 @@ def test_fingerprint_banding_pigeonhole_guarantee(spark, fps):
     )
     got = {
         (r.media_a, r.media_b): r.hamming
-        for r in M.fingerprint_near_pairs(
-            media=None, max_hamming=3, fps=frame
-        ).collect()
+        for r in M.fingerprint_near_pairs(frame, max_hamming=3).collect()
     }
     for i in range(len(fps)):
         for j in range(i + 1, len(fps)):
@@ -908,7 +911,7 @@ def test_containment_finds_every_strict_subset(spark, sizes, data):
     got = {
         (min(r.doc_a, r.doc_b), max(r.doc_a, r.doc_b))
         for r in D.containment_pairs(
-            spark.createDataFrame(docs), threshold_pct=100
+            D.signatures(spark.createDataFrame(docs)), threshold_pct=100
         ).collect()
     }
     assert expected <= got

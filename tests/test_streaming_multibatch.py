@@ -326,8 +326,10 @@ def test_streaming_training_set_equals_batch_capstone(
     import shutil
     import time
 
+    from baronbatch_etl_spark.operators import dedup as D
     from baronbatch_etl_spark.queries import catalog_curation as C
     from baronbatch_etl_spark.queries import load_all
+    from baronbatch_etl_spark.queries.catalog_llm import _doc_signatures
 
     docs = load_table(spark, sf_dir, "documents")
     n = docs.count()
@@ -372,13 +374,16 @@ def test_streaming_training_set_equals_batch_capstone(
         for r in ops.read_curated(spark, acc).select("doc_id").collect()
     )
     want_ids = sorted(
-        r.doc_id for r in C.curate_survivors(docs).select("doc_id").collect()
+        r.doc_id
+        for r in C.curate_survivors(_doc_signatures(spark, sf_dir))
+        .select("doc_id")
+        .collect()
     )
     assert got_ids == want_ids
 
     # final dataset card: stream-built corpus through the shared
     # stages 4-7 == the registered batch capstone
-    card = C.curate_stats(docs, ops.read_curated(spark, acc))
+    card = C.curate_stats(D.signatures(docs), ops.read_curated(spark, acc))
     got = {
         (r.split, r.lang): (r.n_docs, r.n_tokens) for r in card.collect()
     }
