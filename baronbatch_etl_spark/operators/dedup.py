@@ -503,6 +503,17 @@ def connected_components(
     return labels
 
 
+def near_dup_removed(pairs: DataFrame) -> DataFrame:
+    """The doc ids a keep-one-per-cluster pass drops: every node of the
+    ``(doc_a, doc_b)`` pair graph that is not its component's minimum
+    (:func:`connected_components`). Docs outside the graph are never
+    removed, so survivors = candidates anti-joined on this frame."""
+    comp = connected_components(pairs)
+    return comp.filter(F.col("node") != F.col("comp")).select(
+        F.col("node").alias("doc_id")
+    )
+
+
 def simhash(text: Column, bits: int = SIMHASH_BITS) -> Column:
     """SimHash fingerprint over token hashes (row-local).
 

@@ -172,6 +172,12 @@ def stopword_ratio(text: Column | str) -> Column:
     ) * 1.0 / F.size(t)).otherwise(F.lit(0.0))
 
 
+#: The curation quality gate: a document enters the training-set
+#: pipeline when ``quality_score >= QUALITY_MIN``. The batch survivor
+#: stages, their streaming twin and the DuckDB oracle all read it.
+QUALITY_MIN = 0.35
+
+
 def quality_score(text: Column | str, n_chars: Column | str) -> Column:
     """Composite quality heuristic: length saturation × (1 - stopword
     excess). Pure double arithmetic, engine-portable."""

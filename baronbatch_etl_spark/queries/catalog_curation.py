@@ -18,8 +18,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from baronbatch_etl_spark.io import load_table, spread
+from baronbatch_etl_spark.operators import dedup as D
 from baronbatch_etl_spark.operators import ranking as R
 from baronbatch_etl_spark.operators import text as X
+from baronbatch_etl_spark.queries import catalog_llm as L
 from baronbatch_etl_spark.queries import register
 
 _SQL_TOKENS = "string_split(text, ' ')"
@@ -77,9 +79,7 @@ def t_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sh4`` column (same maker/width — bit-identical values), so both
     the bench and train branches read the column-pruned staged scan.
     """
-    from baronbatch_etl_spark.queries.catalog_llm import _doc_signatures
-
-    sh = _doc_signatures(spark, sf_dir).select(
+    sh = L._doc_signatures(spark, sf_dir).select(
         "doc_id", F.explode("sh4").alias("h")
     )
     bench = sh.filter(F.col("doc_id") % 97 == 0).select("h").distinct()
@@ -575,44 +575,13 @@ def t_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _survivor_ctes() -> str:
-    """Stages 1–3 (quality filter → exact dedup keep-min → LSH
-    connected-component keep-one) as a reusable WITH-body prefix,
-    composed from each stage's published oracle fragment. Shared by
-    the capstone oracle and t_curate_survivors so the streaming
-    gate's fold (curate_ingest) and the full pipeline are verified
-    by the SAME arithmetic."""
-    from baronbatch_etl_spark.queries import catalog_llm as L
-
-    return f"""
-qual AS ({L._QUALITY_SQL}),
-surv AS (SELECT min(doc_id) AS doc_id FROM qual GROUP BY md5(text)),
-sdocs AS (SELECT q.* FROM qual q JOIN surv s ON q.doc_id = s.doc_id),
-{L._minhash_ctes(src="sdocs")},
-edges AS (
-    SELECT doc_a AS s, doc_b AS d FROM pairs
-    UNION
-    SELECT doc_b AS s, doc_a AS d FROM pairs
-),
-reach(s, d) AS (
-    SELECT s, d FROM edges
-    UNION
-    SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-    WHERE e.d <> r.s
-),
-removed AS (
-    SELECT s AS doc_id FROM reach GROUP BY s
-    HAVING least(s, min(d)) <> s
-)"""
-
-
 def _training_set_oracle() -> str:
     """Composes the published oracle fragments of every stage so the
     composite is verified by the SAME arithmetic as its parts."""
 
     return f"""
 WITH RECURSIVE
-{_survivor_ctes()},
+{L._survivor_ctes()},
 deduped AS (
     SELECT doc_id FROM sdocs
     WHERE doc_id NOT IN (SELECT doc_id FROM removed)
@@ -739,18 +708,19 @@ def t_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     final rollup is a few-row aggregate. The corpus is never shuffled
     whole.
     """
-    from baronbatch_etl_spark.queries.catalog_llm import _doc_signatures
-
-    sigs = _doc_signatures(spark, sf_dir)
+    sigs = L._doc_signatures(spark, sf_dir)
     return curate_stats(sigs, curate_survivors(sigs))
 
 
 def curate_survivors(sigs: DataFrame) -> DataFrame:
     """Stages 1–3 of the training-set pipeline: quality filter → exact
-    dedup keep-min → MinHash-LSH connected-component keep-one. The
-    streaming twin (streaming/ops.curate_ingest) builds this same
-    survivor set incrementally; tests/test_streaming_multibatch.py
-    asserts the two sets coincide.
+    dedup keep-min → MinHash-LSH connected-component keep-one — the
+    one Spark form of the survivor stage (t_corpus_dedup,
+    t_curate_survivors, t_training_set); its oracle form is
+    catalog_llm._survivor_ctes. The streaming twin
+    (streaming/ops.curate_ingest) builds this same survivor set
+    incrementally; tests/test_streaming_multibatch.py asserts the two
+    sets coincide.
 
     ``sigs`` is the staged corpus signature table
     (catalog_llm._doc_signatures): the quality gate, the exact-dedup
@@ -761,8 +731,6 @@ def curate_survivors(sigs: DataFrame) -> DataFrame:
     propagation, anti-join) still runs in-plan here, per query. The
     returned frame carries (doc_id, lang, n_chars, n_tok) — no text
     column at all, so nothing downstream ever moves document bodies."""
-    from baronbatch_etl_spark.operators import dedup as D
-
     # pruned fixture scan: (doc_id, lang, n_chars, n_tok, qscore, md5)
     # — narrow columns, but the digest group-min is still a shuffle
     # with several consumer branches (LSH input, the anti-join side,
@@ -771,7 +739,7 @@ def curate_survivors(sigs: DataFrame) -> DataFrame:
     # carries no text
     qual = sigs.select(
         "doc_id", "lang", "n_chars", "n_tok", "qscore", "md5"
-    ).filter(F.col("qscore") >= 0.35)
+    ).filter(F.col("qscore") >= X.QUALITY_MIN)
     keep = (
         qual.select("doc_id", F.col("md5").alias("text_md5"))
         .groupBy("text_md5")
@@ -782,13 +750,10 @@ def curate_survivors(sigs: DataFrame) -> DataFrame:
         .join(keep.select("doc_id"), "doc_id")
         .localCheckpoint(eager=False)
     )
-    comp = D.connected_components(
+    removed = D.near_dup_removed(
         D.minhash_lsh_pairs(
             sigs.join(sdocs.select("doc_id"), "doc_id"), threshold=0.8
         )
-    )
-    removed = comp.filter(F.col("node") != F.col("comp")).select(
-        F.col("node").alias("doc_id")
     )
     return sdocs.join(removed, "doc_id", "left_anti")
 
@@ -797,7 +762,7 @@ def curate_survivors(sigs: DataFrame) -> DataFrame:
     "t_curate_survivors",
     oracle=f"""
 WITH RECURSIVE
-{_survivor_ctes()}
+{L._survivor_ctes()}
 SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
 FROM sdocs WHERE doc_id NOT IN (SELECT doc_id FROM removed)
 """,
@@ -815,9 +780,7 @@ def t_curate_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the corpus is never shuffled whole — exact dedup moves
     (md5, doc_id) digests, LSH moves banded signatures, and the final
     keep is a doc_id anti-join."""
-    from baronbatch_etl_spark.queries.catalog_llm import _doc_signatures
-
-    return curate_survivors(_doc_signatures(spark, sf_dir)).select(
+    return curate_survivors(L._doc_signatures(spark, sf_dir)).select(
         "doc_id", "lang", "n_chars"
     )
 
@@ -1182,24 +1145,12 @@ def t_domain_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _leakage_split_oracle() -> str:
     """Composes the published MinHash-LSH clustering fragments with the
     split-bucket hash, applied to the cluster ROOT instead of doc_id."""
-    from baronbatch_etl_spark.queries import catalog_llm as L
-
     bucket = (
         X.sql_char_poly_hash("concat('split:', root::VARCHAR)") + " % 1000"
     )
     return f"""
 WITH RECURSIVE {L._minhash_ctes()},
-edges AS (
-    SELECT doc_a AS s, doc_b AS d FROM pairs
-    UNION
-    SELECT doc_b AS s, doc_a AS d FROM pairs
-),
-reach(s, d) AS (
-    SELECT s, d FROM edges
-    UNION
-    SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-    WHERE e.d <> r.s
-),
+{L._components_ctes()},
 comp AS (
     SELECT s AS doc_id, least(s, min(d)) AS component
     FROM reach GROUP BY s
@@ -1242,10 +1193,7 @@ def t_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate joins its cluster's existing split rather than drawing
     a fresh coin.
     """
-    from baronbatch_etl_spark.operators import dedup as D
-    from baronbatch_etl_spark.queries.catalog_llm import _doc_signatures
-
-    sigs = _doc_signatures(spark, sf_dir)
+    sigs = L._doc_signatures(spark, sf_dir)
     pairs = D.minhash_lsh_pairs(sigs, threshold=0.8)
     comp = D.connected_components(pairs).withColumnRenamed("node", "doc_id")
     # the universe of doc_ids comes from the fixture's pruned id

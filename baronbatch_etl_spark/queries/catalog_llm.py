@@ -366,6 +366,25 @@ pairs AS (
 )"""
 
 
+def _components_ctes() -> str:
+    """CTE pair following :func:`_minhash_ctes`: ``edges`` symmetrizes
+    ``pairs`` and the recursive ``reach(s, d)`` is its transitive
+    closure, so ``least(s, min(d))`` grouped by ``s`` is the component
+    root :func:`dedup.connected_components` computes. Needs ``WITH
+    RECURSIVE``."""
+    return """edges AS (
+    SELECT doc_a AS s, doc_b AS d FROM pairs
+    UNION
+    SELECT doc_b AS s, doc_a AS d FROM pairs
+),
+reach(s, d) AS (
+    SELECT s, d FROM edges
+    UNION
+    SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
+    WHERE e.d <> r.s
+)"""
+
+
 def _doc_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus signature table ``(doc_id, source, lang, n_chars,
     pfx, sig, sh, simhash, sh4, md5, qscore, n_tok)``: the
@@ -449,17 +468,7 @@ def d_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     "d_dup_clusters",
     oracle=f"""
 WITH RECURSIVE {_minhash_ctes()},
-edges AS (
-    SELECT doc_a AS s, doc_b AS d FROM pairs
-    UNION
-    SELECT doc_b AS s, doc_a AS d FROM pairs
-),
-reach(s, d) AS (
-    SELECT s, d FROM edges
-    UNION
-    SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-    WHERE e.d <> r.s
-),
+{_components_ctes()},
 comp AS (
     SELECT s AS doc_id, least(s, min(d)) AS component
     FROM reach GROUP BY s
@@ -494,17 +503,7 @@ WITH RECURSIVE surv AS (
 ),
 sdocs AS (SELECT d.* FROM documents d JOIN surv s ON d.doc_id = s.doc_id),
 {_minhash_ctes(src="sdocs")},
-edges AS (
-    SELECT doc_a AS s, doc_b AS d FROM pairs
-    UNION
-    SELECT doc_b AS s, doc_a AS d FROM pairs
-),
-reach(s, d) AS (
-    SELECT s, d FROM edges
-    UNION
-    SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-    WHERE e.d <> r.s
-),
+{_components_ctes()},
 removed AS (
     SELECT s AS doc_id FROM reach GROUP BY s
     HAVING least(s, min(d)) <> s
@@ -561,11 +560,8 @@ def d_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         # digest shuffle once (8-byte ids)
         .localCheckpoint(eager=False)
     )
-    comp = D.connected_components(
+    removed = D.near_dup_removed(
         D.minhash_lsh_pairs(sigs.join(keep, "doc_id"), threshold=0.8)
-    )
-    removed = comp.filter(F.col("node") != F.col("comp")).select(
-        F.col("node").alias("doc_id")
     )
     flags = (
         sigs.select("doc_id", "source")
@@ -635,7 +631,7 @@ def t_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.filter(bucket < 10).select("doc_id", "lang")
 
 
-_QUALITY_SQL = """
+_QUALITY_SQL = f"""
 SELECT doc_id, text, lang, n_chars
 FROM (
     SELECT doc_id, text, lang, n_chars,
@@ -646,33 +642,34 @@ FROM (
                 ELSE 0.0 END AS stop
     FROM documents
 )
-WHERE least(1.0, n_chars / 400.0) * (1.0 - least(1.0, stop * 2.0)) >= 0.35
+WHERE least(1.0, n_chars / 400.0) * (1.0 - least(1.0, stop * 2.0)) >= {X.QUALITY_MIN}
 """
+
+
+def _survivor_ctes() -> str:
+    """Stages 1–3 of the training-set pipeline (quality filter → exact
+    dedup keep-min → LSH connected-component keep-one) as a WITH-body
+    prefix ending in ``sdocs`` (the exact survivors) and ``removed``
+    (their near-dup drops): the oracle side of
+    ``catalog_curation.curate_survivors``, shared by every query built
+    on it. Needs ``WITH RECURSIVE``."""
+    return f"""
+qual AS ({_QUALITY_SQL}),
+surv AS (SELECT min(doc_id) AS doc_id FROM qual GROUP BY md5(text)),
+sdocs AS (SELECT q.* FROM qual q JOIN surv s ON q.doc_id = s.doc_id),
+{_minhash_ctes(src="sdocs")},
+{_components_ctes()},
+removed AS (
+    SELECT s AS doc_id FROM reach GROUP BY s
+    HAVING least(s, min(d)) <> s
+)"""
 
 
 @register(
     "t_corpus_dedup",
     oracle=f"""
 WITH RECURSIVE
-qual AS ({_QUALITY_SQL}),
-surv AS (SELECT min(doc_id) AS doc_id FROM qual GROUP BY md5(text)),
-sdocs AS (SELECT q.* FROM qual q JOIN surv s ON q.doc_id = s.doc_id),
-{_minhash_ctes(src="sdocs")},
-edges AS (
-    SELECT doc_a AS s, doc_b AS d FROM pairs
-    UNION
-    SELECT doc_b AS s, doc_a AS d FROM pairs
-),
-reach(s, d) AS (
-    SELECT s, d FROM edges
-    UNION
-    SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-    WHERE e.d <> r.s
-),
-removed AS (
-    SELECT s AS doc_id FROM reach GROUP BY s
-    HAVING least(s, min(d)) <> s
-)
+{_survivor_ctes()}
 SELECT doc_id FROM sdocs
 WHERE doc_id NOT IN (SELECT doc_id FROM removed)
 """,
@@ -684,36 +681,9 @@ def t_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustering → keep one doc per cluster. The composite the
     individual operators exist FOR — one declarative plan, verified
     against a recursive-CTE oracle of the whole chain."""
-    # every per-document input of this composite (qscore, md5, sig,
-    # sh) is a staged row-local column — the derivation itself
-    # (digest group-min, banding, verification, components,
-    # anti-join) runs in-plan below; documents.parquet is never
-    # touched (r11: the inline quality+digest pass was a second
-    # full-text scan worth ~1.1 s per consumer)
-    sigs = _doc_signatures(spark, sf_dir)
-    qual = sigs.select("doc_id", "qscore", "md5").filter(
-        F.col("qscore") >= 0.35
-    )
-    keep = (
-        qual.select("doc_id", F.col("md5").alias("text_md5"))
-        .groupBy("text_md5")
-        .agg(F.min("doc_id").alias("doc_id"))
-    )
-    # id-only survivor set, three consumer branches (LSH base, the
-    # anti-join, and the verify joins' lineage) — materialize the
-    # digest shuffle once; the checkpoint is 8-byte ids now
-    sdocs = (
-        qual.select("doc_id")
-        .join(keep.select("doc_id"), "doc_id")
-        .localCheckpoint(eager=False)
-    )
-    comp = D.connected_components(
-        D.minhash_lsh_pairs(sigs.join(sdocs, "doc_id"), threshold=0.8)
-    )
-    removed = comp.filter(F.col("node") != F.col("comp")).select(
-        F.col("node").alias("doc_id")
-    )
-    return sdocs.join(removed, "doc_id", "left_anti").select("doc_id")
+    from baronbatch_etl_spark.queries.catalog_curation import curate_survivors
+
+    return curate_survivors(_doc_signatures(spark, sf_dir)).select("doc_id")
 
 
 def _simhash_expr_sql() -> str:
@@ -3080,17 +3050,7 @@ def s_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     "d_cluster_canonical",
     oracle=f"""
 WITH RECURSIVE {_minhash_ctes()},
-edges AS (
-    SELECT doc_a AS s, doc_b AS d FROM pairs
-    UNION
-    SELECT doc_b AS s, doc_a AS d FROM pairs
-),
-reach(s, d) AS (
-    SELECT s, d FROM edges
-    UNION
-    SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-    WHERE e.d <> r.s
-),
+{_components_ctes()},
 comp AS (
     SELECT s AS doc_id, least(s, min(d)) AS component
     FROM reach GROUP BY s

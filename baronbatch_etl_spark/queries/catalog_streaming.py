@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from baronbatch_etl_spark.io import load_table
 from baronbatch_etl_spark.queries import register
+from baronbatch_etl_spark.streaming import ops
 
 # ---------------------------------------------------------------------------
 # Tumbling event-time window aggregate (the engine's windowed-agg
@@ -111,17 +112,9 @@ def st_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based session windows per user. Boundary semantics: an
     event exactly `gap` after the previous one opens a NEW session
     (session end is exclusive) — the oracle's lag-diff uses >= to
-    match."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_millis(F.col("w.start")).alias("session_start_ms"),
-            "n_events",
-        )
-    )
+    match. Runs the streaming operator itself over the batch table;
+    the optimizer drops its watermark from a batch plan."""
+    return ops.session_aggregate(load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -150,32 +143,10 @@ JOIN events b
 def st_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Click→purchase attribution interval join (batch twin of
     streaming.ops.click_purchase_join: equi-join on user with a
-    30-minute event-time range residual)."""
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("click_ts"),
-    )
-    buys = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("buy_id"),
-        F.col("user_id").alias("b_user"),
-        F.col("ts").alias("buy_ts"),
-        F.col("value").alias("buy_value"),
-    )
-    return clicks.join(
-        buys,
-        (F.col("c_user") == F.col("b_user"))
-        & (F.col("buy_ts") >= F.col("click_ts"))
-        & (F.col("buy_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
-    ).select(
-        "click_id",
-        "buy_id",
-        F.col("c_user").alias("user_id"),
-        F.unix_millis("click_ts").alias("click_ts_ms"),
-        F.unix_millis("buy_ts").alias("buy_ts_ms"),
-        "buy_value",
-    )
+    30-minute event-time range residual). Runs that operator over the
+    batch table; the optimizer drops its watermarks from a batch
+    plan."""
+    return ops.click_purchase_join(load_table(spark, sf_dir, "events"))
 
 
 @register(

@@ -81,7 +81,6 @@ def get_spark(
     app_name: str = "baronbatch_etl_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
@@ -90,7 +89,8 @@ def get_spark(
     partition-size-aware file splits). Parallelism and heap come from
     :func:`host_defaults`; ``SPARK_GRAFT_CPUS`` controls local
     parallelism (driver contract) and ``SPARK_GRAFT_DRIVER_MEM`` the
-    heap.
+    heap. ``SPARK_GRAFT_EXTRA_CONF`` (a JSON object) is the one way to
+    add or override any other conf.
     """
     default_master, partitions, heap = host_defaults(
         os.environ, _usable_cpus(), _physical_memory_bytes()
@@ -116,15 +116,12 @@ def get_spark(
     )
     for k, v in local_master_conf(master).items():
         builder = builder.config(k, v)
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
     # Env override for robustness sweeps without touching callers —
     # e.g. SPARK_GRAFT_EXTRA_CONF='{"spark.sql.adaptive.enabled":
     # "false"}' python tools/check_oracle.py … re-runs the whole gate
     # under a different planner regime (results must not depend on
     # AQE/partitioning knobs; only speed may). Applied LAST so the
-    # sweep wins over caller-supplied conf.
+    # sweep wins over every default above.
     env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF")
     if env_conf:
         import json

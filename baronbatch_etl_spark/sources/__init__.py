@@ -4,8 +4,9 @@ The reference's sources are a paginated REST API consumed by worker
 containers and MongoDB collections as sinks (S1–S12); this engine's
 equivalents are schema'd columnar scans and write modes:
 
-  S1/S2 REST scans      → parquet/csv/json/orc readers (schema'd,
-                          never inferred in production paths)
+  S1/S2 REST scans      → schema'd csv/json readers (never inferred
+                          in production paths); parquet tables load
+                          through io.load_table
   S3/S5 append sinks    → write.mode('append') (+ ingest anti-join
                           for idempotence, pipeline.medallion)
   S7/S8 upserts         → overwrite-by-key / full recompute
@@ -19,8 +20,6 @@ and a salted-join helper for skewed keys.
 from baronbatch_etl_spark.sources.readers import (
     read_csv,
     read_json,
-    read_orc,
-    read_parquet,
 )
 from baronbatch_etl_spark.sources.writers import (
     compact,
@@ -33,8 +32,6 @@ __all__ = [
     "compact",
     "read_csv",
     "read_json",
-    "read_orc",
-    "read_parquet",
     "salted_join",
     "write_bucketed_table",
     "write_partitioned",

@@ -11,11 +11,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Columnar scan: pushdown + pruning via Catalyst."""
-    return spark.read.parquet(path)
-
-
 def read_csv(
     spark: SparkSession,
     path: str,
@@ -40,10 +35,6 @@ def read_json(
     bronze-zone stance; FAILFAST is for curated inputs."""
     mode = "PERMISSIVE" if permissive else "FAILFAST"
     return spark.read.options(mode=mode, **options).schema(schema).json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)
 
 
 def read_binary_assets(

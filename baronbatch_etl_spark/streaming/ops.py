@@ -461,20 +461,19 @@ def stream_corpus(
 def curate_ingest(
     docs: DataFrame,
     accepted_path: str,
-    quality_min: float = 0.35,
-    threshold: float = 0.8,
     query_name: str = "curate_ingest",
 ):
     """Streaming twin of the training-set capstone's survivor stages:
     per micro-batch, quality filter → exact dedup → MinHash-LSH
     near-dup keep-one against the accumulated accepted corpus — run
-    with the SAME batch operators (``minhash_lsh_pairs`` incl. its
-    exact-Jaccard verify, ``connected_components``) inside
-    foreachBatch, so the admitted survivor set equals the batch
-    pipeline's (``t_training_set`` stages 1–3) whenever near-dup
-    clusters are cliques under doc_id-ordered replay — true for
-    copy-derived near-duplicates, the dominant real-world case, and
-    asserted end-to-end by tests/test_streaming_multibatch.py. (For a
+    with the SAME batch quality gate (``text.QUALITY_MIN``) and
+    operators (``minhash_lsh_pairs`` at 0.8 incl. its exact-Jaccard
+    verify, ``near_dup_removed``) inside foreachBatch, so the admitted
+    survivor set equals the batch pipeline's (``t_training_set``
+    stages 1–3) whenever near-dup clusters are cliques under
+    doc_id-ordered replay — true for copy-derived near-duplicates,
+    the dominant real-world case, and asserted end-to-end by
+    tests/test_streaming_multibatch.py. (For a
     chain-shaped cluster a–b, b–c with a≁c, any single-pass admission
     policy must diverge from global connected components; the greedy
     key-store gate ``neardup_ingest`` is the documented contract
@@ -492,7 +491,9 @@ def curate_ingest(
     from baronbatch_etl_spark.operators import text as X
 
     def gate(batch: DataFrame, epoch_id: int) -> None:
-        qual = batch.filter(X.quality_score("text", "n_chars") >= quality_min)
+        qual = batch.filter(
+            X.quality_score("text", "n_chars") >= X.QUALITY_MIN
+        )
         keep = (
             qual.select("doc_id", F.md5("text").alias("_md5"))
             .groupBy("_md5")
@@ -526,7 +527,7 @@ def curate_ingest(
             .select("doc_id", "sig", "sh")
             .localCheckpoint(eager=False)
         )
-        pairs = D.minhash_lsh_pairs(sigs, threshold=threshold).cache()
+        pairs = D.minhash_lsh_pairs(sigs, threshold=0.8).cache()
         if accepted is not None:
             acc_a = accepted.select(F.col("doc_id").alias("doc_a"))
             acc_b = accepted.select(F.col("doc_id").alias("doc_b"))
@@ -545,11 +546,7 @@ def curate_ingest(
             cand = sdocs.join(store_adj, "doc_id", "left_anti")
         else:
             in_batch, cand = pairs, sdocs
-        comp = D.connected_components(in_batch)
-        removed = comp.filter(F.col("node") != F.col("comp")).select(
-            F.col("node").alias("doc_id")
-        )
-        surv = cand.join(removed, "doc_id", "left_anti")
+        surv = cand.join(D.near_dup_removed(in_batch), "doc_id", "left_anti")
         _write_epoch(surv, accepted_path, epoch_id)
         pairs.unpersist()
         sdocs.unpersist()

@@ -143,8 +143,12 @@ def test_safe_div_kda_total(spark):
 def test_connected_components_matches_union_find(spark, edges):
     """Distributed min-label propagation must agree with a plain
     union-find over arbitrary small graphs (self-loops, dup edges,
-    chains, cliques)."""
-    from baronbatch_etl_spark.operators.dedup import connected_components
+    chains, cliques), and the keep-one-per-cluster drop set must be
+    exactly the non-minimum nodes."""
+    from baronbatch_etl_spark.operators.dedup import (
+        connected_components,
+        near_dup_removed,
+    )
 
     edges = [(a, b) for a, b in edges if a != b]
     if not edges:
@@ -169,6 +173,8 @@ def test_connected_components_matches_union_find(spark, edges):
     df = spark.createDataFrame(edges, ["doc_a", "doc_b"])
     got = {r.node: r.comp for r in connected_components(df).collect()}
     assert got == want
+    removed = {r.doc_id for r in near_dup_removed(df).collect()}
+    assert removed == {n for n, root in want.items() if root != n}
 
 
 @settings(max_examples=8, deadline=None)
