@@ -11,10 +11,15 @@ quantizer, here the pre-assigned `label` plays that role.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections.abc import Callable, Sequence
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from baronbatch_etl_spark.io import spread
+
+#: A pairwise vector metric over two array columns (dot, cosine, sqdist).
+Metric = Callable[[Column, Column], Column]
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -38,7 +43,95 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    """dot / (‖a‖·‖b‖), NULL when either norm is 0 — DuckDB's answer
+    for 0/0 in :func:`sql_cosine`, and NULL sorts last under DESC in
+    both engines, so an all-zero vector ranks last instead of aborting
+    the query under ANSI division."""
+    return F.try_divide(dot(a, b), norm(a) * norm(b))
+
+
+def _score_one(
+    embeddings: DataFrame,
+    query_vec_id: int,
+    metric: Metric,
+    name: str,
+    *cols: str,
+    q_cols: Sequence[Column] = (),
+    corpus_cols: Sequence[Column] = (),
+    on: Column | None = None,
+    how: str = "cross",
+) -> DataFrame:
+    """(*cols, name): every vector except ``query_vec_id`` scored by
+    ``metric(embedding, q_emb)`` against that one stored vector.
+
+    The query row (``q_emb`` plus ``q_cols``) is broadcast and filtered
+    WITHOUT the spread exchange — its vec_id filter pushes to the scan;
+    only the corpus branch (plus ``corpus_cols``, computed after the
+    spread so a UDF among them runs in parallel) is repartitioned.
+    ``on`` and ``how`` are the broadcast join's candidate predicate and
+    type (an equality on a query column with ``how="inner"`` plans a
+    broadcast hash join); scoring is one map-only pass, so the corpus
+    never shuffles."""
+    q = embeddings.filter(F.col("vec_id") == query_vec_id).select(
+        F.col("embedding").alias("q_emb"), *q_cols
+    )
+    corpus = spread(embeddings.filter(F.col("vec_id") != query_vec_id))
+    return (
+        corpus.select("*", *corpus_cols)
+        .join(F.broadcast(q), on, how)
+        .select(*cols, metric(F.col("embedding"), F.col("q_emb")).alias(name))
+    )
+
+
+def _score_set(
+    embeddings: DataFrame,
+    query_ids: list[int],
+    metric: Metric,
+    name: str,
+    *cols: str | Column,
+    on: Column,
+    q_cols: Sequence[Column] = (),
+) -> DataFrame:
+    """(*cols, name): the corpus scored by ``metric(embedding, q_emb)``
+    against a bounded SET of stored query vectors (``q_id``, ``q_emb``
+    plus ``q_cols``), for every (query, vector) pair that passes
+    ``on``. The query set broadcasts and the corpus is scored in one
+    map-only pass — at 100 TB only per-query survivors of a later
+    :func:`_topk` ever shuffle."""
+    q = embeddings.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"), *q_cols
+    )
+    return (
+        spread(embeddings)
+        .crossJoin(F.broadcast(q))
+        .filter(on)
+        .select(*cols, metric(F.col("embedding"), F.col("q_emb")).alias(name))
+    )
+
+
+def _topk(
+    scored: DataFrame,
+    score: str,
+    k: int,
+    by: str | None = None,
+    ascending: bool = False,
+) -> DataFrame:
+    """The one ranking rule of the similarity family: the ``k`` best
+    rows by (``score``, vec_id) — highest score first (lowest with
+    ``ascending``), ties to the lower vec_id.
+
+    Without ``by`` it is ``orderBy().limit()``, which Spark plans as
+    TakeOrderedAndProject (per-partition heads, one driver merge). With
+    ``by`` the k are per value of that column, numbered in ``rank`` by
+    a row_number window whose ``rank <= k`` compiles to a
+    WindowGroupLimit partial top-k ahead of the exchange."""
+    key = F.col(score).asc() if ascending else F.col(score).desc()
+    if by is None:
+        return scored.orderBy(key, "vec_id").limit(k)
+    w = Window.partitionBy(by).orderBy(key, "vec_id")
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
 
 
 def brute_force_topk(
@@ -50,19 +143,10 @@ def brute_force_topk(
     and top-k is TakeOrderedAndProject — the optimal distributed plan
     for brute-force ANN baseline at any scale.
     """
-    q = embeddings.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("q_emb")
+    scored = _score_one(
+        embeddings, query_vec_id, cosine, "cos_sim", "vec_id", "label"
     )
-    scored = (
-        spread(embeddings.filter(F.col("vec_id") != query_vec_id))
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "label",
-            cosine(F.col("embedding"), F.col("q_emb")).alias("cos_sim"),
-        )
-    )
-    return scored.orderBy(F.col("cos_sim").desc(), "vec_id").limit(k)
+    return _topk(scored, "cos_sim", k)
 
 
 def ivf_topk(embeddings: DataFrame, query_vec_id: int, k: int = 10) -> DataFrame:
@@ -70,19 +154,18 @@ def ivf_topk(embeddings: DataFrame, query_vec_id: int, k: int = 10) -> DataFrame
     coarse cell (`label` = pre-assigned cell id). At scale the table
     is partitioned/bucketed by cell, so this touches one partition
     instead of all of them."""
-    q = embeddings.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("q_emb"), F.col("label").alias("q_label")
+    scored = _score_one(
+        embeddings,
+        query_vec_id,
+        cosine,
+        "cos_sim",
+        "vec_id",
+        "label",
+        q_cols=[F.col("label").alias("q_label")],
+        on=F.col("label") == F.col("q_label"),
+        how="inner",
     )
-    scored = (
-        spread(embeddings.filter(F.col("vec_id") != query_vec_id))
-        .join(F.broadcast(q), F.col("label") == F.col("q_label"))
-        .select(
-            "vec_id",
-            "label",
-            cosine(F.col("embedding"), F.col("q_emb")).alias("cos_sim"),
-        )
-    )
-    return scored.orderBy(F.col("cos_sim").desc(), "vec_id").limit(k)
+    return _topk(scored, "cos_sim", k)
 
 
 def srp_topk(
@@ -105,29 +188,18 @@ def srp_topk(
     from baronbatch_etl_spark.operators.fast_text import make_srp_udf
 
     srp = make_srp_udf(planes, 64)
-    # the 1-row query branch codes WITHOUT the spread exchange (its
-    # vec_id filter pushes to the scan); only the full-corpus candidate
-    # branch pays the repartition that parallelizes the code UDF
-    q = embeddings.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("q_emb"),
-        srp(F.col("embedding")).alias("q_code"),
-    )
-    coded = spread(embeddings.filter(F.col("vec_id") != query_vec_id)).withColumn(
-        "_code", srp(F.col("embedding"))
-    )
-    cand = (
-        coded.crossJoin(F.broadcast(q))
-        .filter(
-            F.bit_count(F.col("_code").bitwiseXOR(F.col("q_code")))
-            <= radius
-        )
-    )
-    scored = cand.select(
+    scored = _score_one(
+        embeddings,
+        query_vec_id,
+        cosine,
+        "cos_sim",
         "vec_id",
         "label",
-        cosine(F.col("embedding"), F.col("q_emb")).alias("cos_sim"),
+        q_cols=[srp(F.col("embedding")).alias("q_code")],
+        corpus_cols=[srp(F.col("embedding")).alias("_code")],
+        on=F.bit_count(F.col("_code").bitwiseXOR(F.col("q_code"))) <= radius,
     )
-    return scored.orderBy(F.col("cos_sim").desc(), "vec_id").limit(k)
+    return _topk(scored, "cos_sim", k)
 
 
 def batch_topk(
@@ -138,24 +210,16 @@ def batch_topk(
     set broadcasts, scoring is one map-only pass over the corpus, and
     per-query top-k is a window partitioned by query id. At 100 TB the
     corpus never shuffles; only (q_id, vec_id, score) survivors do."""
-    from pyspark.sql import Window
-
-    q = embeddings.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+    scored = _score_set(
+        embeddings,
+        query_ids,
+        cosine,
+        "cos_sim",
+        "q_id",
+        "vec_id",
+        on=F.col("vec_id") != F.col("q_id"),
     )
-    scored = (
-        spread(embeddings).crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            cosine(F.col("embedding"), F.col("q_emb")).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), "vec_id")
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _topk(scored, "cos_sim", k, by="q_id")
 
 
 def hard_negatives(
@@ -174,60 +238,70 @@ def hard_negatives(
     runs per-cell on the anchor's neighboring cells instead of the
     full scan; the mining semantics are identical.
     """
-    from pyspark.sql import Window
-
-    q = embeddings.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("q_label"),
-        F.col("embedding").alias("q_emb"),
+    scored = _score_set(
+        embeddings,
+        query_ids,
+        cosine,
+        "cos_sim",
+        "q_id",
+        "q_label",
+        "vec_id",
+        F.col("label").alias("neg_label"),
+        on=F.col("label") != F.col("q_label"),
+        q_cols=[F.col("label").alias("q_label")],
     )
-    scored = (
-        spread(embeddings)
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("label") != F.col("q_label"))
+    return _topk(scored, "cos_sim", k, by="q_id")
+
+
+def _fixed_point_means(ex: DataFrame, keys: list[str], v: str) -> DataFrame:
+    """(*keys, n, c): per-group count and mean of column ``v`` — the one
+    Lloyd M-step / centroid mean of the family (label_centroids and
+    every pq_train_state round, hence kmeans_assign).
+
+    Accumulation is FIXED-POINT: each component quantizes to 1e-9 via
+    the engine's half-up convention (floor(x·1e9 + 0.5), pure double
+    ops — bit-identical cross-engine) and sums as BIGINT — exact and
+    executor-order-independent; :func:`sql_fixed_mean` is the DuckDB
+    twin. (A DECIMAL cast is NOT portable here: Spark rounds the
+    double's shortest string repr, DuckDB rounds its exact binary
+    expansion — they disagree in the last digit.)
+    Headroom: |v| < 1 ⇒ per-row ≤ 1e9; int64 holds ~9e18 ⇒ safe to
+    ~9e9 members per group."""
+    x = F.col(v).cast("double")
+    return (
+        ex.groupBy(*keys)
+        .agg(
+            F.sum(F.floor(x * 1.0e9 + 0.5).cast("long")).alias("s"),
+            F.count("*").alias("n"),
+        )
         .select(
-            "q_id",
-            "q_label",
-            "vec_id",
-            F.col("label").alias("neg_label"),
-            cosine(F.col("embedding"), F.col("q_emb")).alias("cos_sim"),
+            *keys,
+            "n",
+            ((F.col("s").cast("double") / 1.0e9) / F.col("n")).alias("c"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), "vec_id")
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+
+
+def sql_fixed_mean(v: str) -> str:
+    """DuckDB twin of :func:`_fixed_point_means`' mean of ``v`` (an
+    aggregate over the enclosing GROUP BY)."""
+    return (
+        f"(CAST(sum(CAST(floor(CAST({v} AS DOUBLE) * 1000000000.0 + 0.5) "
+        "AS BIGINT)) AS DOUBLE) / 1000000000.0) / count(*)"
     )
 
 
 def label_centroids(embeddings: DataFrame) -> DataFrame:
     """Per-label centroid vectors (the E-step of distributed k-means /
     the IVF coarse-quantizer trainer): posexplode to (label, dim, v),
-    sum per dimension, rebuild the centroid array ordered by dimension.
-
-    Accumulation is FIXED-POINT: each component quantizes to 1e-9 via
-    the engine's half-up convention (floor(x·1e9 + 0.5), pure double
-    ops — bit-identical cross-engine) and sums as BIGINT — exact and
-    executor-order-independent. (A DECIMAL cast is NOT portable here:
-    Spark rounds the double's shortest string repr, DuckDB rounds its
-    exact binary expansion — they disagree in the last digit.)
-    Headroom: |v| < 1 ⇒ per-row ≤ 1e9; int64 holds ~9e18 ⇒ safe to
-    ~9e9 members per cell."""
+    take the fixed-point mean per dimension (:func:`_fixed_point_means`,
+    the k-means M-step's), rebuild the centroid array ordered by
+    dimension."""
     ex = spread(embeddings).select(
         "label", F.posexplode("embedding").alias("dim", "v")
     )
-    per_dim = ex.groupBy("label", "dim").agg(
-        F.sum(
-            F.floor(F.col("v").cast("double") * 1.0e9 + 0.5).cast("long")
-        ).alias("s"),
-        F.count("*").alias("n"),
-    )
     return (
-        per_dim.select(
-            "label",
-            "dim",
-            "n",
-            ((F.col("s").cast("double") / 1.0e9) / F.col("n")).alias("c"),
-        )
+        _fixed_point_means(ex, ["label", "dim"], "v")
         .groupBy("label")
         .agg(
             F.transform(
@@ -237,6 +311,27 @@ def label_centroids(embeddings: DataFrame) -> DataFrame:
             F.max("n").alias("n_vectors"),
         )
     )
+
+
+def _cell_cosines(vectors):
+    """n×n cosine matrix of one coarse cell's vectors, accumulated
+    dimension by dimension — the fold order of :func:`cosine` and the
+    DuckDB oracle (a BLAS matmul would differ in the last ulp). Vectors
+    cross the Arrow boundary once per cell, not once per pair. A
+    zero-norm row scores NaN, which no ``>=`` threshold passes."""
+    import numpy as np
+
+    m = np.vstack([np.asarray(v, dtype=np.float64) for v in vectors])
+    n = m.shape[0]
+    dot_ = np.zeros((n, n))
+    sq = np.zeros(n)
+    for d in range(m.shape[1]):
+        col = m[:, d]
+        dot_ += col[:, None] * col[None, :]
+        sq += col * col
+    norm_ = np.sqrt(sq)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return dot_ / (norm_[:, None] * norm_[None, :])
 
 
 def embedding_near_dup_pairs(
@@ -250,36 +345,25 @@ def embedding_near_dup_pairs(
     the pair space sub-quadratic).
 
     Two physical paths, one logical result:
-      * cells ≤ ``cell_cap`` vectors: applyInPandas all-pairs — the
-        vectors cross the Arrow boundary once per cell, and the n²
-        score matrix stays small (cap² · 8 B ≈ 33 MB at 2048).
+      * cells ≤ ``cell_cap`` vectors: applyInPandas all-pairs over
+        :func:`_cell_cosines` — the n² score matrix stays small
+        (cap² · 8 B ≈ 33 MB at 2048).
       * cells > ``cell_cap``: a SALTED pair join — the left side is
         replicated across ``salt`` partner buckets so one hot cell
         spreads over salt× tasks instead of OOMing one executor; the
         cosine is the expression fold, which adds terms in the same
         dimension order as the numpy loop, so both paths (and the
         oracle) are bit-identical.
+    An all-zero vector has no cosine (NaN in numpy, NULL in the
+    expression and the oracle), so it pairs with nothing on any path.
     """
     import numpy as np
     import pandas as pd
 
     def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        # All pairs within one coarse cell, scored with a
-        # dimension-sequential accumulation (the oracle's fold order —
-        # a BLAS matmul would differ in the last ulp). Vectors cross
-        # the Arrow boundary once per cell, not once per pair.
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        m = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-        n = m.shape[0]
-        dot = np.zeros((n, n))
-        sq = np.zeros(n)
-        for d in range(m.shape[1]):
-            col = m[:, d]
-            dot += col[:, None] * col[None, :]
-            sq += col * col
-        norm_ = np.sqrt(sq)
-        cos = dot / (norm_[:, None] * norm_[None, :])
-        ia, ib = np.triu_indices(n, k=1)
+        cos = _cell_cosines(pdf["embedding"])
+        ia, ib = np.triu_indices(len(pdf), k=1)
         keep = cos[ia, ib] >= threshold
         ids = pdf["vec_id"].to_numpy()
         return pd.DataFrame(
@@ -347,39 +431,25 @@ def ivf_recall_at_k(
     scored relation to save the second scan would shuffle far more
     bytes than the scan costs. Neither side shuffles corpus data: each
     ranking reduces to per-query top-k survivors map-side
-    (TakeOrdered / window over ≤ k·|Q| rows), and the recall join
-    touches only 2·k rows per query.
+    (window over ≤ k·|Q| rows), and the recall join touches only 2·k
+    rows per query.
     """
-    from pyspark.sql import Window
-
-    q = embeddings.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("label").alias("q_label"),
+    scored = _score_set(
+        embeddings,
+        query_ids,
+        cosine,
+        "cos_sim",
+        "q_id",
+        "vec_id",
+        "label",
+        "q_label",
+        on=F.col("vec_id") != F.col("q_id"),
+        q_cols=[F.col("label").alias("q_label")],
     )
-    scored = (
-        spread(embeddings).crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            "label",
-            "q_label",
-            cosine(F.col("embedding"), F.col("q_emb")).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), "vec_id")
-    brute = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id")
-    )
-    ivf = (
-        scored.filter(F.col("label") == F.col("q_label"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", F.lit(1).alias("hit"))
-    )
+    brute = _topk(scored, "cos_sim", k, by="q_id").select("q_id", "vec_id")
+    ivf = _topk(
+        scored.filter(F.col("label") == F.col("q_label")), "cos_sim", k, by="q_id"
+    ).select("q_id", "vec_id", F.lit(1).alias("hit"))
     # ivf is ≤ k·|queries| rows by construction — broadcast it so the
     # recall join never falls to a sort-merge exchange
     return (
@@ -406,7 +476,7 @@ def quantize_int8(embeddings: DataFrame) -> DataFrame:
 
     Row-local expressions only: the L2 norm is the house DOUBLE fold,
     the quantizer is round-half-up (``floor(x·127/‖v‖ + 0.5)``, the
-    engine-portable rounding — see label_centroids) — so the exact
+    engine-portable rounding — see _fixed_point_means) — so the exact
     codes are oracle-checkable and the pass runs at scan speed on any
     corpus. Zero-norm vectors emit NULL codes rather than ±Inf.
     """
@@ -450,7 +520,7 @@ def dim_stats(embeddings: DataFrame) -> DataFrame:
     (dim, n, mean, var, vmin, vmax) — the calibration pass that feeds
     quantization ranges (s_quantize_int8) and whitening transforms.
 
-    Same fixed-point discipline as label_centroids: first and second
+    Same fixed-point discipline as _fixed_point_means: first and second
     moments quantize to 1e-9 (floor(x·1e9 + 0.5), pure double ops)
     and sum as BIGINT, so results are executor-order-independent and
     bit-identical to the DuckDB oracle. One explode + one dim-keyed
@@ -496,7 +566,7 @@ def sqdist(a: Column, b: Column) -> Column:
 
 
 def sql_sqdist(a: str, b: str) -> str:
-    """DuckDB twin of the squared-L2 fold in kmeans_assign: same
+    """DuckDB twin of :func:`sqdist` and :func:`_nearest_centroid`: same
     left-to-right summation from 0.0, same (x−y)·(x−y) form (no pow —
     engines may differ in pow's last ulp)."""
     d = f"(({a})[i]::DOUBLE - ({b})[i]::DOUBLE)"
@@ -505,6 +575,18 @@ def sql_sqdist(a: str, b: str) -> str:
         f"list_transform(range(1, len({a}) + 1), "
         f"i -> {d} * {d})), (acc, v) -> acc + v)"
     )
+
+
+def _sqdist_fold(a: Sequence[float], b: Sequence[float]) -> float:
+    """Driver-side twin of :func:`sqdist` over two Python vectors: the
+    same (x−y)·(x−y) terms folded left to right from 0.0, so a
+    driver-computed distance (a PQ lookup table entry, a query's
+    nearest cell) is bit-identical to the one the plan computes."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        d = float(x) - float(y)
+        acc += d * d
+    return acc
 
 
 def _nearest_centroid(emb: Column, cents: list[tuple[int, list[float]]]) -> Column:
@@ -541,11 +623,12 @@ def kmeans_assign(
 
     The missing producer for everything downstream that consumes a
     coarse cell id (ivf_topk's cells, embedding_near_dup_pairs /
-    SemDeDup blocking): seeds are the ``k`` lowest vec_ids, each round
-    assigns via :func:`_nearest_centroid` and recomputes centroids
-    with the label_centroids fixed-point discipline (1e-9 quantized
-    BIGINT sums — executor-order-independent, bit-identical to the
-    SQL oracle's unrolled CTE rounds).
+    SemDeDup blocking). Training is :func:`pq_train_state` with one
+    subspace (``m=1``): seeds are the ``k`` lowest vec_ids, then
+    ``iters − 1`` fixed-point M-steps (1e-9 quantized BIGINT sums —
+    executor-order-independent, bit-identical to the SQL oracle's
+    unrolled CTE rounds); round ``iters`` is the final assignment via
+    :func:`_nearest_centroid`.
 
     Scale shape (same as any distributed Lloyd implementation, e.g.
     Spark MLlib's KMeans): per round, assignment is a map-only pass
@@ -557,58 +640,13 @@ def kmeans_assign(
     A cluster that empties simply drops out of the candidate list;
     the oracle's GROUP BY does the same.
     """
-    emb = embeddings.select("vec_id", "embedding")
-    seed_rows = emb.orderBy("vec_id").limit(k).collect()
-    cents: list[tuple[int, list[float]]] = [
-        (i, [float(v) for v in r.embedding]) for i, r in enumerate(seed_rows)
-    ]
-    body = spread(emb)
-    for rnd in range(iters):
-        best = _nearest_centroid(F.col("embedding"), cents)
-        assigned = body.select(
-            "vec_id",
-            "embedding",
-            best.getField("cid").alias("cluster"),
-            best.getField("dist").alias("dist"),
-        )
-        if rnd == iters - 1:
-            return assigned.select("vec_id", "cluster", "dist")
-        # M-step stays the posexplode → (cluster, dim) partial-agg
-        # shape ON PURPOSE: a per-dimension aggregate battery over the
-        # array columns (dim sums + counts as separate agg
-        # expressions) was tried in r10 and measured 2.4–3.5× SLOWER
-        # at sf0.1 (0.41 s posexplode vs 1.00 s with 65 agg buffers /
-        # 1.43 s with 128 — wide agg schemas lose whole-stage codegen
-        # and pay per-row buffer-update overhead, while the explode
-        # emits tiny codegen-friendly rows and the partial agg already
-        # collapses them to k·dim per task before the exchange).
-        ex = assigned.select(
-            "cluster", F.posexplode("embedding").alias("dim", "vf")
-        )
-        v = F.col("vf").cast("double")
-        per_dim = (
-            ex.groupBy("cluster", "dim")
-            .agg(
-                F.sum(F.floor(v * 1.0e9 + 0.5).cast("long")).alias("s"),
-                F.count("*").alias("n"),
-            )
-            .select(
-                "cluster",
-                "dim",
-                (
-                    (F.col("s").cast("double") / 1.0e9)
-                    / F.col("n")
-                ).alias("c"),
-            )
-        )
-        by_cluster: dict[int, dict[int, float]] = {}
-        for r in per_dim.collect():  # k·dim scalars — driver state
-            by_cluster.setdefault(r.cluster, {})[r.dim] = r.c
-        cents = [
-            (cid, [dims[d] for d in sorted(dims)])
-            for cid, dims in sorted(by_cluster.items())
-        ]
-    raise AssertionError("iters must be >= 1")
+    books, _ = pq_train_state(embeddings, m=1, k=k, iters=iters)
+    best = _nearest_centroid(F.col("embedding"), books[0])
+    return spread(embeddings.select("vec_id", "embedding")).select(
+        "vec_id",
+        best.getField("cid").alias("cluster"),
+        best.getField("dist").alias("dist"),
+    )
 
 
 def mips_topk(
@@ -624,19 +662,8 @@ def mips_topk(
     norm augmentation, MIPS order equals cosine order, so the whole
     existing ANN stack (SRP-LSH codes, IVF cells) applies unchanged.
     """
-    q = embeddings.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("q_emb")
-    )
-    scored = (
-        spread(embeddings.filter(F.col("vec_id") != query_vec_id))
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "label",
-            dot(F.col("embedding"), F.col("q_emb")).alias("ip"),
-        )
-    )
-    return scored.orderBy(F.col("ip").desc(), "vec_id").limit(k)
+    scored = _score_one(embeddings, query_vec_id, dot, "ip", "vec_id", "label")
+    return _topk(scored, "ip", k)
 
 
 def augment_mips(embeddings: DataFrame, col: str = "embedding") -> DataFrame:
@@ -703,28 +730,19 @@ def _check_trained(
     return cents, dim
 
 
-def _pq_subframe(
-    embeddings: DataFrame, m: int, dim: int | None = None
-) -> tuple[DataFrame, int, int]:
+def _pq_subframe(embeddings: DataFrame, m: int, dim: int) -> DataFrame:
     """(vec_id, sub, v) rows — one posexplode of the m contiguous
-    subspace slices — plus (dim, w). Shared by training, encoding,
-    and ADC search so they all see the same layout. Pass ``dim`` when
-    already known (e.g. from the collected seed rows) to skip the
-    probe job."""
-    emb = embeddings.select("vec_id", "embedding")
-    if dim is None:
-        first = emb.select(F.size("embedding").alias("d")).first()
-        dim = int(first.d)
+    subspace slices of ``dim``-wide vectors. Shared by training,
+    encoding, and ADC search so they all see the same layout."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible into {m} subspaces")
     w = dim // m
-    sub = spread(emb).select(
+    return spread(embeddings.select("vec_id", "embedding")).select(
         "vec_id",
         F.posexplode(
             F.array(*[F.slice("embedding", s * w + 1, w) for s in range(m)])
         ).alias("sub", "v"),
     )
-    return sub, dim, w
 
 
 def _pq_assign(
@@ -749,8 +767,9 @@ def _pq_assign(
 def pq_train_state(
     embeddings: DataFrame, m: int = 4, k: int = 4, iters: int = 2
 ) -> tuple[dict[int, list[tuple[int, list[float]]]], int]:
-    """Trained PQ state ``(codebooks, dim)`` — the reusable half of
-    the PQ stack. FAISS separates ``train()`` from ``add()``/
+    """Trained PQ state ``(codebooks, dim)`` — the one Lloyd trainer of
+    the family (:func:`kmeans_assign` is ``m=1``) and the reusable half
+    of the PQ stack. FAISS separates ``train()`` from ``add()``/
     ``search()`` for a reason: a billion-vector deployment trains its
     codebooks once and every encode/search/recall pass reuses them.
     Pass the returned tuple as the ``trained`` argument of
@@ -759,26 +778,21 @@ def pq_train_state(
     state serves every pass value-identically).
 
     Per-subspace Lloyd codebooks: seeds are the k lowest vec_ids'
-    subvectors; ``iters - 1`` fixed-point M-steps (the codebooks the
-    round-``iters`` assignment uses — matching the unrolled SQL twin).
-    Driver state is k·dim scalars per round."""
-    return _pq_train_with_dim(embeddings, m=m, k=k, iters=iters)
-
-
-def _pq_train_with_dim(
-    embeddings: DataFrame, m: int, k: int, iters: int
-) -> tuple[dict[int, list[tuple[int, list[float]]]], int]:
-    """The trained codebooks plus the vector dimensionality (read off
-    the collected seed rows — one fewer probe job for every downstream
-    subframe)."""
+    subvectors (``dim`` is read off them — no probe job); ``iters - 1``
+    fixed-point M-steps (:func:`_fixed_point_means`) give the codebooks
+    the round-``iters`` assignment uses — matching the unrolled SQL
+    twin. A cluster that empties drops out. Driver state is k·dim
+    scalars per round."""
     if iters < 1:
         raise ValueError("iters must be >= 1")
-    emb = embeddings.select("vec_id", "embedding")
-    seed_rows = emb.orderBy("vec_id").limit(k).collect()
+    seed_rows = (
+        embeddings.select("vec_id", "embedding").orderBy("vec_id").limit(k).collect()
+    )
+    if not seed_rows:
+        raise ValueError("no vectors to train on")
     dim = len(seed_rows[0].embedding)
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible into {m} subspaces")
-    sub, _, w = _pq_subframe(embeddings, m, dim=dim)
+    sub = _pq_subframe(embeddings, m, dim)
+    w = dim // m
     cents: dict[int, list[tuple[int, list[float]]]] = {
         s: [
             (i, [float(v) for v in r.embedding[s * w : (s + 1) * w]])
@@ -787,28 +801,19 @@ def _pq_train_with_dim(
         for s in range(m)
     }
     for _ in range(iters - 1):
-        assigned = _pq_assign(sub, cents, m)
-        ex = assigned.select(
+        # The M-step stays the posexplode → (sub, cluster, dim)
+        # partial-agg shape ON PURPOSE: a per-dimension aggregate
+        # battery over the array columns was tried in r10 and measured
+        # 2.4–3.5× SLOWER at sf0.1 (wide agg schemas lose whole-stage
+        # codegen and pay per-row buffer-update overhead, while the
+        # explode emits tiny codegen-friendly rows and the partial agg
+        # already collapses them to k·dim per task before the exchange).
+        ex = _pq_assign(sub, cents, m).select(
             "sub", "cluster", F.posexplode("v").alias("dim", "vf")
         )
-        v = F.col("vf").cast("double")
-        per_dim = (
-            ex.groupBy("sub", "cluster", "dim")
-            .agg(
-                F.sum(F.floor(v * 1.0e9 + 0.5).cast("long")).alias("s"),
-                F.count("*").alias("n"),
-            )
-            .select(
-                "sub",
-                "cluster",
-                "dim",
-                ((F.col("s").cast("double") / 1.0e9) / F.col("n")).alias(
-                    "c"
-                ),
-            )
-        )
+        means = _fixed_point_means(ex, ["sub", "cluster", "dim"], "vf")
         by_sub: dict[int, dict[int, dict[int, float]]] = {}
-        for r in per_dim.collect():  # k·dim scalars — driver state
+        for r in means.collect():  # k·dim scalars — driver state
             by_sub.setdefault(r.sub, {}).setdefault(r.cluster, {})[
                 r.dim
             ] = r.c
@@ -838,7 +843,7 @@ def pq_encode(
     reconstruction error (sum of per-subspace squared distances).
 
     Determinism: seeds are the k lowest vec_ids' subvectors; M-steps
-    use the kmeans_assign fixed-point discipline (1e-9-quantized
+    use the fixed-point mean (:func:`_fixed_point_means`, 1e-9-quantized
     BIGINT sums); qdist folds the m subspace distances in subspace
     order — all bit-identical to the unrolled SQL twin.
 
@@ -851,8 +856,7 @@ def pq_encode(
     and recall pass reuses its state, as a deployed index does.
     """
     cents, dim = _check_trained(trained, m)
-    sub, _, _ = _pq_subframe(embeddings, m, dim=dim)
-    assigned = _pq_assign(sub, cents, m)
+    assigned = _pq_assign(_pq_subframe(embeddings, m, dim), cents, m)
     coded = assigned.groupBy("vec_id").agg(
         F.array_sort(
             F.collect_list(F.struct("sub", "cluster", "dist"))
@@ -911,20 +915,14 @@ def pq_adc_topk(
     )
     qv = [float(v) for v in q_row.embedding]
     w = len(qv) // m
-    lut: dict[int, dict[int, float]] = {}
-    for s in range(m):
-        qs = qv[s * w : (s + 1) * w]
-        lut[s] = {}
-        for cid, c in cents[s]:
-            acc = 0.0
-            for x, y in zip(qs, c):
-                acc += (x - y) * (x - y)
-            lut[s][cid] = acc
+    lut = {
+        s: {cid: _sqdist_fold(qv[s * w : (s + 1) * w], c) for cid, c in cents[s]}
+        for s in range(m)
+    }
     corpus = embeddings.filter(F.col("vec_id") != query_vec_id)
     if cell_col is not None:
         corpus = corpus.filter(F.col(cell_col) == q_row[cell_col])
-    sub, _, _ = _pq_subframe(corpus, m, dim=dim)
-    assigned = _pq_assign(sub, cents, m)
+    assigned = _pq_assign(_pq_subframe(corpus, m, dim), cents, m)
     term = F.lit(None).cast("double")
     for s in range(m):
         for cid in sorted(lut[s]):
@@ -945,7 +943,7 @@ def pq_adc_topk(
             ).alias("adc_dist")
         )
     )
-    return scored.orderBy(F.col("adc_dist").asc(), "vec_id").limit(topk)
+    return _topk(scored, "adc_dist", topk, ascending=True)
 
 
 def pq_recall_at_k(
@@ -967,19 +965,12 @@ def pq_recall_at_k(
     adc = pq_adc_topk(
         embeddings, query_vec_id, trained, topk=k, m=m
     ).select("vec_id")
-    q = embeddings.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("q_emb")
-    )
-    brute = (
-        spread(embeddings.filter(F.col("vec_id") != query_vec_id))
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id", sqdist(F.col("embedding"), F.col("q_emb")).alias("d2")
-        )
-        .orderBy("d2", "vec_id")
-        .limit(k)
-        .select("vec_id")
-    )
+    brute = _topk(
+        _score_one(embeddings, query_vec_id, sqdist, "d2", "vec_id"),
+        "d2",
+        k,
+        ascending=True,
+    ).select("vec_id")
     return brute.join(adc, "vec_id").agg(
         F.count("*").alias("n_hits")
     ).select(
@@ -1002,12 +993,9 @@ def knn_graph(
 
     Two physical paths, one logical result (the
     embedding_near_dup_pairs pattern):
-      * cells ≤ ``cell_cap``: per-cell applyInPandas — vectors cross
-        the Arrow boundary once per CELL, the n×n score matrix
-        accumulates dimension-sequentially in numpy (the exact fold
-        order of the expression version and the DuckDB oracle — a
-        BLAS matmul would differ in the last ulp), and each row's
-        top-k is a lexsort by (−cos, nbr_id). Peak per task at the
+      * cells ≤ ``cell_cap``: per-cell applyInPandas over
+        :func:`_cell_cosines` (the near-dup operator's fold), and each
+        row's top-k is a lexsort by (−cos, nbr_id). Peak per task at the
         cap: two n² double matrices ≈ 270 MB.
       * cells > ``cell_cap``: expression-fold self-join with a
         WindowGroupLimit rank ≤ k — unbounded-cell-safe (AQE splits
@@ -1016,16 +1004,13 @@ def knn_graph(
 
     Zero-norm contract: all-zero embeddings are DROPPED before
     scoring (they appear neither as sources nor as neighbors). A zero
-    vector has no defined cosine direction — scoring it yields NaN,
-    and NaN ordering differs between numpy's lexsort (NaN last) and
-    Spark's DESC row_number (NaN first), which would break the
-    fast/slow/oracle bit-parity triple. The s_knn_graph oracle
-    applies the same filter.
+    vector has no defined cosine direction — the numpy path would
+    score it NaN where :func:`cosine` and the oracle give NULL, which
+    would break the fast/slow/oracle bit-parity triple. The
+    s_knn_graph oracle applies the same filter.
     """
     import numpy as np
     import pandas as pd
-
-    from pyspark.sql.window import Window
 
     ret = (
         "vec_id long, label int, nbr_id long, cos_sim double, rank long"
@@ -1044,17 +1029,7 @@ def knn_graph(
                     "rank": pd.Series(dtype="int64"),
                 }
             )
-        m = np.vstack(
-            [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-        )
-        dot = np.zeros((n, n))
-        sq = np.zeros(n)
-        for d in range(m.shape[1]):  # sequential over dims == fold order
-            col = m[:, d]
-            dot += col[:, None] * col[None, :]
-            sq += col * col
-        norm_ = np.sqrt(sq)
-        cos = dot / (norm_[:, None] * norm_[None, :])
+        cos = _cell_cosines(pdf["embedding"])
         np.fill_diagonal(cos, -np.inf)
         ids = pdf["vec_id"].to_numpy()
         label = int(pdf["label"].iloc[0])

@@ -8,7 +8,7 @@ constants so both engines replay the identical arithmetic.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from baronbatch_etl_spark.functions.scalars import round_half_up
@@ -958,7 +958,7 @@ def s_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s_label_centroids",
-    oracle="""
+    oracle=f"""
 WITH ex AS (
     SELECT label, d.dim, embedding[d.dim] AS v
     FROM embeddings,
@@ -966,9 +966,7 @@ WITH ex AS (
 ),
 per_dim AS (
     SELECT label, dim,
-           (CAST(sum(CAST(floor(CAST(v AS DOUBLE) * 1000000000.0 + 0.5)
-                          AS BIGINT)) AS DOUBLE) / 1000000000.0)
-               / count(*) AS c,
+           {S.sql_fixed_mean("v")} AS c,
            count(*) AS n
     FROM ex GROUP BY label, dim
 )
@@ -1379,25 +1377,37 @@ def _srp_weight_sql(j: int) -> str:
     )
 
 
+def _srp_code_sql(planes: int) -> tuple[str, str]:
+    """DuckDB twin of make_srp_udf(planes, 64) over `embedding`: the
+    comma-joined per-plane dot folds (to be bound as `dots`) and the
+    packed code expression over `dots` (same fold order as the UDF)."""
+    dots = ", ".join(
+        "list_reduce(list_prepend(0.0::DOUBLE, "
+        "list_transform(range(0, 64), d -> "
+        f"{_srp_weight_sql(j)} * embedding[d + 1]::DOUBLE)), "
+        "(acc, v) -> acc + v)"
+        for j in range(planes)
+    )
+    code = " + ".join(
+        f"(CASE WHEN dots[{j + 1}] > 0 THEN {1 << j} ELSE 0 END)"
+        for j in range(planes)
+    )
+    return dots, code
+
+
+_SRP_DOTS, _SRP_CODE = _srp_code_sql(_SRP_PLANES)
+_SRP_TOPK_DOTS, _SRP_TOPK_CODE = _srp_code_sql(6)
+
+
 @register(
     "s_srp_codes",
     oracle=f"""
 WITH proj AS (
-    SELECT vec_id, label,
-           [{", ".join(
-               "list_reduce(list_prepend(0.0::DOUBLE, "
-               "list_transform(range(0, 64), d -> "
-               f"{_srp_weight_sql(j)} * embedding[d + 1]::DOUBLE)), "
-               "(acc, v) -> acc + v)"
-               for j in range(_SRP_PLANES)
-           )}] AS dots
+    SELECT vec_id, label, [{_SRP_DOTS}] AS dots
     FROM embeddings
 )
 SELECT vec_id, label,
-       CAST({" + ".join(
-           f"(CASE WHEN dots[{j + 1}] > 0 THEN {1 << j} ELSE 0 END)"
-           for j in range(_SRP_PLANES)
-       )} AS BIGINT) AS srp_code
+       CAST({_SRP_CODE} AS BIGINT) AS srp_code
 FROM proj
 """,
     tags=("llm", "similarity", "lsh"),
@@ -1416,26 +1426,6 @@ def s_srp_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.select(
         "vec_id", "label", srp(F.col("embedding")).alias("srp_code")
     )
-
-
-def _srp_code_sql(planes: int) -> str:
-    """DuckDB expression for the packed SRP code of `embedding`
-    (same fold order as make_srp_udf)."""
-    dots = ", ".join(
-        "list_reduce(list_prepend(0.0::DOUBLE, "
-        "list_transform(range(0, 64), d -> "
-        f"{_srp_weight_sql(j)} * embedding[d + 1]::DOUBLE)), "
-        "(acc, v) -> acc + v)"
-        for j in range(planes)
-    )
-    code = " + ".join(
-        f"(CASE WHEN dots[{j + 1}] > 0 THEN {1 << j} ELSE 0 END)"
-        for j in range(planes)
-    )
-    return dots, code
-
-
-_SRP_TOPK_DOTS, _SRP_TOPK_CODE = _srp_code_sql(6)
 
 
 @register(
@@ -1798,8 +1788,6 @@ def t_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("weight"),
         )
     )
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("doc_id").orderBy(
         F.col("weight").desc(), F.col("token")
     )
@@ -2113,9 +2101,7 @@ ex AS (
 ),
 m AS (
     SELECT cluster, dim,
-           (CAST(sum(CAST(floor(CAST(v AS DOUBLE) * 1000000000.0 + 0.5)
-                          AS BIGINT)) AS DOUBLE) / 1000000000.0)
-               / count(*) AS c
+           {S.sql_fixed_mean("v")} AS c
     FROM ex GROUP BY cluster, dim
 ),
 c2 AS (SELECT cluster AS cid, list(c ORDER BY dim) AS c FROM m
@@ -2171,8 +2157,6 @@ def t_eval_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: rank ≤ k over a window compiles to WindowGroupLimit —
     per-partition partial top-k BEFORE the exchange, so the shuffle
     carries ≤ k rows per stratum per input partition, not the corpus."""
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     h = (F.col("doc_id") * F.lit(2654435761)) % F.lit(4294967296)
     w = Window.partitionBy("lang").orderBy("h", "doc_id")
@@ -2234,13 +2218,15 @@ def _pq_trained(spark: SparkSession, sf_dir: str) -> tuple:
     return state
 
 
-@register(
-    "s_pq_codes",
-    # the 2-round per-subspace Lloyd unrolls exactly like the
-    # s_kmeans_assign oracle, with (sub) joining where that one
-    # cross-joined — one fused chain for all m subspaces
-    oracle=f"""
-WITH sub AS (
+def _pq_train_ctes() -> str:
+    """The per-subspace Lloyd training chain up to the trained codebooks
+    ``c2(sub, cid, c)``: ``sub`` slices every vector into its
+    ``_PQ_M`` subspaces, the ``_PQ_K`` lowest vec_ids seed each
+    subspace, one assign-by-argmin round (``d1``/``a1``) and one
+    fixed-point M-step (``mstep``) — the SQL twin of
+    ``S.pq_train_state(iters=2)``. Shared by the encode oracle and the
+    ADC-search oracles (:func:`_pq_adc_ctes`)."""
+    return f"""sub AS (
     SELECT vec_id, s.sub,
            embedding[s.sub*{_PQ_W}+1 : s.sub*{_PQ_W}+{_PQ_W}] AS v
     FROM embeddings,
@@ -2268,13 +2254,20 @@ ex AS (
 ),
 mstep AS (
     SELECT sub, cluster, dim,
-           (CAST(sum(CAST(floor(CAST(vf AS DOUBLE) * 1000000000.0 + 0.5)
-                          AS BIGINT)) AS DOUBLE) / 1000000000.0)
-               / count(*) AS c
+           {S.sql_fixed_mean("vf")} AS c
     FROM ex GROUP BY sub, cluster, dim
 ),
 c2 AS (SELECT sub, cluster AS cid, list(c ORDER BY dim) AS c
-       FROM mstep GROUP BY sub, cluster),
+       FROM mstep GROUP BY sub, cluster)"""
+
+
+@register(
+    "s_pq_codes",
+    # the 2-round per-subspace Lloyd unrolls exactly like the
+    # s_kmeans_assign oracle, with (sub) joining where that one
+    # cross-joined — one fused chain for all m subspaces
+    oracle=f"""
+WITH {_pq_train_ctes()},
 d2 AS (
     SELECT t.vec_id, t.sub, s.cid, {S.sql_sqdist("t.v", "s.c")} AS dist
     FROM sub t JOIN c2 s ON t.sub = s.sub
@@ -2318,51 +2311,24 @@ def s_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_train_ctes() -> str:
-    """The s_pq_codes training chain up to the trained codebooks
-    (c2) — shared verbatim by the encode and ADC-search oracles."""
-    return f"""sub AS (
-    SELECT vec_id, s.sub,
-           embedding[s.sub*{_PQ_W}+1 : s.sub*{_PQ_W}+{_PQ_W}] AS v
-    FROM embeddings,
-         LATERAL (SELECT unnest(range(0, {_PQ_M})) AS sub) s
+def _pq_adc_ctes(cell: bool = False) -> str:
+    """The ADC search chain for query vector 0 over the codebooks of
+    :func:`_pq_train_ctes` — the SQL twin of ``S.pq_adc_topk``:
+    ``qsub`` (the query's subvectors), ``lut`` (query-subvector-to-
+    centroid distances), ``d2``/``a2`` (every other vector's code) and
+    ``adc(vec_id, adc_dist)`` (its LUT terms folded in subspace
+    order). ``cell`` keeps only the query's ``label`` cell (IVF-PQ,
+    ``cell_col="label"``)."""
+    cellv, cands = "", "WHERE t.vec_id <> 0"
+    if cell:
+        cellv = """cellv AS (
+    SELECT e.vec_id FROM embeddings e
+    WHERE e.vec_id <> 0
+      AND e.label = (SELECT label FROM embeddings WHERE vec_id = 0)
 ),
-seeds AS (
-    SELECT sub, CAST(rn - 1 AS INTEGER) AS cid, v AS c FROM (
-        SELECT sub, v,
-               row_number() OVER (PARTITION BY sub ORDER BY vec_id) AS rn
-        FROM sub) WHERE rn <= {_PQ_K}
-),
-d1 AS (
-    SELECT t.vec_id, t.sub, t.v, s.cid, {S.sql_sqdist("t.v", "s.c")} AS dist
-    FROM sub t JOIN seeds s ON t.sub = s.sub
-),
-a1 AS (
-    SELECT vec_id, sub, v, cid AS cluster FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-                                     ORDER BY dist, cid) AS rn
-        FROM d1) WHERE rn = 1
-),
-ex AS (
-    SELECT sub, cluster, d.dim, v[d.dim] AS vf
-    FROM a1, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS dim) d
-),
-mstep AS (
-    SELECT sub, cluster, dim,
-           (CAST(sum(CAST(floor(CAST(vf AS DOUBLE) * 1000000000.0 + 0.5)
-                          AS BIGINT)) AS DOUBLE) / 1000000000.0)
-               / count(*) AS c
-    FROM ex GROUP BY sub, cluster, dim
-),
-c2 AS (SELECT sub, cluster AS cid, list(c ORDER BY dim) AS c
-       FROM mstep GROUP BY sub, cluster)"""
-
-
-@register(
-    "s_pq_adc_topk",
-    oracle=f"""
-WITH {_pq_train_ctes()},
-qsub AS (
+"""
+        cands = "JOIN cellv cv ON t.vec_id = cv.vec_id"
+    return f"""qsub AS (
     SELECT s.sub, embedding[s.sub*{_PQ_W}+1 : s.sub*{_PQ_W}+{_PQ_W}] AS qv
     FROM embeddings,
          LATERAL (SELECT unnest(range(0, {_PQ_M})) AS sub) s
@@ -2372,10 +2338,10 @@ lut AS (
     SELECT c.sub, c.cid, {S.sql_sqdist("q.qv", "c.c")} AS dq
     FROM c2 c JOIN qsub q ON c.sub = q.sub
 ),
-d2 AS (
+{cellv}d2 AS (
     SELECT t.vec_id, t.sub, s.cid, {S.sql_sqdist("t.v", "s.c")} AS dist
     FROM sub t JOIN c2 s ON t.sub = s.sub
-    WHERE t.vec_id <> 0
+    {cands}
 ),
 a2 AS (
     SELECT vec_id, sub, cid AS cluster FROM (
@@ -2389,7 +2355,14 @@ adc AS (
                        (x, y) -> x + y) AS adc_dist
     FROM a2 a JOIN lut l ON a.sub = l.sub AND a.cluster = l.cid
     GROUP BY a.vec_id
-)
+)"""
+
+
+@register(
+    "s_pq_adc_topk",
+    oracle=f"""
+WITH {_pq_train_ctes()},
+{_pq_adc_ctes()}
 SELECT vec_id, adc_dist FROM adc ORDER BY adc_dist, vec_id LIMIT 10
 """,
     tags=("llm", "similarity", "quantization", "topk"),
@@ -2417,39 +2390,7 @@ def s_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "s_ivfpq_topk",
     oracle=f"""
 WITH {_pq_train_ctes()},
-qsub AS (
-    SELECT s.sub, embedding[s.sub*{_PQ_W}+1 : s.sub*{_PQ_W}+{_PQ_W}] AS qv
-    FROM embeddings,
-         LATERAL (SELECT unnest(range(0, {_PQ_M})) AS sub) s
-    WHERE vec_id = 0
-),
-lut AS (
-    SELECT c.sub, c.cid, {S.sql_sqdist("q.qv", "c.c")} AS dq
-    FROM c2 c JOIN qsub q ON c.sub = q.sub
-),
-cellv AS (
-    SELECT e.vec_id FROM embeddings e
-    WHERE e.vec_id <> 0
-      AND e.label = (SELECT label FROM embeddings WHERE vec_id = 0)
-),
-d2 AS (
-    SELECT t.vec_id, t.sub, s.cid, {S.sql_sqdist("t.v", "s.c")} AS dist
-    FROM sub t JOIN c2 s ON t.sub = s.sub
-    JOIN cellv cv ON t.vec_id = cv.vec_id
-),
-a2 AS (
-    SELECT vec_id, sub, cid AS cluster FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-                                     ORDER BY dist, cid) AS rn
-        FROM d2) WHERE rn = 1
-),
-adc AS (
-    SELECT a.vec_id,
-           list_reduce(list_prepend(0.0::DOUBLE, list(l.dq ORDER BY a.sub)),
-                       (x, y) -> x + y) AS adc_dist
-    FROM a2 a JOIN lut l ON a.sub = l.sub AND a.cluster = l.cid
-    GROUP BY a.vec_id
-)
+{_pq_adc_ctes(cell=True)}
 SELECT vec_id, adc_dist FROM adc ORDER BY adc_dist, vec_id LIMIT 10
 """,
     tags=("llm", "similarity", "quantization", "topk", "ivf"),
@@ -2478,34 +2419,7 @@ def s_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "s_pq_recall",
     oracle=f"""
 WITH {_pq_train_ctes()},
-qsub AS (
-    SELECT s.sub, embedding[s.sub*{_PQ_W}+1 : s.sub*{_PQ_W}+{_PQ_W}] AS qv
-    FROM embeddings,
-         LATERAL (SELECT unnest(range(0, {_PQ_M})) AS sub) s
-    WHERE vec_id = 0
-),
-lut AS (
-    SELECT c.sub, c.cid, {S.sql_sqdist("q.qv", "c.c")} AS dq
-    FROM c2 c JOIN qsub q ON c.sub = q.sub
-),
-d2 AS (
-    SELECT t.vec_id, t.sub, s.cid, {S.sql_sqdist("t.v", "s.c")} AS dist
-    FROM sub t JOIN c2 s ON t.sub = s.sub
-    WHERE t.vec_id <> 0
-),
-a2 AS (
-    SELECT vec_id, sub, cid AS cluster FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-                                     ORDER BY dist, cid) AS rn
-        FROM d2) WHERE rn = 1
-),
-adc AS (
-    SELECT a.vec_id,
-           list_reduce(list_prepend(0.0::DOUBLE, list(l.dq ORDER BY a.sub)),
-                       (x, y) -> x + y) AS adc_dist
-    FROM a2 a JOIN lut l ON a.sub = l.sub AND a.cluster = l.cid
-    GROUP BY a.vec_id
-),
+{_pq_adc_ctes()},
 adctop AS (
     SELECT vec_id FROM adc ORDER BY adc_dist, vec_id LIMIT 10
 ),
@@ -2625,8 +2539,6 @@ def s_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side term filter; cosine broadcast-query map pass), and the
     fusion join touches ≤100 rows regardless of corpus size.
     """
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     # Each leg takes its top-50 via orderBy().limit() FIRST — Spark
@@ -2643,20 +2555,7 @@ def s_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("r_lex"),
     )
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_emb")
-    )
-    sem = (
-        spread(emb.filter(F.col("vec_id") != 0))
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            S.cosine(F.col("embedding"), F.col("q_emb")).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), "vec_id")
-        .limit(50)
-    )
-    sem = sem.select(
+    sem = S.brute_force_topk(emb, 0, 50).select(
         F.col("vec_id").alias("doc_id"),
         F.row_number()
         .over(Window.orderBy(F.col("cos_sim").desc(), "vec_id"))
@@ -3094,8 +2993,6 @@ def d_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     — pair-bounded, a vanishing fraction of the corpus. The rn = 1
     cut compiles to WindowGroupLimit.
     """
-    from pyspark.sql.window import Window
-
     sigs = _doc_signatures(spark, sf_dir)
     comp = D.connected_components(
         D.minhash_lsh_pairs(sigs, threshold=0.8)

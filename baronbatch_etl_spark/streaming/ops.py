@@ -610,26 +610,22 @@ def ivf_search(
     query's cell id is computed driver-side against the same
     centroids, and the scan's partition filter prunes every other
     cell directory before any file is opened."""
-    from baronbatch_etl_spark.operators.similarity import cosine
+    from baronbatch_etl_spark.operators.similarity import (
+        _sqdist_fold,
+        _topk,
+        cosine,
+    )
 
-    # mirror _nearest_centroid exactly — (x−y)·(x−y) terms folded
-    # left-to-right from 0.0, ties to the lowest cid — so a near-tie
-    # between centroids sends the search to the SAME cell the
+    # mirror _nearest_centroid exactly (ties to the lowest cid), so a
+    # near-tie between centroids sends the search to the SAME cell the
     # matching vectors were ingested into (bit-identical assignment)
-    def _sqdist(c: list[float]) -> float:
-        acc = 0.0
-        for x, y in zip(query_vec, c):
-            d = float(x) - float(y)
-            acc = acc + d * d
-        return acc
-
-    best_cell = min((_sqdist(c), cid) for cid, c in cents)[1]
+    best_cell = min((_sqdist_fold(query_vec, c), cid) for cid, c in cents)[1]
     idx = spark.read.parquet(index_path).filter(F.col("cell") == best_cell)
     q = F.array(*[F.lit(float(v)) for v in query_vec])
     scored = idx.select(
         "vec_id", "cell", cosine(F.col("embedding"), q).alias("cos_sim")
     )
-    return scored.orderBy(F.col("cos_sim").desc(), "vec_id").limit(k)
+    return _topk(scored, "cos_sim", k)
 
 
 #: volume_monitor_ingest's epoch store.

@@ -76,11 +76,21 @@ def test_anti_join_broadcasts(spark, registry, sf_dir):
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" not in plan
 
 
-def test_cosine_topk_plan(spark, registry, sf_dir):
-    # broadcast 1-row query vector + TakeOrderedAndProject top-k
-    plan = _plan(spark, registry, "s_cosine_topk", sf_dir)
+@pytest.mark.parametrize(
+    "name", ["s_cosine_topk", "s_ivf_topk", "s_srp_topk", "s_mips_topk"]
+)
+def test_single_query_topk_is_broadcast_take_ordered(
+    spark, registry, sf_dir, name
+):
+    # every one-query search must stay map-only: one broadcast of the
+    # single query row, TakeOrderedAndProject top-k, no corpus shuffle
+    plan = _plan(spark, registry, name, sf_dir)
     assert "TakeOrderedAndProject" in plan
+    assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
+    # only the broadcast of the query row and spread()'s round-robin
+    # input rebalance — never a key-hash shuffle of the corpus
+    assert "Exchange hashpartitioning" not in plan
 
 
 def test_contamination_probe_is_broadcast(spark, registry, sf_dir):
@@ -139,11 +149,14 @@ def test_chunk_dedup_two_phase_distinct(spark, registry, sf_dir):
     assert "Join" not in plan
 
 
-def test_ivf_recall_no_corpus_shuffle(spark, registry, sf_dir):
-    # both rankings reduce map-side (broadcast queries, window over
-    # per-query survivors); corpus rows must never hit a sort-merge
-    # join or an exchange keyed by anything but q_id
-    plan = _plan(spark, registry, "s_ivf_recall", sf_dir)
+@pytest.mark.parametrize(
+    "name", ["s_ivf_recall", "s_batch_topk", "s_hard_negatives"]
+)
+def test_query_set_no_corpus_shuffle(spark, registry, sf_dir, name):
+    # query-set rankings reduce map-side (broadcast queries, window
+    # over per-query survivors); corpus rows must never hit a
+    # sort-merge join or an exchange keyed by anything but q_id
+    plan = _plan(spark, registry, name, sf_dir)
     assert "SortMergeJoin" not in plan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
@@ -414,18 +427,6 @@ def test_domain_quota_partial_window_limit(spark, registry, sf_dir):
     assert "WindowGroupLimit" in final
     pre = final.split("Exchange")[-1]  # deepest = before the shuffle
     assert "WindowGroupLimit" in pre
-
-
-def test_mips_topk_is_broadcast_take_ordered(spark, registry, sf_dir):
-    # the exact-MIPS baseline must stay map-only: one broadcast of the
-    # single query row, TakeOrderedAndProject top-k, no corpus shuffle
-    plan = _plan(spark, registry, "s_mips_topk", sf_dir)
-    assert "TakeOrderedAndProject" in plan
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    # only the broadcast of the query row and spread()'s round-robin
-    # input rebalance — never a key-hash shuffle of the corpus
-    assert "Exchange hashpartitioning" not in plan
 
 
 def test_source_entropy_no_token_join_back(spark, registry, sf_dir):

@@ -133,6 +133,86 @@ def test_neardup_hot_cell_paths_agree(spark):
     assert split == baseline  # exact float equality — same fold order
 
 
+def test_zero_norm_vectors_match_duckdb_cosine(spark):
+    """An all-zero embedding has no cosine: DuckDB's sql_cosine gives
+    NULL (0/0) and sorts it last under DESC. Every expression-path
+    operator must do the same instead of raising DIVIDE_BY_ZERO under
+    ANSI division, with the zero vector in the corpus (query 1) and as
+    the query (query 0); both near-dup paths pair it with nothing."""
+    import duckdb
+
+    pad = [0.0] * 62  # srp_topk's SRP UDF codes 64-dim vectors
+    rows = [
+        (0, [0.0, 0.0] + pad, 0),
+        (1, [1.0, 0.0] + pad, 0),
+        (2, [0.6, 0.8] + pad, 0),
+        (3, [0.0, 1.0] + pad, 1),
+        (4, [0.0, 0.0] + pad, 1),
+        (5, [1.0, 1.0] + pad, 1),
+        (6, [0.9, 0.1] + pad, 1),
+    ]
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label int"
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE embeddings "
+        "(vec_id BIGINT, embedding DOUBLE[], label INTEGER)"
+    )
+    con.executemany("INSERT INTO embeddings VALUES (?, ?, ?)", rows)
+    scored = f"""
+        SELECT q.vec_id AS q_id, q.label AS q_label, e.vec_id, e.label,
+               {S.sql_cosine("e.embedding", "q.embedding")} AS cos_sim
+        FROM embeddings q, embeddings e WHERE e.vec_id <> q.vec_id"""
+
+    def oracle(where, k):
+        return con.execute(
+            f"""SELECT q_id, vec_id, cos_sim FROM (
+                SELECT *, row_number() OVER (
+                    PARTITION BY q_id ORDER BY cos_sim DESC, vec_id) AS r
+                FROM ({scored}) WHERE {where}
+            ) WHERE r <= {k} ORDER BY q_id, r"""
+        ).fetchall()
+
+    def one(op, **kw):
+        return [
+            (q, r.vec_id, r.cos_sim)
+            for q in (0, 1)
+            for r in op(emb, q, 3, **kw).collect()
+        ]
+
+    def per_query(df):
+        return [
+            (r.q_id, r.vec_id, r.cos_sim)
+            for r in sorted(df.collect(), key=lambda r: (r.q_id, r["rank"]))
+        ]
+
+    brute = oracle("q_id IN (0, 1)", 3)
+    assert any(c is None for _, _, c in brute)  # the zero rows rank last
+    assert one(S.brute_force_topk) == brute
+    # a 6-bit code is always within hamming 6: every vector is a candidate
+    assert one(S.srp_topk, planes=6, radius=6) == brute
+    assert one(S.ivf_topk) == oracle("q_id IN (0, 1) AND label = q_label", 3)
+    assert per_query(S.batch_topk(emb, [0, 1], 3)) == brute
+    assert per_query(S.hard_negatives(emb, [0, 1], 2)) == oracle(
+        "q_id IN (0, 1) AND label <> q_label", 2
+    )
+
+    pairs = sorted(
+        con.execute(
+            f"""SELECT a.vec_id, b.vec_id,
+                       {S.sql_cosine("a.embedding", "b.embedding")} AS c
+                FROM embeddings a JOIN embeddings b
+                  ON a.label = b.label AND a.vec_id < b.vec_id
+                WHERE c >= 0.5"""
+        ).fetchall()
+    )
+    assert pairs
+    for cell_cap in (2048, 1):  # Arrow all-pairs, then the salted join
+        got = S.embedding_near_dup_pairs(emb, 0.5, cell_cap=cell_cap)
+        assert sorted(map(tuple, got.collect())) == pairs
+
+
 def test_multimodal_features_deterministic(spark):
     docs = _docs(spark, ["abcd", "xy"])
     out = {r.media_id: r for r in
@@ -321,6 +401,19 @@ def test_kmeans_tie_breaks_low_cid(spark):
         for r in S.kmeans_assign(emb, k=2, iters=1).collect()
     }
     assert out[2] == 0
+
+
+def test_kmeans_rejects_zero_iters(spark):
+    # validated before any Spark job runs, as pagerank does — no seed
+    # collect first
+    emb = _vecs(spark, [[0.0, 0.0], [1.0, 1.0]])
+    tracker = spark.sparkContext.statusTracker()
+    last_job = max(tracker.getJobIdsForGroup(), default=-1)
+    with pytest.raises(ValueError):
+        S.kmeans_assign(emb, k=2, iters=0)
+    assert max(tracker.getJobIdsForGroup(), default=-1) == last_job
+    with pytest.raises(ValueError, match="no vectors"):
+        S.kmeans_assign(emb.limit(0), k=2)  # nothing to seed from
 
 
 def test_kmeans_k_larger_than_corpus(spark):
