@@ -154,13 +154,36 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(width)
 
 
+def hash_spread(df: DataFrame, *cols: str) -> DataFrame:
+    """Hash-repartition ``df`` on ``cols`` at an explicit width that AQE
+    keeps — the probe side of a pair join, whose heavy join and verify
+    work should run on every core even when the input is one small file
+    (one file → one task).
+
+    The count is explicit on purpose: a column-only ``repartition(col)``
+    is ``REPARTITION_BY_COL``, which AQE coalesces, and any shuffle below
+    its 1 MiB ``minPartitionSize`` collapses back to one task.
+    ``REPARTITION_BY_NUM`` is never coalesced, so the width must be sized
+    here instead of by AQE: :func:`spread_width` at
+    ``SPREAD_BYTES_PER_TASK``, clamped to [min(core count, shuffle
+    partitions), shuffle partitions]. A small input gets the core count
+    (not the thousands of shuffle partitions a cluster is configured
+    with), a 100 TB input the full shuffle width. Driver-side planning
+    only, no job."""
+    spark = df.sparkSession
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    lo = min(spark.sparkContext.defaultParallelism, shuffle)
+    return df.repartition(spread_width(plan_bytes(df), lo, shuffle), *cols)
+
+
 def plan_bytes(df: DataFrame) -> int:
     """Catalyst's plan-time size estimate of ``df`` in bytes — real
     footer sizes for a parquet scan, the optimizer's propagated
     estimate above it (driver-side planning, no job). The one probe
     behind every size-aware decision in the engine: :func:`spread`,
-    :func:`session_fixture`'s file count, the rank range partitions,
-    small-file compaction and the d_source_overlap shape gate."""
+    :func:`hash_spread`, :func:`session_fixture`'s file count, the rank
+    range partitions, small-file compaction and the d_source_overlap
+    shape gate."""
     stats = df._jdf.queryExecution().optimizedPlan().stats()
     return int(str(stats.sizeInBytes()))
 

@@ -27,9 +27,8 @@ import functools
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from baronbatch_etl_spark.io import spread
+from baronbatch_etl_spark.io import hash_spread, spread
 from baronbatch_etl_spark.operators.fast_text import (
-    jaccard_fast,
     make_shingle_hashes_udf,
     make_sig_and_shingles_udf,
     make_simhash_udf,
@@ -195,6 +194,23 @@ LSH_BAND_KEYS_SQL = "array({})".format(
 #: ``(band, key)`` rows of the band keys, for ``selectExpr``.
 LSH_BANDS_EXPLODE_SQL = f"posexplode({LSH_BAND_KEYS_SQL}) AS (band, key)"
 
+#: Exact Jaccard ``i / (|A| + |B| − i)``, ``i = |A ∩ B|``, of the
+#: shingle-hash arrays ``sh_a`` and ``sh_b`` as ONE SQL expression, so
+#: pair verification stays in the JVM instead of shipping both arrays
+#: to a Python worker. ``sh`` is sorted and deduped by the signature
+#: contract, so ``size(array_intersect)`` is ``|A ∩ B|`` and the integer
+#: counts give the IEEE double the DuckDB oracle computes. The
+#: one-element ``transform`` binds ``i`` once: the verify filter is
+#: pushed into the join condition, and a second ``array_intersect``
+#: there would double the per-candidate cost. Two empty sets score 0.0
+#: (the guard keeps ANSI's DIVIDE_BY_ZERO out); otherwise the
+#: denominator is at least ``max(|A|, |B|) > 0``.
+JACCARD_SQL = (
+    "element_at(transform(array(size(array_intersect(sh_a, sh_b))), "
+    "i -> CASE WHEN size(sh_a) + size(sh_b) = 0 THEN 0.0D "
+    "ELSE CAST(i AS DOUBLE) / (size(sh_a) + size(sh_b) - i) END), 1)"
+)
+
 
 def lsh_candidate_pairs(base: DataFrame) -> DataFrame:
     """Distinct (doc_a, doc_b) LSH band-collision candidates from a
@@ -209,9 +225,9 @@ def lsh_candidate_pairs(base: DataFrame) -> DataFrame:
     banded = base.where("size(sh) > 0").selectExpr(
         "doc_id", LSH_BANDS_EXPLODE_SQL
     )
-    # probe side repartitioned: single-file inputs otherwise run the
-    # whole band join in one task (see simhash_near_pairs)
-    left = banded.repartition("doc_id").alias("l")
+    # the doc_id hash also clusters the candidate distinct below, so
+    # it needs no second exchange
+    left = hash_spread(banded, "doc_id").alias("l")
     right = banded.alias("r")
     return (
         left.join(
@@ -242,7 +258,8 @@ def minhash_lsh_pairs(sigs: DataFrame, threshold: float = 0.8) -> DataFrame:
     ``doc_id``, ``sig``, ``sh``).
 
     Plan: explode bands (×4 rows) → self-join on (band, key) for
-    candidates → join shingle sets back → exact-verify. Shuffle only on
+    candidates → join shingle sets back → exact-verify with
+    :data:`JACCARD_SQL` in the JVM (no Python worker). Shuffle only on
     band keys and candidate doc ids. Column pruning gives the banding
     branch (doc_id, sig) and the verify branches (doc_id, sh), so a
     staged frame is never read wider than a branch needs."""
@@ -254,7 +271,7 @@ def minhash_lsh_pairs(sigs: DataFrame, threshold: float = 0.8) -> DataFrame:
     return (
         cand.join(a, "doc_a")
         .join(b, "doc_b")
-        .select("doc_a", "doc_b", jaccard_fast("sh_a", "sh_b").alias("jaccard"))
+        .selectExpr("doc_a", "doc_b", f"{JACCARD_SQL} AS jaccard")
         # a DOUBLE literal: a bare 0.8 parses as a DECIMAL in SQL,
         # which would put a cast on the compared column
         .where(f"jaccard >= {float(threshold)!r}D")
@@ -564,13 +581,10 @@ def simhash_near_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
     # hits an exchange or a distinct: the whole operator is one
     # broadcast/hash join probe in codegen.
     blocks = base.selectExpr("doc_id", "sh", _SIMHASH_BLOCKS_EXPLODE_SQL)
-    # The probe side repartitions by doc_id so the heavy probe work
-    # spreads across every core even when the input arrives as one
-    # small file (one file → one task, all other cores idle). The
-    # build side stays unhinted: under the broadcast threshold Spark
-    # broadcasts it; beyond, AQE falls back to a shuffle join with
-    # skew splitting — both correct at their scale.
-    l = blocks.repartition("doc_id").alias("l")
+    # The build side stays unhinted: under the broadcast threshold
+    # Spark broadcasts it; beyond, AQE falls back to a shuffle join
+    # with skew splitting — both correct at their scale.
+    l = hash_spread(blocks, "doc_id").alias("l")
     r = blocks.alias("r")
     verify = _fold_sql(
         "AND",
@@ -645,6 +659,9 @@ def ngram_jaccard_pairs(
     is the difference between O(pairs-in-stratum) and
     O(pairs-sharing-a-rare-prefix-token).
 
+    The surviving candidates are verified by :data:`JACCARD_SQL` in
+    the JVM (no Python worker).
+
     Reads ``doc_id``, ``lang``, ``n_chars`` and the sorted, deduped
     word-3-gram hashes ``sh`` of a :func:`signatures` frame.
     """
@@ -683,11 +700,7 @@ def ngram_jaccard_pairs(
                                 F.col("sh").alias("sh_a")), "doc_a")
         .join(hashed.select(F.col("doc_id").alias("doc_b"),
                             F.col("sh").alias("sh_b")), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            jaccard_fast(F.col("sh_a"), F.col("sh_b")).alias("jaccard"),
-        )
+        .selectExpr("doc_a", "doc_b", f"{JACCARD_SQL} AS jaccard")
         .filter(F.col("jaccard") >= threshold)
     )
 

@@ -10,6 +10,11 @@ parity — but batched across rows — speed (~10× on the dedup bench).
 
 Numerics: every intermediate stays < 2^35 (P ≈ 2^30, ×31, +code
 point), so int64 never overflows and Python/numpy/JVM agree exactly.
+
+Python runs only at signature time: text becomes hashes here, once per
+document. Pair verification (Jaccard, containment, Hamming, edit
+distance) is JVM-native SQL in ``operators.dedup``, so no candidate
+pair crosses the Python boundary.
 """
 
 from __future__ import annotations
@@ -247,22 +252,6 @@ def make_sig_and_shingles_udf(a: tuple, b: tuple, p: int = POLY_P):
         return pd.DataFrame({"sig": sigs, "sh": shs})
 
     return sig_and_shingles
-
-
-@F.pandas_udf(T.DoubleType())
-def jaccard_fast(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Jaccard of two pre-distinct hash arrays: |∩| / (|A|+|B|−|∩|) —
-    integer counts, so the double ratio is bit-identical to
-    size(array_intersect)/size(array_distinct(concat))."""
-    out = np.empty(len(a), dtype=np.float64)
-    for i, (xs, ys) in enumerate(zip(a, b)):
-        # inputs come from sig_and_shingles' ``sh``, which dedupes
-        # hash values per doc (collision-safe) — uniqueness holds
-        xa = np.asarray(xs, dtype=np.int64)
-        ya = np.asarray(ys, dtype=np.int64)
-        ni = np.intersect1d(xa, ya, assume_unique=True).size
-        out[i] = ni * 1.0 / (xa.size + ya.size - ni) if (xa.size + ya.size) else 0.0
-    return pd.Series(out)
 
 
 def make_srp_udf(planes: int = 16, dims: int = 64):

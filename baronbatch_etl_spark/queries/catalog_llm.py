@@ -1301,14 +1301,22 @@ FROM documents
 def t_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Subword-style token counts via a BPE-ish regex (letter runs /
     digit runs / single punctuation) next to whitespace counts."""
-    sub = f"regexp_extract_all(text, '{_BPE_RE}', 0)"
-    return load_table(spark, sf_dir, "documents").selectExpr(
-        "doc_id",
-        f"size({sub}) AS n_subwords",
-        # X.token_count, spelled in SQL
-        "CASE WHEN length(text) = 0 THEN 0 ELSE size(split(text, ' ')) END"
-        " AS n_whitespace",
-        f"size(filter({sub}, x -> length(x) >= 4)) AS n_long",
+    # the regexp runs once per doc: ``sub`` is projected first, and
+    # CollapseProject keeps a non-cheap expression that is read twice
+    # in its own projection instead of inlining it into both counts
+    return (
+        load_table(spark, sf_dir, "documents")
+        .selectExpr(
+            "doc_id", "text", f"regexp_extract_all(text, '{_BPE_RE}', 0) AS sub"
+        )
+        .selectExpr(
+            "doc_id",
+            "size(sub) AS n_subwords",
+            # X.token_count, spelled in SQL
+            "CASE WHEN length(text) = 0 THEN 0 ELSE size(split(text, ' ')) END"
+            " AS n_whitespace",
+            "size(filter(sub, x -> length(x) >= 4)) AS n_long",
+        )
     )
 
 
@@ -2868,11 +2876,13 @@ def t_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket / t_bigram_lm_ppl) this complements. The oracle spells the
     identical arithmetic relationally (per-char unnest + two aggs).
     """
-    docs = load_table(spark, sf_dir, "documents")
+    # empty (and NULL) docs drop on the scan: Spark's length and the
+    # UDF's len both count codepoints. A filter on the UDF's n_chars
+    # would be pushed below spread's exchange as a second Arrow pass.
+    docs = load_table(spark, sf_dir, "documents").where("length(text) > 0")
     return (
         spread(docs)
         .select("doc_id", char_entropy_fast(F.col("text")).alias("e"))
-        .filter(F.col("e.n_chars") > 0)
         .select(
             "doc_id",
             F.col("e.n_chars").alias("n_chars"),

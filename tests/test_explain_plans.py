@@ -324,7 +324,8 @@ def test_edit_distance_is_candidate_bounded(spark, registry, sf_dir):
     plan = _plan(spark, registry, "d_edit_distance", sf_dir)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert "levenshtein" in plan and ", 8)" in plan  # threshold reached the DP
+    # threshold reached the DP (the plan renders it as Some(8))
+    assert re.search(r"levenshtein\([^()]*, Some\(8\)\)", plan), plan
 
 
 def test_paged_api_scan_partitions_are_pages(spark, registry, sf_dir):
@@ -633,7 +634,7 @@ def test_minhash_lsh_band_join_shape(spark, registry, sf_dir):
     shuffles = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", final)
     assert len(shuffles) == 1, shuffles
     assert re.fullmatch(r"doc_id#\d+L?, \d+", shuffles[0])
-    assert "REPARTITION_BY_COL" in final
+    assert "REPARTITION_BY_NUM" in final
 
 
 def test_simhash_pairs_verify_runs_in_join_condition(spark, registry, sf_dir):
@@ -657,6 +658,58 @@ def test_simhash_pairs_verify_runs_in_join_condition(spark, registry, sf_dir):
     assert "Aggregate" not in final
     shuffles = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", final)
     assert len(shuffles) == 1 and re.fullmatch(r"doc_id#\d+L?, \d+", shuffles[0])
+
+
+def _python_udf_calls(final: str) -> list[list[str]]:
+    """The Python UDF names each EvalPython node of a plan evaluates,
+    one list per node."""
+    nodes = re.findall(r"(?:Arrow|Batch)EvalPython \[([^\]]*)\]", final)
+    return [re.findall(r"(\w+)\(", node) for node in nodes]
+
+
+@pytest.mark.parametrize(
+    "name", ["d_minhash_lsh", "d_ngram_jaccard", "t_char_entropy"]
+)
+def test_python_udfs_run_once_per_row(spark, registry, sf_dir, name):
+    # a filter on a UDF result is pushed below its projection, and
+    # Catalyst then evaluates the UDF in a second EvalPython node; the
+    # pair operators verify in the JVM and run no Python at all
+    final = _plan(spark, registry, name, sf_dir).split("== Initial Plan ==")[0]
+    calls = _python_udf_calls(final)
+    flat = [c for node in calls for c in node]
+    assert len(flat) == len(set(flat)), f"{name}: {calls}"
+    if name.startswith("d_"):
+        assert calls == [], f"{name}: {calls}"
+
+
+def test_bpe_tokens_runs_its_regexp_once(spark, registry, sf_dir):
+    # n_subwords and n_long both read the extracted subwords; CollapseProject
+    # must not inline the regexp into each of them
+    final = _plan(spark, registry, "t_bpe_tokens", sf_dir).split(
+        "== Initial Plan =="
+    )[0]
+    assert final.count("regexp_extract_all(") == 1, final
+
+
+@pytest.mark.parametrize("name", ["d_minhash_lsh", "d_simhash_pairs"])
+def test_pair_probe_repartition_is_not_coalesced(spark, registry, sf_dir, name):
+    # the doc_id probe repartition keeps its full width after AQE: a
+    # column-only repartition of a sub-MiB frame is coalesced back to
+    # one partition, which runs the whole join and verify on one core
+    lines = _plan(spark, registry, name, sf_dir).split(
+        "== Initial Plan =="
+    )[0].splitlines()
+    (at,) = [
+        i for i, ln in enumerate(lines)
+        if re.search(r"Exchange hashpartitioning\(doc_id#\d+L?, \d+\)", ln)
+    ]
+    readers = []
+    for ln in reversed(lines[:at]):
+        if "ShuffleQueryStage" not in ln and "AQEShuffleRead" not in ln:
+            break
+        readers.append(ln.strip())
+    assert readers, lines[at]
+    assert not any("coalesced" in r for r in readers), readers
 
 
 def _arrow_evals(df) -> list[str]:

@@ -4,6 +4,8 @@ stay inside the error envelope."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from baronbatch_etl_spark.queries import load_all
@@ -142,6 +144,42 @@ def test_spread_width_is_bytes_aware(spark, sf_dir):
     # its partitioning
     wide = docs.repartition(target)
     assert IO.spread(wide).rdd.getNumPartitions() == target
+
+
+def test_hash_spread_width_is_bounded_by_size_and_shuffle_partitions(
+    spark, sf_dir
+):
+    """hash_spread()'s explicit count (which AQE never coalesces) is
+    sized by the input, not by the session's shuffle width: a tiny
+    frame gets the core count even when shuffle partitions are set
+    cluster-high, a frame the optimizer thinks is big gets the full
+    shuffle width, and a shuffle width below the core count caps both.
+    """
+    from baronbatch_etl_spark import io as IO
+
+    cores = spark.sparkContext.defaultParallelism
+    docs = IO.load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    big = docs.alias("a").join(
+        IO.load_table(spark, sf_dir, "documents")
+        .select(F.col("doc_id").alias("b_id")),
+        F.col("a.doc_id") == F.col("b_id"),
+    )
+    assert -(-IO.plan_bytes(docs) // IO.SPREAD_BYTES_PER_TASK) <= cores
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        for shuffle in (8 * cores, max(1, cores // 2)):
+            spark.conf.set(key, str(shuffle))
+            small = IO.hash_spread(docs, "doc_id")
+            assert small.rdd.getNumPartitions() == min(cores, shuffle)
+            assert IO.hash_spread(big, "doc_id").rdd.getNumPartitions() == (
+                shuffle
+            )
+            plan = small._jdf.queryExecution().executedPlan().toString()
+            assert re.search(r"hashpartitioning\(doc_id#\d+L?, ", plan), plan
+            assert "REPARTITION_BY_NUM" in plan, plan
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_spread_width_properties():

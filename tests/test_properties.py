@@ -987,3 +987,45 @@ def test_global_rank_matches_window_battery(spark, vals, k, parts):
     spark.catalog.clearCache()
     assert got == {i: (t[0], t[2], t[3]) for i, t in ref.items()}
     assert buckets == {i: t[1] for i, t in ref.items()}
+
+
+#: Sorted, deduped hash sets — the signature frame's ``sh`` contract.
+_HASH_SETS = st.lists(
+    st.integers(min_value=0, max_value=40), max_size=12, unique=True
+).map(sorted)
+
+
+@settings(max_examples=10, deadline=None)
+@given(st.lists(st.tuples(_HASH_SETS, _HASH_SETS), max_size=20))
+def test_jaccard_sql_matches_python_sets(spark, pairs):
+    """JACCARD_SQL is the exact IEEE double |A∩B| / |A∪B| of Python
+    set arithmetic, and 0.0 (not DIVIDE_BY_ZERO) for two empty sets
+    under ANSI. Every example also carries the edge cases: both empty,
+    one empty, disjoint, identical and subset."""
+    from baronbatch_etl_spark.operators.dedup import JACCARD_SQL
+
+    edges = [
+        ([], []),
+        ([3, 7], []),
+        ([], [5]),
+        ([1, 2], [3, 4]),
+        ([1, 4, 9], [1, 4, 9]),
+        ([2, 5], [1, 2, 5, 9]),
+    ]
+    rows = [(i, a, b) for i, (a, b) in enumerate(edges + pairs)]
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        got = dict(
+            spark.createDataFrame(
+                rows, "i int, sh_a array<bigint>, sh_b array<bigint>"
+            )
+            .selectExpr("i", f"{JACCARD_SQL} AS j")
+            .collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    for i, a, b in rows:
+        union = set(a) | set(b)
+        want = len(set(a) & set(b)) / len(union) if union else 0.0
+        assert got[i] == want, (a, b)
