@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 import stat
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -271,13 +272,9 @@ def session_fixture(
     root = _session_scratch(spark)
     if root is None:
         # degraded mode (read-only tmp, or a non-local master with no
-        # configured staging root): a lazy localCheckpoint keeps the
-        # one-derivation-per-session semantics — the first action
-        # materializes the frame into block storage and every later
-        # consumer (including multi-branch plans like the degree
-        # distribution's union legs) reuses it instead of re-running
-        # the derivation.
-        df = df.localCheckpoint(eager=False)
+        # configured staging root): every later consumer reuses the
+        # one derivation instead of re-running it
+        df = materialize(df)
     else:
         import hashlib
 
@@ -329,7 +326,7 @@ def select_scratch_mode(
     SPARK_GRAFT knobs), ``("mkdtemp", None)`` on a local master with
     no override, and ``("degraded", None)`` on a non-local master
     with no override — the caller must then fall back to
-    ``localCheckpoint`` (cluster-correct: blocks live on executors),
+    :func:`materialize` (cluster-correct: blocks live on executors),
     never to a driver-local path.
     """
     root = env_root or conf_root
@@ -386,6 +383,46 @@ def _session_scratch(spark: SparkSession) -> str | None:
         base = None
     _SCRATCH[app_id] = base
     return base
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """``df`` cut from its lineage by a lazy local checkpoint: the first
+    action that reads it computes it once into block storage, and later
+    reads (several consumers, or the next round of an iteration) take
+    the stored blocks. The engine's one checkpoint call.
+
+    The blocks free with the frame (at GC; ``unpersist()`` does not
+    release them) and are unreplicated, so losing an executor that
+    holds one fails the job instead of recomputing it. A durable
+    ``checkpoint`` would survive that, at the price of a write and a
+    second computation of the frame; no workload measures that side.
+
+    Frames scoped to one block (a streaming gate) use ``cache()`` +
+    ``unpersist()`` at its end instead; returned lazy frames use this.
+    """
+    return df.localCheckpoint(eager=False)
+
+
+def fixed_point(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    measure: Callable[[DataFrame], object],
+    max_rounds: int,
+) -> tuple[DataFrame, bool]:
+    """``state = materialize(step(state))`` until two rounds in a row
+    have an equal ``measure`` (a driver-side action, which is also the
+    job that computes the round), or for ``max_rounds`` rounds.
+    Returns ``(state, converged)``; the caller decides what the cap
+    means. ``measure`` must stop changing exactly when the state does
+    (a count of a shrinking set, a sum of falling labels)."""
+    prev = object()  # ≠ any measure, None included
+    for _ in range(max_rounds):
+        state = materialize(step(state))
+        cur = measure(state)
+        if cur == prev:
+            return state, True
+        prev = cur
+    return state, False
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

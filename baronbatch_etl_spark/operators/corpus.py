@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from baronbatch_etl_spark.functions.scalars import round_half_up
+from baronbatch_etl_spark.io import materialize
 from baronbatch_etl_spark.operators.text import POLY_P
 
 
@@ -39,11 +40,10 @@ def tv_drift_from_counts(st: DataFrame) -> DataFrame:
     C is a broadcast 1-row scalar; the token-keyed join is
     vocabulary-sized (AQE-broadcast while it fits); per-source totals
     join source-keyed (tiny). The input counts frame has four
-    consumers (t, cs, n via t, terms) — materialize it once (lazy
-    localCheckpoint, the d_source_overlap pattern) instead of
-    replaying the upstream explode+agg per consumer.
+    consumers (t, cs, n via t, terms) — materialize it once instead
+    of replaying the upstream explode+agg per consumer.
     """
-    st = st.localCheckpoint(eager=False)
+    st = materialize(st)
     t = st.groupBy("tok").agg(F.sum("c_st").alias("c_t"))
     cs = st.groupBy("source").agg(
         F.sum("c_st").alias("c_s"), F.count("*").alias("vocab")
@@ -258,14 +258,13 @@ def kmv_source_overlap(
             .distinct()
         )
     w_src = Window.partitionBy("source").orderBy("hv")
-    sk = (
+    # the sketch feeds the pair grid twice and the source list once
+    # — |sources|·k rows, materialize instead of replaying the
+    # corpus-sized distinct per consumer
+    sk = materialize(
         tokset.withColumn("rn", F.row_number().over(w_src))
         .filter(F.col("rn") <= k)
         .select("source", "hv")
-        # the sketch feeds the pair grid twice and the source list
-        # once — |sources|·k rows, materialize instead of replaying
-        # the corpus-sized distinct per consumer
-        .localCheckpoint(eager=False)
     )
     srcs = sk.select("source").distinct()
     pairs = (

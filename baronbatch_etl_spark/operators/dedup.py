@@ -27,7 +27,12 @@ import functools
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from baronbatch_etl_spark.io import hash_spread, spread
+from baronbatch_etl_spark.io import (
+    fixed_point,
+    hash_spread,
+    materialize,
+    spread,
+)
 from baronbatch_etl_spark.operators.fast_text import (
     make_shingle_hashes_udf,
     make_sig_and_shingles_udf,
@@ -105,13 +110,10 @@ def signatures(docs: DataFrame) -> DataFrame:
     materialize their input. Each of them reads it from several plan
     branches (blocking plus both verification sides), so a caller that
     builds the frame lazily and reuses it materializes it — the
-    session-staged parquet fixture (catalog_llm._doc_signatures) or a
-    lazy ``localCheckpoint`` (streaming curate_ingest). A
-    ``localCheckpoint`` frees its blocks with the frame but is
-    unreplicated and truncates lineage: losing an executor fails the
-    job instead of recomputing. A run where executor loss is routine
-    would use ``cache()`` + ``unpersist()`` or a reliable
-    ``checkpoint()`` instead.
+    session-staged parquet fixture (catalog_llm._doc_signatures), or
+    ``cache()`` + ``unpersist()`` around a streaming gate
+    (curate_ingest). :func:`io.materialize` states the fault-tolerance
+    trade of each choice.
 
     The result is lazy: nothing here checkpoints or caches.
     """
@@ -442,12 +444,7 @@ def edit_distance_pairs(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 25,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     """Cluster near-dup pairs into components: (node, component) where
     component = min doc_id reachable through the pair graph — the
     standard keep-one-per-cluster dedup contract.
@@ -455,68 +452,51 @@ def connected_components(
     Min-label propagation: each round every node takes the minimum of
     its own label and its neighbors' labels; converges in O(graph
     diameter) rounds (dedup clusters are shallow — near-clique, tiny
-    diameter). The driver loop is the legitimate iterative-algorithm
-    exception to "no driver-side loops": each iteration is a fully
-    distributed join+agg, `localCheckpoint` truncates the growing
-    lineage, and the loop exits on a converged (zero-change) round.
-    At 100 TB the same loop holds — GraphFrames/GraphX use exactly
-    this alternating-join shape.
+    diameter). The rounds run on :func:`io.fixed_point`, the
+    legitimate iterative-algorithm exception to "no driver-side
+    loops": each is one fully distributed join+agg, and a graph still
+    changing after ``max_iter`` rounds raises. At 100 TB the same loop
+    holds — GraphFrames/GraphX use exactly this alternating-join shape.
     """
     # symmetrize with one explode, not a 2-branch union — the union
-    # form scans (and for LSH input, recomputes) the pair plan twice
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src).alias("s"), F.col(dst).alias("d")),
-                    F.struct(F.col(dst).alias("s"), F.col(src).alias("d")),
-                )
-            ).alias("e")
+    # form scans (and for LSH input, recomputes) the pair plan twice;
+    # materialized, since every round joins the edge list
+    edges = materialize(
+        pairs.selectExpr(
+            "explode(array(struct(doc_a AS s, doc_b AS d),"
+            " struct(doc_b AS s, doc_a AS d))) AS e"
         )
         .select("e.s", "e.d")
         .distinct()
     )
-    # checkpoint blocks free with the frame (no per-query storage
-    # pinning). Unreplicated + lineage-truncating: executor loss
-    # mid-run fails the job (fault-tolerance trade documented on
-    # signatures)
-    edges = edges.localCheckpoint(eager=False)
     # seed with round 1 directly: label(node) = min(node, neighbors)
     # — one distributed agg instead of a full join round
     labels = edges.groupBy(F.col("s").alias("node")).agg(
         F.least(F.min("s"), F.min("d")).alias("comp")
     )
-    # Convergence via the label-sum invariant: labels only ever
-    # DECREASE (min of a growing neighbor set) over a fixed node set,
-    # so Σcomp is strictly monotone — equal consecutive sums ⟺ a
-    # zero-change round. That folds propagate + update + convergence
-    # test into ONE job per round (the old shape paid an eager
-    # checkpoint job plus a changed-row count job and a second join).
-    prev_sum = object()  # sentinel ≠ any sum (incl. None for empty)
-    for _ in range(max_iter):
+
+    def step(labels: DataFrame) -> DataFrame:
         prop = edges.join(labels, edges.d == labels.node).select(
             F.col("s").alias("node"), "comp"
         )
-        labels = (
+        return (
             labels.unionByName(prop)
             .groupBy("node")
             .agg(F.min("comp").alias("comp"))
-            # lazy local checkpoint: truncates lineage each round but
-            # materializes inside the stats job below, not as its own
-            .localCheckpoint(eager=False)
         )
-        cur_sum = labels.agg(
-            F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
-        ).first()["s"]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
+
+    def label_sum(labels: DataFrame):
+        # labels only ever DECREASE (min of a growing neighbor set)
+        # over a fixed node set: equal sums in a row ⟺ no change
+        comp = F.col("comp").cast("decimal(38,0)")
+        return labels.agg(F.sum(comp)).first()[0]
+
+    labels, converged = fixed_point(labels, step, label_sum, max_iter)
+    if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
             "— pathological chain-shaped dup graph; raise max_iter"
         )
-    edges.unpersist()
     return labels
 
 

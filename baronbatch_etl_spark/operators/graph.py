@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from baronbatch_etl_spark.io import materialize
+
 #: Fixed-point scale for order-independent double sums.
 _SCALE = 1.0e9
 
@@ -116,11 +118,10 @@ def pagerank(
     # Stage the degree-weighted edge list ONCE: a single src hash
     # partitioning, out-degree (or total out-weight) as a window
     # aggregate over the partition key (no join, no second shuffle),
-    # then a collectable localCheckpoint (the operators/dedup.py
-    # pattern — LogicalRDD keeps the partitioning). Every round then
-    # joins the small rank frame onto the stationary edge partitions
-    # — the 100 TB shape: one partitioned materialize, after which
-    # each iteration moves ranks (≈ node count) instead of edges.
+    # then materialized (the LogicalRDD keeps the partitioning). Every
+    # round joins the small rank frame onto the stationary edge
+    # partitions — the 100 TB shape: one partitioned materialize, after
+    # which each iteration moves ranks (≈ node count), not edges.
     w_src = Window.partitionBy("src")
     if weight_col is None:
         out_share = F.count("*").over(w_src)
@@ -129,10 +130,8 @@ def pagerank(
         # Σ_out w = 0 division for all-zero-weight nodes
         edges = edges.filter(F.col(weight_col) > 0)
         out_share = F.sum(weight_col).over(w_src)
-    weighted = (
-        edges.repartition("src")
-        .withColumn("deg", out_share)
-        .localCheckpoint()
+    weighted = materialize(
+        edges.repartition("src").withColumn("deg", out_share)
     )
 
     def contrib(rank_expr):
@@ -265,7 +264,8 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
         F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("ddst"),
-    ).localCheckpoint()
+    )
+    oriented = materialize(oriented)  # both wedge sides + closing probe
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     # Wedge (src → d1, src → d2) ordered by the SAME (deg, id) key the
     # orientation used, so the closing edge — if present — is oriented

@@ -58,28 +58,6 @@ _CNT = "_gr_cnt"
 _OFF = "_gr_off"
 _SEQ_MASK = (1 << 33) - 1
 
-#: Handles of every frame :func:`global_row_number` persisted and has
-#: not yet released. The function cannot unpersist them itself — it
-#: returns a LAZY DataFrame, and the caches must survive until the
-#: caller's consuming action — so a long-lived session composing many
-#: rank-based queries calls :func:`release_rank_caches` between
-#: actions (bench.py / tools/check_oracle.py use the blunter
-#: ``spark.catalog.clearCache()``, which also covers these).
-_PERSISTED: list[DataFrame] = []
-
-
-def release_rank_caches() -> None:
-    """Unpersist every frame cached by :func:`global_row_number`
-    since the last release. Safe to call at any time: unpersisting a
-    frame only drops its cached blocks — lineage recomputes if some
-    in-flight plan still references it."""
-    while _PERSISTED:
-        df = _PERSISTED.pop()
-        try:
-            df.unpersist()
-        except Exception:  # noqa: BLE001 — session already stopped
-            pass
-
 #: Auto-sizing target for the range exchange: one range partition per
 #: this many estimated input bytes. Rank inputs are aggregated grains
 #: (narrow numeric rows), so 4 MiB ≈ hundreds of thousands of rows
@@ -126,9 +104,9 @@ def global_row_number(
     already-aggregated grain orders of magnitude smaller than the
     fact/corpus tables — so MEMORY_AND_DISK across a cluster is
     cheap, lineage stays intact (executor loss = recompute, not job
-    failure), and upstream runs exactly once. Every handle persisted
-    here is tracked in :data:`_PERSISTED`; long-lived sessions
-    release them between actions via :func:`release_rank_caches`.
+    failure), and upstream runs exactly once. The caches must outlive
+    this LAZY frame's action, so a long-lived session drops them with
+    ``spark.catalog.clearCache()`` between actions.
     """
     spark = df.sparkSession
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
@@ -139,7 +117,6 @@ def global_row_number(
     )
     cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(df)
     ranged = df.repartitionByRange(parts, *cols).sortWithinPartitions(
         *cols
     )
@@ -156,7 +133,6 @@ def global_row_number(
     # also pins ONE pid/seq assignment by construction rather than
     # by recompute determinism
     tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(tagged)
     counts = tagged.groupBy(_PID).agg(F.count("*").alias(_CNT))
     # prefix-sum over ONE ROW PER RANGE PARTITION — bounded by the
     # cluster's partition count (P), not by the data

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from baronbatch_etl_spark.io import (
     load_table,
+    materialize,
     plan_bytes,
     session_fixture,
     spread,
@@ -239,16 +240,11 @@ def d_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from baronbatch_etl_spark.queries.catalog_llm import _doc_signatures
 
     sigs = _doc_signatures(spark, sf_dir)
-    sh = (
-        sigs.select("source", F.explode("sh").alias("h"))
-        .distinct()
-        # six consumers (sizes ×2 via the grid, signatures ×2, both
-        # self-join sides) would each replay the Arrow hash + explode
-        # + distinct shuffle — materialize the vocabulary-sized set
-        # once instead (same localCheckpoint pattern as
-        # d_dup_clusters; blocks are context-cleaned when the frame
-        # goes out of scope, unlike cache entries)
-        .localCheckpoint(eager=False)
+    # six consumers (sizes ×2 via the grid, signatures ×2, both
+    # self-join sides) would each replay the explode + distinct
+    # shuffle — materialize the vocabulary-sized set once instead
+    sh = materialize(
+        sigs.select("source", F.explode("sh").alias("h")).distinct()
     )
     # ONE aggregation carries sizes AND the 16 signature mins: the
     # branches below project what they need, so their identical

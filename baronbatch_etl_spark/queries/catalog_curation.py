@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from baronbatch_etl_spark.io import load_table, spread
+from baronbatch_etl_spark.io import load_table, materialize, spread
 from baronbatch_etl_spark.operators import dedup as D
 from baronbatch_etl_spark.operators import ranking as R
 from baronbatch_etl_spark.operators import text as X
@@ -734,9 +734,8 @@ def curate_survivors(sigs: DataFrame) -> DataFrame:
     # pruned fixture scan: (doc_id, lang, n_chars, n_tok, qscore, md5)
     # — narrow columns, but the digest group-min is still a shuffle
     # with several consumer branches (LSH input, the anti-join side,
-    # the caller's stats chain), so the survivor frame keeps the
-    # lazy-checkpoint barrier; materializing it is cheap since it
-    # carries no text
+    # the caller's stats chain), so the survivor frame is
+    # materialized; cheap, since it carries no text
     qual = sigs.select(
         "doc_id", "lang", "n_chars", "n_tok", "qscore", "md5"
     ).filter(F.col("qscore") >= X.QUALITY_MIN)
@@ -745,10 +744,10 @@ def curate_survivors(sigs: DataFrame) -> DataFrame:
         .groupBy("text_md5")
         .agg(F.min("doc_id").alias("doc_id"))
     )
-    sdocs = (
-        qual.select("doc_id", "lang", "n_chars", "n_tok")
-        .join(keep.select("doc_id"), "doc_id")
-        .localCheckpoint(eager=False)
+    sdocs = materialize(
+        qual.select("doc_id", "lang", "n_chars", "n_tok").join(
+            keep.select("doc_id"), "doc_id"
+        )
     )
     removed = D.near_dup_removed(
         D.minhash_lsh_pairs(

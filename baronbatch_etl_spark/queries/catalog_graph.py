@@ -17,7 +17,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from baronbatch_etl_spark.functions.scalars import round_half_up
-from baronbatch_etl_spark.io import load_table, session_fixture
+from baronbatch_etl_spark.io import (
+    fixed_point,
+    load_table,
+    materialize,
+    session_fixture,
+)
 from baronbatch_etl_spark.operators import graph as G
 from baronbatch_etl_spark.queries import register
 
@@ -614,42 +619,36 @@ def g_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: each round is one degree partial-agg plus two
     left-semi joins against the shrinking alive set — node-sized
-    frames move, the edge list only ever shrinks, and a lazy
-    localCheckpoint per round truncates the growing lineage (the
-    connected-components pattern). Rounds exit early at the fixed
-    point: the semi-joins only ever REMOVE edges, so an unchanged
-    edge count means an unchanged edge SET, every remaining round is
-    a no-op, and the early result is bit-identical to the full
-    8-round unroll (the count action piggybacks on the checkpoint
-    materialization each round already pays). The fixed budget still
+    frames move and the edge list only ever shrinks. The rounds run
+    on :func:`io.fixed_point` and exit early at the fixed point: the
+    semi-joins only ever REMOVE edges, so an unchanged edge count
+    means an unchanged edge SET, every remaining round is a no-op,
+    and the early result is bit-identical to the full 8-round unroll.
+    At the cap the edges are returned as they stand: the fixed budget
     caps cost at 100 TB where the peel hasn't converged.
     """
     base = _frequent_copurchase_edges(spark, sf_dir)
-    edges = (
-        base.select(F.col("a").alias("s"), F.col("b").alias("d"))
-        .unionByName(
-            base.select(F.col("b").alias("s"), F.col("a").alias("d"))
+    # the first round's degree agg and both semi-joins read it
+    edges = materialize(
+        base.selectExpr("a AS s", "b AS d").unionByName(
+            base.selectExpr("b AS s", "a AS d")
         )
-        .localCheckpoint(eager=False)
     )
-    prev_n = None
-    for _ in range(_KCORE_ROUNDS):
+
+    def peel(edges: DataFrame) -> DataFrame:
         alive = (
             edges.groupBy("s")
             .agg(F.count("*").alias("dg"))
             .filter(F.col("dg") >= _KCORE_K)
             .select("s")
         )
-        edges = (
+        return (
             edges.join(alive, "s", "left_semi")
             .join(alive.withColumnRenamed("s", "d"), "d", "left_semi")
             .select("s", "d")
-            .localCheckpoint(eager=False)
         )
-        n = edges.count()
-        if n == prev_n:  # subset + equal count ⇒ equal set: fixpoint
-            break
-        prev_n = n
+
+    edges, _ = fixed_point(edges, peel, DataFrame.count, _KCORE_ROUNDS)
     return edges.groupBy(F.col("s").alias("node")).agg(
         F.count("*").cast("long").alias("degree")
     )

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from baronbatch_etl_spark.functions.scalars import round_half_up, sql_round
-from baronbatch_etl_spark.io import load_table
+from baronbatch_etl_spark.io import load_table, materialize
 from baronbatch_etl_spark.operators import corpus as CP
 from baronbatch_etl_spark.operators import text as X
 from baronbatch_etl_spark.queries import register
@@ -547,7 +547,7 @@ WHERE r.total_rev = (SELECT max(total_rev) FROM rev)
 )
 def h_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: revenue rollup reused by both the scalar max
-    subquery and the equality filter. The rollup is cached — one
+    subquery and the equality filter. The rollup is materialized — one
     lineitem scan feeds both branches; the max is a 1-row broadcast.
     DECIMAL revenue makes the max-equality exact (a double max would
     be a last-ulp lottery across executors)."""
@@ -555,13 +555,9 @@ def h_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
-    rev = (
-        li.groupBy("l_suppkey")
-        .agg(F.sum(_rev()).alias("total_rev"))
-        # collectable checkpoint, not cache(): one lineitem scan still
-        # feeds both branches, but the blocks free with the frame
-        # instead of pinning executor storage for the session
-        .localCheckpoint(eager=False)
+    # one lineitem scan feeds both branches
+    rev = materialize(
+        li.groupBy("l_suppkey").agg(F.sum(_rev()).alias("total_rev"))
     )
     mx = rev.agg(F.max("total_rev").alias("max_rev"))
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
@@ -1057,14 +1053,12 @@ def a_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         _token_source_counts,
     )
 
-    h = (
+    # two consumers (grid fold + candidate top-k) — materialize the
+    # vocab-sized aggregate once
+    h = materialize(
         _token_source_counts(spark, sf_dir)
         .groupBy("tok", "hv")
         .agg(F.sum("c").alias("c"))
-        # two consumers (grid fold + candidate top-k) — materialize
-        # the vocab-sized aggregate once (same pattern as
-        # d_source_overlap)
-        .localCheckpoint(eager=False)
     )
 
     cms = CP.cms_grid_from_hashes(h, weight="c")

@@ -12,7 +12,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from baronbatch_etl_spark.functions.scalars import round_half_up
-from baronbatch_etl_spark.io import load_table, session_fixture, spread
+from baronbatch_etl_spark.io import (
+    load_table,
+    materialize,
+    session_fixture,
+    spread,
+)
 from baronbatch_etl_spark.operators import dedup as D
 from baronbatch_etl_spark.operators import multimodal as M
 from baronbatch_etl_spark.operators import similarity as S
@@ -551,14 +556,13 @@ def d_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stay inline over raw text); the source flags come from the same
     # fixture, so documents.parquet is never touched (r11)
     sigs = _doc_signatures(spark, sf_dir)
-    keep = (
+    # two consumers (LSH base + flags join) — materialize the digest
+    # shuffle once (8-byte ids)
+    keep = materialize(
         sigs.select("doc_id", "md5")
         .groupBy("md5")
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
-        # two consumers (LSH base + flags join) — materialize the
-        # digest shuffle once (8-byte ids)
-        .localCheckpoint(eager=False)
     )
     removed = D.near_dup_removed(
         D.minhash_lsh_pairs(sigs.join(keep, "doc_id"), threshold=0.8)

@@ -521,12 +521,8 @@ def curate_ingest(
         # pairs among accepted docs cannot exist (each was admitted
         # non-adjacent), so every pair touches this batch. The pair
         # operator reads its signature frame from several branches, so
-        # the pool's signatures are materialized once here
-        sigs = (
-            D.signatures(pool)
-            .select("doc_id", "sig", "sh")
-            .localCheckpoint(eager=False)
-        )
+        # the pool's signatures are cached once here
+        sigs = D.signatures(pool).select("doc_id", "sig", "sh").cache()
         pairs = D.minhash_lsh_pairs(sigs, threshold=0.8).cache()
         if accepted is not None:
             acc_a = accepted.select(F.col("doc_id").alias("doc_a"))
@@ -549,6 +545,7 @@ def curate_ingest(
         surv = cand.join(D.near_dup_removed(in_batch), "doc_id", "left_anti")
         _write_epoch(surv, accepted_path, epoch_id)
         pairs.unpersist()
+        sigs.unpersist()
         sdocs.unpersist()
 
     return _epoch_sink(docs, query_name, gate)

@@ -31,7 +31,7 @@ on, each chunk child measures the host canary and the per-run canary
 is the median across that run's chunks.
 
 ROOT CAUSE of the r7/r8 "mid-session tail inflation" (closed in r9,
-see INFLATION_PROBE.json): it was never accumulating JVM state. An
+see commit 21daa4e): it was never accumulating JVM state. An
 instrumented 200-query session shows GC totals of 1.5 s/245 s, JIT
 code cache peaking at 139/252 MB, class counts FALLING late-session
 (unloading works), and early queries re-run at the END of the session
@@ -59,7 +59,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from baronbatch_etl_spark import io as bio  # noqa: E402
 from baronbatch_etl_spark.io import DEFAULT_SF_DIR  # noqa: E402
-from baronbatch_etl_spark.operators import ranking  # noqa: E402
 from baronbatch_etl_spark.queries import load_all  # noqa: E402
 from baronbatch_etl_spark.session import get_spark  # noqa: E402
 
@@ -426,10 +425,7 @@ def main() -> None:
 
     def _measure(name: str) -> None:
         # cached frames (dedup signature tables) plan-match across
-        # invocations — clear so each run pays full cost (the rank
-        # utility's tracked handles are flushed too, so the session
-        # doesn't pin every measured query's plan objects)
-        ranking.release_rank_caches()
+        # invocations — clear so each run pays full cost
         spark.catalog.clearCache()
         t0 = time.perf_counter()
         _force(registry[name].fn(spark, sf_dir))
@@ -447,8 +443,8 @@ def main() -> None:
     # Python-worker spin-up — measured median 1.4x, worst 17x over
     # its warm minimum, uniformly across the session and NOT
     # accumulating (late re-runs of early queries read 0.63x their
-    # early cost; GC/code-cache/metaspace all healthy —
-    # INFLATION_PROBE.json). Under the old semantics pass 1 (~240 s)
+    # early cost; GC/code-cache/metaspace all healthy — commit
+    # 21daa4e). Under the old semantics pass 1 (~240 s)
     # consumed the whole per-child slice, so every driver record's
     # tail was single COLD readings — the entire "fake regression".
     # Starting the clock here guarantees the tail a warm second pass.)

@@ -344,6 +344,24 @@ def test_select_scratch_mode_branches():
     assert sel(None, None, None) == ("degraded", None)
 
 
+def test_checkpoints_only_in_io():
+    """io.materialize is the package's one checkpoint call: no other
+    module calls localCheckpoint( or .checkpoint( itself."""
+    from pathlib import Path
+
+    import baronbatch_etl_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    calls = [
+        f"{p.relative_to(root)}:{n}"
+        for p in sorted(root.rglob("*.py"))
+        if p != root / "io.py"
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if "localCheckpoint(" in line or ".checkpoint(" in line
+    ]
+    assert calls == []
+
+
 def test_session_fixture_honors_scratch_env(spark, tmp_path, monkeypatch):
     """SPARK_GRAFT_SCRATCH must redirect staging into the configured
     root (the cluster deployment's DFS path), under a

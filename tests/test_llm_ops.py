@@ -297,6 +297,17 @@ def test_connected_components_order_invariant(spark):
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
+def test_connected_components_raises_at_round_cap(spark):
+    # a 12-node chain takes ~11 propagation rounds to carry label 1 to
+    # its tail: with a 3-round cap the labels are still changing, and
+    # partial components must raise, not be returned
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 12)], ["doc_a", "doc_b"]
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 3 rounds"):
+        D.connected_components(pairs, max_iter=3)
+
+
 def test_repeated_spans_exact_counts(spark):
     # "a b c d e f g h" (8 tokens) appears verbatim in docs 0 and 1,
     # twice in doc 1; doc 2 shares no 8-token window.

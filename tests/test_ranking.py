@@ -231,24 +231,38 @@ def test_approx_ntile_plan_has_no_shuffle(spark):
     assert "Window" not in plan
 
 
-def test_release_rank_caches_unpersists(spark):
-    """global_row_number tracks its persisted handles; release drops
-    them all (the r9 advice: chained callers otherwise accumulate
-    cached frames until someone clears the whole cache)."""
-    from baronbatch_etl_spark.operators import ranking as R
+def test_clear_cache_releases_rank_frames(spark):
+    """global_row_number persists its input and its tagged frame (the
+    LAZY result needs both until the caller's action); one
+    ``spark.catalog.clearCache()`` drops both — storage level NONE on
+    the JVM side — and the frame still answers (lineage recompute)."""
+    from pyspark import StorageLevel
+    from pyspark.sql import DataFrame
 
-    R.release_rank_caches()  # start clean
-    df = _frame(spark, 20)
+    spark.catalog.clearCache()  # start clean
     out = global_row_number(
-        df, [F.col("v"), F.col("id")], rank_name="r", num_partitions=4
+        _frame(spark, 20), [F.col("v"), F.col("id")], rank_name="r",
+        num_partitions=4,
     )
     out.collect()
-    assert len(R._PERSISTED) == 2  # input + tagged frame
-    cached = list(R._PERSISTED)
-    R.release_rank_caches()
-    assert R._PERSISTED == []
-    assert all(not d.is_cached for d in cached)
-    # released frames still answer queries (lineage recompute)
+
+    def subplans(plan):
+        yield plan
+        for i in range(plan.children().size()):
+            yield from subplans(plan.children().apply(i))
+
+    # every cached subplan of the analyzed plan, as a frame whose
+    # storageLevel the JVM cache manager answers
+    ofrows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+    frames = {
+        p.semanticHash(): DataFrame(ofrows(spark._jsparkSession, p), spark)
+        for p in subplans(out._jdf.queryExecution().analyzed())
+    }
+    none = StorageLevel.NONE
+    cached = [d for d in frames.values() if d.storageLevel != none]
+    assert len(cached) == 2  # input + tagged frame
+    spark.catalog.clearCache()
+    assert all(d.storageLevel == none for d in cached)
     assert out.count() == 20
 
 

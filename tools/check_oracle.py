@@ -22,7 +22,6 @@ import duckdb
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from baronbatch_etl_spark.io import TABLES, table_path
-from baronbatch_etl_spark.operators import ranking
 from baronbatch_etl_spark.queries import load_all
 from baronbatch_etl_spark.session import get_spark
 
@@ -75,9 +74,7 @@ def main() -> int:
         n_checked += 1
         # the ranking-utility queries persist() their rank input; drop
         # those frames between queries so the 200-query session stays
-        # cache-flat (release also empties the tracked-handle list, so
-        # the session doesn't pin 200 queries' plan objects)
-        ranking.release_rank_caches()
+        # cache-flat
         spark.catalog.clearCache()
         t0 = time.time()
         try:

