@@ -4,8 +4,12 @@ family; the reference's only dedup is keep-first on a key,
 utils/clean_db.py:14-24 — covered by catalog_aggs.a8).
 
 One signature table: :func:`signatures` is the only place (outside the
-streaming micro-batch key gate) where text becomes MinHash signatures,
-shingle sets and SimHash fingerprints — one Arrow pass per document.
+streaming micro-batch key gate, which calls the same kernel) where text
+becomes MinHash signatures, shingle sets and SimHash fingerprints — one
+call of ``fast_text.text_signatures_fast`` per document, which
+tokenizes and hashes the text once. The expression twins below
+(:func:`minhash_signature`, :func:`simhash`) and ``text.shingle_hashes``
+are the reference implementations it is parity-tested against.
 Every pair operator below reads that frame (or a row subset of it) as
 its first argument and never materializes it; see the contract in
 :func:`signatures`.
@@ -33,14 +37,14 @@ from baronbatch_etl_spark.io import (
     materialize,
     spread,
 )
-from baronbatch_etl_spark.operators.fast_text import (
-    make_shingle_hashes_udf,
-    make_sig_and_shingles_udf,
-    make_simhash_udf,
-)
+from baronbatch_etl_spark.operators.fast_text import text_signatures_fast
 from baronbatch_etl_spark.operators.text import (
-    CONTAM_SHINGLE_N,
+    MINHASH_A,
+    MINHASH_B,
+    MINHASH_K,
     POLY_P,
+    SIMHASH_BITS,
+    SIMHASH_HALF,
     char_poly_hash,
     char_poly_hash131,
     shingle_hashes,
@@ -48,18 +52,6 @@ from baronbatch_etl_spark.operators.text import (
     token_hashes131,
 )
 
-# Fixed MinHash family h_j(x) = (A[j]·x + B[j]) mod P  (seed 42).
-MINHASH_K = 16
-MINHASH_A = (
-    686579304, 119540832, 26855093, 796233791, 295310486, 262950629,
-    239670712, 149827707, 790779947, 110053354, 726600540, 795285933,
-    957970517, 585582862, 93349857, 634036507,
-)
-MINHASH_B = (
-    453035110, 34126396, 31994523, 100604502, 234760738, 249817734,
-    542621108, 646412689, 28492780, 602632297, 213500298, 768820204,
-    697808098, 753041955, 585126461, 450455977,
-)
 LSH_BANDS = 4  # 4 bands × 4 rows ⇒ P(candidate) = 1-(1-s⁴)⁴
 LSH_ROWS = MINHASH_K // LSH_BANDS
 
@@ -68,24 +60,11 @@ LSH_ROWS = MINHASH_K // LSH_BANDS
 #: accepts any prefix_len <= this width exactly, and raises beyond it.
 STAGED_PREFIX_LEN = 64
 
-# 60-bit fingerprint assembled from TWO independent token-hash
-# families (base-31 → bits 0..29, base-131 → bits 30..59): POLY_P is
-# ~2^30, so one family alone yields ≤30 informative bits, and a wider
-# fingerprint is what keeps the pigeonhole blocks selective (15-bit
-# block keys ⇒ 32k buckets/block; an 8-bit key over a 32-bit simhash
-# put ~n²/256-plus-correlation candidate pairs through the verifier).
-SIMHASH_BITS = 60
-SIMHASH_HALF = 30  # bits per hash family
+# The wide (two-family) SimHash fingerprint is what keeps the
+# pigeonhole blocks selective: 15-bit block keys ⇒ 32k buckets/block,
+# where an 8-bit key over a 32-bit simhash put ~n²/256-plus-correlation
+# candidate pairs through the verifier.
 SIMHASH_BLOCK_BITS = SIMHASH_BITS // 4  # 4 blocks: complete for r ≤ 3
-
-# Arrow-vectorized signature UDFs (same arithmetic as the expression
-# versions below — see operators/fast_text.py; parity is tested).
-sig_and_shingles_fast = make_sig_and_shingles_udf(MINHASH_A, MINHASH_B)
-simhash_fast = make_simhash_udf(SIMHASH_BITS, SIMHASH_HALF)
-#: The contamination-width shingle hashes (``sh4``): the one instance
-#: the signature frame and the contamination query both use, so the
-#: staged column and the inline pass can never diverge.
-contam_shingles_fast = make_shingle_hashes_udf(CONTAM_SHINGLE_N)
 
 
 def signatures(docs: DataFrame) -> DataFrame:
@@ -94,16 +73,15 @@ def signatures(docs: DataFrame) -> DataFrame:
 
     * ``pfx`` — the first :data:`STAGED_PREFIX_LEN` characters;
     * ``sig``, ``sh`` — the MinHash(16) signature and the sorted,
-      deduped word-3-gram shingle hashes, from one
-      ``sig_and_shingles_fast`` call;
+      deduped word-3-gram shingle hashes;
     * ``simhash`` — the 60-bit SimHash fingerprint;
-    * ``sh4`` — the :data:`CONTAM_SHINGLE_N`-gram shingle hashes.
+    * ``sh4`` — the sorted, deduped ``text.CONTAM_SHINGLE_N``-gram
+      shingle hashes.
 
-    All of them are row-local functions of ``text``, and every UDF
-    evaluates in one ArrowEvalPython pass, so the text crosses the
-    Python boundary once. Column pruning keeps a narrow select cheap:
-    ``signatures(docs).select("doc_id", "sig", "sh")`` plans only
-    ``sig_and_shingles_fast``.
+    All four signature columns are fields of ONE
+    ``fast_text.text_signatures_fast`` call, which tokenizes and hashes
+    each document once, so the text crosses the Python boundary once
+    and the kernel runs whole whichever columns a caller selects.
 
     Contract for the pair operators of this module, which take this
     frame (or a row subset of it) as their first argument: they never
@@ -122,17 +100,10 @@ def signatures(docs: DataFrame) -> DataFrame:
         .select(
             "*",
             F.substring(F.col("text"), 1, STAGED_PREFIX_LEN).alias("pfx"),
-            sig_and_shingles_fast(F.col("text")).alias("_x"),
-            simhash_fast(F.col("text")).alias("simhash"),
-            contam_shingles_fast(F.col("text")).alias("sh4"),
+            text_signatures_fast(F.col("text")).alias("_x"),
         )
         .select(
-            *docs.columns,
-            "pfx",
-            F.col("_x.sig").alias("sig"),
-            F.col("_x.sh").alias("sh"),
-            "simhash",
-            "sh4",
+            *docs.columns, "pfx", "_x.sig", "_x.sh", "_x.simhash", "_x.sh4"
         )
     )
 
@@ -315,8 +286,8 @@ def containment_pairs(
     division.
 
     Reads ``doc_id`` and ``sh`` of a :func:`signatures` frame (``sh``
-    is sorted and deduped by the Arrow UDF contract — see
-    make_sig_and_shingles_udf).
+    is sorted and deduped by the signature kernel's contract — see
+    ``fast_text.text_signatures_fast``).
     """
     _require_sig_base(sigs, ("doc_id", "sh"))
     base = sigs.select("doc_id", "sh")
@@ -657,7 +628,10 @@ def ngram_jaccard_pairs(
         "doc_id", "lang", "n_chars",
         F.explode(F.slice("sh", F.lit(1), pref_len)).alias("tok"),
     )
-    a, b = pref.alias("a"), pref.alias("b")
+    # the doc_id hash also clusters the candidate distinct below, so it
+    # needs no second exchange (AQE would coalesce that one to a task)
+    a = hash_spread(pref, "doc_id").alias("a")
+    b = pref.alias("b")
     cand = (
         a.join(
             b,

@@ -3,13 +3,21 @@
 The expression-based versions in ``operators.text`` / ``operators.
 dedup`` are pure built-ins, but Spark does not whole-stage-codegen
 higher-order-function lambdas, so per-char hash folds dominate the
-signature computation. These pandas UDFs compute the SAME integer
+signature computation. The pandas UDFs here compute the SAME integer
 arithmetic (verified bit-for-bit by tests/test_fast_parity.py and by
 the DuckDB oracles) vectorized in numpy: sequential per value —
-parity — but batched across rows — speed (~10× on the dedup bench).
+parity — but batched across rows — speed.
 
-Numerics: every intermediate stays < 2^35 (P ≈ 2^30, ×31, +code
-point), so int64 never overflows and Python/numpy/JVM agree exactly.
+One tokenizer-hasher (:func:`_token_hashes`) splits every document of
+a batch once and hashes every token once; one masked Horner fold
+(:func:`_fold`) is the only fold loop. The signature kernel
+(:func:`text_signatures_fast`), the document fingerprint and the CDC
+chunker all start from those token hashes, and every shingle hash is
+derived from them arithmetically — no shingle string is ever built.
+
+Numerics: every intermediate stays < 2^61 (P ≈ 2^30; the largest is a
+product of two residues), so int64 never overflows and Python/numpy/JVM
+agree exactly.
 
 Python runs only at signature time: text becomes hashes here, once per
 document. Pair verification (Jaccard, containment, Hamming, edit
@@ -24,48 +32,83 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from baronbatch_etl_spark.operators.text import POLY_P
+from baronbatch_etl_spark.operators.text import (
+    CONTAM_SHINGLE_N,
+    MINHASH_A,
+    MINHASH_B,
+    MINHASH_K,
+    POLY_P,
+    SIMHASH_BITS,
+    SIMHASH_HALF,
+)
 
 
-def _hash_strings(strings: list[str], base: int = 31) -> np.ndarray:
-    """Polynomial char hash of many strings at once.
+def _fold(
+    values: np.ndarray, starts: np.ndarray, lens: np.ndarray, *bases: int
+) -> np.ndarray:
+    """Horner fold ``(acc·base + v) % P`` of every segment
+    ``values[s : s + len]``, for each base in the same column loop:
+    row ``k`` of the ``(len(bases), n_segments)`` result is base
+    ``bases[k]``, and an empty segment folds to 0.
 
-    One padded (n_strings × max_len) codepoint matrix, Horner fold
-    down the columns with a length mask — identical fold order to
-    char_poly_hash / sql_char_poly_hash (base 31) and
-    char_poly_hash131 (base 131).
+    Segments are visited longest first, so column ``j`` updates only
+    the prefix of segments still longer than ``j`` — the work is the
+    total segment length, not n_segments × the longest. Values are code
+    points or hashes < P, so intermediates stay < 2^38 (×131) —
+    int64-exact."""
+    order = np.argsort(-lens)
+    first = starts[order]
+    # live[j] = how many segments are longer than j
+    live = np.searchsorted(
+        -lens[order], -np.arange(lens.max(initial=0)), side="left"
+    )
+    base = np.array(bases, dtype=np.int64)[:, None]
+    acc = np.zeros((len(bases), len(starts)), dtype=np.int64)
+    for j, k in enumerate(live):
+        acc[:, :k] = (acc[:, :k] * base + values[first[:k] + j]) % POLY_P
+    out = np.empty_like(acc)
+    out[:, order] = acc
+    return out
+
+
+def _token_hashes(
+    texts: pd.Series, *bases: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Tokenize a batch of documents once and hash every token.
+
+    A document splits on single spaces — ``"".split(" ") == [""]``,
+    matching Spark's ``split('', ' ')`` and DuckDB's ``string_split``
+    exactly (an empty doc is one empty token) — and a non-string reads
+    as ``""``. The batch is joined with single spaces and encoded once,
+    so the tokens are the runs between the space code points of one
+    flat array and no per-token Python object is built.
+
+    Returns ``(hashes, lens, offs)``: ``hashes[k]`` holds the base
+    ``bases[k]`` polynomial hash of every token (char_poly_hash for
+    31, char_poly_hash131 for 131), ``lens`` every token's code-point
+    length, and document ``i``'s tokens are ``offs[i]:offs[i + 1]``.
     """
-    n = len(strings)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    bufs = [s.encode("utf-32-le") for s in strings]
-    lens = np.fromiter((len(b) >> 2 for b in bufs), dtype=np.int64, count=n)
-    max_len = int(lens.max(initial=0))
-    if max_len == 0:
-        return np.zeros(n, dtype=np.int64)
-    mat = np.zeros((n, max_len), dtype=np.int64)
+    docs = [t if isinstance(t, str) else "" for t in texts]
+    offs = np.zeros(len(docs) + 1, dtype=np.int64)
+    np.cumsum([t.count(" ") + 1 for t in docs], out=offs[1:])
+    if not docs:
+        empty = np.zeros(0, dtype=np.int64)
+        return np.zeros((len(bases), 0), dtype=np.int64), empty, offs
     # "<u4": the buffer is explicitly utf-32-LE — native-endian uint32
     # would byte-swap codepoints on big-endian hosts
-    flat = np.frombuffer(b"".join(bufs), dtype="<u4").astype(np.int64)
-    # row i occupies flat[offsets[i]:offsets[i]+lens[i]]
-    col = np.arange(max_len)
-    mask = col[None, :] < lens[:, None]
-    mat[mask] = flat
-    h = np.zeros(n, dtype=np.int64)
-    for j in range(max_len):
-        step = (h * base + mat[:, j]) % POLY_P
-        h = np.where(mask[:, j], step, h)
-    return h
+    cps = np.frombuffer(
+        " ".join(docs).encode("utf-32-le"), dtype="<u4"
+    ).astype(np.int64)
+    spaces = np.flatnonzero(cps == 32)
+    starts = np.concatenate(([0], spaces + 1))
+    lens = np.append(spaces, len(cps)) - starts
+    return _fold(cps, starts, lens, *bases), lens, offs
 
 
-def _tokenize(text: str) -> list[str]:
-    # NB: "".split(" ") == [""] — matching Spark's split('', ' ') and
-    # DuckDB's string_split exactly (empty doc → one empty token).
-    return text.split(" ")
-
-
-def _doc_shingles(text: str, n: int = 3) -> list[str]:
-    toks = _tokenize(text)
+def _doc_shingles(text: str, n: int) -> list[str]:
+    """The distinct word ``n``-gram strings of one document, in first-
+    occurrence order (word_bigrams_fast's exact-string bigrams)."""
+    toks = text.split(" ")
     if len(toks) < n:
         return []
     seen = dict.fromkeys(
@@ -74,41 +117,108 @@ def _doc_shingles(text: str, n: int = 3) -> list[str]:
     return list(seen)
 
 
-def _per_doc_hashes(
-    texts: pd.Series, pieces_of: "callable"
+def _shingle_sets(
+    grams: np.ndarray, doc: np.ndarray, width: int, n_docs: int
 ) -> tuple[np.ndarray, np.ndarray]:
-    """(flat hash array, per-doc offsets) for a batch of documents."""
-    pieces: list[str] = []
-    counts = np.empty(len(texts), dtype=np.int64)
-    for i, t in enumerate(texts):
-        p = pieces_of(t if isinstance(t, str) else "")
-        counts[i] = len(p)
-        pieces.extend(p)
-    return _hash_strings(pieces), np.concatenate(([0], np.cumsum(counts)))
+    """Per-doc sorted, distinct hashes of the ``width``-grams that lie
+    inside one document. ``grams[i]`` is the gram starting at token
+    ``i`` of the batch and ``doc`` maps tokens to documents; returns
+    ``(values, offs)`` with document ``i``'s set at
+    ``values[offs[i]:offs[i + 1]]``."""
+    m = len(grams)
+    inside = doc[:m] == doc[width - 1 : width - 1 + m]
+    # doc·P + hash sorts by (doc, hash): one np.unique dedups every set
+    key = np.unique(doc[:m][inside] * POLY_P + grams[inside])
+    owner = key // POLY_P
+    offs = np.zeros(n_docs + 1, dtype=np.int64)
+    np.cumsum(np.bincount(owner, minlength=n_docs), out=offs[1:])
+    return key - owner * POLY_P, offs
 
 
-def make_shingle_hashes_udf(n: int = 3):
-    """Vectorized twin of text.shingle_hashes for any shingle width.
+def _per_doc(values: np.ndarray, offs: np.ndarray) -> list[np.ndarray]:
+    return [values[a:b] for a, b in zip(offs[:-1], offs[1:])]
 
-    Hash values are np.unique'd per doc (sorted, collision-deduped):
-    every consumer is set-semantic (min / intersect / distinct-union),
-    so order is free — and downstream pair math may then assume
-    uniqueness without a per-pair dedup pass.
+
+_MINHASH_A = np.asarray(MINHASH_A, dtype=np.int64)[None, :]
+_MINHASH_B = np.asarray(MINHASH_B, dtype=np.int64)[None, :]
+
+# explicit StructType: a DDL-string returnType would be parsed at
+# import time, which requires a live SparkContext
+SIGNATURE_RET = T.StructType(
+    [
+        T.StructField("sig", T.ArrayType(T.LongType())),
+        T.StructField("sh", T.ArrayType(T.LongType())),
+        T.StructField("sh4", T.ArrayType(T.LongType())),
+        T.StructField("simhash", T.LongType()),
+    ]
+)
+
+
+@F.pandas_udf(SIGNATURE_RET)
+def text_signatures_fast(texts: pd.Series) -> pd.DataFrame:
+    """Every text signature of a document from ONE tokenize-and-hash
+    pass — the Arrow twin of four expression operators:
+
+    * ``sh`` — text.shingle_hashes(text, 3), sorted and deduped;
+    * ``sh4`` — text.shingle_hashes(text, CONTAM_SHINGLE_N), likewise;
+    * ``sig`` — dedup.minhash_signature: per-doc minimum of each
+      MinHash permutation over ``sh``; a doc with fewer than 3 tokens
+      has no shingles and signs as the sentinel P in every slot;
+    * ``simhash`` — dedup.simhash: bit b is set iff more than half of
+      the doc's tokens have it set in their packed
+      (base-31 | base-131 << SIMHASH_HALF) word.
+
+    Shingle hashes come from the token hashes by the polynomial
+    identity ``h(x‖' '‖y) = ((h(x)·31 + 32)·31^|y| + h(y)) mod P``,
+    extended one token at a time (1-gram → 2 → 3 → 4). Sets are sorted
+    and collision-deduped: every consumer is set-semantic (min /
+    intersect / distinct-union), and downstream pair math may then
+    assume uniqueness without a per-pair dedup pass.
     """
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def shingle_hashes_n(texts: pd.Series) -> pd.Series:
-        flat, offs = _per_doc_hashes(
-            texts, lambda t: _doc_shingles(t, n)
-        )
-        return pd.Series(
-            [
-                np.unique(flat[offs[i] : offs[i + 1]]).tolist()
-                for i in range(len(texts))
-            ]
-        )
-
-    return shingle_hashes_n
+    n = len(texts)
+    (h31, h131), lens, offs = _token_hashes(texts, 31, 131)
+    n_tok = np.diff(offs)
+    doc = np.repeat(np.arange(n, dtype=np.int64), n_tok)
+    # 31^k mod P for every token length k
+    pw = np.ones(int(lens.max(initial=0)) + 1, dtype=np.int64)
+    for k in range(1, len(pw)):
+        pw[k] = pw[k - 1] * 31 % POLY_P
+    grams, sets = h31, {}
+    for width in range(2, max(3, CONTAM_SHINGLE_N) + 1):
+        tail = slice(width - 1, None)
+        grams = (
+            (grams[:-1] * 31 + 32) % POLY_P * pw[lens[tail]] % POLY_P
+            + h31[tail]
+        ) % POLY_P
+        if width in (3, CONTAM_SHINGLE_N):
+            sets[width] = _shingle_sets(grams, doc, width, n)
+    sh, sh_offs = sets[3]
+    sig = np.full((n, MINHASH_K), POLY_P, dtype=np.int64)
+    signed = sh_offs[1:] > sh_offs[:-1]
+    if sh.size:
+        perms = (sh[:, None] * _MINHASH_A + _MINHASH_B) % POLY_P
+        sig[signed] = np.minimum.reduceat(perms, sh_offs[:-1][signed], axis=0)
+    # bits 0..HALF−1 from the base-31 hash, HALF..BITS−1 from base 131
+    word = (h31 & (1 << SIMHASH_HALF) - 1) | (
+        h131 & (1 << SIMHASH_BITS - SIMHASH_HALF) - 1
+    ) << SIMHASH_HALF
+    bits = np.unpackbits(
+        word.astype("<u8").view(np.uint8).reshape(-1, 8),
+        axis=1,
+        bitorder="little",
+    )
+    ones = np.add.reduceat(bits, offs[:-1], axis=0, dtype=np.int64)
+    simhash = np.packbits(
+        2 * ones > n_tok[:, None], axis=1, bitorder="little"
+    ).view("<i8")
+    return pd.DataFrame(
+        {
+            "sig": list(sig),
+            "sh": _per_doc(sh, sh_offs),
+            "sh4": _per_doc(*sets[CONTAM_SHINGLE_N]),
+            "simhash": simhash.reshape(n),
+        }
+    )
 
 
 def _cdc_chunk_arrays(
@@ -121,7 +231,7 @@ def _cdc_chunk_arrays(
     into ``texts``, ``chunk_id`` is the 0-based chunk ordinal within
     its doc. The numpy core of :func:`make_cdc_chunk_rows_mapper`.
     """
-    flat, offs = _per_doc_hashes(texts, _tokenize)
+    (flat,), _, offs = _token_hashes(texts, 31)
     # chunk ends: boundary tokens, plus each doc's last token
     boundary = (flat % modulus) == 0
     ends = np.zeros(len(flat) + 1, dtype=bool)
@@ -134,22 +244,11 @@ def _cdc_chunk_arrays(
     lens = stops - starts
     keep = lens > 0  # doc edges coinciding with boundaries
     starts, lens = starts[keep], lens[keep]
-    # fold every chunk at once: (n_chunks × max_len) padded matrix
-    n_chunks = len(starts)
-    fps = np.zeros(n_chunks, dtype=np.int64)
-    if n_chunks:
-        max_len = int(lens.max())
-        col = np.arange(max_len)
-        mask = col[None, :] < lens[:, None]
-        mat = np.zeros((n_chunks, max_len), dtype=np.int64)
-        mat[mask] = flat[(starts[:, None] + col[None, :])[mask]]
-        for j in range(max_len):
-            step = (fps * 131 + mat[:, j]) % POLY_P
-            fps = np.where(mask[:, j], step, fps)
+    (fps,) = _fold(flat, starts, lens, 131)
     # assign chunks back to docs (starts are sorted, so doc_idx is
     # nondecreasing and the per-doc ordinal is a first-index offset)
     doc_idx = np.searchsorted(offs[1:], starts, side="right")
-    chunk_id = np.arange(n_chunks) - np.searchsorted(
+    chunk_id = np.arange(len(starts)) - np.searchsorted(
         doc_idx, doc_idx, side="left"
     )
     return doc_idx, chunk_id, lens, fps
@@ -167,10 +266,10 @@ def make_cdc_chunk_rows_mapper(modulus: int = 64):
 
     Emits ``(doc_id, chunk_id, n_tokens, fp)`` rows straight from the
     numpy pass (boundary mask for chunk ends, then ALL chunks of the
-    batch fold as rows of one padded matrix) — no per-doc Python
-    list assembly and no JVM-side explode of a nested column.
-    Row-local: zero shuffle at any corpus size. Input batches must
-    carry ``doc_id`` and ``text``.
+    batch fold as segments of the token-hash array in one
+    :func:`_fold`) — no per-doc Python list assembly and no JVM-side
+    explode of a nested column. Row-local: zero shuffle at any corpus
+    size. Input batches must carry ``doc_id`` and ``text``.
     """
 
     def cdc_chunk_rows(batches):
@@ -193,65 +292,12 @@ def make_cdc_chunk_rows_mapper(modulus: int = 64):
 @F.pandas_udf(T.LongType())
 def doc_fingerprint_fast(texts: pd.Series) -> pd.Series:
     """Vectorized twin of text.doc_fingerprint: Horner fold
-    (acc·131 + token_hash) % P over the token stream.
-
-    Same padded-matrix fold as _hash_strings, one level up: rows are
-    documents, columns are token positions, masked by doc length.
-    Intermediates stay < 2^38 (P ≈ 2^30, ×131, +hash<P) — int64-exact.
-    """
-    flat, offs = _per_doc_hashes(texts, _tokenize)
-    n = len(texts)
-    lens = np.diff(offs)
-    max_len = int(lens.max(initial=0))
-    if max_len == 0:
-        return pd.Series(np.zeros(n, dtype=np.int64))
-    mat = np.zeros((n, max_len), dtype=np.int64)
-    col = np.arange(max_len)
-    mask = col[None, :] < lens[:, None]
-    mat[mask] = flat
-    h = np.zeros(n, dtype=np.int64)
-    for j in range(max_len):
-        step = (h * 131 + mat[:, j]) % POLY_P
-        h = np.where(mask[:, j], step, h)
-    return pd.Series(h)
-
-
-def make_sig_and_shingles_udf(a: tuple, b: tuple, p: int = POLY_P):
-    """MinHash signature AND distinct shingle-hash set in ONE Arrow
-    pass — the LSH pair operator needs both, and tokenizing/shingling/
-    hashing every document twice was the dominant cost of the separate
-    UDFs (the two signature columns share all their work)."""
-    av = np.asarray(a, dtype=np.int64)[None, :]
-    bv = np.asarray(b, dtype=np.int64)[None, :]
-    sentinel = np.full(len(a), p, dtype=np.int64)
-
-    # explicit StructType: a DDL-string returnType would be parsed at
-    # import time, which requires a live SparkContext
-    ret = T.StructType(
-        [
-            T.StructField("sig", T.ArrayType(T.LongType())),
-            T.StructField("sh", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    @F.pandas_udf(ret)
-    def sig_and_shingles(texts: pd.Series) -> pd.DataFrame:
-        flat, offs = _per_doc_hashes(texts, _doc_shingles)
-        perms = (flat[:, None] * av + bv) % p
-        sigs, shs = [], []
-        for i in range(len(texts)):
-            lo, hi = offs[i], offs[i + 1]
-            if hi == lo:
-                sigs.append(sentinel.tolist())
-                shs.append([])
-            else:
-                sigs.append(perms[lo:hi].min(axis=0).tolist())
-                # same contract as make_shingle_hashes_udf: sorted,
-                # deduped
-                shs.append(np.unique(flat[lo:hi]).tolist())
-        return pd.DataFrame({"sig": sigs, "sh": shs})
-
-    return sig_and_shingles
+    (acc·131 + token_hash) % P over the token stream — the same
+    :func:`_fold` one level up, with documents as the segments of the
+    token-hash array."""
+    (flat,), _, offs = _token_hashes(texts, 31)
+    (fp,) = _fold(flat, offs[:-1], np.diff(offs), 131)
+    return pd.Series(fp)
 
 
 def make_srp_udf(planes: int = 16, dims: int = 64):
@@ -276,46 +322,6 @@ def make_srp_udf(planes: int = 16, dims: int = 64):
         return pd.Series(((acc > 0) * weights[None, :]).sum(axis=1))
 
     return srp_code_fast
-
-
-def make_simhash_udf(bits: int = 60, half: int = 30):
-    """SimHash fingerprints from text: token-hash bit votes, packed.
-
-    Fingerprint bits 0..half−1 vote from the base-31 token hash, bits
-    half..bits−1 from the independent base-131 hash — POLY_P caps each
-    family at ~30 informative bits, so a wide (selectively blockable)
-    fingerprint needs both. Must stay bit-identical to dedup.simhash
-    and the DuckDB oracle (tests/test_fast_parity.py).
-    """
-    weights = (np.int64(1) << np.arange(bits, dtype=np.int64))[None, :]
-
-    @F.pandas_udf(T.LongType())
-    def simhash_fast(texts: pd.Series) -> pd.Series:
-        pieces: list[str] = []
-        counts = np.empty(len(texts), dtype=np.int64)
-        for i, t in enumerate(texts):
-            p = _tokenize(t if isinstance(t, str) else "")
-            counts[i] = len(p)
-            pieces.extend(p)
-        offs = np.concatenate(([0], np.cumsum(counts)))
-        h1 = _hash_strings(pieces, 31)
-        h2 = _hash_strings(pieces, 131)
-        signs = np.concatenate(
-            [
-                ((h1[:, None] >> np.arange(half)[None, :]) & 1) * 2 - 1,
-                ((h2[:, None] >> np.arange(bits - half)[None, :]) & 1) * 2
-                - 1,
-            ],
-            axis=1,
-        )  # (n_tokens × bits) in ±1
-        # segmented per-doc vote sums in one reduceat (no Python loop);
-        # every doc has ≥1 token ("" tokenizes to [""]), so offsets are
-        # strictly increasing and each segment is a true sum
-        votes = np.add.reduceat(signs, offs[:-1], axis=0)
-        out = ((votes > 0) * weights).sum(axis=1, dtype=np.int64)
-        return pd.Series(out)
-
-    return simhash_fast
 
 
 @F.pandas_udf(T.ArrayType(T.StringType()))

@@ -18,13 +18,36 @@ from pyspark.sql import functions as F
 POLY_P = 1_000_000_007
 
 #: Shingle width for benchmark-contamination checks — THE single
-#: source of truth: catalog_curation's inline pass/oracle fragments
-#: and catalog_llm's staged ``sh4`` signature column both read it
-#: (a width drift between them would silently corrupt
-#: t_contamination/t_training_set — the r10 advice item). 4-grams are
-#: the sweet spot for this fixture vocabulary (3-grams over-fire,
-#: 5-grams under-fire); production corpora typically use 8-13.
+#: source of truth: the signature kernel's ``sh4`` column
+#: (``fast_text.text_signatures_fast``, staged by catalog_llm and read
+#: by t_contamination/t_training_set) and catalog_curation's DuckDB
+#: oracle fragments both read it, so the two can never drift apart.
+#: 4-grams are the sweet spot for this fixture vocabulary (3-grams
+#: over-fire, 5-grams under-fire); production corpora typically use
+#: 8-13.
 CONTAM_SHINGLE_N = 4
+
+# Fixed MinHash family h_j(x) = (A[j]·x + B[j]) mod P  (seed 42). The
+# signature constants live here, next to POLY_P, so the Arrow kernel
+# (operators.fast_text) and the expression twins (operators.dedup)
+# read one definition.
+MINHASH_K = 16
+MINHASH_A = (
+    686579304, 119540832, 26855093, 796233791, 295310486, 262950629,
+    239670712, 149827707, 790779947, 110053354, 726600540, 795285933,
+    957970517, 585582862, 93349857, 634036507,
+)
+MINHASH_B = (
+    453035110, 34126396, 31994523, 100604502, 234760738, 249817734,
+    542621108, 646412689, 28492780, 602632297, 213500298, 768820204,
+    697808098, 753041955, 585126461, 450455977,
+)
+
+# 60-bit SimHash fingerprint assembled from TWO independent token-hash
+# families (base-31 → bits 0..29, base-131 → bits 30..59): POLY_P is
+# ~2^30, so one family alone yields ≤30 informative bits.
+SIMHASH_BITS = 60
+SIMHASH_HALF = 30  # bits per hash family
 
 
 def tokens(text: Column | str) -> Column:

@@ -72,12 +72,13 @@ def t_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes, not strings, to keep the broadcast map small. The only
     exchange is the final per-doc count, keyed by doc_id (skew-free).
 
-    Shingle hashing runs through the Arrow twin (one vectorized numpy
-    fold per batch instead of a per-char expression fold per gram —
-    same hash values, parity-tested in tests/test_fast_parity.py);
-    since session 5 the hashes come from the staged signature table's
-    ``sh4`` column (same maker/width — bit-identical values), so both
-    the bench and train branches read the column-pruned staged scan.
+    The shingle hashes are the staged signature table's ``sh4``
+    column: the signature kernel (``fast_text.text_signatures_fast``)
+    derives them from its per-token hashes at
+    ``text.CONTAM_SHINGLE_N`` — the width the oracle reads too, with
+    values parity-tested against the expression twin in
+    tests/test_fast_parity.py — so both the bench and train branches
+    read the column-pruned staged scan.
     """
     sh = L._doc_signatures(spark, sf_dir).select(
         "doc_id", F.explode("sh4").alias("h")

@@ -395,8 +395,8 @@ def _doc_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     pfx, sig, sh, simhash, sh4, md5, qscore, n_tok)``: the
     :func:`dedup.signatures` frame of the documents plus three
     row-local scores, staged once per (session, sf_dir) via
-    :func:`io.session_fixture` — ONE Arrow pass (the three pandas UDFs
-    evaluate in the same ArrowEvalPython projection) feeding the
+    :func:`io.session_fixture` — ONE Arrow pass (one call of the
+    signature kernel, ``fast_text.text_signatures_fast``) feeding the
     whole-corpus dedup family (`d_minhash_lsh`, `d_dup_clusters`,
     `d_cluster_canonical`, `d_lsh_recall`, `t_split_leakage_safe`,
     `d_containment`, `d_ngram_jaccard`, `d_edit_distance`,

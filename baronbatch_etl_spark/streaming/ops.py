@@ -352,17 +352,18 @@ def _doc_keys(batch: DataFrame) -> DataFrame:
     sub-shingle-length docs, which sign as the sentinel and are
     excluded from banding, same as the batch operator)."""
     from baronbatch_etl_spark.operators import dedup as D
+    from baronbatch_etl_spark.operators.fast_text import text_signatures_fast
 
     sig = batch.select(
-        "doc_id", "text", D.sig_and_shingles_fast(F.col("text")).alias("x")
-    ).select(
+        "doc_id", text_signatures_fast(F.col("text")).alias("x")
+    ).select("doc_id", "x.sig", "x.sh")
+    # the exclusion rides in the generator, not in a filter: Catalyst
+    # pushes a filter on a UDF output below the UDF's projection and
+    # then evaluates the UDF in two Arrow passes
+    banded = sig.selectExpr(
         "doc_id",
-        "text",
-        F.col("x.sig").alias("sig"),
-        F.col("x.sh").alias("sh"),
-    )
-    banded = sig.where("size(sh) > 0").selectExpr(
-        "doc_id", D.LSH_BANDS_EXPLODE_SQL
+        f"posexplode(if(size(sh) > 0, {D.LSH_BAND_KEYS_SQL}, array()))"
+        " AS (band, key)",
     )
     digest = batch.select(
         "doc_id", F.lit(-1).alias("band"), F.md5("text").alias("key")

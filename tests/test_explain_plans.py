@@ -691,7 +691,9 @@ def test_bpe_tokens_runs_its_regexp_once(spark, registry, sf_dir):
     assert final.count("regexp_extract_all(") == 1, final
 
 
-@pytest.mark.parametrize("name", ["d_minhash_lsh", "d_simhash_pairs"])
+@pytest.mark.parametrize(
+    "name", ["d_minhash_lsh", "d_simhash_pairs", "d_ngram_jaccard"]
+)
 def test_pair_probe_repartition_is_not_coalesced(spark, registry, sf_dir, name):
     # the doc_id probe repartition keeps its full width after AQE: a
     # column-only repartition of a sub-MiB frame is coalesced back to
@@ -718,19 +720,18 @@ def _arrow_evals(df) -> list[str]:
     return [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
 
 
-def test_signature_frame_runs_one_arrow_pass_and_prunes(spark, sf_dir):
-    # the staged doc_signatures build evaluates all three signature
-    # UDFs in ONE Arrow pass, and a narrow select of the same lazy
-    # frame plans only the UDF it reads — the pruning every
-    # signatures() caller relies on
+def test_signature_builds_run_one_arrow_udf_call(spark, sf_dir):
+    # text becomes signatures in ONE Python UDF call per document: the
+    # staged doc_signatures build and the streaming admission keys each
+    # plan one ArrowEvalPython node evaluating one UDF — no per-column
+    # signature UDFs, and no second Arrow pass from a filter pushed
+    # below the UDF's projection
     from baronbatch_etl_spark.io import load_table
-    from baronbatch_etl_spark.operators import dedup as D
     from baronbatch_etl_spark.queries.catalog_llm import _signature_table
+    from baronbatch_etl_spark.streaming.ops import _doc_keys
 
     docs = load_table(spark, sf_dir, "documents")
-    (full,) = _arrow_evals(_signature_table(docs))
-    for udf in ("sig_and_shingles(", "simhash_fast(", "shingle_hashes_n("):
-        assert full.count(udf) == 1, full
-    (narrow,) = _arrow_evals(D.signatures(docs).select("doc_id", "sig", "sh"))
-    assert "sig_and_shingles(" in narrow
-    assert "simhash_fast(" not in narrow and "shingle_hashes_n(" not in narrow
+    batch = docs.select("doc_id", "text")
+    for df in (_signature_table(docs), _doc_keys(batch)):
+        (node,) = _arrow_evals(df)
+        assert len(re.findall(r"pythonUDF\d+#", node)) == 1, node

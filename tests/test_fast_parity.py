@@ -1,6 +1,8 @@
 """Bit-for-bit parity between the Arrow-vectorized signature UDFs and
 the pure-expression implementations (same integer arithmetic by
-construction; this guards both against drift)."""
+construction; this guards both against drift). The four text
+signatures (``sh``, ``sh4``, ``sig``, ``simhash``) are fields of the
+one signature kernel, ``text_signatures_fast``."""
 
 from __future__ import annotations
 
@@ -12,6 +14,7 @@ from baronbatch_etl_spark.operators import text as X
 from baronbatch_etl_spark.operators.fast_text import (
     doc_fingerprint_fast,
     make_cdc_chunk_rows_mapper,
+    text_signatures_fast,
 )
 from baronbatch_etl_spark.operators.text import POLY_P
 
@@ -25,6 +28,11 @@ TEXTS = [
     # utf-32 fast path and Spark's ascii() must agree beyond the BMP
     "hello \U0001F600 world \U0001F680 rocket launch pad",
     "\U0001F600\U0001F601 pair \U00010348 gothic letter here",
+    "x  y z w",  # interior double space → an empty token
+    " leading space then words",  # empty first token
+    "trailing space after words ",  # empty last token
+    "exactly three tokens",  # one 3-gram, no 4-gram
+    "exactly four tokens here",  # two 3-grams, one 4-gram
 ]
 
 
@@ -33,29 +41,29 @@ def _df(spark):
 
 
 def test_shingle_hash_parity(spark):
-    # the engine's 3-gram hashes are sig_and_shingles' ``sh``: sorted-
+    # the engine's 3-gram hashes are the kernel's ``sh``: sorted-
     # unique hash values (set semantics); compare as sets — every
     # consumer is order-insensitive
     df = _df(spark)
     out = df.select(
         X.shingle_hashes(F.col("text"), 3).alias("expr"),
-        D.sig_and_shingles_fast(F.col("text")).alias("x"),
+        text_signatures_fast(F.col("text")).alias("x"),
     ).collect()
     for r in out:
         assert sorted(set(r.expr)) == r.x.sh
 
 
 def test_shingle_hash_parity_width4(spark):
-    # the contamination path uses the 4-gram instance the signature
+    # the contamination path uses the 4-gram hashes the signature
     # frame stages as ``sh4``; same set-semantics comparison as the
     # width-3 test
     df = _df(spark)
     out = df.select(
         X.shingle_hashes(F.col("text"), 4).alias("expr"),
-        D.contam_shingles_fast(F.col("text")).alias("fast"),
+        text_signatures_fast(F.col("text")).alias("x"),
     ).collect()
     for r in out:
-        assert sorted(set(r.expr)) == r.fast
+        assert sorted(set(r.expr)) == r.x.sh4
 
 
 def test_fingerprint_parity(spark):
@@ -72,7 +80,7 @@ def test_minhash_parity(spark):
     df = _df(spark)
     out = df.select(
         D.minhash_signature(F.col("text")).alias("expr"),
-        D.sig_and_shingles_fast(F.col("text")).alias("x"),
+        text_signatures_fast(F.col("text")).alias("x"),
     ).collect()
     for r in out:
         assert r.expr == r.x.sig
@@ -82,10 +90,32 @@ def test_simhash_parity(spark):
     df = _df(spark)
     out = df.select(
         D.simhash(F.col("text")).alias("expr"),
-        D.simhash_fast(F.col("text")).alias("fast"),
+        text_signatures_fast(F.col("text")).alias("x"),
     ).collect()
     for r in out:
-        assert r.expr == r.fast
+        assert r.expr == r.x.simhash
+
+
+def test_signature_kernel_degenerate_batches():
+    # batch shapes Spark never sends to the tests above, fed straight
+    # to the kernel's pandas body: no rows, all-short docs, a null
+    import pandas as pd
+
+    kernel = text_signatures_fast.func
+    empty = kernel(pd.Series([], dtype=object))
+    assert len(empty) == 0
+    assert list(empty.columns) == ["sig", "sh", "sh4", "simhash"]
+
+    short = kernel(pd.Series(["a b", "", "x"]))
+    assert len(short) == 3
+    for r in short.itertuples():
+        assert list(r.sig) == [POLY_P] * D.MINHASH_K
+        assert list(r.sh) == [] and list(r.sh4) == []
+
+    got = kernel(pd.Series([None, ""], dtype=object))
+    for col in ("sig", "sh", "sh4"):
+        assert list(got[col][0]) == list(got[col][1])
+    assert got.simhash[0] == got.simhash[1]
 
 
 def _ref_cdc(text: str, modulus: int):
@@ -157,7 +187,7 @@ def test_sig_and_shingles_parity(spark):
     out = df.select(
         D.minhash_signature(F.col("text")).alias("sig1"),
         X.shingle_hashes(F.col("text"), 3).alias("sh1"),
-        D.sig_and_shingles_fast(F.col("text")).alias("x"),
+        text_signatures_fast(F.col("text")).alias("x"),
     ).collect()
     for r in out:
         assert r.sig1 == r.x.sig
