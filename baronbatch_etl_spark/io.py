@@ -290,12 +290,17 @@ def session_fixture(
         # ceil(est / FIXTURE_TARGET_FILE_BYTES) files. The shuffle
         # moves only the fixture itself, and values are row-local /
         # keyed-aggregate (partition-order independent), so the
-        # staged values are unaffected.
+        # staged values are unaffected. The build's own partition count
+        # is not asked for: under AQE that runs its shuffle stages in a
+        # job of their own, and the write then runs them again. So the
+        # estimate alone decides, against the core count a spread build
+        # runs at; a build already that narrow pays one shuffle of a
+        # frame under cores × FIXTURE_TARGET_FILE_BYTES.
         out = df
         nfiles = spread_width(
             plan_bytes(df), 1, bytes_per_part=FIXTURE_TARGET_FILE_BYTES
         )
-        if nfiles < out.rdd.getNumPartitions():
+        if nfiles < spark.sparkContext.defaultParallelism:
             out = out.repartition(nfiles)
         out.write.mode("overwrite").parquet(path)
         df = spark.read.parquet(path)

@@ -14,6 +14,11 @@ Every pair operator below reads that frame (or a row subset of it) as
 its first argument and never materializes it; see the contract in
 :func:`signatures`.
 
+One Hamming-blocking operator: :func:`hamming_pairs` blocks any
+fixed-width code on four pigeonhole blocks and verifies by popcount in
+the join condition. :func:`simhash_near_pairs` (60-bit SimHash) and
+``multimodal.fingerprint_near_pairs`` (56-bit payload aHash) call it.
+
 Scale design:
   * signatures are row-local — computed in the scan's own stage, no
     shuffle;
@@ -59,12 +64,6 @@ LSH_ROWS = MINHASH_K // LSH_BANDS
 #: oracle of d_edit_distance reads it too). edit_distance_pairs
 #: accepts any prefix_len <= this width exactly, and raises beyond it.
 STAGED_PREFIX_LEN = 64
-
-# The wide (two-family) SimHash fingerprint is what keeps the
-# pigeonhole blocks selective: 15-bit block keys ⇒ 32k buckets/block,
-# where an 8-bit key over a 32-bit simhash put ~n²/256-plus-correlation
-# candidate pairs through the verifier.
-SIMHASH_BLOCK_BITS = SIMHASH_BITS // 4  # 4 blocks: complete for r ≤ 3
 
 
 def signatures(docs: DataFrame) -> DataFrame:
@@ -507,10 +506,9 @@ def simhash(text: Column, bits: int = SIMHASH_BITS) -> Column:
 
 
 def simhash_near_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs by SimHash: block on the four 15-bit slices of
-    the 60-bit fingerprint (pigeonhole: any pair within hamming ≤ 3
-    has at least one untouched slice, so it collides in ≥1 block),
-    then verify candidates with popcount(xor) ≤ max_hamming.
+    """Near-dup pairs by SimHash: :func:`hamming_pairs` over the
+    60-bit fingerprint, whose four 15-bit blocks make the search
+    complete for hamming ≤ 3.
 
     Reads ``doc_id`` and ``simhash`` of a :func:`signatures` frame
     (renamed ``sh`` inside, where no shingle set is in scope)."""
@@ -522,16 +520,61 @@ def simhash_near_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
         )
     _require_sig_base(sigs, ("doc_id", "simhash"))
     base = sigs.selectExpr("doc_id", "simhash AS sh")
-    # SimHash bits are CORRELATED across similar-vocabulary docs, so
-    # block buckets skew beyond what uniform hashing suggests; 15-bit
-    # keys (32k buckets/block) keep the candidate multiset small where
-    # 8-bit keys put millions of pairs through the verifier. The
-    # verification itself evaluates INLINE in the join condition —
-    # popcount plus a first-colliding-block predicate that makes each
-    # qualifying pair come out exactly once — so no candidate row ever
-    # hits an exchange or a distinct: the whole operator is one
-    # broadcast/hash join probe in codegen.
-    blocks = base.selectExpr("doc_id", "sh", _SIMHASH_BLOCKS_EXPLODE_SQL)
+    return hamming_pairs(base, SIMHASH_BITS, max_hamming)
+
+
+def hamming_pairs(codes: DataFrame, bits: int, max_hamming: int) -> DataFrame:
+    """``(doc_a, doc_b, hamming)`` for every pair of ``(doc_id, sh)``
+    rows whose ``bits``-wide codes differ in at most ``max_hamming``
+    bits, ``doc_a < doc_b`` — the engine's one Hamming-blocking pair
+    operator (Manku, Jain and Das Sarma, WWW 2007: one block scheme
+    serves any fixed-width fingerprint). SimHash pairs and payload
+    aHash pairs both run on it.
+
+    The code splits into four ``bits // 4``-bit blocks, and a pair is a
+    candidate when it agrees on a whole block. Pigeonhole: a pair
+    within hamming ≤ 3 leaves at least one block untouched, so the
+    search is complete there; beyond 3 a pair is found exactly when a
+    block survives, the usual recall/cost dial of a perceptual code.
+
+    Code bits are CORRELATED across similar inputs, so block buckets
+    skew beyond what uniform hashing suggests; wide keys (15 bits at
+    60, 14 at 56) keep the candidate multiset small where 8-bit keys
+    put millions of pairs through the verifier. The verification
+    evaluates INLINE in the join condition — popcount plus a
+    first-colliding-block predicate that makes each qualifying pair
+    come out exactly once — so no candidate row ever hits an exchange
+    or a distinct: the whole operator is one broadcast/hash join probe
+    in codegen. ``codes`` feeds both join sides and is not
+    materialized here (the pair-operator contract of
+    :func:`signatures`)."""
+    width = bits // 4
+    mask = (1 << width) - 1
+
+    def block(sh: str, i: int) -> str:
+        return f"(shiftright({sh}, {width * i}) & {mask})"
+
+    blocks = codes.selectExpr(
+        "doc_id",
+        "sh",
+        "posexplode(array({})) AS (block, key)".format(
+            ", ".join(f"CAST({block('sh', i)} AS BIGINT)" for i in range(4))
+        ),
+    )
+    hamming = "bit_count(CAST((l.sh ^ r.sh) AS BIGINT))"
+    # l.block is the FIRST block where the two codes agree: all earlier
+    # blocks must differ, so each pair comes out exactly once
+    first_block = _fold_sql(
+        "OR",
+        [
+            _fold_sql(
+                "AND",
+                [f"(l.block = {k})"]
+                + [f"({block('l.sh', i)} != {block('r.sh', i)})" for i in range(k)],
+            )
+            for k in range(4)
+        ],
+    )
     # The build side stays unhinted: under the broadcast threshold
     # Spark broadcasts it; beyond, AQE falls back to a shuffle join
     # with skew splitting — both correct at their scale.
@@ -543,14 +586,14 @@ def simhash_near_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
             "(l.block = r.block)",
             "(l.key = r.key)",
             "(l.doc_id < r.doc_id)",
-            f"({_SIMHASH_HAMMING_SQL} <= {int(max_hamming)})",
-            _SIMHASH_FIRST_BLOCK_SQL,
+            f"({hamming} <= {int(max_hamming)})",
+            first_block,
         ],
     )
     return l.join(r, F.expr(verify)).selectExpr(
         "l.doc_id AS doc_a",
         "r.doc_id AS doc_b",
-        f"{_SIMHASH_HAMMING_SQL} AS hamming",
+        f"{hamming} AS hamming",
     )
 
 
@@ -559,36 +602,6 @@ def _fold_sql(op: str, terms: list[str]) -> str:
     operators; the SQL parser would balance an unparenthesized chain
     of four or more terms into a differently shaped plan."""
     return functools.reduce(lambda acc, t: f"({acc} {op} {t})", terms)
-
-
-def _simhash_block_sql(sh: str, i: int) -> str:
-    """The ``i``-th 15-bit slice of fingerprint column ``sh``."""
-    mask = (1 << SIMHASH_BLOCK_BITS) - 1
-    return f"(shiftright({sh}, {SIMHASH_BLOCK_BITS * i}) & {mask})"
-
-
-#: ``(block, key)`` rows of the four fingerprint slices, for selectExpr.
-_SIMHASH_BLOCKS_EXPLODE_SQL = "posexplode(array({})) AS (block, key)".format(
-    ", ".join(f"CAST({_simhash_block_sql('sh', i)} AS BIGINT)" for i in range(4))
-)
-_SIMHASH_HAMMING_SQL = "bit_count(CAST((l.sh ^ r.sh) AS BIGINT))"
-#: ``l.block`` is the FIRST slice where the two fingerprints agree: all
-#: earlier slices must differ, so each pair comes out exactly once
-#: (dedup without a distinct).
-_SIMHASH_FIRST_BLOCK_SQL = _fold_sql(
-    "OR",
-    [
-        _fold_sql(
-            "AND",
-            [f"(l.block = {k})"]
-            + [
-                f"({_simhash_block_sql('l.sh', i)} != {_simhash_block_sql('r.sh', i)})"
-                for i in range(k)
-            ],
-        )
-        for k in range(4)
-    ],
-)
 
 
 def ngram_jaccard_pairs(

@@ -11,6 +11,10 @@ runs end to end even in this imaging-library-free container, and the
 fake length-derived features remain the default for non-image fixture
 payloads. Everything around the decoder — schema, Arrow batch
 iteration, partitioning, output shape — is identical on every path.
+
+Near-duplicate media pairs (:func:`fingerprint_near_pairs`) run on the
+dedup family's one Hamming-blocking operator, ``dedup.hamming_pairs``,
+over a 56-bit payload aHash.
 """
 
 from __future__ import annotations
@@ -22,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from baronbatch_etl_spark.operators.dedup import hamming_pairs
 
 #: Typed metadata carried next to every binary payload.
 MEDIA_META = T.StructType(
@@ -386,64 +392,26 @@ def payload_fingerprints(media: DataFrame) -> DataFrame:
 
 
 def fingerprint_near_pairs(fps: DataFrame, max_hamming: int = 4) -> DataFrame:
-    """Near-duplicate media pairs by banded fingerprint blocking: the
-    56-bit code splits into 4 × 14-bit bands; candidates collide on at
-    least one whole band and are verified by popcount(xor).
+    """Near-duplicate media pairs ``(media_a, media_b, hamming)``:
+    :func:`dedup.hamming_pairs` over the 56-bit code, so candidates
+    collide on one of 4 × 14-bit bands and verify by popcount(xor)
+    inside the join condition, each pair once.
 
     Pigeonhole bound: 4 bands catch every pair with hamming ≤ 3 with
     certainty, and hamming-4 pairs exactly when the flipped bits leave
     one band intact — with a perceptual code that is the standard
     recall/cost dial (more bands = more recall, more candidates).
 
-    Scale shape (same as SimHash blocking): per-asset work is
-    row-local, candidates form on (band, key) buckets — never
-    all-pairs — and the verify is a per-candidate popcount. At 100 TB
-    the band exchange carries 4 rows of (14-bit key, id, code) per
-    asset; bucket sizes stay uniform because the code bits are
-    hash-mixed.
-
     ``fps`` is a ``(media_id, fp)`` frame, e.g.
-    :func:`payload_fingerprints`. It feeds both join sides, so a lazy
-    fingerprint frame computes twice — deliberate: one Arrow pass is
-    cheaper than pinning the fingerprint frame in executor storage for
-    the session (an unbounded ``cache()`` here leaked across a
-    138-query catalog run); a caller that already materialized
-    fingerprints passes the stored frame.
+    :func:`payload_fingerprints`. It feeds both join sides and is not
+    materialized here: a caller with a computed fingerprint frame (a
+    Python UDF, say) wraps it in ``io.materialize`` so the code is
+    computed once per asset.
     """
-    blocks = fps.select(
-        "media_id",
-        "fp",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("fp"), 14 * j).bitwiseAND(F.lit(16383))
-                    for j in range(4)
-                ]
-            )
-        ).alias("block", "key"),
+    codes = fps.selectExpr("media_id AS doc_id", "fp AS sh")
+    return hamming_pairs(codes, AHASH_BITS, max_hamming).selectExpr(
+        "doc_a AS media_a", "doc_b AS media_b", "hamming"
     )
-    left = blocks.select(
-        F.col("media_id").alias("media_a"),
-        F.col("fp").alias("fp_a"),
-        "block",
-        "key",
-    )
-    right = blocks.select(
-        F.col("media_id").alias("media_b"),
-        F.col("fp").alias("fp_b"),
-        "block",
-        "key",
-    )
-    cand = (
-        left.join(right, ["block", "key"])
-        .filter(F.col("media_a") < F.col("media_b"))
-        .select("media_a", "media_b", "fp_a", "fp_b")
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    return cand.select(
-        "media_a", "media_b", hamming.alias("hamming")
-    ).filter(F.col("hamming") <= max_hamming)
 
 
 def sql_payload_ahash(expr: str = "text") -> str:

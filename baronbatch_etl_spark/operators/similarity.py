@@ -197,7 +197,16 @@ def srp_topk(
         "label",
         q_cols=[srp(F.col("embedding")).alias("q_code")],
         corpus_cols=[srp(F.col("embedding")).alias("_code")],
-        on=F.bit_count(F.col("_code").bitwiseXOR(F.col("q_code"))) <= radius,
+        # null-tolerant on purpose: a plain bit_count(...) <= radius
+        # lets Catalyst infer isnotnull on both codes and push that
+        # filter below the UDF projection, which then runs SRP in a
+        # second Arrow pass per side. The UDF never returns NULL, so
+        # the coalesce changes no row.
+        on=F.coalesce(
+            F.bit_count(F.col("_code").bitwiseXOR(F.col("q_code"))),
+            F.lit(planes + 1),
+        )
+        <= radius,
     )
     return _topk(scored, "cos_sim", k)
 

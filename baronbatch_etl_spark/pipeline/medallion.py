@@ -68,11 +68,15 @@ def _resolve_participant(exploded: DataFrame, summoners: DataFrame) -> DataFrame
         norm_nfkc(dim_tag).alias("s_norm_tag"),
     )
 
+    # normalize on the exploded side, below the dim join: computed
+    # above it, one copy of each UDF call is pulled into the join's
+    # pushed-down projection and another runs above the join, so every
+    # name crossed to Python twice
     p = (
-        exploded.join(F.broadcast(dim), exploded["puuid"] == dim["s_puuid"])
-        .withColumn("p_norm_name", norm_nfkc(F.col("p.riotIdGameName")))
+        exploded.withColumn("p_norm_name", norm_nfkc(F.col("p.riotIdGameName")))
         .withColumn("p_norm_tag", norm_nfkc(F.col("p.riotIdTagLine")))
         .withColumn("p_norm_legacy", norm_nfkc(F.col("p.summonerName")))
+        .join(F.broadcast(dim), F.col("puuid") == F.col("s_puuid"))
     )
     stage = (
         F.when(F.col("p.puuid") == F.col("puuid"), 1)

@@ -713,6 +713,34 @@ _SQL_SIMHASH_TH = (
 )
 
 
+def _sql_hamming_pairs(
+    src: str, item: str, code: str, bits: int, max_hamming: int
+) -> str:
+    """DuckDB twin of ``dedup.hamming_pairs``: the ``blocks`` and
+    ``cand`` CTEs and the final SELECT over CTE ``src`` of
+    ``({item}_id, {code})`` rows — four ``bits // 4``-bit blocks, a
+    DISTINCT candidate set, popcount verify. Output columns are
+    ``{item}_a``, ``{item}_b`` and ``hamming``."""
+    width = bits // 4
+    mask = (1 << width) - 1
+    keys = ", ".join(f"({code} >> {width * i}) & {mask}" for i in range(4))
+    ham = f"bit_count(xor({code}_a, {code}_b))"
+    return f"""blocks AS (
+    SELECT {item}_id, {code}, u.block, u.key
+    FROM {src}, LATERAL (
+        SELECT unnest(range(0, 4)) AS block, unnest([{keys}]) AS key
+    ) u
+),
+cand AS (
+    SELECT DISTINCT l.{item}_id AS {item}_a, r.{item}_id AS {item}_b,
+           l.{code} AS {code}_a, r.{code} AS {code}_b
+    FROM blocks l JOIN blocks r
+      ON l.block = r.block AND l.key = r.key AND l.{item}_id < r.{item}_id
+)
+SELECT {item}_a, {item}_b, {ham} AS hamming
+FROM cand WHERE {ham} <= {max_hamming}"""
+
+
 @register(
     "d_simhash",
     oracle=f"""
@@ -734,22 +762,7 @@ def d_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH th AS ({_SQL_SIMHASH_TH}),
 sim AS (SELECT doc_id, ({_simhash_expr_sql()}) AS sh FROM th),
-blocks AS (
-    SELECT doc_id, sh, u.block, u.key
-    FROM sim, LATERAL (
-        SELECT unnest(range(0, 4)) AS block,
-               unnest([(sh >> 0) & 32767, (sh >> 15) & 32767,
-                       (sh >> 30) & 32767, (sh >> 45) & 32767]) AS key
-    ) u
-),
-cand AS (
-    SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
-           l.sh AS sh_a, r.sh AS sh_b
-    FROM blocks l JOIN blocks r
-      ON l.block = r.block AND l.key = r.key AND l.doc_id < r.doc_id
-)
-SELECT doc_a, doc_b, bit_count(xor(sh_a, sh_b)) AS hamming
-FROM cand WHERE bit_count(xor(sh_a, sh_b)) <= 3
+{_sql_hamming_pairs("sim", "doc", "sh", D.SIMHASH_BITS, 3)}
 """,
     tags=("llm", "dedup", "simhash"),
 )
@@ -1250,22 +1263,7 @@ WITH ph AS (
     SELECT doc_id AS media_id, ({M.sql_payload_ahash('text')}) AS fp
     FROM documents
 ),
-blocks AS (
-    SELECT media_id, fp, u.block, u.key
-    FROM ph, LATERAL (
-        SELECT unnest(range(0, 4)) AS block,
-               unnest([(fp >> 0) & 16383, (fp >> 14) & 16383,
-                       (fp >> 28) & 16383, (fp >> 42) & 16383]) AS key
-    ) u
-),
-cand AS (
-    SELECT DISTINCT l.media_id AS media_a, r.media_id AS media_b,
-           l.fp AS fp_a, r.fp AS fp_b
-    FROM blocks l JOIN blocks r
-      ON l.block = r.block AND l.key = r.key AND l.media_id < r.media_id
-)
-SELECT media_a, media_b, bit_count(xor(fp_a, fp_b)) AS hamming
-FROM cand WHERE bit_count(xor(fp_a, fp_b)) <= 4
+{_sql_hamming_pairs("ph", "media", "fp", M.AHASH_BITS, 4)}
 """,
     tags=("llm", "multimodal", "dedup"),
 )
@@ -1278,7 +1276,10 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/multimodal.payload_fingerprints). The oracle replays the
     identical folds over the text the payload encodes."""
     media = M.documents_as_media(load_table(spark, sf_dir, "documents"))
-    return M.fingerprint_near_pairs(M.payload_fingerprints(media), max_hamming=4)
+    # the fingerprint frame feeds both join sides: materialized, the
+    # aHash UDF runs once per asset, in the checkpoint's own pass
+    fps = materialize(M.payload_fingerprints(media))
+    return M.fingerprint_near_pairs(fps, max_hamming=4)
 
 
 # ---------------------------------------------------------------------------

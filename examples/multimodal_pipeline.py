@@ -29,7 +29,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import numpy as np  # noqa: E402
 
-from baronbatch_etl_spark.io import DEFAULT_SF_DIR, load_table  # noqa: E402
+from baronbatch_etl_spark.io import DEFAULT_SF_DIR, load_table, materialize  # noqa: E402
 from baronbatch_etl_spark.operators import multimodal as M  # noqa: E402
 from baronbatch_etl_spark.session import get_spark  # noqa: E402
 from baronbatch_etl_spark.sources.readers import read_binary_assets  # noqa: E402
@@ -76,9 +76,9 @@ def main() -> None:
 
     print("== 4. near-dup lane over documents (banded aHash) ==")
     docs = load_table(spark, sf_dir, "documents").limit(500)
-    pairs = M.fingerprint_near_pairs(
-        M.payload_fingerprints(M.documents_as_media(docs)), max_hamming=4
-    ).collect()
+    # both join sides read the fingerprints: computed once, stored
+    fps = materialize(M.payload_fingerprints(M.documents_as_media(docs)))
+    pairs = M.fingerprint_near_pairs(fps, max_hamming=4).collect()
     for row in pairs[:10]:
         print(row)
     print(f"near-dup candidate pairs: {len(pairs)}")

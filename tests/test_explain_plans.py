@@ -402,10 +402,18 @@ def test_bigram_novelty_is_single_pass_no_join(spark, registry, sf_dir):
 
 
 def test_phash_fingerprint_is_arrow_not_hof(spark, registry, sf_dir):
-    # the aHash must run as Arrow-vectorized pandas UDF passes (one
-    # per join side), not as interpreted higher-order aggregate folds
+    # the aHash must run as an Arrow-vectorized pandas UDF pass, not as
+    # interpreted higher-order aggregate folds. mm_phash_dedup
+    # materializes the fingerprint frame, so the UDF runs in that
+    # frame's own plan and the query reads the stored rows
+    from baronbatch_etl_spark.io import load_table
+    from baronbatch_etl_spark.operators import multimodal as M
+
+    media = M.documents_as_media(load_table(spark, sf_dir, "documents"))
+    fps = M.payload_fingerprints(media)
+    fps.collect()
+    assert "ArrowEvalPython" in fps._jdf.queryExecution().executedPlan().toString()
     plan = _plan(spark, registry, "mm_phash_dedup", sf_dir)
-    assert "ArrowEvalPython" in plan
     assert "aggregate(" not in plan, "HOF fold found in the hot path"
     assert "CartesianProduct" not in plan
 
@@ -517,7 +525,11 @@ def test_cusum_argmax_is_integer_decimal(spark, registry, sf_dir):
 # shapes and prove the five rewritten queries are clean.
 # ---------------------------------------------------------------------------
 
-from tools.explain_audit import _unpartitioned_windows  # noqa: E402
+from tools.explain_audit import (  # noqa: E402
+    _python_udf_calls,
+    _unpartitioned_windows,
+    repeated_python_udf_calls,
+)
 
 
 def test_unpartitioned_window_detector_shapes():
@@ -637,12 +649,15 @@ def test_minhash_lsh_band_join_shape(spark, registry, sf_dir):
     assert "REPARTITION_BY_NUM" in final
 
 
-def test_simhash_pairs_verify_runs_in_join_condition(spark, registry, sf_dir):
-    # popcount and the first-colliding-block predicate evaluate inside
-    # the (block, key) join's condition: no aggregate and no exchange
+@pytest.mark.parametrize("name", ["d_simhash_pairs", "mm_phash_dedup"])
+def test_simhash_pairs_verify_runs_in_join_condition(spark, registry, sf_dir, name):
+    # both Hamming-blocking queries run dedup.hamming_pairs: popcount
+    # and the first-colliding-block predicate evaluate inside the
+    # (block, key) join's condition, so no aggregate and no exchange
     # ever sees a candidate row (only the doc_id repartition and the
     # build side's broadcast sit below the join)
-    plan = _plan(spark, registry, "d_simhash_pairs", sf_dir)
+    radius = {"d_simhash_pairs": 3, "mm_phash_dedup": 4}[name]
+    plan = _plan(spark, registry, name, sf_dir)
     final = plan.split("== Initial Plan ==")[0]
     join = re.search(
         r"HashJoin \[block#\d+, key#\d+L\], \[block#\d+, key#\d+L\], "
@@ -651,7 +666,7 @@ def test_simhash_pairs_verify_runs_in_join_condition(spark, registry, sf_dir):
     )
     assert join is not None
     cond = join.group(1)
-    assert re.search(r"bit_count\(\(sh#\d+L \^ sh#\d+L\)\) <= 3", cond)
+    assert re.search(rf"bit_count\(\(sh#\d+L \^ sh#\d+L\)\) <= {radius}", cond)
     assert re.search(r"\(block#\d+ = 3\) AND NOT", cond)
     above_join = final[: join.start()]
     assert "Exchange" not in above_join
@@ -660,23 +675,20 @@ def test_simhash_pairs_verify_runs_in_join_condition(spark, registry, sf_dir):
     assert len(shuffles) == 1 and re.fullmatch(r"doc_id#\d+L?, \d+", shuffles[0])
 
 
-def _python_udf_calls(final: str) -> list[list[str]]:
-    """The Python UDF names each EvalPython node of a plan evaluates,
-    one list per node."""
-    nodes = re.findall(r"(?:Arrow|Batch)EvalPython \[([^\]]*)\]", final)
-    return [re.findall(r"(\w+)\(", node) for node in nodes]
-
-
-@pytest.mark.parametrize(
-    "name", ["d_minhash_lsh", "d_ngram_jaccard", "t_char_entropy"]
-)
+@pytest.mark.parametrize("name", sorted(load_all()))
 def test_python_udfs_run_once_per_row(spark, registry, sf_dir, name):
-    # a filter on a UDF result is pushed below its projection, and
-    # Catalyst then evaluates the UDF in a second EvalPython node; the
-    # pair operators verify in the JVM and run no Python at all
+    # every registry query: one UDF call on one input sits in at most
+    # one EvalPython node. A filter on a UDF result is pushed below its
+    # projection, or a join pulls a copy of the call into its own
+    # projection, and Catalyst then evaluates the UDF in a second node
     final = _plan(spark, registry, name, sf_dir).split("== Initial Plan ==")[0]
+    twice = repeated_python_udf_calls(final)
+    assert twice == [], f"{name}: {twice}"
+    if name not in ("d_minhash_lsh", "d_ngram_jaccard", "t_char_entropy"):
+        return
+    # the pair operators verify in the JVM and run no Python at all
     calls = _python_udf_calls(final)
-    flat = [c for node in calls for c in node]
+    flat = [c.split("(")[0] for node in calls for c in node]
     assert len(flat) == len(set(flat)), f"{name}: {calls}"
     if name.startswith("d_"):
         assert calls == [], f"{name}: {calls}"
@@ -692,7 +704,7 @@ def test_bpe_tokens_runs_its_regexp_once(spark, registry, sf_dir):
 
 
 @pytest.mark.parametrize(
-    "name", ["d_minhash_lsh", "d_simhash_pairs", "d_ngram_jaccard"]
+    "name", ["d_minhash_lsh", "d_simhash_pairs", "d_ngram_jaccard", "mm_phash_dedup"]
 )
 def test_pair_probe_repartition_is_not_coalesced(spark, registry, sf_dir, name):
     # the doc_id probe repartition keeps its full width after AQE: a

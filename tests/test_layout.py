@@ -452,6 +452,36 @@ def _jobs_launched(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def test_session_fixture_sizes_its_write_without_a_job(spark, monkeypatch):
+    """Deciding the staged file count must not run the build: under AQE
+    asking a frame with an exchange for its partition count runs the
+    shuffle stages in a job of their own, which the write then repeats.
+    The write is stubbed to stop, so every job counted is the
+    decision's."""
+    import pytest as _pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from baronbatch_etl_spark import io as bio
+
+    class _Stop(Exception):
+        pass
+
+    def stop(self, *args, **kwargs):
+        raise _Stop
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", stop)
+
+    def build():
+        return spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+
+    def stage():
+        with _pytest.raises(_Stop):
+            bio.session_fixture(spark, "/fake/sf_nojob", "test_fixture_nojob", build)
+
+    _, n_jobs = _jobs_launched(spark, stage)
+    assert n_jobs == 0
+
+
 def test_load_table_infers_schema_once_per_session(spark, tmp_path):
     """A repeat load of a local parquet file reuses the schema the
     first load inferred: no inference job, same schema and rows."""

@@ -12,7 +12,9 @@ and checks the scale posture:
   * no unpartitioned WindowExec over a data-grain frame (the r8
     verdict's scale-killer class) — the only allowed global windows
     are the ranking utility's ≤P-row offsets prefix-sum (ordered by
-    `_gr_pid`) and the GLOBAL_WINDOW_OK bounded-grain entries.
+    `_gr_pid`) and the GLOBAL_WINDOW_OK bounded-grain entries;
+  * no Python UDF runs twice per row: one call of one UDF on one input
+    appears in at most one EvalPython node.
 
 Usage: python tools/explain_audit.py [sf_dir] [query ...]
 Writes a per-query summary and exits 1 on hard violations.
@@ -22,6 +24,7 @@ from __future__ import annotations
 
 import re
 import sys
+from collections import Counter
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -194,6 +197,39 @@ def _unpartitioned_windows(plan: str) -> list[str]:
     return out
 
 
+def _python_udf_calls(plan: str) -> list[list[str]]:
+    """The Python UDF calls each EvalPython node of ``plan`` evaluates,
+    one list per node. A call is its name and argument text with the
+    result id cut off (``srp_code_fast(embedding#1)``), so two nodes
+    evaluating one UDF on the same attributes give equal calls, and one
+    UDF on two inputs gives two."""
+    nodes = []
+    for m in re.finditer(r"(?:Arrow|Batch)EvalPython \[", plan):
+        calls, depth, cur = [], 0, []
+        for ch in plan[m.end():]:
+            if ch in "([":
+                depth += 1
+            elif ch in ")]":
+                if depth == 0:
+                    break
+                depth -= 1
+            elif ch == "," and depth == 0:
+                calls.append("".join(cur))
+                cur = []
+                continue
+            cur.append(ch)
+        calls.append("".join(cur))
+        nodes.append([re.sub(r"#\d+L?$", "", c.strip()) for c in calls])
+    return nodes
+
+
+def repeated_python_udf_calls(plan: str) -> list[str]:
+    """Python UDF calls that more than one EvalPython node of ``plan``
+    evaluates: each such call crosses every row to Python again."""
+    nodes = Counter(call for node in _python_udf_calls(plan) for call in set(node))
+    return sorted(call for call, n in nodes.items() if n > 1)
+
+
 def audit(name: str, plan: str) -> list[str]:
     problems = []
     if "CartesianProduct" in plan and name not in CROSS_OK:
@@ -208,6 +244,11 @@ def audit(name: str, plan: str) -> list[str]:
     if gw and name not in GLOBAL_WINDOW_OK:
         problems.append(
             f"unpartitioned WindowExec over {'; '.join(gw)}"
+        )
+    twice = repeated_python_udf_calls(plan)
+    if twice:
+        problems.append(
+            f"Python UDF in more than one EvalPython node: {'; '.join(twice)}"
         )
     n_smj = plan.count("SortMergeJoin")
     n_bhj = plan.count("BroadcastHashJoin")
