@@ -14,6 +14,15 @@ Every pair operator below reads that frame (or a row subset of it) as
 its first argument and never materializes it; see the contract in
 :func:`signatures`.
 
+One near-dup pipeline: :func:`_blocked_pairs` is the one blocking
+probe (LSH band keys, n-gram prefix tokens); :func:`_pair_join` is the
+one verify join, on which :func:`_jaccard_verified` is the one
+exact-Jaccard verify and edit distance and containment score their
+own way; :func:`keep_one` is the one exact-then-near keep-one stage
+(the curation survivors and the dedup report); and
+:data:`NEAR_DUP_JACCARD` is the one near-dup cut, which the DuckDB
+oracles render too.
+
 One Hamming-blocking operator: :func:`hamming_pairs` blocks any
 fixed-width code on four pigeonhole blocks and verifies by popcount in
 the join condition. :func:`simhash_near_pairs` (60-bit SimHash) and
@@ -184,6 +193,58 @@ JACCARD_SQL = (
 )
 
 
+#: The near-duplicate cut of the MinHash-LSH family: exact shingle
+#: Jaccard at or above it. The default of :func:`minhash_lsh_pairs`;
+#: the DuckDB oracles render the same constant.
+NEAR_DUP_JACCARD = 0.8
+
+
+def _blocked_pairs(keys: DataFrame, *on: str) -> DataFrame:
+    """Distinct ``(doc_a, doc_b)``, ``doc_a < doc_b``, of the rows of
+    ``keys`` (``doc_id`` plus blocking columns) that meet every SQL
+    condition in ``on`` over the join aliases ``l`` and ``r`` — the one
+    blocking probe of the candidate generators (LSH bands, n-gram
+    prefixes).
+
+    The probe side is :func:`io.hash_spread` on ``doc_id``, which also
+    clusters the candidate ``distinct`` (a pair can collide on several
+    keys), so that needs no second exchange — and AQE cannot coalesce
+    the explicit count down to one task. ``keys`` feeds both join
+    sides and is not materialized here."""
+    l = hash_spread(keys, "doc_id").alias("l")
+    r = keys.alias("r")
+    cond = _fold_sql("AND", [f"({c})" for c in (*on, "l.doc_id < r.doc_id")])
+    return (
+        l.join(r, F.expr(cond))
+        .selectExpr("l.doc_id AS doc_a", "r.doc_id AS doc_b")
+        .distinct()
+    )
+
+
+def _pair_join(cand: DataFrame, side: DataFrame, col: str) -> DataFrame:
+    """``cand ⋈ (doc_a, col_a) ⋈ (doc_b, col_b)``: the one verify join
+    that hands each candidate pair the ``col`` of both documents of
+    ``side`` (a ``doc_id``-keyed frame), for the caller's scoring."""
+    a = side.selectExpr("doc_id AS doc_a", f"{col} AS {col}_a")
+    b = side.selectExpr("doc_id AS doc_b", f"{col} AS {col}_b")
+    return cand.join(a, "doc_a").join(b, "doc_b")
+
+
+def _jaccard_verified(
+    cand: DataFrame, side: DataFrame, threshold: float
+) -> DataFrame:
+    """``(doc_a, doc_b, jaccard)`` of the candidates whose shingle sets
+    (``sh`` of ``side``) reach ``threshold`` under :data:`JACCARD_SQL`
+    — the one exact-Jaccard verify, evaluated in the JVM."""
+    return (
+        _pair_join(cand, side, "sh")
+        .selectExpr("doc_a", "doc_b", f"{JACCARD_SQL} AS jaccard")
+        # a DOUBLE literal: a bare 0.8 parses as a DECIMAL in SQL,
+        # which would put a cast on the compared column
+        .where(f"jaccard >= {float(threshold)!r}D")
+    )
+
+
 def lsh_candidate_pairs(base: DataFrame) -> DataFrame:
     """Distinct (doc_a, doc_b) LSH band-collision candidates from a
     (doc_id, sig, sh) signature frame — the shared candidate generator
@@ -197,18 +258,7 @@ def lsh_candidate_pairs(base: DataFrame) -> DataFrame:
     banded = base.where("size(sh) > 0").selectExpr(
         "doc_id", LSH_BANDS_EXPLODE_SQL
     )
-    # the doc_id hash also clusters the candidate distinct below, so
-    # it needs no second exchange
-    left = hash_spread(banded, "doc_id").alias("l")
-    right = banded.alias("r")
-    return (
-        left.join(
-            right,
-            F.expr("l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id"),
-        )
-        .selectExpr("l.doc_id AS doc_a", "r.doc_id AS doc_b")
-        .distinct()
-    )
+    return _blocked_pairs(banded, "l.band = r.band", "l.key = r.key")
 
 
 def _require_sig_base(sigs: DataFrame, cols: tuple[str, ...]) -> None:
@@ -224,7 +274,9 @@ def _require_sig_base(sigs: DataFrame, cols: tuple[str, ...]) -> None:
         )
 
 
-def minhash_lsh_pairs(sigs: DataFrame, threshold: float = 0.8) -> DataFrame:
+def minhash_lsh_pairs(
+    sigs: DataFrame, threshold: float = NEAR_DUP_JACCARD
+) -> DataFrame:
     """Near-duplicate pairs via MinHash-LSH banding, verified by exact
     shingle Jaccard ≥ threshold, over a :func:`signatures` frame (needs
     ``doc_id``, ``sig``, ``sh``).
@@ -237,17 +289,7 @@ def minhash_lsh_pairs(sigs: DataFrame, threshold: float = 0.8) -> DataFrame:
     staged frame is never read wider than a branch needs."""
     _require_sig_base(sigs, ("doc_id", "sig", "sh"))
     base = sigs.select("doc_id", "sig", "sh")
-    cand = lsh_candidate_pairs(base)
-    a = base.selectExpr("doc_id AS doc_a", "sh AS sh_a")
-    b = base.selectExpr("doc_id AS doc_b", "sh AS sh_b")
-    return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .selectExpr("doc_a", "doc_b", f"{JACCARD_SQL} AS jaccard")
-        # a DOUBLE literal: a bare 0.8 parses as a DECIMAL in SQL,
-        # which would put a cast on the compared column
-        .where(f"jaccard >= {float(threshold)!r}D")
-    )
+    return _jaccard_verified(lsh_candidate_pairs(base), base, threshold)
 
 
 def containment_pairs(
@@ -308,18 +350,12 @@ def containment_pairs(
         )
         .distinct()
     )
-    a = base.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = base.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    j = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
-            F.size("sh_a").alias("na"),
-            F.size("sh_b").alias("nb"),
-        )
+    j = _pair_join(cand, base, "sh").select(
+        "doc_a",
+        "doc_b",
+        F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
+        F.size("sh_a").alias("na"),
+        F.size("sh_b").alias("nb"),
     )
     return (
         j.filter(
@@ -386,13 +422,9 @@ def edit_distance_pairs(
         "sig",
         "sh",
     )
-    cand = lsh_candidate_pairs(base)
-    a = base.select(F.col("doc_id").alias("doc_a"), F.col("pfx").alias("pfx_a"))
-    b = base.select(F.col("doc_id").alias("doc_b"), F.col("pfx").alias("pfx_b"))
     dist = F.levenshtein(F.col("pfx_a"), F.col("pfx_b"), max_dist)
     return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
+        _pair_join(lsh_candidate_pairs(base), base, "pfx")
         .select(
             "doc_a",
             "doc_b",
@@ -479,6 +511,34 @@ def near_dup_removed(pairs: DataFrame) -> DataFrame:
     return comp.filter(F.col("node") != F.col("comp")).select(
         F.col("node").alias("doc_id")
     )
+
+
+def keep_one(sigs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The exact-then-near keep-one stage over a signature frame that
+    carries ``doc_id``, ``md5``, ``sig`` and ``sh``: ``(kept,
+    removed)``, two ``doc_id`` frames.
+
+    * ``kept`` — the minimum ``doc_id`` per ``md5`` (exact dedup),
+      materialized, since the near stage and the caller both read it;
+    * ``removed`` — :func:`near_dup_removed` of the
+      :func:`minhash_lsh_pairs` of ``sigs`` restricted to ``kept``.
+
+    Survivors are ``kept`` minus ``removed``. The restriction is a
+    ``left_semi`` join, which Catalyst sizes as its left side: an inner
+    join to an id set is estimated as a product (about 10^16 bytes on a
+    sub-MB corpus without CBO), and :func:`io.hash_spread` would then
+    give the LSH probe every shuffle partition. A caller that gates
+    ``sigs`` (the curation quality filter) passes the gated frame."""
+    kept = materialize(
+        sigs.select("doc_id", "md5")
+        .groupBy("md5")
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
+    )
+    removed = near_dup_removed(
+        minhash_lsh_pairs(sigs.join(kept, "doc_id", "left_semi"))
+    )
+    return kept, removed
 
 
 def simhash(text: Column, bits: int = SIMHASH_BITS) -> Column:
@@ -641,35 +701,13 @@ def ngram_jaccard_pairs(
         "doc_id", "lang", "n_chars",
         F.explode(F.slice("sh", F.lit(1), pref_len)).alias("tok"),
     )
-    # the doc_id hash also clusters the candidate distinct below, so it
-    # needs no second exchange (AQE would coalesce that one to a task)
-    a = hash_spread(pref, "doc_id").alias("a")
-    b = pref.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.tok") == F.col("b.tok"))
-            & (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (
-                F.abs(F.col("a.n_chars") - F.col("b.n_chars"))
-                <= max_char_delta
-            ),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()  # a pair can share several prefix hashes
+    cand = _blocked_pairs(
+        pref,
+        "l.tok = r.tok",
+        "l.lang = r.lang",
+        f"abs(l.n_chars - r.n_chars) <= {int(max_char_delta)}",
     )
-    return (
-        cand.join(hashed.select(F.col("doc_id").alias("doc_a"),
-                                F.col("sh").alias("sh_a")), "doc_a")
-        .join(hashed.select(F.col("doc_id").alias("doc_b"),
-                            F.col("sh").alias("sh_b")), "doc_b")
-        .selectExpr("doc_a", "doc_b", f"{JACCARD_SQL} AS jaccard")
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_verified(cand, hashed, threshold)
 
 
 # --- exact repeated-span detection (substring-level dedup) -----------------

@@ -43,9 +43,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from baronbatch_etl_spark.io import plan_bytes, spread_width
+from baronbatch_etl_spark.io import materialize, plan_bytes, spread_width
 
 # Reserved infra column names. `_gr_pid` also serves as the plan-audit
 # allowlist marker: tools/explain_audit.py accepts an unpartitioned
@@ -94,19 +93,14 @@ def global_row_number(
     tagged frame — the pid→offset map must describe the exact
     partitioning the sequence numbers were minted under.
 
-    ``df`` and the tagged frame are cached at MEMORY_AND_DISK. The
-    plan has three physical consumers of the input — the range
+    ``df`` and the tagged frame are each cut by :func:`io.materialize`.
+    The plan has three physical consumers of the input — the range
     sampler, the offsets branch, and the output branch — and Catalyst
     cannot ReusedExchange across them (column pruning gives each
-    branch a different exchange subtree), so without caching the
+    branch a different exchange subtree), so without the cut the
     ENTIRE upstream runs up to 3× per rank and compounds under
-    chained ntiles. The cached frames are the rank input itself — an
-    already-aggregated grain orders of magnitude smaller than the
-    fact/corpus tables — so MEMORY_AND_DISK across a cluster is
-    cheap, lineage stays intact (executor loss = recompute, not job
-    failure), and upstream runs exactly once. The caches must outlive
-    this LAZY frame's action, so a long-lived session drops them with
-    ``spark.catalog.clearCache()`` between actions.
+    chained ntiles; the tagged cut also pins ONE pid/seq assignment
+    for both the offsets and the output branch.
     """
     spark = df.sparkSession
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
@@ -116,7 +110,7 @@ def global_row_number(
         plan_bytes(df), 2, cap, _BYTES_PER_RANGE_PARTITION
     )
     cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    df = materialize(df)
     ranged = df.repartitionByRange(parts, *cols).sortWithinPartitions(
         *cols
     )
@@ -129,10 +123,8 @@ def global_row_number(
         }
     )
     # both branches (offsets + output) read the materialized
-    # post-shuffle frame instead of re-running the exchange; this
-    # also pins ONE pid/seq assignment by construction rather than
-    # by recompute determinism
-    tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
+    # post-shuffle frame instead of re-running the exchange
+    tagged = materialize(tagged)
     counts = tagged.groupBy(_PID).agg(F.count("*").alias(_CNT))
     # prefix-sum over ONE ROW PER RANGE PARTITION — bounded by the
     # cluster's partition count (P), not by the data

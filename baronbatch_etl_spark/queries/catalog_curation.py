@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from baronbatch_etl_spark.io import load_table, materialize, spread
+from baronbatch_etl_spark.io import load_table, spread
 from baronbatch_etl_spark.operators import dedup as D
 from baronbatch_etl_spark.operators import ranking as R
 from baronbatch_etl_spark.operators import text as X
@@ -728,34 +728,17 @@ def curate_survivors(sigs: DataFrame) -> DataFrame:
     digest AND the LSH stage read row-local per-document columns
     (qscore, md5, sig, sh) from storage instead of re-scanning and
     re-hashing the full text per query, while the survivor DERIVATION
-    (digest group-min, banding join, verification, component
-    propagation, anti-join) still runs in-plan here, per query. The
+    (``dedup.keep_one`` over the quality-gated rows, then the
+    semi/anti joins of its two id sets) still runs per query. The
     returned frame carries (doc_id, lang, n_chars, n_tok) — no text
     column at all, so nothing downstream ever moves document bodies."""
-    # pruned fixture scan: (doc_id, lang, n_chars, n_tok, qscore, md5)
-    # — narrow columns, but the digest group-min is still a shuffle
-    # with several consumer branches (LSH input, the anti-join side,
-    # the caller's stats chain), so the survivor frame is
-    # materialized; cheap, since it carries no text
-    qual = sigs.select(
-        "doc_id", "lang", "n_chars", "n_tok", "qscore", "md5"
-    ).filter(F.col("qscore") >= X.QUALITY_MIN)
-    keep = (
-        qual.select("doc_id", F.col("md5").alias("text_md5"))
-        .groupBy("text_md5")
-        .agg(F.min("doc_id").alias("doc_id"))
+    qual = sigs.filter(F.col("qscore") >= X.QUALITY_MIN)
+    kept, removed = D.keep_one(qual)
+    return (
+        qual.select("doc_id", "lang", "n_chars", "n_tok")
+        .join(kept, "doc_id", "left_semi")
+        .join(removed, "doc_id", "left_anti")
     )
-    sdocs = materialize(
-        qual.select("doc_id", "lang", "n_chars", "n_tok").join(
-            keep.select("doc_id"), "doc_id"
-        )
-    )
-    removed = D.near_dup_removed(
-        D.minhash_lsh_pairs(
-            sigs.join(sdocs.select("doc_id"), "doc_id"), threshold=0.8
-        )
-    )
-    return sdocs.join(removed, "doc_id", "left_anti")
 
 
 @register(
@@ -1194,7 +1177,7 @@ def t_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     a fresh coin.
     """
     sigs = L._doc_signatures(spark, sf_dir)
-    pairs = D.minhash_lsh_pairs(sigs, threshold=0.8)
+    pairs = D.minhash_lsh_pairs(sigs)
     comp = D.connected_components(pairs).withColumnRenamed("node", "doc_id")
     # the universe of doc_ids comes from the fixture's pruned id
     # column — one row per document by construction, so the left

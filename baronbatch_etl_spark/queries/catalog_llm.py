@@ -367,7 +367,7 @@ pairs AS (
     JOIN sh a ON c.doc_a = a.doc_id
     JOIN sh b ON c.doc_b = b.doc_id
     WHERE len(list_intersect(a.hs, b.hs)) * 1.0
-            / len(list_distinct(list_concat(a.hs, b.hs))) >= 0.8
+            / len(list_distinct(list_concat(a.hs, b.hs))) >= {D.NEAR_DUP_JACCARD}
 )"""
 
 
@@ -466,7 +466,7 @@ def d_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-Jaccard-verified at 0.8 — the canonical 100 TB near-dedup
     plan (row-local signatures, shuffle only on band buckets; the
     signature table is the staged `_doc_signatures` fixture)."""
-    return D.minhash_lsh_pairs(_doc_signatures(spark, sf_dir), threshold=0.8)
+    return D.minhash_lsh_pairs(_doc_signatures(spark, sf_dir))
 
 
 @register(
@@ -490,7 +490,7 @@ def d_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min-label propagation; DuckDB oracle replays it as a recursive
     transitive closure) + per-cluster size — the keep-one-per-cluster
     contract of a production dedup pass."""
-    pairs = D.minhash_lsh_pairs(_doc_signatures(spark, sf_dir), threshold=0.8)
+    pairs = D.minhash_lsh_pairs(_doc_signatures(spark, sf_dir))
     comp = D.connected_components(pairs)
     sizes = comp.groupBy("comp").agg(F.count("*").alias("csize"))
     return comp.join(sizes, "comp").select(
@@ -550,23 +550,13 @@ def d_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     its stages; reference parity: extends dashboard/app.py's
     aggregate counter panels to dedup accounting.
     """
-    # the staged md5 column replaces the operator's full-text scan +
-    # digest (same arithmetic — exact_dedup_survivors IS
-    # groupBy(md5).min(doc_id); the operator itself and d_exact_dedup
-    # stay inline over raw text); the source flags come from the same
-    # fixture, so documents.parquet is never touched (r11)
+    # keep_one groups the staged md5 column instead of scanning and
+    # digesting the full text (same arithmetic as
+    # exact_dedup_survivors, which d_exact_dedup still runs inline over
+    # raw text); the source flags come from the same fixture, so
+    # documents.parquet is never touched (r11)
     sigs = _doc_signatures(spark, sf_dir)
-    # two consumers (LSH base + flags join) — materialize the digest
-    # shuffle once (8-byte ids)
-    keep = materialize(
-        sigs.select("doc_id", "md5")
-        .groupBy("md5")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    removed = D.near_dup_removed(
-        D.minhash_lsh_pairs(sigs.join(keep, "doc_id"), threshold=0.8)
-    )
+    keep, removed = D.keep_one(sigs)
     flags = (
         sigs.select("doc_id", "source")
         .join(keep.withColumn("_surv", F.lit(1)), "doc_id", "left")
@@ -1849,7 +1839,7 @@ exact AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM sh a JOIN sh b ON a.doc_id < b.doc_id
   WHERE len(list_intersect(a.hs, b.hs)) * 1.0
-          / len(list_distinct(list_concat(a.hs, b.hs))) >= 0.8
+          / len(list_distinct(list_concat(a.hs, b.hs))) >= {D.NEAR_DUP_JACCARD}
 )
 SELECT (SELECT count(*) FROM exact) AS n_exact,
        (SELECT count(*) FROM pairs) AS n_lsh,
@@ -1880,12 +1870,12 @@ def d_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = D.ngram_jaccard_pairs(
         # one synthetic language block — row-local on the staged scan
         sub.withColumn("lang", F.lit("_")),
-        threshold=0.8,
+        threshold=D.NEAR_DUP_JACCARD,
         max_char_delta=1 << 40,
     )
     # the stratum filter is row-local in the fixture's columns, so
     # both the exact and the LSH side read the same staged scan
-    lsh = D.minhash_lsh_pairs(sub, threshold=0.8)
+    lsh = D.minhash_lsh_pairs(sub)
     n_exact = exact.agg(F.count("*").alias("n_exact"))
     n_lsh = lsh.agg(F.count("*").alias("n_lsh"))
     return (
@@ -3009,9 +2999,9 @@ def d_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut compiles to WindowGroupLimit.
     """
     sigs = _doc_signatures(spark, sf_dir)
-    comp = D.connected_components(
-        D.minhash_lsh_pairs(sigs, threshold=0.8)
-    ).withColumnRenamed("node", "doc_id")
+    comp = D.connected_components(D.minhash_lsh_pairs(sigs)).withColumnRenamed(
+        "node", "doc_id"
+    )
     # the staged qscore column (row-local, bit-identical to the
     # inline expression — parquet round-trips doubles exactly)
     # replaces a full-text scan+score per query; t_quality_score

@@ -468,13 +468,13 @@ def curate_ingest(
     per micro-batch, quality filter → exact dedup → MinHash-LSH
     near-dup keep-one against the accumulated accepted corpus — run
     with the SAME batch quality gate (``text.QUALITY_MIN``) and
-    operators (``minhash_lsh_pairs`` at 0.8 incl. its exact-Jaccard
-    verify, ``near_dup_removed``) inside foreachBatch, so the admitted
-    survivor set equals the batch pipeline's (``t_training_set``
-    stages 1–3) whenever near-dup clusters are cliques under
-    doc_id-ordered replay — true for copy-derived near-duplicates,
-    the dominant real-world case, and asserted end-to-end by
-    tests/test_streaming_multibatch.py. (For a
+    operators (``minhash_lsh_pairs`` at ``NEAR_DUP_JACCARD`` incl. its
+    exact-Jaccard verify, ``near_dup_removed``) inside foreachBatch, so
+    the admitted survivor set equals the batch pipeline's
+    (``t_training_set`` stages 1–3) whenever near-dup clusters are
+    cliques under doc_id-ordered replay — true for copy-derived
+    near-duplicates, the dominant real-world case, and asserted
+    end-to-end by tests/test_streaming_multibatch.py. (For a
     chain-shaped cluster a–b, b–c with a≁c, any single-pass admission
     policy must diverge from global connected components; the greedy
     key-store gate ``neardup_ingest`` is the documented contract
@@ -500,7 +500,7 @@ def curate_ingest(
             .groupBy("_md5")
             .agg(F.min("doc_id").alias("doc_id"))
         )
-        sdocs = qual.join(keep.select("doc_id"), "doc_id")
+        sdocs = qual.join(keep.select("doc_id"), "doc_id", "left_semi")
         accepted = _prior_epochs(
             batch.sparkSession, accepted_path, epoch_id, CORPUS_DDL
         )
@@ -524,7 +524,7 @@ def curate_ingest(
         # operator reads its signature frame from several branches, so
         # the pool's signatures are cached once here
         sigs = D.signatures(pool).select("doc_id", "sig", "sh").cache()
-        pairs = D.minhash_lsh_pairs(sigs, threshold=0.8).cache()
+        pairs = D.minhash_lsh_pairs(sigs).cache()
         if accepted is not None:
             acc_a = accepted.select(F.col("doc_id").alias("doc_a"))
             acc_b = accepted.select(F.col("doc_id").alias("doc_b"))

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from baronbatch_etl_spark.queries import load_all
@@ -180,6 +181,76 @@ def test_hash_spread_width_is_bounded_by_size_and_shuffle_partitions(
             assert "REPARTITION_BY_NUM" in plan, plan
     finally:
         spark.conf.set(key, before)
+
+
+@pytest.mark.parametrize("query", ["t_curate_survivors", "d_dedup_report"])
+def test_keep_one_lsh_probe_gets_the_small_input_width(
+    spark, sf_dir, monkeypatch, query
+):
+    """dedup.keep_one restricts the signature table to the exact-dedup
+    survivors with a left_semi join, which Catalyst sizes as its left
+    side. So with shuffle partitions far above the cores, the LSH probe
+    of curate_survivors (t_curate_survivors) and d_dedup_report still
+    gets the small-input width, min(core count, shuffle partitions).
+    An inner join there is estimated as a product, and the probe took
+    every shuffle partition."""
+    from baronbatch_etl_spark import io as IO
+    from baronbatch_etl_spark.operators import dedup as D
+
+    widths = []
+
+    def spy(df, *cols):
+        out = IO.hash_spread(df, *cols)
+        # the explicit count of the repartition node; reading it runs
+        # no job
+        widths.append(out._jdf.queryExecution().logical().numPartitions())
+        return out
+
+    monkeypatch.setattr(D, "hash_spread", spy)
+    cores = spark.sparkContext.defaultParallelism
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, str(8 * cores))
+        REG[query].fn(spark, sf_dir).count()
+    finally:
+        spark.conf.set(key, before)
+    assert widths == [min(cores, 8 * cores)]
+
+
+def test_near_dup_decisions_have_one_home():
+    """The near-dup family states each decision once: the 0.8 Jaccard
+    cut is ``dedup.NEAR_DUP_JACCARD`` (no caller passes it as a
+    literal), and the pair probes' hash_spread runs only in the
+    blocking helper and in hamming_pairs."""
+    import ast
+    from pathlib import Path
+
+    import baronbatch_etl_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    literals, spreads = [], set()
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        rel = path.relative_to(root)
+        literals += [
+            f"{rel}:{n}"
+            for n, line in enumerate(src.splitlines(), 1)
+            if re.search(r"threshold\s*=\s*0\.8\b", line)
+        ]
+        for fn in ast.walk(ast.parse(src)):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                name = getattr(node, "func", None)
+                name = getattr(name, "id", None) or getattr(name, "attr", None)
+                if isinstance(node, ast.Call) and name == "hash_spread":
+                    spreads.add(f"{rel}::{fn.name}")
+    assert literals == []
+    assert spreads == {
+        "operators/dedup.py::_blocked_pairs",
+        "operators/dedup.py::hamming_pairs",
+    }
 
 
 def test_spread_width_properties():

@@ -231,39 +231,18 @@ def test_approx_ntile_plan_has_no_shuffle(spark):
     assert "Window" not in plan
 
 
-def test_clear_cache_releases_rank_frames(spark):
-    """global_row_number persists its input and its tagged frame (the
-    LAZY result needs both until the caller's action); one
-    ``spark.catalog.clearCache()`` drops both — storage level NONE on
-    the JVM side — and the frame still answers (lineage recompute)."""
-    from pyspark import StorageLevel
-    from pyspark.sql import DataFrame
-
+def test_rank_leaves_no_cache_entry(spark):
+    """global_row_number cuts its input and its tagged frame with
+    ``io.materialize`` (a local checkpoint whose blocks free with the
+    frame), so a rank registers nothing with the session's cache
+    manager and leaves the caller nothing to release."""
     spark.catalog.clearCache()  # start clean
     out = global_row_number(
         _frame(spark, 20), [F.col("v"), F.col("id")], rank_name="r",
         num_partitions=4,
     )
-    out.collect()
-
-    def subplans(plan):
-        yield plan
-        for i in range(plan.children().size()):
-            yield from subplans(plan.children().apply(i))
-
-    # every cached subplan of the analyzed plan, as a frame whose
-    # storageLevel the JVM cache manager answers
-    ofrows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
-    frames = {
-        p.semanticHash(): DataFrame(ofrows(spark._jsparkSession, p), spark)
-        for p in subplans(out._jdf.queryExecution().analyzed())
-    }
-    none = StorageLevel.NONE
-    cached = [d for d in frames.values() if d.storageLevel != none]
-    assert len(cached) == 2  # input + tagged frame
-    spark.catalog.clearCache()
-    assert all(d.storageLevel == none for d in cached)
-    assert out.count() == 20
+    assert sorted(r.r for r in out.collect()) == list(range(1, 21))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_approx_ntile_raises_on_null_metric(spark):

@@ -55,6 +55,15 @@ def test_noise_floor_prior_reading_never_flags():
     assert scale_gate.diff({"q": _row(0.2, 2.8)}, prior, 1.5, 0.5)
 
 
+def test_readings_print_every_measured_query_with_its_prior():
+    new = {"b": _row(0.5, 2.0), "a": _row(1.0, 3.0)}
+    prior = {"a": _row(1.0, 2.5)}
+    assert scale_gate.readings(new, prior) == [
+        "a: sf0.1=1.0s sf1=3.0s ratio=3.0 prior_sf1=2.5",
+        "b: sf0.1=0.5s sf1=2.0s ratio=4.0 prior_sf1=-",
+    ]
+
+
 def test_bench_summary_merge_math():
     """bench.py's orchestrator merges per-query minima across fresh
     sessions and _summarize derives headline from the frozen set —

@@ -72,9 +72,8 @@ def main() -> int:
         if only and name not in only:
             continue
         n_checked += 1
-        # the ranking-utility queries persist() their rank input; drop
-        # those frames between queries so the 200-query session stays
-        # cache-flat
+        # drop any frame a query left cached, so the 200-query session
+        # stays cache-flat
         spark.catalog.clearCache()
         t0 = time.time()
         try:

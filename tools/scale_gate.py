@@ -126,6 +126,22 @@ def diff(
     return flags
 
 
+def readings(
+    new: dict[str, dict[str, float]], prior: dict[str, dict[str, float]]
+) -> list[str]:
+    """One line per measured query: its sf0.1 and sf1 readings, their
+    ratio, and the sf1 recorded in ``BENCH_SCALE.json`` (``-`` when
+    the query has no record), so a spot check needs no ``--update``."""
+    lines = []
+    for name, row in sorted(new.items()):
+        old = prior.get(name, {}).get("sf1", "-")
+        lines.append(
+            f"{name}: sf0.1={row['sf0.1']}s sf1={row['sf1']}s "
+            f"ratio={row['ratio']} prior_sf1={old}"
+        )
+    return lines
+
+
 def measure_isolated(
     names: list[str], passes: int, chunk: int
 ) -> dict[str, dict[str, float]]:
@@ -269,6 +285,8 @@ def main() -> int:
             if not flags:
                 break
 
+    for line in readings(new, prior):
+        print(line)
     for f in flags:
         print(f"REGRESSION {f}")
     print(f"{len(flags)} regression(s) over {len(new)} measured queries")
